@@ -1,4 +1,4 @@
-"""Lightweight DOM on top of stdlib ``html.parser``.
+"""Lightweight DOM and the one HTML grammar that builds it.
 
 The web analogue of the reference's single-pass OOXML scan
 (``core/ooxml_drawing.py:186-257``, streaming ``iterparse`` with bounded
@@ -8,18 +8,21 @@ tables, shapes, charts, lists, links) is derived from the same tree
 Python UDF boundaries).
 
 No third-party HTML libraries are available in this environment
-(lxml/selectolax absent), so this is a small, robust, pure-stdlib tree
-builder: tolerant of unclosed tags, stray end tags, and void elements.
-Malformed input degrades (fallback-not-fail — reference
-core/pipeline.py:1097-1193) rather than raising.
+(lxml/selectolax absent), so this is a small regex-driven tree builder:
+tolerant of unclosed tags, stray end tags, and void elements, and total
+(it never raises on a ``str``).  ``_parse_html_fast`` is the grammar's
+specification; ``native/htmlscan.c`` is a native port of its scan and build
+loop that ``parse_html`` runs when it could be compiled (``native``),
+tested against the Python parser for identical trees.
 """
 
 from __future__ import annotations
 
 import re
 from html import unescape as _unescape
-from html.parser import HTMLParser
 from typing import Iterator, Optional
+
+from exstruct_spark.kernels import native
 
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
@@ -313,94 +316,12 @@ class Node:
         return f"<Node {self.tag} attrs={self.attrs} n_children={len(self.children)}>"
 
 
-class _TreeBuilder(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.root = Node("#document")
-        self.doc_nodes: list = [self.root]
-        self.root.doc_nodes = self.doc_nodes
-        self.stack: list = [self.root]
-
-    # helpers
-    def _top(self) -> Node:
-        return self.stack[-1]
-
-    def _close_from(self, i: int) -> None:
-        end = len(self.doc_nodes)
-        for closed in self.stack[i:]:
-            closed.i1 = end
-        del self.stack[i:]
-
-    def _new_node(self, tag: str, attrs) -> Node:
-        # attrs is usually empty: share one frozen-by-convention dict to
-        # cut per-element allocations (attrs are never mutated)
-        node = Node(tag, dict(attrs) if attrs else _NO_ATTRS)
-        node.doc_nodes = self.doc_nodes
-        i0 = len(self.doc_nodes)
-        node.i0 = i0
-        node.i1 = i0 + 1  # leaf until its scope closes
-        node.parent = self.stack[-1]
-        self.stack[-1].children.append(node)
-        self.doc_nodes.append(node)
-        return node
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        closers = _IMPLICIT_CLOSE.get(tag)
-        if closers:
-            # close open same-scope siblings (e.g. <li> before <li>)
-            for i in range(len(self.stack) - 1, 0, -1):
-                t = self.stack[i].tag
-                if t in closers:
-                    self._close_from(i)
-                    break
-                if t in ("table", "ul", "ol", "div", "section", "body"):
-                    break
-        node = self._new_node(tag, attrs)
-        if tag not in VOID_ELEMENTS:
-            self.stack.append(node)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        self._new_node(tag, attrs)
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in VOID_ELEMENTS:
-            return
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                self._close_from(i)
-                return
-        # stray end tag: ignore (tolerant parse)
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            self._top().children.append(data)
-
-    def finalize(self) -> None:
-        end = len(self.doc_nodes)
-        for open_node in self.stack:  # includes root: i0=0, i1=total
-            open_node.i1 = end
-
-
-def parse_html_stdlib(html: str) -> Node:
-    """stdlib ``html.parser`` tree build — the tolerant fallback path."""
-    builder = _TreeBuilder()
-    try:
-        builder.feed(html)
-        builder.close()
-    except Exception:
-        # html.parser is already tolerant; belt-and-braces for exotic input
-        pass
-    builder.finalize()
-    return builder.root
-
-
-# -- fast regex-batch parser -------------------------------------------------
-# The stdlib parser walks the input char-by-char in Python (goahead +
-# updatepos bookkeeping) and dominates per-document cost (~50% measured).
-# This tokenizer matches whole tags/text-runs per regex step (~4x faster
-# tokenization) and feeds the same tree rules: lowercased tag/attr names,
-# entity decoding, void elements, implicit closes, raw-text script/style.
-# Any exception falls back to the stdlib builder (deterministic per input).
+# -- the HTML grammar -------------------------------------------------------
+# One regex step per tag (text runs are the gaps between tags), feeding
+# the tree rules: lowercased tag/attr names, entity decoding, void
+# elements, implicit closes, raw-text script/style.  native/htmlscan.c ports
+# this loop; every rule it must reproduce is named in its header.
+# The possessive '*+' in _TOKEN_RE needs Python >= 3.11.
 
 _TOKEN_RE = re.compile(
     # TAG tokens only — text runs are the GAPS between matches, emitted
@@ -425,6 +346,9 @@ _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"[^\"]*\"|'[^']*'|[^\s>]*))?"
 )
 _RAW_TEXT_TAGS = ("script", "style")
+# open elements an implicit close never reaches past (a <li> does not
+# close an <li> of an outer list)
+_CLOSE_BARRIERS = frozenset(("table", "ul", "ol", "div", "section", "body"))
 # close-tag scan for raw-text elements: case-insensitive with a word
 # boundary (html.parser CDATA semantics) — '</SCRIPT>' must terminate the
 # span and '</scripty>' must NOT (a case-sensitive str.find does neither)
@@ -441,6 +365,16 @@ _ATTR_CACHE: dict = {}
 # is_raw_text): one dict probe replaces a lower() allocation plus three
 # set/dict lookups per start tag (r8).  Bounded like _ATTR_CACHE.
 _TAG_INFO: dict = {}
+
+
+def _tag_info(spelling: str) -> tuple:
+    """``_TAG_INFO`` miss: compute, and cache while there is room."""
+    tl = spelling.lower()
+    info = (tl, _IMPLICIT_CLOSE.get(tl), tl in VOID_ELEMENTS,
+            tl in _RAW_TEXT_TAGS)
+    if len(_TAG_INFO) < 4096:
+        _TAG_INFO[spelling] = info
+    return info
 
 
 def _parse_attrs(raw: str) -> dict:
@@ -475,7 +409,6 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
     add_node = doc_nodes.append
     root.doc_nodes = doc_nodes
     stack = [root]
-    lower = str.lower
     pos = 0
     n = len(html)
     unescape = _unescape
@@ -510,11 +443,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             # void / raw-text lookups (tag spellings repeat massively)
             info = _TAG_INFO.get(start_tag)
             if info is None:
-                tl = lower(start_tag)
-                info = (tl, _IMPLICIT_CLOSE.get(tl),
-                        tl in VOID_ELEMENTS, tl in _RAW_TEXT_TAGS)
-                if len(_TAG_INFO) < 4096:
-                    _TAG_INFO[start_tag] = info
+                info = _tag_info(start_tag)
             tag, closers, is_void, is_raw = info
             if closers:
                 for i in range(len(stack) - 1, 0, -1):
@@ -525,7 +454,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                             closed.i1 = end
                         del stack[i:]
                         break
-                    if t in ("table", "ul", "ol", "div", "section", "body"):
+                    if t in _CLOSE_BARRIERS:
                         break
             node = new_node(Node)
             node.tag = tag
@@ -567,11 +496,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             end_raw = m.group(4)
             info = _TAG_INFO.get(end_raw)
             if info is None:
-                tl = lower(end_raw)
-                info = (tl, _IMPLICIT_CLOSE.get(tl),
-                        tl in VOID_ELEMENTS, tl in _RAW_TEXT_TAGS)
-                if len(_TAG_INFO) < 4096:
-                    _TAG_INFO[end_raw] = info
+                info = _tag_info(end_raw)
             tag = info[0]
             if info[2] and not xml_mode:  # void end tag: ignored
                 continue
@@ -596,15 +521,22 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
     return root
 
 
+_native = native.load()
+if _native is not None:
+    _native.init(Node, _NO_ATTRS, _ATTR_CACHE, _parse_attrs, _TAG_INFO,
+                 _tag_info, _unescape, _CLOSE_BARRIERS)
+    _parse = _native.parse
+else:
+    _parse = _parse_html_fast
+
+
 def parse_html(html: str, xml_mode: bool = False) -> Node:
     """Parse an HTML string into a ``Node`` tree.  Never raises on
-    malformed markup; truly unparseable input yields an (almost) empty
-    ``#document`` the caller treats as the fallback path.  ``xml_mode``
-    applies XML self-closing/void semantics (the feed route)."""
-    try:
-        return _parse_html_fast(html, xml_mode)
-    except Exception:
-        return parse_html_stdlib(html)
+    malformed markup (the grammar is total over ``str``).  ``xml_mode``
+    applies XML self-closing/void semantics (the feed route).  Runs the
+    native scanner when it was built, else ``_parse_html_fast``: the
+    same tree either way."""
+    return _parse(html, xml_mode)
 
 
 def decode_html_bytes(raw: bytes) -> str:

@@ -1,0 +1,686 @@
+/* Native tag scan and tree build for exstruct_spark.kernels.dom.
+
+   A port of dom._parse_html_fast, which stays the specification: this
+   module builds the same dom.Node trees (tag, attrs, children, parent,
+   doc_nodes, i0/i1) and is tested against it differentially.  Only the
+   scan and build loop live here.  The tag tables, the attribute parser
+   with its cache, the tag-info cache and entity decoding stay in dom.py
+   and are handed over once by init().
+
+   The scan reproduces dom._TOKEN_RE.search exactly:
+     - at each '<' the alternatives are tried in pattern order (start
+       tag, end tag, comment, CDATA, '<!...', '<?...'); a '<' that starts
+       none of them stays inside the text gap;
+     - the start-tag attribute run is possessive, so '(/?)' never
+       captures and a quote with no closing partner fails the tag;
+     - '$' in the comment and CDATA alternatives also matches just
+       before a final '\n';
+   and the raw-text close search reproduces re.compile(r"</tag\b", re.I)
+   (Unicode case folding of ASCII letters, Unicode word boundary). */
+
+#define PY_SSIZE_T_CLEAN
+#include <Python.h>
+#include <structmember.h>
+#include <string.h>
+
+static PyTypeObject *node_type;   /* dom.Node */
+static PyObject *no_attrs;        /* dom._NO_ATTRS */
+static PyObject *attr_cache;      /* dom._ATTR_CACHE */
+static PyObject *parse_attrs;     /* dom._parse_attrs */
+static PyObject *tag_info_cache;  /* dom._TAG_INFO */
+static PyObject *tag_info;        /* dom._tag_info */
+static PyObject *unescape;        /* html.unescape */
+static PyObject *barriers;        /* dom._CLOSE_BARRIERS */
+static PyObject *doc_tag;         /* "#document" */
+
+/* byte offsets of Node's __slots__ */
+static Py_ssize_t off_tag, off_attrs, off_children, off_doc_nodes,
+    off_i0, off_i1, off_parent;
+
+#define SLOT(obj, off) (*(PyObject **)((char *)(obj) + (off)))
+
+/* store a new reference into a slot, releasing the old value */
+static inline void
+slot_set(PyObject *obj, Py_ssize_t off, PyObject *value)
+{
+    PyObject *old = SLOT(obj, off);
+    SLOT(obj, off) = value;
+    Py_XDECREF(old);
+}
+
+typedef struct {
+    int kind;
+    const void *data;
+    Py_ssize_t n;
+} Text;
+
+#define RD(t, i) PyUnicode_READ((t)->kind, (t)->data, (i))
+
+/* index of ch in [i, n), or -1 */
+static Py_ssize_t
+find_ch_in(const Text *t, Py_ssize_t i, Py_ssize_t n, Py_UCS4 ch)
+{
+    if (i >= n)
+        return -1;
+    switch (t->kind) {
+    case PyUnicode_1BYTE_KIND: {
+        const Py_UCS1 *d = (const Py_UCS1 *)t->data;
+        const Py_UCS1 *p = memchr(d + i, (int)ch, (size_t)(n - i));
+        return p ? (Py_ssize_t)(p - d) : -1;
+    }
+    case PyUnicode_2BYTE_KIND: {
+        const Py_UCS2 *d = (const Py_UCS2 *)t->data;
+        for (; i < n; i++)
+            if (d[i] == ch)
+                return i;
+        return -1;
+    }
+    default: {
+        const Py_UCS4 *d = (const Py_UCS4 *)t->data;
+        for (; i < n; i++)
+            if (d[i] == ch)
+                return i;
+        return -1;
+    }
+    }
+}
+
+static inline Py_ssize_t
+find_ch(const Text *t, Py_ssize_t i, Py_UCS4 ch)
+{
+    return find_ch_in(t, i, t->n, ch);
+}
+
+/* index of the three-character ASCII terminator s in [i, n), or -1 */
+static Py_ssize_t
+find_term(const Text *t, Py_ssize_t i, const char *s)
+{
+    while ((i = find_ch(t, i, (Py_UCS4)s[0])) >= 0) {
+        if (i + 2 < t->n && RD(t, i + 1) == (Py_UCS4)s[1]
+                && RD(t, i + 2) == (Py_UCS4)s[2])
+            return i;
+        i++;
+    }
+    return -1;
+}
+
+static inline int
+is_alpha(Py_UCS4 c)
+{
+    return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z');
+}
+
+static inline int
+is_name(Py_UCS4 c)
+{
+    return is_alpha(c) || (c >= '0' && c <= '9') || c == ':' || c == '-';
+}
+
+static inline int
+is_word(Py_UCS4 c)
+{
+    return Py_UNICODE_ISALNUM(c) || c == '_';
+}
+
+/* c matches the lowercase ASCII letter l under re.IGNORECASE with
+   Unicode case folding */
+static inline int
+fold_eq(Py_UCS4 c, Py_UCS4 l)
+{
+    if ((c | 0x20) == l)
+        return 1;
+    switch (l) {
+    case 'i': return c == 0x130 || c == 0x131;
+    case 'k': return c == 0x212A;
+    case 's': return c == 0x17F;
+    default: return 0;
+    }
+}
+
+/* first '</name\b' (case-insensitive) at or after i, or -1 */
+static Py_ssize_t
+find_raw_close(const Text *t, Py_ssize_t i, PyObject *name)
+{
+    Py_ssize_t m = PyUnicode_GET_LENGTH(name);
+    int nk = PyUnicode_KIND(name);
+    const void *nd = PyUnicode_DATA(name);
+    while ((i = find_ch(t, i, '<')) >= 0) {
+        Py_ssize_t j = i + 1, k;
+        if (j < t->n && RD(t, j) == '/' && j + m < t->n) {
+            for (k = 0; k < m; k++)
+                if (!fold_eq(RD(t, j + 1 + k), PyUnicode_READ(nk, nd, k)))
+                    break;
+            if (k == m) {
+                Py_ssize_t e = j + 1 + m;
+                if (e >= t->n || !is_word(RD(t, e)))
+                    return i;
+            }
+        }
+        i++;
+    }
+    return -1;
+}
+
+enum { TOK_NONE, TOK_START, TOK_END, TOK_SKIP };
+
+typedef struct {
+    Py_ssize_t end;      /* one past the token */
+    Py_ssize_t n0, n1;   /* tag name */
+    Py_ssize_t a0, a1;   /* start-tag attribute run */
+} Token;
+
+/* end of a comment/CDATA body starting at b: the terminator, else '$' */
+static Py_ssize_t
+lazy_body_end(const Text *t, Py_ssize_t b, const char *term)
+{
+    Py_ssize_t q = find_term(t, b, term);
+    if (q >= 0)
+        return q + 3;
+    if (t->n - 1 >= b && RD(t, t->n - 1) == '\n')
+        return t->n - 1;
+    return t->n;
+}
+
+/* the token _TOKEN_RE matches at i (t[i] == '<'), if any */
+static int
+match_token(const Text *t, Py_ssize_t i, Token *tok)
+{
+    Py_ssize_t n = t->n, j, k;
+    Py_UCS4 c;
+    if (i + 1 >= n)
+        return TOK_NONE;
+    c = RD(t, i + 1);
+    if (is_alpha(c)) {
+        for (j = i + 2; j < n && is_name(RD(t, j)); j++)
+            ;
+        /* possessive (?:[^>"']+|"[^"]*"|'[^']*')*+ */
+        for (k = j; k < n; ) {
+            Py_UCS4 a = RD(t, k);
+            if (a == '>')
+                break;
+            if (a == '"' || a == '\'') {
+                Py_ssize_t q = find_ch(t, k + 1, a);
+                if (q < 0)
+                    break;
+                k = q + 1;
+            }
+            else
+                k++;
+        }
+        if (k < n && RD(t, k) == '>') {
+            tok->n0 = i + 1;
+            tok->n1 = j;
+            tok->a0 = j;
+            tok->a1 = k;
+            tok->end = k + 1;
+            return TOK_START;
+        }
+        return TOK_NONE;
+    }
+    if (c == '/') {
+        if (i + 2 < n && is_alpha(RD(t, i + 2))) {
+            for (j = i + 3; j < n && is_name(RD(t, j)); j++)
+                ;
+            k = find_ch(t, j, '>');
+            if (k >= 0) {
+                tok->n0 = i + 2;
+                tok->n1 = j;
+                tok->end = k + 1;
+                return TOK_END;
+            }
+        }
+        return TOK_NONE;
+    }
+    if (c == '!') {
+        if (i + 3 < n && RD(t, i + 2) == '-' && RD(t, i + 3) == '-') {
+            tok->end = lazy_body_end(t, i + 4, "-->");
+            return TOK_SKIP;
+        }
+        if (i + 8 < n) {
+            static const char cdata[] = "[CDATA[";
+            for (k = 0; k < 7; k++)
+                if (RD(t, i + 2 + k) != (Py_UCS4)cdata[k])
+                    break;
+            if (k == 7) {
+                tok->end = lazy_body_end(t, i + 9, "]]>");
+                return TOK_SKIP;
+            }
+        }
+    }
+    if (c == '!' || c == '?') {
+        k = find_ch(t, i + 2, '>');
+        tok->end = k < 0 ? n : k + 1;
+        return TOK_SKIP;
+    }
+    return TOK_NONE;
+}
+
+/* append html[a:b] to list, entity-decoded when it holds an '&' */
+static int
+append_text(PyObject *html, const Text *t, Py_ssize_t a, Py_ssize_t b,
+            PyObject *list, int decode)
+{
+    int rc;
+    PyObject *s = PyUnicode_Substring(html, a, b);
+    if (s == NULL)
+        return -1;
+    if (decode && find_ch_in(t, a, b, '&') >= 0) {
+        PyObject *d = PyObject_CallOneArg(unescape, s);
+        Py_DECREF(s);
+        if (d == NULL)
+            return -1;
+        s = d;
+    }
+    rc = PyList_Append(list, s);
+    Py_DECREF(s);
+    return rc;
+}
+
+/* the open-element stack; entries borrow from doc_nodes */
+typedef struct {
+    PyObject **node;
+    Py_ssize_t len, cap;
+} Stack;
+
+static int
+stack_push(Stack *s, PyObject *node)
+{
+    if (s->len == s->cap) {
+        Py_ssize_t cap = s->cap ? 2 * s->cap : 64;
+        PyObject **p = PyMem_Realloc(s->node, cap * sizeof(PyObject *));
+        if (p == NULL) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        s->node = p;
+        s->cap = cap;
+    }
+    s->node[s->len++] = node;
+    return 0;
+}
+
+/* set i1 = len(doc_nodes) on stack[i:] and pop them */
+static int
+close_from(Stack *s, Py_ssize_t i, PyObject *doc_nodes)
+{
+    PyObject *end = PyLong_FromSsize_t(PyList_GET_SIZE(doc_nodes));
+    Py_ssize_t k;
+    if (end == NULL)
+        return -1;
+    for (k = i; k < s->len; k++) {
+        Py_INCREF(end);
+        slot_set(s->node[k], off_i1, end);
+    }
+    Py_DECREF(end);
+    s->len = i;
+    return 0;
+}
+
+static inline int
+str_eq(PyObject *a, PyObject *b)
+{
+    Py_ssize_t n;
+    if (a == b)
+        return 1;
+    n = PyUnicode_GET_LENGTH(a);
+    return n == PyUnicode_GET_LENGTH(b)
+        && PyUnicode_KIND(a) == PyUnicode_KIND(b)
+        && memcmp(PyUnicode_DATA(a), PyUnicode_DATA(b),
+                  (size_t)n * PyUnicode_KIND(a)) == 0;
+}
+
+static PyObject *
+new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes,
+         PyObject *parent)
+{
+    Py_ssize_t i0 = PyList_GET_SIZE(doc_nodes);
+    PyObject *node, *children, *v0, *v1;
+    node = node_type->tp_alloc(node_type, 0);
+    if (node == NULL)
+        return NULL;
+    children = PyList_New(0);
+    v0 = PyLong_FromSsize_t(i0);
+    v1 = PyLong_FromSsize_t(i0 + 1);  /* leaf until its scope closes */
+    if (children == NULL || v0 == NULL || v1 == NULL) {
+        Py_XDECREF(children);
+        Py_XDECREF(v0);
+        Py_XDECREF(v1);
+        Py_DECREF(node);
+        return NULL;
+    }
+    Py_INCREF(tag);
+    SLOT(node, off_tag) = tag;
+    Py_INCREF(attrs);
+    SLOT(node, off_attrs) = attrs;
+    SLOT(node, off_children) = children;
+    Py_INCREF(doc_nodes);
+    SLOT(node, off_doc_nodes) = doc_nodes;
+    SLOT(node, off_i0) = v0;
+    SLOT(node, off_i1) = v1;
+    Py_INCREF(parent);
+    SLOT(node, off_parent) = parent;
+    if (PyList_Append(doc_nodes, node) < 0) {
+        Py_DECREF(node);
+        return NULL;
+    }
+    Py_DECREF(node);  /* doc_nodes holds it */
+    return node;
+}
+
+/* the cached (tag, closers, is_void, is_raw) tuple of a spelling;
+   new reference */
+static PyObject *
+lookup_tag(PyObject *html, Py_ssize_t a, Py_ssize_t b)
+{
+    PyObject *spelling = PyUnicode_Substring(html, a, b), *info;
+    if (spelling == NULL)
+        return NULL;
+    info = PyDict_GetItemWithError(tag_info_cache, spelling);
+    if (info != NULL) {
+        Py_INCREF(info);
+    }
+    else if (!PyErr_Occurred()) {
+        info = PyObject_CallOneArg(tag_info, spelling);
+        if (info != NULL && !(PyTuple_Check(info)
+                              && PyTuple_GET_SIZE(info) == 4)) {
+            PyErr_SetString(PyExc_TypeError,
+                            "_tag_info must return a 4-tuple");
+            Py_CLEAR(info);
+        }
+    }
+    Py_DECREF(spelling);
+    return info;
+}
+
+/* attrs of a start tag whose attribute run is [a, b); new reference */
+static PyObject *
+lookup_attrs(PyObject *html, const Text *t, Py_ssize_t a, Py_ssize_t b)
+{
+    PyObject *raw, *attrs;
+    Py_ssize_t k;
+    for (k = a; k < b && Py_UNICODE_ISSPACE(RD(t, k)); k++)
+        ;
+    if (k == b) {  /* empty or all whitespace */
+        Py_INCREF(no_attrs);
+        return no_attrs;
+    }
+    raw = PyUnicode_Substring(html, a, b);
+    if (raw == NULL)
+        return NULL;
+    attrs = PyDict_GetItemWithError(attr_cache, raw);
+    if (attrs != NULL)
+        Py_INCREF(attrs);
+    else if (!PyErr_Occurred())
+        attrs = PyObject_CallOneArg(parse_attrs, raw);
+    Py_DECREF(raw);
+    return attrs;
+}
+
+/* xml_mode self-close: attr_raw.rstrip().endswith("/") */
+static int
+ends_with_slash(const Text *t, Py_ssize_t a, Py_ssize_t b)
+{
+    while (b > a && Py_UNICODE_ISSPACE(RD(t, b - 1)))
+        b--;
+    return b > a && RD(t, b - 1) == '/';
+}
+
+static PyObject *
+build(PyObject *html, int xml_mode)
+{
+    Text t;
+    Token tok = {0, 0, 0, 0, 0};
+    Stack st = {NULL, 0, 0};
+    PyObject *doc_nodes = NULL, *root = NULL, *info = NULL;
+    Py_ssize_t pos = 0, scan = 0, i, k;
+
+    t.kind = PyUnicode_KIND(html);
+    t.data = PyUnicode_DATA(html);
+    t.n = PyUnicode_GET_LENGTH(html);
+
+    doc_nodes = PyList_New(0);
+    if (doc_nodes == NULL)
+        return NULL;
+    root = new_node(doc_tag, no_attrs, doc_nodes, Py_None);
+    if (root == NULL)
+        goto error;
+    Py_INCREF(root);
+    if (stack_push(&st, root) < 0)
+        goto error;
+
+    for (;;) {
+        PyObject *top, *tag, *closers, *node, *attrs;
+        int kind_tok, is_void, is_raw;
+        i = find_ch(&t, scan, '<');
+        if (i < 0)
+            break;
+        kind_tok = match_token(&t, i, &tok);
+        if (kind_tok == TOK_NONE) {
+            scan = i + 1;
+            continue;
+        }
+        top = st.node[st.len - 1];
+        if (i > pos && append_text(html, &t, pos, i,
+                                   SLOT(top, off_children), 1) < 0)
+            goto error;
+        pos = scan = tok.end;
+        if (kind_tok == TOK_SKIP)
+            continue;  /* comments, CDATA, doctype, processing instructions */
+        info = lookup_tag(html, tok.n0, tok.n1);
+        if (info == NULL)
+            goto error;
+        tag = PyTuple_GET_ITEM(info, 0);
+        if (!PyUnicode_Check(tag)) {
+            PyErr_SetString(PyExc_TypeError, "tag info: tag must be str");
+            goto error;
+        }
+        closers = PyTuple_GET_ITEM(info, 1);
+        if ((is_void = PyObject_IsTrue(PyTuple_GET_ITEM(info, 2))) < 0
+                || (is_raw = PyObject_IsTrue(PyTuple_GET_ITEM(info, 3))) < 0)
+            goto error;
+
+        if (kind_tok == TOK_END) {
+            if (!(is_void && !xml_mode)) {  /* void end tag: ignored */
+                for (k = st.len - 1; k > 0; k--) {
+                    if (str_eq(SLOT(st.node[k], off_tag), tag)) {
+                        if (close_from(&st, k, doc_nodes) < 0)
+                            goto error;
+                        break;
+                    }
+                }
+                /* else: stray end tag ignored */
+            }
+            Py_CLEAR(info);
+            continue;
+        }
+
+        if (closers != Py_None) {
+            int has = PyObject_IsTrue(closers);
+            if (has < 0)
+                goto error;
+            for (k = st.len - 1; has && k > 0; k--) {
+                PyObject *tk = SLOT(st.node[k], off_tag);
+                int hit = PySequence_Contains(closers, tk);
+                if (hit < 0)
+                    goto error;
+                if (hit) {
+                    if (close_from(&st, k, doc_nodes) < 0)
+                        goto error;
+                    break;
+                }
+                hit = PySequence_Contains(barriers, tk);
+                if (hit < 0)
+                    goto error;
+                if (hit)
+                    break;
+            }
+        }
+        attrs = lookup_attrs(html, &t, tok.a0, tok.a1);
+        if (attrs == NULL)
+            goto error;
+        node = new_node(tag, attrs, doc_nodes, st.node[st.len - 1]);
+        Py_DECREF(attrs);
+        if (node == NULL)
+            goto error;
+        if (PyList_Append(SLOT(st.node[st.len - 1], off_children), node) < 0)
+            goto error;
+        if (xml_mode ? ends_with_slash(&t, tok.a0, tok.a1) : is_void) {
+            Py_CLEAR(info);
+            continue;
+        }
+        if (is_raw) {
+            /* raw text up to the close tag: no entity decoding, no tags */
+            PyObject *children = SLOT(node, off_children);
+            Py_ssize_t c = find_raw_close(&t, pos, tag);
+            if (c < 0) {
+                if (append_text(html, &t, pos, t.n, children, 0) < 0)
+                    goto error;
+                pos = t.n;
+            }
+            else {
+                if (c > pos && append_text(html, &t, pos, c, children, 0) < 0)
+                    goto error;
+                k = find_ch(&t, c, '>');
+                pos = k < 0 ? t.n : k + 1;
+            }
+            scan = pos;
+            Py_CLEAR(info);
+            continue;
+        }
+        Py_CLEAR(info);
+        if (stack_push(&st, node) < 0)
+            goto error;
+    }
+    if (pos < t.n && append_text(html, &t, pos, t.n,
+                                 SLOT(st.node[st.len - 1], off_children),
+                                 1) < 0)
+        goto error;
+    if (close_from(&st, 0, doc_nodes) < 0)
+        goto error;
+    PyMem_Free(st.node);
+    Py_DECREF(doc_nodes);
+    return root;
+
+error:
+    Py_XDECREF(info);
+    PyMem_Free(st.node);
+    Py_XDECREF(root);
+    Py_XDECREF(doc_nodes);
+    return NULL;
+}
+
+static PyObject *
+htmlscan_parse(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
+{
+    int xml_mode = 0;
+    if (node_type == NULL) {
+        PyErr_SetString(PyExc_RuntimeError, "_htmlscan.init() not called");
+        return NULL;
+    }
+    if (nargs < 1 || nargs > 2) {
+        PyErr_SetString(PyExc_TypeError, "parse(html, xml_mode=False)");
+        return NULL;
+    }
+    if (!PyUnicode_Check(args[0])) {
+        PyErr_Format(PyExc_TypeError, "html must be str, not %.100s",
+                     Py_TYPE(args[0])->tp_name);
+        return NULL;
+    }
+    if (nargs == 2 && (xml_mode = PyObject_IsTrue(args[1])) < 0)
+        return NULL;
+#if PY_VERSION_HEX < 0x030C0000
+    if (PyUnicode_READY(args[0]) < 0)
+        return NULL;
+#endif
+    {
+        /* the build makes no garbage, so a collection during it would
+           only re-traverse the young tree: defer it to the first
+           allocation after the build */
+        int was_enabled = PyGC_Disable();
+        PyObject *root = build(args[0], xml_mode);
+        if (was_enabled)
+            PyGC_Enable();
+        return root;
+    }
+}
+
+/* byte offset of the object slot `name` of type tp */
+static Py_ssize_t
+slot_offset(PyTypeObject *tp, const char *name)
+{
+    PyObject *d = PyDict_GetItemString(tp->tp_dict, name);
+    PyMemberDef *m;
+    if (d == NULL || !Py_IS_TYPE(d, &PyMemberDescr_Type)) {
+        PyErr_Format(PyExc_TypeError, "%s.%s is not a __slots__ member",
+                     tp->tp_name, name);
+        return -1;
+    }
+    m = ((PyMemberDescrObject *)d)->d_member;
+    if (m->type != T_OBJECT_EX) {
+        PyErr_Format(PyExc_TypeError, "%s.%s: unexpected slot type",
+                     tp->tp_name, name);
+        return -1;
+    }
+    return m->offset;
+}
+
+static void
+set_ref(PyObject **dst, PyObject *v)
+{
+    Py_INCREF(v);
+    Py_XSETREF(*dst, v);
+}
+
+static PyObject *
+htmlscan_init(PyObject *self, PyObject *args)
+{
+    PyObject *node, *na, *ac, *pa, *tic, *ti, *ue, *bar;
+    if (!PyArg_ParseTuple(args, "O!O!O!OO!OOO:init", &PyType_Type, &node,
+                          &PyDict_Type, &na, &PyDict_Type, &ac, &pa,
+                          &PyDict_Type, &tic, &ti, &ue, &bar))
+        return NULL;
+    if ((off_tag = slot_offset((PyTypeObject *)node, "tag")) < 0
+            || (off_attrs = slot_offset((PyTypeObject *)node, "attrs")) < 0
+            || (off_children = slot_offset((PyTypeObject *)node,
+                                           "children")) < 0
+            || (off_doc_nodes = slot_offset((PyTypeObject *)node,
+                                            "doc_nodes")) < 0
+            || (off_i0 = slot_offset((PyTypeObject *)node, "i0")) < 0
+            || (off_i1 = slot_offset((PyTypeObject *)node, "i1")) < 0
+            || (off_parent = slot_offset((PyTypeObject *)node, "parent")) < 0)
+        return NULL;
+    if (doc_tag == NULL && (doc_tag = PyUnicode_InternFromString(
+                                "#document")) == NULL)
+        return NULL;
+    set_ref((PyObject **)&node_type, node);
+    set_ref(&no_attrs, na);
+    set_ref(&attr_cache, ac);
+    set_ref(&parse_attrs, pa);
+    set_ref(&tag_info_cache, tic);
+    set_ref(&tag_info, ti);
+    set_ref(&unescape, ue);
+    set_ref(&barriers, bar);
+    Py_RETURN_NONE;
+}
+
+static PyMethodDef htmlscan_methods[] = {
+    {"init", htmlscan_init, METH_VARARGS,
+     "init(Node, no_attrs, attr_cache, parse_attrs, tag_info_cache, "
+     "tag_info, unescape, close_barriers): hand over dom.py's tables."},
+    {"parse", (PyCFunction)(void (*)(void))htmlscan_parse, METH_FASTCALL,
+     "parse(html, xml_mode=False) -> dom.Node: the tree "
+     "dom._parse_html_fast builds."},
+    {NULL, NULL, 0, NULL},
+};
+
+static struct PyModuleDef htmlscan_module = {
+    PyModuleDef_HEAD_INIT, "_htmlscan",
+    "Native tag scan and tree build for exstruct_spark.kernels.dom.", -1,
+    htmlscan_methods,
+};
+
+PyMODINIT_FUNC
+PyInit__htmlscan(void)
+{
+    return PyModule_Create(&htmlscan_module);
+}

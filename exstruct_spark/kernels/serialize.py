@@ -17,7 +17,25 @@ import json
 from itertools import islice
 from typing import Any
 
-_EMPTY = (None, "", [], {}, ())
+_DROP = object()  # marks a member strip_empty removes (None is a value)
+
+
+def _stripped(v: Any) -> Any:
+    """One member after stripping, or ``_DROP`` when it is empty.
+    Exact-type fast path for the dominant builtin cases; the isinstance
+    fallback keeps dict/list/str SUBCLASSES recursed / dropped-when-empty."""
+    tv = type(v)
+    if tv is str:
+        return v if v else _DROP
+    if v is None:
+        return _DROP
+    if (tv is dict or tv is list or tv is tuple
+            or isinstance(v, (dict, list, tuple))):
+        nv = strip_empty(v)
+        return nv if nv else _DROP
+    if isinstance(v, str):
+        return v if v else _DROP
+    return v
 
 
 def strip_empty(value: Any) -> Any:
@@ -27,76 +45,36 @@ def strip_empty(value: Any) -> Any:
     — dicts lose empty-valued keys, lists lose empty elements, recursion
     applies bottom-up so a dict that becomes empty is itself dropped by the
     caller one level up.  ``0``/``0.0``/``False`` are NOT empty.
+
+    Lazy copy: a list or dict in which nothing strips is returned
+    unchanged (the majority of extraction sub-dicts), so the walk
+    allocates only where it edits; tuples always become lists.
     """
-    # per-child logic INLINED into both loops (was a _strip_child helper:
-    # ~75 calls/doc measured) — exact-type fast path for the dominant
-    # builtin cases, isinstance fallback so dict/list/str SUBCLASSES keep
-    # the original semantics (recursed / dropped-when-empty) instead of
-    # silently passing through; byte-identical output (unit + hypothesis
-    # fixpoint tests).  r8: LAZY copy — the original container object is
-    # returned unchanged when nothing inside it strips (the majority of
-    # extraction sub-dicts), so the walk allocates only where it edits.
-    # ``_SENTINEL_DROP`` marks a member to drop (None itself is dropped,
-    # so it doubles as the marker).
     if isinstance(value, dict):
         out = None  # materialized on first edit
         idx = 0
         for k, v in value.items():
-            tv = type(v)
-            if tv is str:
-                nv = v if v else None
-            elif tv is dict or tv is list or tv is tuple:
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
-            elif v is None:
-                nv = None
-            elif isinstance(v, (dict, list, tuple)):
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
-            elif isinstance(v, str):
-                nv = v if v else None
-            else:
-                nv = v
+            nv = _stripped(v)
             if out is None:
                 if nv is v:
                     idx += 1
                     continue
                 # first edit: copy the unchanged prefix
                 out = dict(islice(value.items(), idx))
-            if nv is not None:
+            if nv is not _DROP:
                 out[k] = nv
         return value if out is None else out
     if isinstance(value, (list, tuple)):
-        out_l = None
-        if type(value) is not list:
-            out_l = []  # tuples always materialize as lists (parity)
+        out_l = None if type(value) is list else []
         idx = 0
         for v in value:
-            tv = type(v)
-            if tv is str:
-                nv = v if v else None
-            elif tv is dict or tv is list or tv is tuple:
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
-            elif v is None:
-                nv = None
-            elif isinstance(v, (dict, list, tuple)):
-                nv = strip_empty(v)
-                if not nv:
-                    nv = None
-            elif isinstance(v, str):
-                nv = v if v else None
-            else:
-                nv = v
+            nv = _stripped(v)
             if out_l is None:
                 if nv is v:
                     idx += 1
                     continue
-                out_l = list(value[:idx])
-            if nv is not None:
+                out_l = value[:idx]
+            if nv is not _DROP:
                 out_l.append(nv)
         return value if out_l is None else out_l
     return value

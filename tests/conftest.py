@@ -14,3 +14,17 @@ def spark():
     s = default_session(app="exstruct-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def native_parse():
+    """The native HTML scanner's ``parse``.  Skips only when there is no
+    C compiler; a compiler with a failed build is a test failure."""
+    from exstruct_spark.kernels import dom, native
+
+    if dom._native is None:
+        if native.compiler_available():
+            pytest.fail("a C compiler is present but the native HTML "
+                        "scanner did not build (see the WARNING on stderr)")
+        pytest.skip("no C compiler: only the Python parser is available")
+    return dom._native.parse

@@ -1,0 +1,189 @@
+"""The one HTML grammar: ``dom._parse_html_fast`` is total, and the
+native scanner (``htmlscan.c``) builds the same trees it does."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from adversarial_pages import ADVERSARIAL
+from exstruct_spark.kernels import dom
+from exstruct_spark.pages import build_page, build_rich_page
+
+
+def tree_signature(root) -> list:
+    """Everything a kernel can read off a parsed tree: per node in
+    document order its tag, attrs, i0/i1, parent (by index) and children
+    (strings verbatim, nodes by index), plus len(doc_nodes)."""
+    dl = root.doc_nodes
+    index = {id(n): k for k, n in enumerate(dl)}
+    assert root.parent is None and dl[0] is root
+    sig = [len(dl)]
+    for k, n in enumerate(dl):
+        assert n.doc_nodes is dl
+        parent = None if n.parent is None else index[id(n.parent)]
+        if k:
+            assert n in n.parent.children
+        sig.append((n.tag, n.attrs, n.i0, n.i1, parent,
+                    [c if type(c) is str else ("#node", index[id(c)])
+                     for c in n.children]))
+    return sig
+
+
+def assert_same_tree(native_parse, html: str, xml_mode: bool) -> None:
+    want = tree_signature(dom._parse_html_fast(html, xml_mode))
+    got = tree_signature(native_parse(html, xml_mode))
+    assert got == want
+
+
+# named cases: each exact regex behaviour the native port reproduces
+NAMED = {
+    # alternatives in _TOKEN_RE order; a '<' that starts none stays text
+    "stray_lt": "a < b <1 <> </ > <-x </1 x<",
+    "end_tag_without_gt": "<p>x</p</div",
+    "doctype_and_pi": "<!DOCTYPE html><?xml version='1.0'?><p>x<!x <?y",
+    "bang_dash": "<!- x -><p>y</p>",
+    # possessive attribute run: '(/?)' never captures
+    "void_self_close": "<p>a<br/>b<img src=x/>c<div/>d</div></p>",
+    "self_close_spaced": "<x a='1'/ ><y/\n>t</y>",
+    # a quote with no partner fails the start tag, so '<' stays text
+    "unterminated_double": '<a href="x>text</a><p>after</p>',
+    "unterminated_single": "<a title='x>y</a><b>z</b>",
+    "quote_spans_gt": "<a title=\"x>y\" href='>'>link</a>",
+    # '$' also matches just before a final newline
+    "comment_final_newline": "<p>x</p><!-- open\n",
+    "comment_open_at_end": "<p>x</p><!--",
+    "comment_newline_only": "<p>x</p><!--\n",
+    "cdata_final_newline": "x<![CDATA[ y\n",
+    "cdata_closed": "x<![CDATA[ <p>y</p> ]]>z",
+    "comment_double_newline": "<p>x</p><!-- open\n\n",
+    # raw-text close: case-insensitive, Unicode \b
+    "script_upper_close": "<script>a<b</SCRIPT><p>seen</p>",
+    "script_word_boundary": "<script>1</scripty>2</script_>3</script>ok",
+    "script_unicode_word": "<script>1</scripté>2</script1>3</script>ok",
+    "script_fold_long_s": "<script>1</ſcript>ok",
+    "script_fold_dotted_i": "<script>1</scrİpt>2</scrıpt>ok",
+    "style_close": "<style>p{}</STYLE ><p>seen</p>",
+    "script_unterminated": "<p>a</p><script>var x = 1;",
+    "script_empty_unterminated": "<p>a</p><script>",
+    "script_close_no_gt": "<script>x</script",
+    "comment_in_script": "<script>'<!--'</script><p>real</p>-->",
+    # implicit closes and their barriers
+    "implicit_close": "<ul><li>a<li>b<ul><li>c<li>d</ul><li>e</ul>"
+                      "<table><tr><td>1<td>2<tr><th>3</table><p>x<p>y",
+    "void_end_tag": "<p>a</br>b</img></p>",
+    "stray_end": "</div></p>text</span>",
+    "mixed_case_tags": "<DiV Class=X><P>a</p></DIV>",
+    "entities": "<p t='&amp;&lt;'>a&amp;b &#x41; &bogus; &</p>",
+    # str kinds 1, 2 and 4
+    "kind1": "<p title='café'>naïve ÿ</p>",
+    "kind2": "<p title='売上'>€ 利益 <b>表</b></p>",
+    "kind4": "<p title='😀'>😀 <i>𝒳</i></p><script>😀</SCRİPT>x",
+}
+
+XML_NAMED = {
+    "xml_self_close": "<rss><item><link/>u<title>t</title></item></rss>",
+    "xml_link_text": "<item><link>https://x</link><br>t</br></item>",
+    "xml_self_close_space": "<a><b x='1' / ><c/ ></a>",
+}
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+@pytest.mark.parametrize("name", sorted(NAMED) + sorted(XML_NAMED))
+def test_named_case(native_parse, name, xml_mode):
+    assert_same_tree(native_parse, {**NAMED, **XML_NAMED}[name], xml_mode)
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+def test_corpus_pages(native_parse, xml_mode):
+    for i in range(60):
+        for page in (build_page(i), build_rich_page(i)):
+            assert_same_tree(native_parse,
+                             dom.decode_html_bytes(page["html"]), xml_mode)
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+@pytest.mark.parametrize("name", [n for n, _ in ADVERSARIAL])
+def test_adversarial_pages(native_parse, name, xml_mode):
+    raw = dict(ADVERSARIAL)[name]
+    assert_same_tree(native_parse, dom.decode_html_bytes(raw), xml_mode)
+
+
+# markup-shaped text: fragments that steer the scanner into every branch
+_FRAGMENTS = st.sampled_from([
+    "<", ">", "/", "\"", "'", "=", " ", "\n", "<!--", "-->", "<![CDATA[",
+    "]]>", "<!", "<?", "</", "script", "SCRIPT", "style", "ſ", "İ", "p",
+    "li", "td", "tr", "th", "table", "div", "ul", "br", "img", "a", "b",
+    "href", "x-y", ":", "_", "1", "é", "€", "😀", "&amp;", "&", "&#60;",
+])
+MARKUP = st.lists(_FRAGMENTS | st.text(max_size=4), max_size=40).map("".join)
+HYPOTHESIS = settings(max_examples=2000, deadline=None,
+                      suppress_health_check=[HealthCheck.too_slow])
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+def test_native_matches_python_hypothesis(native_parse, xml_mode):
+    @HYPOTHESIS
+    @given(html=MARKUP | st.text())
+    def check(html):
+        assert_same_tree(native_parse, html, xml_mode)
+
+    check()
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+def test_python_grammar_is_total(xml_mode):
+    """The grammar never raises on a str, so no input depends on an
+    exception path."""
+    @HYPOTHESIS
+    @given(html=MARKUP | st.text())
+    def check(html):
+        root = dom._parse_html_fast(html, xml_mode)
+        assert root.i1 == len(root.doc_nodes)
+
+    check()
+
+
+def test_parse_html_raises_instead_of_a_second_grammar():
+    """A real error reaches the caller (extract_document turns it into
+    the fallback row) instead of a retry with another grammar."""
+    with pytest.raises(TypeError):
+        dom.parse_html(b"<p>bytes are not a str</p>")
+
+
+def test_unbuildable_native_falls_back_with_one_warning(tmp_path):
+    """No usable cache directory: the Python parser runs, one WARNING
+    names the reason on stderr, stdout stays clean."""
+    not_a_dir = tmp_path / "cache"
+    not_a_dir.write_text("")
+    code = ("from exstruct_spark.kernels import dom; "
+            "assert dom._native is None and "
+            "dom._parse is dom._parse_html_fast; "
+            "dom.parse_html('<p>x</p>')")
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env={**os.environ, "XDG_CACHE_HOME": str(not_a_dir)}, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout == ""
+    warnings = [ln for ln in proc.stderr.splitlines()
+                if "native HTML parser unavailable" in ln]
+    assert len(warnings) == 1
+
+
+def test_parse_error_becomes_the_fallback_row(monkeypatch):
+    from exstruct_spark.kernels.extract import extract_document
+
+    def broken(html, xml_mode=False):
+        raise RecursionError("parser failure")
+
+    monkeypatch.setattr(dom, "_parse", broken)
+    rec = extract_document("u://x", b"<p>some text here</p>")
+    assert rec["status"] == "fallback"
+    assert rec["fallback_reason"] == "RecursionError"
+    assert rec["main_text"] == "some text here"

@@ -963,3 +963,19 @@ def test_inline_style_import_corpus_join(spark):
     assert ex["stylesheets"] == ["https://j.example/theme.css"]
     assert ex["tables"][0]["colors_map"] == {
         "00FF00": [[1, 0], [1, 1]]}
+
+
+def test_local_workers_carry_no_jar_importers(spark):
+    """Under ``spark_daemon`` a worker's ``importlib.invalidate_caches()``
+    (run per task) has no jar central directory to re-read."""
+    def probe(_):
+        import sys
+        import zipimport
+
+        yield ([p for p in sys.path if p.endswith(".jar")],
+               [k for k, v in sys.path_importer_cache.items()
+                if isinstance(v, zipimport.zipimporter) and ".jar" in k])
+
+    rows = spark.sparkContext.parallelize(range(4), 4).mapPartitions(
+        probe).collect()
+    assert rows == [([], [])] * 4
