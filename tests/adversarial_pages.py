@@ -2,9 +2,14 @@
 
 Each entry is ``(name, raw bytes)``: inputs that have broken, or could
 break, the tokenizer, the tree builder or the kernels above them.
+``ROUTES`` holds one input per ``extract_document`` route that is not an
+HTML page with main text (PDF, feeds, robots.txt, the degraded and empty
+paths); only the fingerprint runs them.
 """
 
 from __future__ import annotations
+
+import json
 
 _BODY = "<p>after</p><table><tr><td>a<td>b</table>"
 
@@ -50,4 +55,40 @@ ADVERSARIAL += [
     ("utf16_be_bom",
      b"\xfe\xff" + "<ul><li>one<li>two</ul>".encode("utf-16-be")),
     ("empty", b""),
+]
+
+_JSON_FEED = {
+    "version": "https://jsonfeed.org/version/1.1",
+    "title": "Cafe\u0301 notes", "language": "fr",
+    "items": [
+        {"id": "1", "title": "Premier", "url": "https://feed.example/1",
+         "date_published": "2024-02-01T08:00:00Z",
+         "content_text": "Re\u0301sume\u0301 du jour", "tags": ["a"]},
+        "junk-item",
+    ],
+}
+
+ROUTES = [
+    ("pdf_minimal",
+     b"%PDF-1.4\n"
+     b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+     b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
+     b"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n"
+     b"4 0 obj << /Length 44 >> stream\n"
+     b"BT /F1 12 Tf 72 712 Td (Minimal PDF text) Tj ET\n"
+     b"endstream endobj\n"
+     b"5 0 obj << /Title (Route check) >> endobj\n"
+     b"trailer << /Info 5 0 R >>\n%%EOF"),
+    ("json_feed", json.dumps(_JSON_FEED).encode("utf-8")),
+    ("json_feed_malformed",
+     b'{ "version": "https://jsonfeed.org/version/1.1", items: oops }'),
+    ("robots_txt",
+     b"# robots\nUser-agent: *\nDisallow: /private/\n"
+     b"Allow: /private/ok.html\nCrawl-delay: 2\n\n"
+     b"Sitemap: https://ex.example/sitemap.xml\n"),
+    ("markup_without_main_text",
+     b"<html><head><title>Nav only</title></head><body>"
+     b"<nav><a href='/'>Home</a> | <a href='/about'>About</a></nav>"
+     b"<footer>(c) 2024</footer></body></html>"),
+    ("whitespace_only", b" \n\t  \r\n "),
 ]

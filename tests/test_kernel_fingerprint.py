@@ -1,7 +1,9 @@
 """Checked-in fingerprint of the extraction kernel's output.
 
 One sha256 per archetype over a fixed slice of the ``pages`` corpus,
-plus one per adversarial input (``adversarial_pages``), each over every
+plus one per adversarial input and one per non-page route
+(``adversarial_pages``: PDF, feeds, robots.txt, degraded and empty
+documents), each over every
 field ``extract_document`` returns.  Any change in kernel behaviour
 fails here until it is re-blessed on purpose: print the current digests
 with ``python tests/test_kernel_fingerprint.py`` and record the reason
@@ -21,7 +23,7 @@ import pytest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [HERE, os.path.dirname(HERE)]  # also when run as a script
 
-from adversarial_pages import ADVERSARIAL  # noqa: E402
+from adversarial_pages import ADVERSARIAL, ROUTES  # noqa: E402
 from exstruct_spark.kernels import dom  # noqa: E402
 from exstruct_spark.kernels.extract import extract_document  # noqa: E402
 from exstruct_spark.pages import (  # noqa: E402
@@ -40,6 +42,8 @@ def _slice():
         yield "rich:" + page["archetype"], page["url"], page["html"]
     for name, raw in ADVERSARIAL:
         yield "adversarial:" + name, f"https://adversarial.example/{name}", raw
+    for name, raw in ROUTES:
+        yield "route:" + name, f"https://routes.example/{name}", raw
 
 
 def fingerprints() -> dict:
@@ -114,6 +118,12 @@ BLESSED = {
     'rich:unit_chart': '99451dd007f128a85f9c57f72fd3c78339b0e98cc94fe8fd0510554d6f025046',
     'rich:vegalite_chart': '9559eea84715c82673e4a2c58efb670d7ff64fcf7f493b5f1295213ece0c56ef',
     'rich:wired_flowchart': 'a4363edab838445710960ba14fce994309eb3cb4c7264f7af36a619675d97021',
+    'route:json_feed': '7a3f4e4d27ad0f5b1434221dedab460b67d323741b7d507b7db14760928b99ff',
+    'route:json_feed_malformed': 'b66d0adf9951d0f1be87b330a276d98216c2016ad20e22bb9a824c5fdfeac396',
+    'route:markup_without_main_text': 'c1a5be2494497dcd26684da10bbfd74986080c4104fa8e8c3bc3995405ae0582',
+    'route:pdf_minimal': 'ec1b775fcf2b06aa48840422f4c11da5030c6d3c88a4a0218ce2f2e4f2bbf79e',
+    'route:robots_txt': '223818c6065b81a45a5b481c711d69621a60a990a71d69982ca4f3960753bd32',
+    'route:whitespace_only': '248174079c513d77e1390b62d254684aa4e4440bf7889cb7036904e10dc4db3a',
 }
 
 
