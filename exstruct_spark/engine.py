@@ -33,9 +33,15 @@ from pyspark.sql import functions as F
 
 from exstruct_spark.config import ExtractOptions
 from exstruct_spark.golden import EXTRACT_SCHEMA_DDL, extract_pdf
+from exstruct_spark.kernels.extract import RECORD_FIELDS
 
-EXTRACT_WITH_PARTITION_DDL = (
-    EXTRACT_SCHEMA_DDL + ", partition_id int, batch_seq int, batch_wall_ms bigint"
+# per-batch lineage columns extract_stage appends to every record
+_BATCH_FIELDS = (
+    ("partition_id", "int"), ("batch_seq", "int"), ("batch_wall_ms", "bigint"),
+)
+
+EXTRACT_WITH_PARTITION_DDL = EXTRACT_SCHEMA_DDL + "".join(
+    f", {name} {dtype}" for name, dtype in _BATCH_FIELDS
 )
 
 METRICS_SCHEMA_DDL = (
@@ -455,7 +461,6 @@ def extract_stage(
     opts: ExtractOptions = ExtractOptions(),
     repartition_to: Optional[int] = None,
     passthrough: tuple = (),
-    use_external_css: bool = False,
 ) -> DataFrame:
     """The fused extraction transform: pages df -> extraction df.
 
@@ -470,20 +475,15 @@ def extract_stage(
     downstream re-join on url to recover these is a full extra shuffle —
     carrying them through the same batch is free.
 
-    ``use_external_css``: the input carries an ``external_css`` column
-    (from ``attach_external_css``) — ride it into the batch so the
-    kernel's StyleResolver sees corpus-joined stylesheet rules.
+    An ``external_css`` input column (from ``attach_external_css``) is
+    detected automatically and rides into the batch, so the kernel's
+    StyleResolver sees the corpus-joined stylesheet rules.
     """
     df = pages
     if repartition_to:
         df = df.repartition(repartition_to, F.xxhash64("url"))
 
-    # field names via the real DDL parser — a positional token split would
-    # silently yield garbage names (weakening the collision check) if any
-    # type ever gained a space, e.g. 'decimal(10, 2)' (ADVICE r2)
-    from pyspark.sql.types import StructType
-
-    reserved = set(StructType.fromDDL(EXTRACT_WITH_PARTITION_DDL).fieldNames())
+    reserved = {name for name, _ in RECORD_FIELDS + _BATCH_FIELDS}
     for col in passthrough:
         if col in reserved:
             raise ValueError(f"passthrough column collides with output: {col}")
@@ -508,7 +508,7 @@ def extract_stage(
                 out[col] = pdf[col].values
             yield out
 
-    extra_in = ("external_css",) if use_external_css else ()
+    extra_in = ("external_css",) if "external_css" in df.columns else ()
     return df.select("url", "html", *extra_in, *passthrough).mapInPandas(
         run, schema=EXTRACT_WITH_PARTITION_DDL + pass_ddl
     )
@@ -708,6 +708,29 @@ class ExtractionJob:
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return fs, hpath
 
+    def _exists(self, path: str) -> bool:
+        fs, hpath = self._fs(path)
+        return fs.exists(hpath)
+
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        """``df`` plus its ``url_bucket`` resume key."""
+        return df.withColumn(
+            "url_bucket",
+            F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
+        )
+
+    def _completed_staging(self, input_snapshot: str, needed_by: str) -> str:
+        """The staged path of a snapshot whose staging completed
+        (``_SUCCESS`` present); ``needed_by`` names the caller in the
+        error raised otherwise."""
+        staged_path = self._staged_path(input_snapshot)
+        if not self._exists(staged_path + "/_SUCCESS"):
+            raise ValueError(
+                f"no completed staging for snapshot {input_snapshot!r} — "
+                f"{needed_by} a prior run(stage_input=True)"
+            )
+        return staged_path
+
     def _staged_path(self, input_snapshot: str) -> str:
         # snapshot names may be paths/URIs ("iceberg:db.tbl", "s3://...");
         # percent-encode for the directory name like partitionBy would
@@ -727,13 +750,10 @@ class ExtractionJob:
         reused; an interrupted one is rewritten).  This is the single full
         input scan of the whole job."""
         staged = self._staged_path(input_snapshot)
-        fs, hpath = self._fs(staged + "/_SUCCESS")
-        if fs.exists(hpath):
+        if self._exists(staged + "/_SUCCESS"):
             return staged
-        bucketed = pages.withColumn(
-            "url_bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
-        )
-        bucketed.write.mode("overwrite").partitionBy("url_bucket").parquet(staged)
+        self._bucketed(pages).write.mode("overwrite").partitionBy(
+            "url_bucket").parquet(staged)
         return staged
 
     def _list_staged_buckets(self, staged: str) -> list:
@@ -750,11 +770,12 @@ class ExtractionJob:
     def _done_buckets(self, input_snapshot: str) -> set:
         """Buckets already completed FOR THIS SNAPSHOT (lineage filtered on
         both status and input_snapshot — a different snapshot's completions
-        never mask new work)."""
-        try:
-            lineage = self.io.read(self.spark, self.lineage_dir)
-        except Exception:
+        never mask new work).  A missing lineage table means nothing is
+        done; any other read error raises — reading it as "nothing done"
+        would reprocess every bucket and append duplicate metrics."""
+        if not self._exists(self.lineage_dir):
             return set()
+        lineage = self.io.read(self.spark, self.lineage_dir)
         rows = (
             lineage.where(
                 (F.col("status") == "done")
@@ -789,11 +810,10 @@ class ExtractionJob:
         # re-hash, no re-join to recover the sink partition key.
         # A staged external_css column (attach_external_css ran on the
         # full corpus BEFORE staging — the join must see page and sheet
-        # regardless of bucket) is auto-detected and ridden in; patch
+        # regardless of bucket) rides in through extract_stage; patch
         # refreshes reuse the staged sheets unchanged.
         extracted = extract_stage(
             todo, self.opts, passthrough=("url_bucket",),
-            use_external_css="external_css" in staged.columns,
         ).withColumn("input_snapshot", F.lit(input_snapshot))
         self.io.write(
             extracted, self.output_dir, "overwrite",
@@ -855,10 +875,7 @@ class ExtractionJob:
             staged = self.spark.read.parquet(staged_path)
             present = self._list_staged_buckets(staged_path)
         else:
-            staged = pages.withColumn(
-                "url_bucket",
-                F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
-            )
+            staged = self._bucketed(pages)
             present = list(range(self.n_buckets))
         done_set = self._done_buckets(input_snapshot)
         todo_buckets = [b for b in present if b not in done_set]
@@ -876,17 +893,13 @@ class ExtractionJob:
         # (metrics history is append-only and would double-count a
         # reprocessed bucket; the output partitions are the truth).  One
         # partition-pruned count at job end, not per wave.
-        try:
-            n_out = (
-                self.io.read(
-                    self.spark, self.output_dir,
-                    schema=self._output_schema_ddl(),
-                )
-                .where(F.col("input_snapshot") == input_snapshot)
-                .count()
+        n_out = (
+            self.io.read(
+                self.spark, self.output_dir, schema=self._output_schema_ddl(),
             )
-        except Exception:
-            n_out = 0
+            .where(F.col("input_snapshot") == input_snapshot)
+            .count()
+        ) if self._exists(self.output_dir) else 0
         return {
             "run_id": run_id,
             "buckets_done_before": len(done_set),
@@ -921,18 +934,10 @@ class ExtractionJob:
         size ``n_buckets`` for the patch regime (4096+ at corpus scale
         keeps a few-thousand-url patch under a percent of the data;
         measured 4.6x at 96k docs / 64 buckets, BENCH round-4)."""
-        staged_path = self._staged_path(input_snapshot)
-        fs, hpath = self._fs(staged_path + "/_SUCCESS")
-        if not fs.exists(hpath):
-            raise ValueError(
-                f"no completed staging for snapshot {input_snapshot!r} — "
-                "patch requires a prior run(stage_input=True)"
-            )
+        staged_path = self._completed_staging(input_snapshot,
+                                              "patch requires")
         run_id = uuid.uuid4().hex[:12]
-        bucketed = patch.withColumn(
-            "url_bucket",
-            F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int"),
-        )
+        bucketed = self._bucketed(patch)
         affected = sorted(
             r["url_bucket"]
             for r in bucketed.select("url_bucket").distinct().collect()
@@ -945,19 +950,8 @@ class ExtractionJob:
             .unionByName(bucketed)
             .localCheckpoint()
         )
-        conf = self.spark.conf
-        key = "spark.sql.sources.partitionOverwriteMode"
-        old = conf.get(key, None)
-        conf.set(key, "dynamic")
-        try:
-            (merged.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("url_bucket").parquet(staged_path))
-        finally:
-            if old is None:
-                conf.unset(key)
-            else:
-                conf.set(key, old)
+        TableIO("parquet").write(merged, staged_path, "overwrite",
+                                 partition_by=("url_bucket",), dynamic=True)
         fresh = self.spark.read.parquet(staged_path)
         self._run_wave(fresh, affected, run_id, input_snapshot)
         return {
@@ -997,13 +991,8 @@ class ExtractionJob:
         from exstruct_spark.kernels.dom import decode_html_bytes
         from exstruct_spark.kernels.edits import apply_ops
 
-        staged_path = self._staged_path(input_snapshot)
-        fs, hpath = self._fs(staged_path + "/_SUCCESS")
-        if not fs.exists(hpath):
-            raise ValueError(
-                f"no completed staging for snapshot {input_snapshot!r} — "
-                "cell edits require a prior run(stage_input=True)"
-            )
+        staged_path = self._completed_staging(input_snapshot,
+                                              "cell edits require")
         urls = sorted(edits)
         ops_json = {u: _json.dumps(list(ops)) for u, ops in edits.items()}
         bc = self.spark.sparkContext.broadcast(ops_json)

@@ -8,35 +8,16 @@ sample inputs (``sample/*/sample.json``, SURVEY.md §5).
 
 from __future__ import annotations
 
+from itertools import repeat
+
 import pandas as pd
 
 from exstruct_spark.config import ExtractOptions
-from exstruct_spark.kernels.extract import extract_document
+from exstruct_spark.kernels.extract import RECORD_FIELDS, extract_document
 
-GOLDEN_COLUMNS = [
-    "url",
-    "status",
-    "fallback_reason",
-    "main_text",
-    "extraction_json",
-    "text_sha256",
-    "json_sha256",
-    "n_tables",
-    "n_shapes",
-    "n_arrows",
-    "n_charts",
-    "n_lists",
-    "n_links",
-    "bytes_in",
-    "truncated",
-]
+GOLDEN_COLUMNS = [name for name, _ in RECORD_FIELDS]
 
-EXTRACT_SCHEMA_DDL = (
-    "url string, status string, fallback_reason string, main_text string, "
-    "extraction_json string, text_sha256 string, json_sha256 string, "
-    "n_tables int, n_shapes int, n_arrows int, n_charts int, n_lists int, "
-    "n_links int, bytes_in bigint, truncated boolean"
-)
+EXTRACT_SCHEMA_DDL = ", ".join(f"{name} {dtype}" for name, dtype in RECORD_FIELDS)
 
 
 def extract_pdf(pdf: pd.DataFrame, opts: ExtractOptions = ExtractOptions()) -> pd.DataFrame:
@@ -44,24 +25,18 @@ def extract_pdf(pdf: pd.DataFrame, opts: ExtractOptions = ExtractOptions()) -> p
 
     This exact function body runs inside the Spark ``mapInPandas`` stage;
     calling it directly on a pandas frame is the reference extractor.
+    An ``external_css`` column (engine.attach_external_css: per-row
+    corpus-joined sheets, None when the page linked none in the corpus)
+    is passed to the kernel when present.
     """
-    if "external_css" in pdf.columns:
-        # corpus-joined stylesheet texts (engine.attach_external_css):
-        # per-row list of sheet strings in link order, None when the
-        # page linked no sheet present in the corpus
-        records = [
-            extract_document(url, html, opts, external_css=ext)
-            for url, html, ext in zip(
-                pdf["url"].tolist(), pdf["html"].tolist(),
-                pdf["external_css"].tolist(),
-            )
-        ]
-    else:
-        records = [
-            extract_document(url, html, opts)
-            for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist())
-        ]
-    return pd.DataFrame(records, columns=GOLDEN_COLUMNS)
+    sheets = (pdf["external_css"].tolist() if "external_css" in pdf.columns
+              else repeat(None))
+    return pd.DataFrame(
+        [extract_document(url, html, opts, external_css=ext)
+         for url, html, ext in zip(pdf["url"].tolist(), pdf["html"].tolist(),
+                                   sheets)],
+        columns=GOLDEN_COLUMNS,
+    )
 
 
 def reference_extract_frame(

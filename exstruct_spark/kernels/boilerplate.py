@@ -75,17 +75,13 @@ _SKIP_SUBTREES = frozenset({"table", "figure", "svg", "form", "select"}) | _BOIL
 
 
 def _link_text_len(node: Node) -> int:
+    # walks the doc-list index in place: no subtree-slice allocation (r8)
     dl = node.doc_nodes
-    if dl is not None:  # indexed tree: no subtree-slice allocation (r8)
-        total = 0
-        for i in range(node.i0, node.i1):
-            n = dl[i]
-            if n.tag == "a":
-                total += len(n.text_content())
-        return total
     total = 0
-    for a in node.find_all("a"):
-        total += len(a.text_content())
+    for i in range(node.i0, node.i1):
+        n = dl[i]
+        if n.tag == "a":
+            total += len(n.text_content())
     return total
 
 

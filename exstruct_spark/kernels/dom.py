@@ -115,8 +115,10 @@ class Node:
     creation, ``i1`` when the element scope closes.  Subtree traversal of
     a parsed document is then one C-level list slice — no per-node Python
     walk.  The tree is never mutated after parse (all kernels are
-    read-only over it), so the index cannot go stale.  Manually built
-    trees (``doc_nodes is None``) fall back to an explicit-stack walk.
+    read-only over it), so the index cannot go stale.  Every tree comes
+    from ``parse_html`` (the native parser or ``_parse_html_fast``), and
+    both set ``doc_nodes``, ``i0`` and ``i1``, so traversal has no
+    unindexed path.
     """
 
     __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1",
@@ -129,72 +131,21 @@ class Node:
         self.doc_nodes = None
         self.i0 = 0
         self.i1 = 0
-        # ancestor link for CSS combinator matching (kernels/css.py).
-        # Set by the parser; manually built trees may leave it None, in
-        # which case combinator rules simply never match (deterministic
-        # under-match, same contract as unsupported selectors).
+        # ancestor link for CSS combinator matching (kernels/css.py),
+        # set by the parser; None only on the document root.
         self.parent: Optional["Node"] = None
 
     # -- traversal -------------------------------------------------------
     def _subtree(self) -> list:
         """Pre-order node list including self (document order)."""
         dl = self.doc_nodes
-        if dl is not None:
-            if self.i0 == 0 and self.i1 == len(dl):
-                return dl
-            return dl[self.i0 : self.i1]
-        out: list = []
-        add = out.append
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            add(node)
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
-        return out
+        if self.i0 == 0 and self.i1 == len(dl):
+            return dl
+        return dl[self.i0 : self.i1]
 
     def iter(self) -> Iterator["Node"]:
         """Pre-order traversal including self (document order)."""
         return iter(self._subtree())
-
-    def iter_rendered(self) -> Iterator["Node"]:
-        """Pre-order traversal that yields inert containers
-        (``<template>``/``<noscript>``) themselves but never DESCENDS
-        into them — a browser never renders their content, so their
-        markup must not feed the artifact collectors (tables, links,
-        charts, structured data).
-
-        Indexed trees use the prebuilt doc list with an index jump past
-        each inert subtree (the hot extraction walk instead inlines the
-        same skip as an integer guard over ``iter()`` — a generator
-        resume per node costs real throughput at corpus scale)."""
-        dl = self.doc_nodes
-        if dl is not None:
-            i = self.i0
-            i1 = self.i1
-            while i < i1:
-                node = dl[i]
-                yield node
-                i = node.i1 if node.tag in RENDER_INERT else i + 1
-            return
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            yield node
-            if node.tag in RENDER_INERT:
-                continue
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
 
     def find_all(self, *tags: str) -> list:
         if len(tags) == 1:
@@ -205,46 +156,20 @@ class Node:
 
     def find_first(self, *tags: str):
         dl = self.doc_nodes
-        if dl is not None:
-            i1 = self.i1
-            if len(tags) == 1:
-                want_one = tags[0]
-                for i in range(self.i0, i1):
-                    n = dl[i]
-                    if n.tag == want_one:
-                        return n
-                return None
-            want = set(tags)
+        i1 = self.i1
+        if len(tags) == 1:
+            want_one = tags[0]
             for i in range(self.i0, i1):
                 n = dl[i]
-                if n.tag in want:
+                if n.tag == want_one:
                     return n
             return None
-        # unindexed tree: inline pre-order walk with early exit
         want = set(tags)
-        stack = [self]
-        pop = stack.pop
-        push = stack.append
-        while stack:
-            node = pop()
-            if node.tag in want:
-                return node
-            children = node.children
-            for i in range(len(children) - 1, -1, -1):
-                c = children[i]
-                if type(c) is Node:
-                    push(c)
+        for i in range(self.i0, i1):
+            n = dl[i]
+            if n.tag in want:
+                return n
         return None
-
-    def collect_tags(self, groups: dict) -> None:
-        """Single-pass collection: ``groups`` maps tag -> list; every node
-        whose tag is a key is appended to its list in document order.
-        One traversal replaces one ``find_all`` per artifact family."""
-        get = groups.get
-        for n in self._subtree():
-            bucket = get(n.tag)
-            if bucket is not None:
-                bucket.append(n)
 
     def element_children(self) -> list:
         return [c for c in self.children if type(c) is Node]

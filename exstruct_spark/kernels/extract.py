@@ -63,6 +63,27 @@ from exstruct_spark.kernels.tables import detect_grid_candidates, extract_table
 
 _DEFAULT_OPTS = ExtractOptions()
 
+# the one result record: (field name, Spark SQL type) in column order.
+# The golden frame's columns and the Spark stage's schema derive from it.
+RECORD_FIELDS = (
+    ("url", "string"),
+    ("status", "string"),           # 'ok' | 'fallback'
+    ("fallback_reason", "string"),
+    ("main_text", "string"),
+    ("extraction_json", "string"),
+    ("text_sha256", "string"),
+    ("json_sha256", "string"),
+    ("n_tables", "int"),
+    ("n_shapes", "int"),
+    ("n_arrows", "int"),
+    ("n_charts", "int"),
+    ("n_lists", "int"),
+    ("n_links", "int"),
+    ("bytes_in", "bigint"),
+    ("truncated", "boolean"),
+)
+_RECORD_NAMES = tuple(name for name, _ in RECORD_FIELDS)
+
 # invisible-ink characters stripped from main text (the standard
 # corpus-hygiene set): soft hyphen, zero-width space, word joiner,
 # BOM/zero-width no-break space.  ZWNJ/ZWJ (200C/200D) are KEPT — they
@@ -407,15 +428,29 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
     return positions
 
 
+def _record(url: str, status: str, fallback_reason: str, main_text: str,
+            extraction: dict, bytes_in: int, n_tables: int = 0,
+            n_shapes: int = 0, n_arrows: int = 0, n_charts: int = 0,
+            n_lists: int = 0, n_links: int = 0,
+            truncated: bool = False) -> dict:
+    """The ``RECORD_FIELDS`` record of one document: serializes
+    ``extraction`` and hashes it and the (already normalized) text."""
+    extraction_json = canonical_json(extraction)
+    return dict(zip(_RECORD_NAMES, (
+        url, status, fallback_reason, main_text, extraction_json,
+        sha256_hex(main_text), sha256_hex(extraction_json),
+        n_tables, n_shapes, n_arrows, n_charts, n_lists, n_links,
+        bytes_in, truncated,
+    )))
+
+
 def extract_document(
     url: str, html_bytes: Optional[bytes], opts: ExtractOptions = _DEFAULT_OPTS,
     external_css=None,
 ) -> dict:
-    """One document -> flat result record (plain Python scalars only).
-
-    Returns keys: url, status ('ok'|'fallback'), fallback_reason,
-    main_text, extraction_json, text_sha256, json_sha256, n_tables,
-    n_shapes, n_arrows, n_charts, n_lists, n_links, bytes_in, truncated.
+    """One document -> flat result record (plain Python scalars only)
+    with the fields of ``RECORD_FIELDS``; ``status`` is 'ok' or
+    'fallback'.
 
     ``external_css``: optional corpus-joined stylesheets for this page
     (link order), from engine.attach_external_css — the crawl contains
@@ -457,20 +492,8 @@ def extract_document(
             status = "fallback"
             fallback_reason = f"pdf:{type(exc).__name__}"
             extraction["fallback_reason"] = fallback_reason
-        extraction_json = canonical_json(extraction)
-        return {
-            "url": url,
-            "status": status,
-            "fallback_reason": fallback_reason,
-            "main_text": main_text,
-            "extraction_json": extraction_json,
-            "text_sha256": sha256_hex(main_text),
-            "json_sha256": sha256_hex(extraction_json),
-            "n_tables": 0, "n_shapes": 0, "n_arrows": 0,
-            "n_charts": 0, "n_lists": 0, "n_links": 0,
-            "bytes_in": bytes_in,
-            "truncated": False,
-        }
+        return _record(url, status, fallback_reason, main_text, extraction,
+                       bytes_in)
 
     html = decode_html_bytes(raw)
 
@@ -497,20 +520,8 @@ def extract_document(
             status = "fallback"
             fallback_reason = f"feed:{type(exc).__name__}"
             extraction["fallback_reason"] = fallback_reason
-        extraction_json = canonical_json(extraction)
-        return {
-            "url": url,
-            "status": status,
-            "fallback_reason": fallback_reason,
-            "main_text": main_text,
-            "extraction_json": extraction_json,
-            "text_sha256": sha256_hex(main_text),
-            "json_sha256": sha256_hex(extraction_json),
-            "n_tables": 0, "n_shapes": 0, "n_arrows": 0,
-            "n_charts": 0, "n_lists": n_lists, "n_links": 0,
-            "bytes_in": bytes_in,
-            "truncated": False,
-        }
+        return _record(url, status, fallback_reason, main_text, extraction,
+                       bytes_in, n_lists=n_lists)
 
     if not html.strip():
         status = "fallback"
@@ -1013,22 +1024,6 @@ def extract_document(
             extraction["fallback_reason"] = fallback_reason or "no_main_text"
 
     # NFC-normalize so byte identity is well-defined across sources
-    main_text = normalize_main_text(main_text)
-    extraction_json = canonical_json(extraction)
-    return {
-        "url": url,
-        "status": status,
-        "fallback_reason": fallback_reason,
-        "main_text": main_text,
-        "extraction_json": extraction_json,
-        "text_sha256": sha256_hex(main_text),
-        "json_sha256": sha256_hex(extraction_json),
-        "n_tables": n_tables,
-        "n_shapes": n_shapes,
-        "n_arrows": n_arrows,
-        "n_charts": n_charts,
-        "n_lists": n_lists,
-        "n_links": n_links,
-        "bytes_in": bytes_in,
-        "truncated": truncated,
-    }
+    return _record(url, status, fallback_reason, normalize_main_text(main_text),
+                   extraction, bytes_in, n_tables, n_shapes, n_arrows,
+                   n_charts, n_lists, n_links, truncated)

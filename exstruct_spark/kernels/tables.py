@@ -364,6 +364,7 @@ def _grid_from_aria(table: Node, cfg: DetectionConfig, css=None):
     n_cols = 0
     empty_run = 0
     n_rows_scanned = 0
+    span_floor = -1  # deepest row still covered by an active rowspan
     for r, rn in enumerate(rows_nodes):
         n_rows_scanned = r + 1
         row_had_content = False
@@ -401,6 +402,10 @@ def _grid_from_aria(table: Node, cfg: DetectionConfig, css=None):
             if rowspan > 1 or colspan > 1:
                 r2 = min(r + rowspan - 1, cfg.max_rows - 1)
                 c2 = min(c + colspan - 1, cfg.max_cols - 1)
+                # same bounded span credit as _grid_from_table (W3 guard)
+                span_floor = max(
+                    span_floor, min(r2, r + 4 * cfg.max_empty_run)
+                )
                 master = cells.get((r, c), " ")
                 merged_items.append([r + 1, c, r2 + 1, c2, master])
                 for rr in range(r, r2 + 1):
@@ -409,13 +414,10 @@ def _grid_from_aria(table: Node, cfg: DetectionConfig, css=None):
                             occupied.add((rr, cc))
             c += colspan
             n_cols = max(n_cols, c)
-        if row_had_content:
-            empty_run = 0
-        else:
-            empty_run += 1
-            if empty_run > cfg.max_empty_run:
-                truncated = True
-                break
+        empty_run = 0 if row_had_content or r <= span_floor else empty_run + 1
+        if empty_run >= cfg.max_empty_run:
+            truncated = True
+            break
     return (
         cells, merged_items, links, th_cells, colors,
         n_rows_scanned, min(n_cols, cfg.max_cols), truncated,

@@ -4,7 +4,7 @@ The reference converts OOXML EMU geometry to points with
 ``_EMU_PER_POINT = 12700`` (reference core/ooxml_drawing.py:24,933-947)
 and decodes rotation as ``rot / 60000`` degrees
 (ooxml_drawing.py:638-644).  The web surface speaks CSS lengths instead,
-so this kernel provides the same value domain both ways plus a tolerant
+so this kernel maps EMU to pt/px and pt to px, plus a tolerant
 CSS-length parser for SVG/HTML attributes (``width='9pt'``).
 
 Constants: 1 inch = 914400 EMU = 72 pt = 96 CSS px, so
@@ -40,24 +40,12 @@ def emu_to_points(v: float) -> float:
     return v / EMU_PER_POINT
 
 
-def points_to_emu(v: float) -> float:
-    return v * EMU_PER_POINT
-
-
 def emu_to_px(v: float) -> float:
     return v / EMU_PER_PX
 
 
-def px_to_emu(v: float) -> float:
-    return v * EMU_PER_PX
-
-
 def points_to_px(v: float) -> float:
     return v * PX_PER_POINT
-
-
-def px_to_points(v: float) -> float:
-    return v / PX_PER_POINT
 
 
 def ooxml_rot_to_degrees(raw) -> Optional[float]:

@@ -415,14 +415,6 @@ def _inv_predictor(px, w, h, bits, sub, sub_w):
     return px
 
 
-def _delta(t: int, c: int) -> int:
-    # both operands as signed int8; arithmetic shift (Python >> floors,
-    # matching the reference semantics)
-    ts = t - 256 if t > 127 else t
-    cs = c - 256 if c > 127 else c
-    return (ts * cs) >> 5
-
-
 def _inv_color_transform(px, w, h, bits, sub, sub_w):
     # vectorized: map each pixel to its block's transform element, then
     # apply the signed-int8 deltas as numpy int16 math (exact semantics

@@ -260,6 +260,16 @@ def _confine(path: str) -> str:
     return resolved
 
 
+def _record_reply(rec: dict) -> dict:
+    """The reply view of one extraction record."""
+    return {
+        "status": rec["status"],
+        "main_text": rec["main_text"],
+        "extraction": json.loads(rec["extraction_json"] or "{}"),
+        "truncated": bool(rec["truncated"]),
+    }
+
+
 def _call_extract_html(args: dict) -> dict:
     from exstruct_spark.config import ExtractOptions
     from exstruct_spark.golden import extract_document
@@ -277,12 +287,7 @@ def _call_extract_html(args: dict) -> dict:
         opts,
         external_css=ext,
     )
-    return {
-        "status": rec["status"],
-        "main_text": rec["main_text"],
-        "extraction": json.loads(rec["extraction_json"] or "{}"),
-        "truncated": bool(rec["truncated"]),
-    }
+    return _record_reply(rec)
 
 
 def _call_render_table_images(args: dict) -> dict:
@@ -362,13 +367,7 @@ def _call_extract_file(args: dict) -> dict:
     opts = (ExtractOptions.from_mode(args["mode"])
             if args.get("mode") else ExtractOptions())
     rec = extract_document("file://" + resolved, raw, opts)
-    return {
-        "path": resolved,
-        "status": rec["status"],
-        "main_text": rec["main_text"],
-        "extraction": json.loads(rec["extraction_json"] or "{}"),
-        "truncated": bool(rec["truncated"]),
-    }
+    return {"path": resolved, **_record_reply(rec)}
 
 
 def _call_media_probe(args: dict) -> dict:

@@ -2125,6 +2125,41 @@ def test_aria_adversarial_probes_degrade_not_fail():
         assert rec["status"] == "ok" and rec["n_tables"] == 0
 
 
+def _span_then_gap(form: str, rowspan: int, gap: int) -> bytes:
+    """A two-column grid: a first row whose first cell spans ``rowspan``
+    rows, ``gap`` empty rows, then one data row — as ``<table>`` or as
+    an ARIA ``role="table"`` grid."""
+    if form == "table":
+        head = f"<table><tr><td rowspan='{rowspan}'>top</td><td>x</td></tr>"
+        return (head + "<tr></tr>" * gap
+                + "<tr><td>tail</td><td>9</td></tr></table>").encode()
+    head = (f"<div role='table'><div role='row'><div role='cell' "
+            f"aria-rowspan='{rowspan}'>top</div><div role='cell'>x</div></div>")
+    return (head + "<div role='row'></div>" * gap
+            + "<div role='row'><div role='cell'>tail</div>"
+            "<div role='cell'>9</div></div></div>").encode()
+
+
+@pytest.mark.parametrize("rowspan,gap,want_range,want_truncated", [
+    # rows under a tall span count as content: the data row survives
+    (251, 250, "A1:B252", False),
+    # max_empty_run (200) empty rows end the scan; one fewer does not
+    (1, 200, "A1:B1", True),
+    (1, 199, "A1:B201", False),
+])
+@pytest.mark.parametrize("form", ["table", "aria"])
+def test_empty_run_rule_same_for_table_and_aria(form, rowspan, gap,
+                                                want_range, want_truncated):
+    """The ARIA grid applies the ``<table>`` empty-run rule: rows under
+    an active rowspan are not empty, and the run ends at
+    ``max_empty_run`` empty rows."""
+    rec = extract_document("https://x/t", _span_then_gap(form, rowspan, gap))
+    (table,) = json.loads(rec["extraction_json"])["tables"]
+    assert table["range"] == want_range
+    assert bool(table.get("truncated")) is want_truncated
+    assert rec["truncated"] is want_truncated
+
+
 def test_bpe_oracle_encode_pass_cap_never_binds():
     """The generated doc_bpe_real DuckDB oracle unrolls greedy encoding
     into a FIXED number of passes (10).  A pass with no applicable merge

@@ -201,6 +201,23 @@ def test_new_snapshot_not_masked_by_old_lineage(spark, tmp_path):
     assert r3["buckets_processed"] == 0
 
 
+def test_unreadable_lineage_raises(spark, tmp_path):
+    """Only a MISSING lineage table reads as "nothing done": a lineage
+    table that exists but cannot be read stops the run instead of
+    silently reprocessing every bucket and appending duplicate
+    metrics."""
+    out_d, lin_d, met_d = (
+        str(tmp_path / "o"), str(tmp_path / "l"), str(tmp_path / "m"),
+    )
+    (tmp_path / "l").mkdir()
+    (tmp_path / "l" / "part-00000.parquet").write_bytes(b"not parquet at all")
+    job = ExtractionJob(spark, out_d, lin_d, met_d, n_buckets=4)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        job.run(spark_pages(spark, 8, partitions=2))
+    assert not (tmp_path / "o").exists()
+    assert not (tmp_path / "m").exists()
+
+
 def test_passthrough_columns_no_rejoin(spark):
     """Passthrough columns ride the Arrow batch: values match the input
     row-for-row and the plan contains no join."""
@@ -595,7 +612,7 @@ def test_external_css_corpus_join(spark):
     """VERDICT r6 #2 done-criterion: a page whose border/fill signal
     exists ONLY in a separate CSS document in the corpus extracts
     identically to its inline twin, via harvest -> equi-join ->
-    extract_stage(use_external_css=True).  Plan audited: one broadcast
+    extract_stage.  Plan audited: one broadcast
     hash join on the css side, no cartesian product."""
     import json
 
@@ -638,7 +655,7 @@ def test_external_css_corpus_join(spark):
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
     with_css = attach_external_css(pages)
-    out = extract_stage(with_css, use_external_css=True)
+    out = extract_stage(with_css)
     recs = {r["url"]: r for r in out.collect()}
 
     ex_page = json.loads(recs["https://site.example/page"]["extraction_json"])
@@ -680,7 +697,7 @@ def test_external_css_corpus_join(spark):
              ("http://s.example/base.css", base)]
     pages2 = spark.createDataFrame(rows2, "url string, html binary")
     rec2 = {r["url"]: r for r in extract_stage(
-        attach_external_css(pages2), use_external_css=True).collect()}
+        attach_external_css(pages2)).collect()}
     ex2 = json.loads(rec2["http://s.example/page"]["extraction_json"])
     assert ex2["tables"][0]["colors_map"] == {
         "222222": [[1, 0], [1, 1]], "EEEEFF": [[2, 0], [2, 1]]}
@@ -729,8 +746,7 @@ def test_external_css_media_authority(spark):
         ("https://c.example/d.css", good_css),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect() if r["url"].startswith("https://")
             and not r["url"].endswith(".css")}
@@ -770,8 +786,7 @@ def test_harvest_ignores_commented_base(spark):
          b"td { background-color: #00FF00 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     rec = {r["url"]: r for r in out.collect()}[
         "https://site.example/a/page"]
     ex = json.loads(rec["extraction_json"])
@@ -816,8 +831,7 @@ def test_harvest_base_candidates_cover_dom_divergence(spark):
          b"td { background-color: #0000FF }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     a = recs["https://u.example/a/page"]
@@ -861,8 +875,7 @@ def test_harvest_entity_decode_and_script_base(spark):
          b"td { background-color: #0000FF }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     a = recs["https://e.example/p"]
@@ -918,8 +931,7 @@ def test_harvest_attr_parity_with_kernel(spark):
          b"td { background-color: #FF8800 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     recs = {r["url"]: json.loads(r["extraction_json"])
             for r in out.collect()}
     assert recs["https://g.example/p"]["tables"][0]["colors_map"] == {
@@ -956,8 +968,7 @@ def test_inline_style_import_corpus_join(spark):
          b"td { background-color: #123456 }"),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_stage(attach_external_css(pages),
-                        use_external_css=True)
+    out = extract_stage(attach_external_css(pages))
     rec = {r["url"]: r for r in out.collect()}["https://j.example/p"]
     ex = json.loads(rec["extraction_json"])
     assert ex["stylesheets"] == ["https://j.example/theme.css"]
