@@ -16,6 +16,10 @@ Parity map (behaviour, not code — SURVEY.md §2):
                                   1209-1381) with defaults from cells.py:38-43
   * declared <table> trusted before heuristics, like ListObjects
                                  ~ core/cells.py:1808-1815
+  * declared grids in both forms — <table> (``_table_rows``) and ARIA
+    ``role="table"``/``grid`` (``_aria_rows``) — expand through ONE
+    occupancy grid (``_expand_grid``), so hiding, paint, spans and caps
+    read the same in either form ~ ListObjects (com_backend.py G7)
   * scan caps with logged truncation ~ TableScanLimits (core/cells.py:118-165)
   * <a href> in cells -> per-row ``links`` map ~ extract_sheet_cells_with_links
                                   (core/cells.py:722-760)
@@ -24,6 +28,7 @@ Parity map (behaviour, not code — SURVEY.md §2):
 from __future__ import annotations
 
 from collections import Counter
+from operator import attrgetter
 from typing import Optional
 
 from exstruct_spark.config import DetectionConfig
@@ -32,6 +37,9 @@ from exstruct_spark.kernels.clusters import merge_rectangles, nonempty_clusters
 from exstruct_spark.kernels.coerce import coerce_scalar
 from exstruct_spark.kernels.colors import cell_background
 from exstruct_spark.kernels.dom import Node, is_hidden, visibility_of
+
+
+_own_attrs = attrgetter("attrs")  # effective attrs when no <style> rules
 
 
 def _int_attr(node: Node, name: str, default: int = 1) -> int:
@@ -45,67 +53,80 @@ def _int_attr(node: Node, name: str, default: int = 1) -> int:
         return default
 
 
-def _grid_from_table(table: Node, cfg: DetectionConfig, css=None):
-    """Occupancy-grid expansion of one <table>.
+_ROWGROUPS = ("thead", "tbody", "tfoot")
+_ARIA_CELL_ROLES = ("cell", "gridcell", "columnheader", "rowheader")
 
-    Returns (cells, merged_items, links, th_cells, colors, n_rows, n_cols,
-    truncated) where ``cells`` maps (r, c) 0-based -> coerced value for
-    master cells only, ``merged_items`` are [r1, c1, r2, c2, value] with r
-    1-based / c 0-based (the reference's MergedCells coordinate convention),
-    ``links`` maps (r, c) -> first href in the cell, ``th_cells`` is the set
-    of (r, c) that came from <th> elements, and ``colors`` maps (r, c) ->
-    normalized background color (the colors_map source, reference
-    core/cells.py:277-310).
-    """
-    cells: dict = {}
-    merged_items: list = []
-    links: dict = {}
-    th_cells: set = set()
-    colors: dict = {}
-    occupied: set = set()
-    truncated = False
 
-    # hidden rows are not rendered: later rows shift up, exactly as a
-    # browser lays the table out (hidden attr / display:none, class
-    # rules resolved — filtered BEFORE the row cap).  visibility:
-    # collapse removes rows/row-groups the same way; visibility:hidden
-    # keeps the layout slot but paints NOTHING — the row stays in the
-    # grid with every cell blank (a browser's blank-box semantics).
-    # The effective attrs are computed once here and reused for the
-    # row paint below; the bool is the row's blank flag.
-    trs = []
-    hidden_groups: dict = {}  # id -> (removed, blank)
-    for tr in table.find_all("tr"):
-        group_blank = False
-        parent = tr.parent
-        if parent is not None and parent.tag in ("thead", "tbody",
-                                                 "tfoot"):
-            key = id(parent)
-            if key not in hidden_groups:
-                p_eff = (css.effective_attrs(parent) if css
-                         else parent.attrs)
-                p_vis = visibility_of(p_eff)
-                hidden_groups[key] = (
-                    is_hidden(p_eff) or p_vis == "collapse",
-                    p_vis == "hidden",
-                )
-            removed, group_blank = hidden_groups[key]
-            if removed:
-                continue  # a hidden/collapsed rowgroup hides its rows
-        eff = css.effective_attrs(tr) if css else tr.attrs
-        vis = visibility_of(eff)
-        if not is_hidden(eff) and vis != "collapse":
-            trs.append((tr, eff, group_blank or vis == "hidden"))
-    if len(trs) > cfg.max_rows:
-        trs = trs[: cfg.max_rows]
-        truncated = True
-    # one table-level probe gates the per-cell anchor scans: most tables
-    # carry no links, and the per-cell subtree walk is the grid pass's
-    # hottest incidental cost (profiled)
-    table_has_links = table.find_first("a") is not None
-    # <colgroup>/<col> column paint (span-expanded): the lowest paint
-    # layer a cell can inherit — CSS paints cell > row > column, so the
-    # fallback chain below is own-bg, then row_bg, then col_bg
+def _role(node: Node) -> str:
+    return (node.attrs.get("role") or "").strip().lower()
+
+
+def _table_cells(tr: Node):
+    for cell in tr.element_children():
+        if cell.tag in ("td", "th"):
+            yield (cell, _int_attr(cell, "rowspan"),
+                   _int_attr(cell, "colspan"), cell.tag == "th")
+
+
+def _table_rows(table: Node) -> list:
+    """The <table>'s OWN rows as ``(tr, rowgroup or None, cells)``;
+    ``cells`` lazily yields ``(cell, rowspan, colspan, is_header)`` for
+    the row's td/th children.  A nested <table> owns its rows (it
+    extracts as its own artifact), so its subtree is skipped — the same
+    row addressing as kernels/edits.py ``_row_spans``."""
+    rows = []
+    skip_to = -1
+    # [1:] drops the table itself (find_all is pre-order including self)
+    for n in table.find_all("tr", "table")[1:]:
+        if n.i0 < skip_to:
+            continue
+        if n.tag == "table":
+            skip_to = n.i1
+            continue
+        group = n.parent if n.parent.tag in _ROWGROUPS else None
+        rows.append((n, group, _table_cells(n)))
+    return rows
+
+
+def _aria_find(node: Node, roles: tuple) -> list:
+    """Descendants of ``node`` whose role is in ``roles``, pre-order.
+    Descent stops at a match and at a nested role=table/grid (an inner
+    declared table owns its rows and cells)."""
+    out = []
+    stack = list(reversed(node.element_children()))
+    while stack:
+        n = stack.pop()
+        role = _role(n)
+        if role in roles:
+            out.append(n)
+        elif role not in ("table", "grid"):
+            stack.extend(reversed(n.element_children()))
+    return out
+
+
+def _aria_cells(row: Node):
+    for cell in _aria_find(row, _ARIA_CELL_ROLES):
+        yield (cell, _int_attr(cell, "aria-rowspan"),
+               _int_attr(cell, "aria-colspan"),
+               _role(cell) == "columnheader")
+
+
+def _aria_rows(table: Node) -> list:
+    """G7-twin enumerator: ``role="row"`` rows of a ``role="table"``/
+    ``grid`` container, shaped like ``_table_rows`` — ``role="rowgroup"``
+    is the rowgroup analogue, cell/gridcell/columnheader/rowheader the
+    cells (``columnheader`` the <th> analogue), ``aria-rowspan``/
+    ``aria-colspan`` the spans."""
+    return [
+        (row, row.parent if _role(row.parent) == "rowgroup" else None,
+         _aria_cells(row))
+        for row in _aria_find(table, ("row",))
+    ]
+
+
+def _col_paint(table: Node, cfg: DetectionConfig, css=None) -> list:
+    """<colgroup>/<col> column paint, span-expanded (no ARIA analogue)."""
+    eff = css.effective_attrs if css else _own_attrs
     col_bg: list = []
     for child in table.element_children():
         cols = ([child] if child.tag == "col"
@@ -114,51 +135,88 @@ def _grid_from_table(table: Node, cfg: DetectionConfig, css=None):
         for col in cols:
             if col.tag != "col":
                 continue
-            bg = cell_background(
-                css.effective_attrs(col) if css else col.attrs)
+            bg = cell_background(eff(col))
             span = _int_attr(col, "span")
             col_bg.extend([bg] * min(span, cfg.max_cols))
             if len(col_bg) >= cfg.max_cols:
                 break
     while col_bg and col_bg[-1] is None:
         col_bg.pop()
+    return col_bg
+
+
+def _expand_grid(rows: list, col_bg: list, has_links: bool,
+                 cfg: DetectionConfig, css=None):
+    """Occupancy-grid expansion of one declared table's rows (from
+    ``_table_rows`` or ``_aria_rows``).
+
+    Returns (cells, merged_items, links, th_cells, colors, n_rows, n_cols,
+    truncated) where ``cells`` maps (r, c) 0-based -> coerced value for
+    master cells only, ``merged_items`` are [r1, c1, r2, c2, value] with r
+    1-based / c 0-based (the reference's MergedCells coordinate convention),
+    ``links`` maps (r, c) -> first href in the cell, ``th_cells`` is the set
+    of (r, c) that came from header cells, and ``colors`` maps (r, c) ->
+    normalized background color (the colors_map source, reference
+    core/cells.py:277-310).
+    """
+    # class-resolved style (kernels/css.py) falls back to the bare attrs
+    # when no <style> rules exist — the common case stays an identity read
+    eff = css.effective_attrs if css else _own_attrs
+    cells: dict = {}
+    merged_items: list = []
+    links: dict = {}
+    th_cells: set = set()
+    colors: dict = {}
+    occupied: set = set()
+
+    # hidden rows are not rendered: later rows shift up, exactly as a
+    # browser lays the table out (hidden attr / display:none, class
+    # rules resolved — filtered BEFORE the row cap).  visibility:
+    # collapse removes rows/row-groups the same way; visibility:hidden
+    # keeps the layout slot but paints NOTHING — the row stays in the
+    # grid with every cell blank (a browser's blank-box semantics).
+    # Rowgroup state (removed, blank, paint) is memoized per group.
+    groups: dict = {}
+    kept = []
+    for row, group, row_cells in rows:
+        group_blank, group_bg = False, None
+        if group is not None:
+            state = groups.get(id(group))
+            if state is None:
+                g_eff = eff(group)
+                g_vis = visibility_of(g_eff)
+                state = groups[id(group)] = (
+                    is_hidden(g_eff) or g_vis == "collapse",
+                    g_vis == "hidden",
+                    cell_background(g_eff),
+                )
+            removed, group_blank, group_bg = state
+            if removed:
+                continue  # a hidden/collapsed rowgroup hides its rows
+        r_eff = eff(row)
+        vis = visibility_of(r_eff)
+        if not is_hidden(r_eff) and vis != "collapse":
+            kept.append((row_cells, r_eff, group_blank or vis == "hidden",
+                         group_bg))
+    truncated = len(kept) > cfg.max_rows
+    kept = kept[: cfg.max_rows]
     n_cols = 0
     empty_run = 0
     n_rows_scanned = 0
     span_floor = -1  # deepest row still covered by an active rowspan
-    # rowgroup paint (thead/tbody/tfoot backgrounds — the standard way
-    # real tables style their header band) sits between row and column
-    # in the browser's paint order; memoized per group element
-    group_bg_cache: dict = {}
-
-    def _group_bg(tr: Node):
-        parent = tr.parent
-        if parent is None or parent.tag not in ("thead", "tbody",
-                                                "tfoot"):
-            return None
-        key = id(parent)
-        if key not in group_bg_cache:
-            group_bg_cache[key] = cell_background(
-                css.effective_attrs(parent) if css else parent.attrs)
-        return group_bg_cache[key]
-
-    for r, (tr, tr_eff, row_blank) in enumerate(trs):
+    for r, (row_cells, r_eff, row_blank, group_bg) in enumerate(kept):
         n_rows_scanned = r + 1
         row_had_content = False
-        # row-level paint (tr:nth-child zebra rules, <tr bgcolor>):
-        # cells with no background of their own inherit the row's —
-        # exactly what a browser renders; rowgroup paint is the next
-        # layer down.  A blank (visibility:hidden) row paints nothing.
+        # paint order cell > row > rowgroup > column: cells with no
+        # background of their own inherit the row's (tr:nth-child zebra
+        # rules, <tr bgcolor>), then the rowgroup's (the header band),
+        # then the column's — exactly what a browser renders.  A blank
+        # (visibility:hidden) row paints nothing.
         row_bg = (None if row_blank
-                  else cell_background(tr_eff) or _group_bg(tr))
+                  else cell_background(r_eff) or group_bg)
         c = 0
-        for cell in tr.element_children():
-            if cell.tag not in ("td", "th"):
-                continue
-            # class-resolved style (kernels/css.py) falls back to the
-            # bare attrs when no <style> rules exist — the common case
-            # stays an identity read
-            eff_attrs = css.effective_attrs(cell) if css else cell.attrs
+        for cell, rowspan, colspan, is_header in row_cells:
+            eff_attrs = eff(cell)
             if eff_attrs and is_hidden(eff_attrs):
                 continue  # display:none cell: later cells shift left
             # visibility:hidden/collapse on a cell (or its row): the
@@ -172,13 +230,11 @@ def _grid_from_table(table: Node, cfg: DetectionConfig, css=None):
             if c >= cfg.max_cols:
                 truncated = True
                 break
-            rowspan = _int_attr(cell, "rowspan")
-            colspan = _int_attr(cell, "colspan")
             text = "" if blank else cell.text_content()
             if text:
                 cells[(r, c)] = coerce_scalar(text)
                 row_had_content = True
-            if cell.tag == "th":
+            if is_header:
                 th_cells.add((r, c))
             if not blank and (eff_attrs or row_bg or col_bg):
                 color = (cell_background(eff_attrs) or row_bg
@@ -189,7 +245,10 @@ def _grid_from_table(table: Node, cfg: DetectionConfig, css=None):
                     # rows carrying only formatting must not truncate real
                     # trailing data (ADVICE r2)
                     row_had_content = True
-            if table_has_links and not blank:
+            # one table-level probe gates the per-cell anchor scans: most
+            # tables carry no links, and the per-cell subtree walk is the
+            # grid pass's hottest incidental cost (profiled)
+            if has_links and not blank:
                 a = cell.find_first("a")
                 if a is not None and a.get("href"):
                     links[(r, c)] = a.get("href")
@@ -211,8 +270,7 @@ def _grid_from_table(table: Node, cfg: DetectionConfig, css=None):
                 # value domain as ``cells`` — reference core/cells.py:780-795
                 # has ONE value domain); empty -> " " sentinel
                 merged_items.append(
-                    [r + 1, c, r2 + 1, c2, coerce_scalar(text) if text else " "]
-                )
+                    [r + 1, c, r2 + 1, c2, cells.get((r, c), " ")])
                 for rr in range(r, r2 + 1):
                     for cc in range(c, c2 + 1):
                         if (rr, cc) != (r, c):
@@ -319,111 +377,6 @@ def score_candidate(
     return score, density, coverage
 
 
-_ARIA_CELL_ROLES = ("cell", "gridcell", "columnheader", "rowheader")
-
-
-def _grid_from_aria(table: Node, cfg: DetectionConfig, css=None):
-    """G7-twin grid pass: ARIA-DECLARED structure — ``role="table"`` (or
-    ``grid``) containers with ``role="row"`` rows and
-    cell/gridcell/columnheader/rowheader cells, spans via
-    ``aria-rowspan``/``aria-colspan`` — expanded with the same
-    occupancy-grid, caps and empty-run rules as ``_grid_from_table``.
-    The reference's ListObjects path (backends/com_backend.py G7) reads
-    DECLARED native tables without detection heuristics; on the web the
-    ARIA table role is exactly that declaration.  Returns the same
-    8-tuple as ``_grid_from_table`` (``columnheader`` cells fill the
-    th_cells set)."""
-    cells: dict = {}
-    merged_items: list = []
-    links: dict = {}
-    th_cells: set = set()
-    colors: dict = {}
-    occupied: set = set()
-    truncated = False
-    role_of = lambda n: (n.attrs.get("role") or "").strip().lower()
-
-    def pruned_walk(node):
-        """DFS that does NOT descend into nested role=table/grid
-        subtrees: an inner declared table owns its own rows/cells and
-        extracts as its own artifact (extract.py collects it too)."""
-        stack = list(reversed(node.element_children()))
-        while stack:
-            n = stack.pop()
-            if role_of(n) in ("table", "grid"):
-                continue
-            yield n
-            stack.extend(reversed(n.element_children()))
-
-    rows_nodes = [n for n in pruned_walk(table) if role_of(n) == "row"
-                  and not is_hidden(
-                      css.effective_attrs(n) if css else n.attrs)]
-    if len(rows_nodes) > cfg.max_rows:
-        rows_nodes = rows_nodes[: cfg.max_rows]
-        truncated = True
-    has_links = table.find_first("a") is not None
-    n_cols = 0
-    empty_run = 0
-    n_rows_scanned = 0
-    span_floor = -1  # deepest row still covered by an active rowspan
-    for r, rn in enumerate(rows_nodes):
-        n_rows_scanned = r + 1
-        row_had_content = False
-        # role=row paint inherits to cells, same as <tr> (zebra rules)
-        row_bg = cell_background(
-            css.effective_attrs(rn) if css else rn.attrs)
-        c = 0
-        for cell in pruned_walk(rn):
-            if role_of(cell) not in _ARIA_CELL_ROLES:
-                continue
-            while (r, c) in occupied:
-                c += 1
-            if c >= cfg.max_cols:
-                truncated = True
-                break
-            rowspan = _int_attr(cell, "aria-rowspan")
-            colspan = _int_attr(cell, "aria-colspan")
-            text = cell.text_content()
-            if text:
-                cells[(r, c)] = coerce_scalar(text)
-                row_had_content = True
-            if role_of(cell) == "columnheader":
-                th_cells.add((r, c))
-            eff_attrs = css.effective_attrs(cell) if css else cell.attrs
-            if eff_attrs or row_bg:
-                color = cell_background(eff_attrs) or row_bg
-                if color:
-                    colors[(r, c)] = color
-                    row_had_content = True
-            if has_links:
-                a = cell.find_first("a")
-                if a is not None and a.get("href"):
-                    links[(r, c)] = a.get("href")
-                    row_had_content = True
-            if rowspan > 1 or colspan > 1:
-                r2 = min(r + rowspan - 1, cfg.max_rows - 1)
-                c2 = min(c + colspan - 1, cfg.max_cols - 1)
-                # same bounded span credit as _grid_from_table (W3 guard)
-                span_floor = max(
-                    span_floor, min(r2, r + 4 * cfg.max_empty_run)
-                )
-                master = cells.get((r, c), " ")
-                merged_items.append([r + 1, c, r2 + 1, c2, master])
-                for rr in range(r, r2 + 1):
-                    for cc in range(c, c2 + 1):
-                        if (rr, cc) != (r, c):
-                            occupied.add((rr, cc))
-            c += colspan
-            n_cols = max(n_cols, c)
-        empty_run = 0 if row_had_content or r <= span_floor else empty_run + 1
-        if empty_run >= cfg.max_empty_run:
-            truncated = True
-            break
-    return (
-        cells, merged_items, links, th_cells, colors,
-        n_rows_scanned, min(n_cols, cfg.max_cols), truncated,
-    )
-
-
 def extract_table(
     table: Node, index: int, cfg: DetectionConfig, alpha_keys: bool = False,
     css=None,
@@ -436,14 +389,16 @@ def extract_table(
     # declares role="table"/"grid" (very common ARIA pattern on real
     # pages) — the ARIA row/cell walk only applies to non-table
     # containers, which is also how extract.py collects them
-    is_aria = table.tag != "table" and (
-        (table.attrs.get("role") or "").strip().lower() in ("table", "grid")
-    )
-    grid_fn = _grid_from_aria if is_aria else _grid_from_table
+    if table.tag != "table" and _role(table) in ("table", "grid"):
+        rows, col_bg = _aria_rows(table), []
+    else:
+        # <colgroup>/<col> paint is the lowest layer a cell inherits
+        rows, col_bg = _table_rows(table), _col_paint(table, cfg, css)
     (
         cells, merged_items, links, th_cells, colors,
         n_rows, n_cols, truncated,
-    ) = grid_fn(table, cfg, css)
+    ) = _expand_grid(rows, col_bg, table.find_first("a") is not None,
+                     cfg, css)
     if not cells:
         return None
     # the direct <th> signal counts only when row 0 consists ENTIRELY of
@@ -459,7 +414,11 @@ def extract_table(
     rs = [r for r, _ in cells]
     cs = [c for _, c in cells]
     rng = make_range(min(rs), min(cs), max(rs), max(cs))
-    caption = table.find_first("caption")
+    # the table's OWN caption: a nested table's (or, in an ARIA
+    # container, one buried in a cell) names that table, not this one
+    caption = next(
+        (ch for ch in table.element_children() if ch.tag == "caption"),
+        None)
     if caption is not None:
         name = caption.text_content()
     else:
@@ -742,7 +701,7 @@ def detect_grid_candidates(
             "table", "grid",
         ):
             # ARIA-declared tables belong to the DECLARED path
-            # (extract_table via _grid_from_aria) — detection must not
+            # (extract_table via _aria_rows) — detection must not
             # re-claim their subtree as a heuristic grid
             for inner in node.iter():
                 claimed.add(id(inner))

@@ -4,6 +4,8 @@ reference's dominant test pattern (SURVEY.md §5: pure-kernel unit tests)."""
 import json
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from exstruct_spark.config import DetectionConfig, ExtractOptions
 from exstruct_spark.kernels.a1 import (
@@ -2158,6 +2160,195 @@ def test_empty_run_rule_same_for_table_and_aria(form, rowspan, gap,
     assert table["range"] == want_range
     assert bool(table.get("truncated")) is want_truncated
     assert rec["truncated"] is want_truncated
+
+
+def _cell(text, attrs="", header=False, rowspan=1, colspan=1, href=None):
+    """One generated grid cell (see ``_grid_page``)."""
+    return (header, text, rowspan, colspan, attrs, href)
+
+
+def _grid_page(form: str, groups: list, style: str = "") -> str:
+    """One declared grid as a page, as ``<table>`` markup or as ARIA
+    ``role="table"`` markup.  ``groups`` is ``[(group_attrs, rows)]``;
+    ``group_attrs`` None puts the rows directly under the table, a
+    string wraps them in a ``<tbody>`` / ``role="rowgroup"`` carrying
+    those attributes.  ``rows`` is ``[(row_attrs, cells)]`` with cells
+    from ``_cell``."""
+    aria = form == "aria"
+    out = [f"<html><head><style>{style}</style></head><body>",
+           "<div role='table'>" if aria else "<table>"]
+    for group_attrs, rows in groups:
+        if group_attrs is not None:
+            out.append(f"<div role='rowgroup'{group_attrs}>" if aria
+                       else f"<tbody{group_attrs}>")
+        for row_attrs, cells in rows:
+            out.append(f"<div role='row'{row_attrs}>" if aria
+                       else f"<tr{row_attrs}>")
+            for header, text, rowspan, colspan, attrs, href in cells:
+                body = f"<a href='{href}'>{text}</a>" if href else text
+                if aria:
+                    role = "columnheader" if header else "cell"
+                    out.append(
+                        f"<div role='{role}' aria-rowspan='{rowspan}' "
+                        f"aria-colspan='{colspan}'{attrs}>{body}</div>")
+                else:
+                    tag = "th" if header else "td"
+                    out.append(
+                        f"<{tag} rowspan='{rowspan}' colspan='{colspan}'"
+                        f"{attrs}>{body}</{tag}>")
+            out.append("</div>" if aria else "</tr>")
+        if group_attrs is not None:
+            out.append("</div>" if aria else "</tbody>")
+    out.append("</div>" if aria else "</table>")
+    return "".join(out) + "</body></html>"
+
+
+_ROW_AB = ("", [_cell("a"), _cell("b")])
+_ROWS_AB = [{"r": 1, "c": {"0": "a", "1": "b"}}]
+# name -> (groups, range, rows, colors_map): what a browser shows
+_HIDDEN_AND_PAINT_PROBES = {
+    "display_none_cell": (
+        [(None, [("", [_cell("a"), _cell("SECRET", " style='display:none'"),
+                       _cell("b")])])],
+        "A1:B1", _ROWS_AB, None),
+    "visibility_hidden_cell": (
+        [(None, [("", [_cell("a"),
+                       _cell("SECRET", " style='visibility:hidden'"),
+                       _cell("b")])])],
+        "A1:C1", [{"r": 1, "c": {"0": "a", "2": "b"}}], None),
+    "visibility_hidden_row": (
+        [(None, [(" style='visibility:hidden'",
+                  [_cell("SECRET"), _cell("S2")]), _ROW_AB])],
+        "A2:B2", [{"r": 2, "c": {"0": "a", "1": "b"}}], None),
+    "visibility_collapse_row": (
+        [(None, [(" style='visibility:collapse'",
+                  [_cell("SECRET"), _cell("S2")]), _ROW_AB])],
+        "A1:B1", _ROWS_AB, None),
+    "display_none_rowgroup": (
+        [(" style='display:none'", [("", [_cell("SECRET"), _cell("S2")])]),
+         ("", [_ROW_AB])],
+        "A1:B1", _ROWS_AB, None),
+    "painted_rowgroup": (
+        [(" style='background:#ff0000'", [_ROW_AB])],
+        "A1:B1", _ROWS_AB, {"FF0000": [[1, 0], [1, 1]]}),
+}
+# a role=cell inside a role=cell is ONE cell (the outer one)
+_NESTED_ARIA_CELL = (
+    "<div role='table'><div role='row'>"
+    "<div role='cell'><div role='cell'>X</div></div>"
+    "<div role='cell'>y</div></div></div>")
+
+
+@pytest.mark.parametrize("form,html,want", [
+    pytest.param(form, _grid_page(form, groups), (rng, rows, colors),
+                 id=f"{name}-{form}")
+    for name, (groups, rng, rows, colors) in _HIDDEN_AND_PAINT_PROBES.items()
+    for form in ("table", "aria")
+] + [
+    pytest.param("aria", _NESTED_ARIA_CELL,
+                 ("A1:B1", [{"r": 1, "c": {"0": "X", "1": "y"}}], None),
+                 id="nested_cell-aria"),
+])
+def test_hidden_and_paint_rules_same_for_table_and_aria(form, html, want):
+    """Hidden cells, rows and rowgroups and rowgroup paint read the same
+    in a ``<table>`` and in its ARIA twin: hidden text never reaches the
+    artifact, and a nested cell is not a second cell."""
+    rec = extract_document("https://x/t", html.encode())
+    (table,) = json.loads(rec["extraction_json"])["tables"]
+    assert (table["range"], table["rows"], table.get("colors_map")) == want
+
+
+def test_nested_table_rows_addressed_like_apply_ops():
+    """A nested ``<table>``'s rows are not rows of the outer table: the
+    outer artifact's row/column of every cell is the address
+    ``apply_ops`` edits, so an extract-then-edit client edits the cell
+    it read."""
+    from exstruct_spark.kernels.edits import apply_ops
+
+    html = ("<table><tr><th>h1</th><th>h2</th></tr>"
+            "<tr><td>a<table><tr><td>i1</td></tr></table></td><td>b</td></tr>"
+            "<tr><td>c</td><td>d</td></tr></table>")
+
+    def outer_rows(page):
+        rec = extract_document("https://x/n", page.encode())
+        return json.loads(rec["extraction_json"])["tables"][0]["rows"]
+
+    rows = outer_rows(html)
+    assert [row["r"] for row in rows] == [1, 2, 3]
+    for row in rows:
+        for col in row["c"]:
+            edited, status = apply_ops(html, [{
+                "op": "set_value", "table": 0, "row": row["r"] - 1,
+                "col": int(col), "value": "EDITED"}])
+            assert status == ["applied"]
+            after = {(r["r"], c): v for r in outer_rows(edited)
+                     for c, v in r["c"].items()}
+            assert after[(row["r"], col)] == "EDITED"
+
+
+@pytest.mark.parametrize("form", ["table", "aria"])
+def test_table_name_from_own_caption_only(form):
+    """A ``<caption>`` names the table it belongs to: an outer table
+    (or ARIA container) holding a captioned inner table in a cell does
+    not take the inner caption as its name."""
+    inner = ("<table><caption>Inner name</caption>"
+             "<tr><td>i1</td><td>i2</td></tr></table>")
+    if form == "table":
+        html = (f"<table><tr><td>a{inner}</td><td>b</td></tr>"
+                "<tr><td>c</td><td>d</td></tr></table>")
+        want_outer = ""
+    else:
+        html = (f"<div role='table' aria-label='Outer name'><div role='row'>"
+                f"<div role='cell'>a{inner}</div><div role='cell'>b</div>"
+                "</div></div>")
+        want_outer = "Outer name"
+    rec = extract_document("https://x/c", html.encode())
+    outer, inner_art = json.loads(rec["extraction_json"])["tables"]
+    assert outer.get("name", "") == want_outer
+    assert inner_art["name"] == "Inner name"
+
+
+_GRID_STYLE = (".h{display:none}.v{visibility:hidden}.k{visibility:collapse}"
+               ".p{background:#0000ff}")
+_grid_attrs = st.sampled_from([
+    "", "", "", " hidden", " style='display:none'",
+    " style='visibility:hidden'", " style='visibility:collapse'",
+    " style='background:#ff0000'", " class='h'", " class='v'", " class='k'",
+    " class='p'"])
+_grid_cell = st.builds(
+    _cell, st.sampled_from(["", "x", "7", "2.5", "Name", "a b"]),
+    _grid_attrs, st.booleans(), st.integers(1, 3), st.integers(1, 3),
+    st.sampled_from([None, None, "/a", "/b"]))
+_grid_groups = st.lists(st.tuples(
+    st.none() | _grid_attrs,
+    st.lists(st.tuples(_grid_attrs, st.lists(_grid_cell, max_size=4)),
+             min_size=1, max_size=4)), min_size=1, max_size=3)
+
+
+@given(_grid_groups)
+@settings(max_examples=300, deadline=None)
+def test_table_and_aria_grids_agree(groups):
+    """Differential: any generated grid extracts the same as ``<table>``
+    markup and as ARIA markup — cells, merges, links, colors, header
+    set, range and ``truncated`` — under small caps so truncation and
+    the empty-run rule fire too."""
+    from exstruct_spark.kernels import tables
+    from exstruct_spark.kernels.css import build_resolver
+
+    cfg = DetectionConfig(max_rows=6, max_cols=5, max_empty_run=2)
+    grids, artifacts = [], []
+    for form in ("table", "aria"):
+        root = parse_html(_grid_page(form, groups, _GRID_STYLE))
+        css = build_resolver(root.find_all("style"))
+        node = next(n for n in root.iter() if n.tag == "table"
+                    or n.attrs.get("role") == "table")
+        rows = (tables._table_rows(node) if form == "table"
+                else tables._aria_rows(node))
+        grids.append(tables._expand_grid(
+            rows, [], node.find_first("a") is not None, cfg, css))
+        artifacts.append(extract_table(node, 0, cfg, css=css))
+    assert grids[0] == grids[1]
+    assert artifacts[0] == artifacts[1]
 
 
 def test_bpe_oracle_encode_pass_cap_never_binds():
