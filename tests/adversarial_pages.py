@@ -13,6 +13,54 @@ import json
 
 _BODY = "<p>after</p><table><tr><td>a<td>b</table>"
 
+# every chart dialect's call in inline form, with the argument-reading
+# hazards: comments holding ')' and ',', strings holding ')', ',' and
+# '{', regex literals with braces, callback and arrow arguments, a
+# config built by a nested call, trailing options objects
+_CHART_CALLS = "".join("<figure><canvas></canvas><script>" + js
+                       + "</script></figure>" for js in (
+    "new Chart(document.getElementById('c1' /* ) */), {type: 'bar',"
+    " data: {labels: ['a,)', 'b{'], datasets: [{label: 'x) y', data: [1, 2]"
+    "}]}, // , stray\n options: {plugins: {title: {text: 'Chart, (js)'}},"
+    " onClick: (e) => { e.x.replace(/[{}]/g, ')'); }}});",
+    "chart.setOption({title: {text: 'E)'}, xAxis: {data: ['p', 'q']},"
+    " series: [{name: 's', type: 'line', data: [3, 4],"
+    " label: {formatter: function (p) { return p.value + '}'; }}}]},"
+    " {notMerge: true});",
+    "Highcharts.chart('hc', Highcharts.merge(base, {title: {text: 'Merged'},"
+    " series: [{name: 'm', data: [5, 6]}]}), function (c) {"
+    " c.renderer.text('{', 0, 0); });",
+    "new Chart(ctx, Object.assign({}, base, {type: 'line', data: {labels:"
+    " ['u'], datasets: [{label: 'o', data: [7]}]}}));",
+    "new ApexCharts(document.querySelector('#ax'), {chart: {type: 'bar'},"
+    " series: [{name: 'ap', data: [1, 3]}], xaxis: {categories: ['i', 'j']}"
+    "});",
+    "c3.generate({bindto: '#c3', data: {columns: [['d1', 4, 5]]}});",
+    "Plotly.newPlot('div,)', [{x: ['a', 'b'], y: [1, 2], type: 'bar',"
+    " hovertemplate: '%{y})'}], /* ) */ {title: {text: 'Plotly ('}},"
+    " {responsive: true});",
+    "Plotly.newPlot('d2', {data: [{y: [3, 4]}], layout: {title: 'One'}});",
+    "new Dygraph(document.getElementById('g,)'), 'Date,A\\n' +\n"
+    " '2020,1\\n' + '2021,2\\n', {title: 'Dy{', ylabel: 'y',"
+    " valueFormatter: (v) => v.toFixed(1)});",
+    "new Dygraph(el, [[1, 10], [2, 20]], {labels: ['x', 'v'], title: 'Arr'});",
+    "new Chartist.Line('.ct,)', {labels: ['m', 'n'], series: [[1, 2]]},"
+    " {axisX: {labelInterpolationFnc: function (v) { return v + ')'; }}});",
+    "vegaEmbed('#vis', {$schema: 'https://vega.github.io/schema/vega-lite/"
+    "v5.json', mark: 'bar', encoding: {x: {field: 'k', type: 'nominal'},"
+    " y: {field: 'v', type: 'quantitative'}}, data: {values: [{k: 'a)',"
+    " v: 1}, {k: 'b,', v: 2}]}}, {actions: false}).then(function (r) {"
+    " return r.view; });",
+    "var data = google.visualization.arrayToDataTable([['Task', 'Hours'],"
+    " ['Work', 11], ['Eat, sleep )', 2]]); var chart = new google."
+    "visualization.PieChart(document.getElementById('pie'));"
+    " chart.draw(data, {title: 'Daily (', vAxis: {title: 'h,'}});",
+    "var dt = new google.visualization.DataTable(); dt.addColumn('string',"
+    " 'Year'); dt.addColumn('number', 'Sales'); dt.addRows([['2020', 5],"
+    " ['2021', 8]]); var c2 = new google.visualization.LineChart(el);"
+    " c2.draw(dt, {title: 'Sales /* */'});",
+))
+
 _TEXT_CASES = [
     ("comment_in_script",
      "<script>var s = '<!--'; x()</script>" + _BODY + "<!-- real -->"),
@@ -43,6 +91,7 @@ _TEXT_CASES = [
      "<div data-x='" + "a" * (1 << 20) + "'><p>after huge</p></div>"),
     ("astral_and_cjk",
      "<html lang=ja><body><h1>売上 😀</h1><p>€ ſ İ</p></body></html>"),
+    ("chart_call_forms", _CHART_CALLS),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]

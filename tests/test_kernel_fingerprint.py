@@ -61,6 +61,7 @@ BLESSED = {
     'adversarial:backface_visibility': 'a6fe25d4607ec80e421cb67404e1a24e60cebe5f117f47c83fa36e18ef59d950',
     'adversarial:bare_comment_open_newline': '9259d8e561234f48267f8c396cef86323b7e6ccb903cec167744739bb6026e3e',
     'adversarial:cdata_before_final_newline': 'f703dd4833a98d7edb688b7017fdcfe43333af838a483b38c02c6481678922fd',
+    'adversarial:chart_call_forms': '565ee09e4bceae669dec90b7d166f0d4cb5fa34a8e1025fdcbd5db70b78dda72',
     'adversarial:comment_before_final_newline': '1afc486f1e1548d4cb0f984b2080c50870c2be1200c5d5703c21399815ecf580',
     'adversarial:comment_in_script': 'aa5513c72b1e6f0a045084d7c6a3a373984fad793708f9a37d8c2d10519ca940',
     'adversarial:comment_in_style': '36c7e54ce3d6a1bf798b08dec7e879aa41466c822b8f4af3043d0b37fa21bbd8',
