@@ -13,17 +13,27 @@ this.
 
 This module is that tokenizer, transplanted to the web shape:
 
-  * ``find_config_objects``: scan for chart constructors (``new
-    Chart(...)``, ``.setOption(...)``) and extract each balanced
-    ``{...}`` argument — depth + string-state machine, the direct
-    analogue of ``_extract_series_args_text``;
+  * ``_call_args``: one walk over a chart call's arguments, the direct
+    analogue of ``_split_top_level_args`` — depth + string/comment/
+    regex-literal state machine, callbacks (``function`` / ``=>``)
+    consumed whole, commas split at paren and bracket depth 0, and the
+    balanced ``{...}`` spans of each argument recorded on the way;
+  * ``_arg_value``: one argument's value — a literal parses in place; a
+    bare identifier (``const cfg = {...}; new Chart(ctx, cfg)``)
+    resolves to its nearest object/array assignment, in every dialect;
+  * each dialect is a marker regex plus one rule naming the argument
+    that carries its data: the first/last ``{...}`` (``new Chart``,
+    ``.setOption`` and the rest of ``_MARKER_RE``), Plotly's trace array
+    and the layout after it, argument 1 for Chartist, Vega-Lite and
+    Dygraph (argument 2 its options), argument 0 of
+    ``arrayToDataTable`` and argument 1 of ``draw(...)``;
   * ``parse_js_value``: recursive-descent parse of the JS object-literal
     subset (objects with quoted/bare keys, arrays, single/double/backtick
     strings with backslash escapes, numbers, true/false/null/undefined,
     bare identifiers as strings); callback values (``function`` /
     ``=>``) are consumed as balanced token runs and yield ``None`` —
     skipped, never crashed on;
-  * ``charts_from_script``: normalize six config dialects — Chart.js
+  * ``charts_from_script``: normalize the config dialects — Chart.js
     ``{type, data:{labels, datasets:[{label, data}]}}``, ECharts/
     Highcharts ``{title, xAxis, series:[{name, type, data}]}`` (incl.
     the modern ECharts ``dataset.source`` table and the jQuery
@@ -32,9 +42,7 @@ This module is that tokenizer, transplanted to the web shape:
     and Google Charts — BOTH ``arrayToDataTable`` row tables and the
     imperative ``addColumn``/``addRows`` DataTable idiom — into the
     engine's intermediate chart shape {chart_type, title, labels,
-    series: [(name, [values])], y_axis_title?}.  Configs passed by
-    VARIABLE (``const cfg = {...}; new Chart(ctx, cfg)``) resolve to
-    their object-literal assignment.
+    series: [(name, [values])], y_axis_title?}.
 
 Pure Python, no Spark: runs inside the single mapInPandas extraction
 stage like every other kernel.
@@ -168,114 +176,138 @@ def _extract_balanced(s: str, i: int) -> Optional[str]:
     return None
 
 
-def find_config_objects(script_text: str) -> list:
-    """All balanced ``{...}`` config arguments following a chart
-    constructor marker.  ``new Chart(ctx, {...})`` takes the LAST
-    top-level object argument; ``chart.setOption(option, opts?)`` takes
-    the FIRST (the config is ECharts' first parameter; the optional
-    second argument is notMerge/lazyUpdate settings)."""
-    out = []
-    for m in _MARKER_RE.finditer(script_text or ""):
-        marker = m.group(0)
-        want_first = ("setOption" in marker or "highcharts" in marker
-                      or "generate" in marker or "FusionCharts" in marker
-                      or "createFromConfig" in marker
-                      or "frappe" in marker)
-        i = m.end()
-        n = len(script_text)
-        depth = 0
-        found = None
-        prev = None
-        while i < n:
-            ch = script_text[i]
-            if ch in "\"'`":
-                i = _scan_string(script_text, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(script_text, i, prev)
-                prev = "/"
-                continue
-            # a callback ARGUMENT (Highcharts.chart('c', cfg, function(){…})
-            # or an arrow) is not a config object: consume the whole
-            # function expression, body braces and all (review r3 #2)
-            if (
-                ch == "f"
-                and script_text.startswith("function", i)
-                and not (prev and (prev.isalnum() or prev in "_$"))
-                and _IDENT_RE.match(script_text, i).group(0) == "function"
-            ):
-                i = max(_skip_function_value(script_text, i), i + 1)
-                prev = ")"
-                continue
-            if ch == "=" and script_text[i + 1 : i + 2] == ">":
-                i = max(_skip_function_value(script_text, i), i + 2)
-                prev = ")"
-                continue
-            if ch == "{":
-                obj = _extract_balanced(script_text, i)
-                if obj is None:
-                    break
-                found = obj
-                if want_first:
-                    break
-                i += len(obj)
-                prev = "}"
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            if not ch.isspace():
-                prev = ch
-            i += 1
-        if found is None:
-            # variable indirection — `const cfg = {...}; new Chart(ctx,
-            # cfg)` is the other common real-page shape: resolve the
-            # call's LAST identifier argument to its object-literal
-            # assignment in the same script (nearest one above the call)
-            found = _resolve_ident_config(
-                script_text, m.end(), i, want_first, m.start())
-        if found is not None:
-            out.append(found)
-    return out
+def _call_args(s: str, i: int) -> list:
+    """``i`` just past a call's ``(`` -> one ``(start, end, objects)`` per
+    top-level argument, the call's own ``)`` (or the end of the script)
+    ending the walk.  ``objects`` are the ``(start, end)`` spans of the
+    balanced ``{...}`` literals in the argument, nested calls included
+    (``Highcharts.merge(base, {...})``).  Strings, comments and regex
+    literals are skipped, a ``function``/``=>`` value is consumed whole,
+    and commas split only at paren and bracket depth 0: the
+    ``_split_top_level_args`` of the reference's SERIES tokenizer.  An
+    unmatched ``{`` runs its argument to the end of the script; an empty
+    trailing argument (``f(a, )``) is dropped."""
+    n = len(s)
+    args: list = []
+    start, objects = i, []
+    parens = brackets = 0
+    prev = None
+    while i < n:
+        ch = s[i]
+        if ch in "\"'`":
+            i = _scan_string(s, i)
+            prev = '"'
+            continue
+        if ch == "/":
+            i = _slash(s, i, prev)
+            prev = "/"
+            continue
+        # a callback ARGUMENT (Highcharts.chart('c', cfg, function(){…})
+        # or an arrow) is not a config object: consume the whole
+        # function expression, body braces and all (review r3 #2)
+        if (
+            ch == "f"
+            and s.startswith("function", i)
+            and not (prev and (prev.isalnum() or prev in "_$"))
+            and _IDENT_RE.match(s, i).group(0) == "function"
+        ):
+            i = max(_skip_function_value(s, i), i + 1)
+            prev = ")"
+            continue
+        if ch == "=" and s[i + 1 : i + 2] == ">":
+            i = max(_skip_function_value(s, i), i + 2)
+            prev = ")"
+            continue
+        if ch == "{":
+            obj = _extract_balanced(s, i)
+            if obj is None:
+                i = n
+                break
+            objects.append((i, i + len(obj)))
+            i += len(obj)
+            prev = "}"
+            continue
+        if ch == ")":
+            if not parens:
+                break
+            parens -= 1
+        elif ch == "(":
+            parens += 1
+        elif ch == "[":
+            brackets += 1
+        elif ch == "]":
+            brackets -= brackets > 0
+        elif ch == "," and not parens and not brackets:
+            args.append((start, i, objects))
+            start, objects = i + 1, []
+        if not ch.isspace():
+            prev = ch
+        i += 1
+    if objects or _skip_ws(s, start) < i:
+        args.append((start, i, objects))
+    return args
 
 
-# reserved words that can appear as arguments but never name a config
-_NON_CONFIG_IDENTS = frozenset({
-    "document", "window", "this", "true", "false", "null", "undefined",
-    "new", "function", "getElementById", "querySelector", "ctx",
-    "canvas", "getContext",
-})
-
-
-def _resolve_ident_config(s: str, args_start: int, args_end: int,
-                          want_first: bool, call_pos: int):
-    """Config passed by NAME: pick the first (``setOption``) or last
-    identifier argument of the call span, then return the balanced
-    object of the nearest ``ident = {...}`` assignment ABOVE the call
-    (falling back to the first one anywhere — `var` hoisting).  None
-    when the identifier or its object assignment cannot be found."""
-    args = s[args_start:args_end]
-    idents = [t for t in _IDENT_RE.findall(args)
-              if t not in _NON_CONFIG_IDENTS]
-    if not idents:
+def _arg_value(s: str, arg: tuple, call_pos: int):
+    """One argument's value.  A ``{``/``[``/string literal parses in
+    place; a bare identifier resolves to the nearest ``name = {``/``[``
+    assignment above the call at ``call_pos`` (else the first one below
+    it: ``var`` hoisting), so ``const cfg = {...}; new Chart(ctx, cfg)``
+    reads like its inline twin.  Anything else (a call, a member path,
+    an expression) is None."""
+    start, end, _ = arg
+    i = _skip_ws(s, start)
+    if i >= end:
         return None
-    name = idents[0] if want_first else idents[-1]
-    assign_re = re.compile(
-        r"\b" + re.escape(name) + r"\s*=\s*\{")
+    if s[i] in "{[\"'`":
+        return parse_js_value(s, i)[0]
+    m = _IDENT_RE.match(s, i)
+    if m is None or _skip_ws(s, m.end()) < end:
+        return None
     best = None
-    for am in assign_re.finditer(s):
-        if am.start() < call_pos:
-            best = am          # nearest assignment above the call
-        elif best is None:
-            best = am          # hoisted declaration below: first wins
+    for am in re.finditer(
+            r"\b" + re.escape(m.group(0)) + r"\s*=\s*[{\[]", s):
+        if am.start() < call_pos or best is None:
+            best = am
+        if am.start() >= call_pos:
             break
-    if best is None:
-        return None
-    return _extract_balanced(s, best.end() - 1)
+    return None if best is None else parse_js_value(s, best.end() - 1)[0]
+
+
+def _nth_value(s: str, args: list, k: int, call_pos: int):
+    """``_arg_value`` of argument ``k`` (negative counts from the end);
+    None when the call has no such argument."""
+    if -len(args) <= k < len(args):
+        return _arg_value(s, args[k], call_pos)
+    return None
+
+
+# markers whose config is the FIRST argument (ECharts' optional second
+# setOption argument is notMerge/lazyUpdate settings); the rest take the
+# LAST (new Chart(ctx, cfg), new ApexCharts(el, cfg), ...)
+_FIRST_ARG_MARKERS = ("setOption", "highcharts", "generate", "FusionCharts",
+                      "createFromConfig", "frappe")
+
+
+def find_config_objects(script_text: str) -> list:
+    """The parsed config dict of every chart-constructor call: the first
+    or last ``{...}`` literal among its arguments (``_FIRST_ARG_MARKERS``
+    decides which), else the first or last argument read as a
+    variable."""
+    s = script_text or ""
+    out = []
+    for m in _MARKER_RE.finditer(s):
+        k = 0 if any(w in m.group(0) for w in _FIRST_ARG_MARKERS) else -1
+        args = _call_args(s, m.end())
+        objects = [span for _, _, objs in args for span in objs]
+        if objects:
+            a, b = objects[k]
+            cfg = parse_js_value(s[a:b])[0]
+        else:
+            cfg = _nth_value(s, args, k, m.start())
+        if isinstance(cfg, dict):
+            out.append(cfg)
+    return out
 
 
 def _skip_function_value(s: str, i: int, prev=None) -> int:
@@ -1029,40 +1061,14 @@ _CHARTIST_RE = re.compile(
 
 
 def _find_chartist_calls(script_text: str) -> list:
-    """``new Chartist.Bar('#sel', data, opts?)`` -> (kind, data_cfg).
-    The chart TYPE lives in the constructor name, not the config, so
-    the generic marker scan can't carry it — dedicated finder."""
-    out = []
+    """``new Chartist.Bar('#sel', data, opts?)`` -> (kind, data): the
+    chart TYPE lives in the constructor name, the data is argument 1."""
     s = script_text or ""
-    n = len(s)
+    out = []
     for m in _CHARTIST_RE.finditer(s):
-        kind = m.group(1)
-        i = m.end()
-        depth = 0
-        prev = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if depth == 0 and ch == "{":
-                cfg, _ = parse_js_value(s, i)
-                if isinstance(cfg, dict):
-                    out.append((kind, cfg))
-                break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            prev = ch if not ch.isspace() else prev
-            i += 1
+        cfg = _nth_value(s, _call_args(s, m.end()), 1, m.start())
+        if isinstance(cfg, dict):
+            out.append((m.group(1), cfg))
     return out
 
 
@@ -1153,65 +1159,21 @@ def _scan_concat_strings(s: str, i: int):
 
 
 def _find_dygraph_calls(script_text: str) -> list:
-    """Every ``new Dygraph(el, data, opts?)`` call -> (data, opts)
-    where data is either the joined CSV string or the parsed
-    array-of-arrays.  Same skipping discipline as the other finders."""
-    out = []
+    """Every ``new Dygraph(el, data, opts?)`` call -> (data, opts): data
+    is argument 1, a joined ``'a' + 'b'`` CSV string chain or an
+    array of rows, and the options argument 2."""
     s = script_text or ""
-    n = len(s)
+    out = []
     for m in _DYGRAPH_RE.finditer(s):
-        i = m.end()
-        depth = 0
-        prev = None
-        data = None
-        opts = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                if depth == 0 and data is None:
-                    data, i = _scan_concat_strings(s, i)
-                    prev = '"'
-                    continue
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if (
-                ch == "f"
-                and s.startswith("function", i)
-                and not (prev and (prev.isalnum() or prev in "_$"))
-                and _IDENT_RE.match(s, i).group(0) == "function"
-            ):
-                i = max(_skip_function_value(s, i), i + 1)
-                prev = ")"
-                continue
-            if ch == "=" and s[i + 1 : i + 2] == ">":
-                i = max(_skip_function_value(s, i), i + 2)
-                prev = ")"
-                continue
-            if depth == 0 and ch == "[" and data is None:
-                data, j = parse_js_value(s, i)
-                i = max(j, i + 1)
-                prev = "]"
-                continue
-            if depth == 0 and ch == "{" and data is not None:
-                opts, j = parse_js_value(s, i)
-                i = max(j, i + 1)
-                prev = "}"
-                break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            prev = ch if not ch.isspace() else prev
-            i += 1
-        if data is not None:
-            out.append((data, opts if isinstance(opts, dict) else {}))
+        args = _call_args(s, m.end())
+        if len(args) < 2:
+            continue
+        i = _skip_ws(s, args[1][0])
+        data = (_scan_concat_strings(s, i)[0]
+                if i < len(s) and s[i] in "\"'`"
+                else _arg_value(s, args[1], m.start()))
+        opts = _nth_value(s, args, 2, m.start())
+        out.append((data, opts if isinstance(opts, dict) else {}))
     return out
 
 
@@ -1276,62 +1238,23 @@ def _from_dygraph(data, opts: dict) -> Optional[dict]:
 
 
 def _find_plotly_calls(script_text: str) -> list:
-    """Every ``Plotly.newPlot/react/plot`` call -> (traces, layout)
-    parsed values — the traces are the first top-level ``[...]``
-    argument, the layout the next top-level ``{...}`` (if any) before
-    the call's closing paren.  Same string/comment/function skipping
-    discipline as ``find_config_objects``."""
-    out = []
+    """Every ``Plotly.newPlot/react/plot`` call -> (traces, layout): the
+    first array argument and the object argument after it, or the
+    one-object ``{data: [...], layout: {...}}`` form."""
     s = script_text or ""
-    n = len(s)
+    out = []
     for m in _PLOTLY_RE.finditer(s):
-        i = m.end()
-        depth = 0
-        prev = None
-        traces = None
-        layout = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if (
-                ch == "f"
-                and s.startswith("function", i)
-                and not (prev and (prev.isalnum() or prev in "_$"))
-                and _IDENT_RE.match(s, i).group(0) == "function"
-            ):
-                i = max(_skip_function_value(s, i), i + 1)
-                prev = ")"
-                continue
-            if ch == "=" and s[i + 1 : i + 2] == ">":
-                i = max(_skip_function_value(s, i), i + 2)
-                prev = ")"
-                continue
-            if depth == 0 and ch == "[" and traces is None:
-                traces, j = parse_js_value(s, i)
-                i = max(j, i + 1)
-                prev = "]"
-                continue
-            if depth == 0 and ch == "{" and traces is not None:
-                layout, j = parse_js_value(s, i)
-                i = max(j, i + 1)
-                prev = "}"
+        args = _call_args(s, m.end())
+        traces = layout = None
+        for k, arg in enumerate(args):
+            val = _arg_value(s, arg, m.start())
+            if isinstance(val, list):
+                traces, layout = val, _nth_value(s, args, k + 1, m.start())
                 break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            prev = ch if not ch.isspace() else prev
-            i += 1
-        if isinstance(traces, list) and traces:
+            if isinstance(val, dict) and isinstance(val.get("data"), list):
+                traces, layout = val["data"], val.get("layout")
+                break
+        if traces:
             out.append((traces, layout if isinstance(layout, dict) else {}))
     return out
 
@@ -1408,56 +1331,15 @@ _VEGA_MARK_TYPES = {
 
 
 def _find_vegalite_specs(script_text: str) -> list:
-    """Every ``vegaEmbed(selector, spec)`` call's first top-level
-    ``{...}`` argument, plus a whole-script JSON spec (the
-    ``<script type="application/json">`` embedding) identified by its
-    vega-lite ``$schema``.  Same string/comment/function skipping
-    discipline as the Plotly finder."""
-    out = []
+    """Every ``vegaEmbed(selector, spec)`` call's spec (argument 1), plus
+    a whole-script JSON spec (the ``<script type="application/json">``
+    embedding) identified by its vega-lite ``$schema``."""
     s = script_text or ""
-    n = len(s)
+    out = []
     for m in _VEGA_RE.finditer(s):
-        i = m.end()
-        depth = 0
-        prev = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if (
-                ch == "f"
-                and s.startswith("function", i)
-                and not (prev and (prev.isalnum() or prev in "_$"))
-                and _IDENT_RE.match(s, i).group(0) == "function"
-            ):
-                i = max(_skip_function_value(s, i), i + 1)
-                prev = ")"
-                continue
-            if ch == "=" and s[i + 1 : i + 2] == ">":
-                i = max(_skip_function_value(s, i), i + 2)
-                prev = ")"
-                continue
-            if depth == 0 and ch == "{":
-                spec, j = parse_js_value(s, i)
-                if isinstance(spec, dict):
-                    out.append(spec)
-                i = max(j, i + 1)
-                prev = "}"
-                break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            prev = ch if not ch.isspace() else prev
-            i += 1
+        spec = _nth_value(s, _call_args(s, m.end()), 1, m.start())
+        if isinstance(spec, dict):
+            out.append(spec)
     stripped = s.lstrip()
     if stripped.startswith("{") and "vega-lite" in stripped:
         spec, _ = parse_js_value(stripped, 0)
@@ -1590,54 +1472,33 @@ _GVIZ_TYPES = {
 
 
 def _find_gviz_tables(script_text: str) -> list:
-    """Every arrayToDataTable call's first top-level ``[...]``
-    argument -> (rows, no_header, offset) — ``no_header`` True when the
-    documented second argument ``true`` (first row is data) follows.
-    Same skipping discipline as the other finders, INCLUDING prev-char
-    tracking for the division-vs-regex '/' rule."""
-    out = []
+    """Every arrayToDataTable call's rows (argument 0) -> (rows,
+    no_header, offset, var): ``no_header`` True when the documented
+    second argument ``true`` (first row is data) follows."""
     s = script_text or ""
-    n = len(s)
+    out = []
     for m in _GVIZ_DATA_RE.finditer(s):
-        i = m.end()
-        prev = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if ch == "[":
-                rows, j = parse_js_value(s, i)
-                if isinstance(rows, list):
-                    tail = s[j : j + 40]
-                    no_header = bool(
-                        re.match(r"\s*,\s*true\b", tail))
-                    # the call offset keys the per-chart context
-                    # association (ADVICE r6: a script building several
-                    # charts must not label them all from the first);
-                    # the assigned VARIABLE (when the call is a plain
-                    # assignment) lets _gviz_context bind this table to
-                    # the draw(<var>) call that actually consumes it
-                    # (?<![\w.$]): a PROPERTY assignment (cfg.data = …)
-                    # must not capture the property name as a variable
-                    # — it would bind this table to an unrelated
-                    # draw(data) call (third-pass review finding)
-                    am = re.search(
-                        r"(?<![\w.$])(\w+)\s*=\s*google\s*\."
-                        r"\s*visualization\s*\.\s*$",
-                        s[max(0, m.start() - 120) : m.start()])
-                    out.append((rows, no_header, m.start(),
-                                am.group(1) if am else None))
-                break
-            if ch == ")":
-                break
-            prev = ch if not ch.isspace() else prev
-            i += 1
+        args = _call_args(s, m.end())
+        rows = _nth_value(s, args, 0, m.start())
+        if not isinstance(rows, list):
+            continue
+        no_header = (len(args) > 1
+                     and s[args[1][0]:args[1][1]].strip() == "true")
+        # the call offset keys the per-chart context association
+        # (ADVICE r6: a script building several charts must not label
+        # them all from the first); the assigned VARIABLE (when the call
+        # is a plain assignment) lets _gviz_context bind this table to
+        # the draw(<var>) call that actually consumes it.
+        # (?<![\w.$]): a PROPERTY assignment (cfg.data = …) must not
+        # capture the property name as a variable — it would bind this
+        # table to an unrelated draw(data) call (third-pass review
+        # finding)
+        am = re.search(
+            r"(?<![\w.$])(\w+)\s*=\s*google\s*\."
+            r"\s*visualization\s*\.\s*$",
+            s[max(0, m.start() - 120) : m.start()])
+        out.append((rows, no_header, m.start(),
+                    am.group(1) if am else None))
     return out
 
 
@@ -1854,38 +1715,17 @@ def _gviz_context(script_text: str, from_pos: int = 0,
     if chart_type is None:
         chart_type = "Unknown"
     for m in chosen:
-        i = m.end()
-        n = len(s)
-        depth = 0
-        prev = None
-        while i < n:
-            ch = s[i]
-            if ch in "\"'`":
-                i = _scan_string(s, i)
-                prev = '"'
-                continue
-            if ch == "/":
-                i = _slash(s, i, prev)
-                prev = "/"
-                continue
-            if depth == 0 and ch == "{":
-                opts, _j = parse_js_value(s, i)
-                if isinstance(opts, dict):
-                    if isinstance(opts.get("title"), str):
-                        title = opts["title"]
-                    vaxis = opts.get("vAxis")
-                    if isinstance(vaxis, dict) and isinstance(
-                            vaxis.get("title"), str):
-                        y_title = vaxis["title"]
-                break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            prev = ch if not ch.isspace() else prev
-            i += 1
+        # the options are argument 1 of the draw's own '(' (the match
+        # itself may end past the first argument)
+        opts = _nth_value(s, _call_args(s, s.index("(", m.start()) + 1),
+                          1, m.start())
+        if isinstance(opts, dict):
+            if isinstance(opts.get("title"), str):
+                title = opts["title"]
+            vaxis = opts.get("vAxis")
+            if isinstance(vaxis, dict) and isinstance(
+                    vaxis.get("title"), str):
+                y_title = vaxis["title"]
         if title:
             break
     return chart_type, title, y_title
@@ -1895,10 +1735,7 @@ def charts_from_script(script_text: str) -> list:
     """One <script>'s text -> normalized chart dicts (possibly several —
     a page can construct many charts in one script block)."""
     out = []
-    for obj_text in find_config_objects(script_text):
-        cfg, _ = parse_js_value(obj_text)
-        if not isinstance(cfg, dict):
-            continue
+    for cfg in find_config_objects(script_text):
         chart = (_from_chartjs(cfg) or _from_echarts(cfg)
                  or _from_amcharts(cfg) or _from_c3(cfg)
                  or _from_fusioncharts(cfg) or _from_amcharts4(cfg)

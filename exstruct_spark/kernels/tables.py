@@ -88,10 +88,12 @@ def _table_rows(table: Node) -> list:
     return rows
 
 
-def _aria_find(node: Node, roles: tuple) -> list:
+def _aria_find(node: Node, roles: tuple, eff) -> list:
     """Descendants of ``node`` whose role is in ``roles``, pre-order.
-    Descent stops at a match and at a nested role=table/grid (an inner
-    declared table owns its rows and cells)."""
+    Descent stops at a match, at a nested role=table/grid (an inner
+    declared table owns its rows and cells) and at a hidden element
+    (``is_hidden`` on its effective attrs ``eff``: nothing inside a
+    ``display:none`` wrapper renders)."""
     out = []
     stack = list(reversed(node.element_children()))
     while stack:
@@ -99,28 +101,29 @@ def _aria_find(node: Node, roles: tuple) -> list:
         role = _role(n)
         if role in roles:
             out.append(n)
-        elif role not in ("table", "grid"):
+        elif role not in ("table", "grid") and not is_hidden(eff(n)):
             stack.extend(reversed(n.element_children()))
     return out
 
 
-def _aria_cells(row: Node):
-    for cell in _aria_find(row, _ARIA_CELL_ROLES):
+def _aria_cells(row: Node, eff):
+    for cell in _aria_find(row, _ARIA_CELL_ROLES, eff):
         yield (cell, _int_attr(cell, "aria-rowspan"),
                _int_attr(cell, "aria-colspan"),
                _role(cell) == "columnheader")
 
 
-def _aria_rows(table: Node) -> list:
+def _aria_rows(table: Node, css=None) -> list:
     """G7-twin enumerator: ``role="row"`` rows of a ``role="table"``/
     ``grid`` container, shaped like ``_table_rows`` — ``role="rowgroup"``
     is the rowgroup analogue, cell/gridcell/columnheader/rowheader the
     cells (``columnheader`` the <th> analogue), ``aria-rowspan``/
     ``aria-colspan`` the spans."""
+    eff = css.effective_attrs if css else _own_attrs
     return [
         (row, row.parent if _role(row.parent) == "rowgroup" else None,
-         _aria_cells(row))
-        for row in _aria_find(table, ("row",))
+         _aria_cells(row, eff))
+        for row in _aria_find(table, ("row",), eff)
     ]
 
 
@@ -390,7 +393,7 @@ def extract_table(
     # pages) — the ARIA row/cell walk only applies to non-table
     # containers, which is also how extract.py collects them
     if table.tag != "table" and _role(table) in ("table", "grid"):
-        rows, col_bg = _aria_rows(table), []
+        rows, col_bg = _aria_rows(table, css), []
     else:
         # <colgroup>/<col> paint is the lowest layer a cell inherits
         rows, col_bg = _table_rows(table), _col_paint(table, cfg, css)

@@ -1,0 +1,329 @@
+"""Chart-call argument reading (``kernels/chartconfig.py``: one
+``_call_args`` walk and one ``_arg_value`` rule for every dialect).
+
+* a differential test against the seven per-dialect argument walkers it
+  replaced (``chart_oracle.py``), on generated well-formed calls and on
+  every chart script the suite and the page corpus carry;
+* a metamorphic test: a literal argument and the same literal passed by
+  variable (assigned above or below the call) give the same chart;
+* the argument-position rules that changed with the rewrite.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from adversarial_pages import ADVERSARIAL
+from chart_oracle import charts_from_script as oracle_charts
+from exstruct_spark.kernels.chartconfig import charts_from_script
+from exstruct_spark.pages import (
+    ARCHETYPES, RICH_ARCHETYPES, build_page, build_rich_page)
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+
+# --- generated well-formed calls, one per marker, with the hazards an
+#     argument reader must survive: comments holding ')' and ',', strings
+#     holding ')', ',' and '{', regex literals with braces, callback and
+#     arrow values, configs built by a nested call, trailing options
+_TEXT = st.sampled_from(["a", "b,)", "c{", "d)", "e, f", "g}", "h/i"])
+_NUMS = st.lists(st.integers(0, 99), min_size=1, max_size=4)
+_GAP = st.sampled_from(
+    [" ", "", "\n", " /* ) */ ", " // ,\n ", " /* { */ "])
+_CALLBACK = st.sampled_from([
+    "function (v) { return String(v).replace(/[{}]/g, ')'); }",
+    "(v) => v.replace(/\\}/g, ',')",
+    "v => { return '{' + v; }",
+])
+
+
+def _q(text: str) -> str:
+    return "'" + text + "'"
+
+
+def _list(items) -> str:
+    return "[" + ", ".join(str(x) for x in items) + "]"
+
+
+@st.composite
+def _config(draw):
+    """One config object in a Chart.js-family dialect."""
+    labels = [_q(t) for t in draw(st.lists(_TEXT, min_size=1, max_size=3))]
+    vals, name, title = draw(_NUMS), _q(draw(_TEXT)), _q(draw(_TEXT))
+    gap, cb = draw(_GAP), draw(_CALLBACK)
+    return draw(st.sampled_from([
+        # Chart.js
+        f"{{type: 'bar',{gap}data: {{labels: {_list(labels)}, datasets:"
+        f" [{{label: {name}, data: {_list(vals)}}}]}},{gap}options:"
+        f" {{plugins: {{title: {{text: {title}}}}}, onClick: {cb}}}}}",
+        # ECharts / Highcharts series list
+        f"{{title: {{text: {title}}},{gap}xAxis: {{data: {_list(labels)}}},"
+        f" series: [{{name: {name}, type: 'line', data: {_list(vals)},"
+        f" label: {{formatter: {cb}}}}}]}}",
+        # ApexCharts
+        f"{{chart: {{type: 'bar'}}, series: [{{name: {name}, data:"
+        f" {_list(vals)}}}],{gap}xaxis: {{categories: {_list(labels)}}}}}",
+        # amCharts v3
+        f"{{type: 'serial', categoryField: 'k', dataProvider: "
+        + _list(f"{{k: {lab}, v: {v}}}" for lab, v in zip(labels, vals))
+        + f",{gap}graphs: [{{valueField: 'v', title: {name}}}]}}",
+        # C3 / billboard
+        f"{{bindto: '#c)', data: {{columns: [{_list([name] + vals)}]}}}}",
+        # FusionCharts
+        f"{{type: 'column2d', dataSource: {{chart: {{caption: {title}}},"
+        f"{gap}data: "
+        + _list(f"{{label: {lab}, value: '{v}'}}"
+                for lab, v in zip(labels, vals)) + "}}",
+        # amCharts v4 JSON config
+        "{data: " + _list(f"{{k: {lab}, v: {v}}}"
+                          for lab, v in zip(labels, vals))
+        + f", series: [{{type: 'ColumnSeries', name: {name}, dataFields:"
+        f" {{valueY: 'v', categoryX: 'k'}}}}]}}",
+        # Frappe
+        f"{{title: {title}, type: 'bar', data: {{labels: {_list(labels)},"
+        f" datasets: [{{name: {name}, values: {_list(vals)}}}]}}}}",
+    ]))
+
+
+@st.composite
+def _call(draw):
+    """One well-formed chart call statement."""
+    g = lambda: draw(_GAP)  # noqa: E731
+    labels = [_q(t) for t in draw(st.lists(_TEXT, min_size=1, max_size=3))]
+    vals, title, cb = draw(_NUMS), _q(draw(_TEXT)), draw(_CALLBACK)
+    kind = draw(st.sampled_from([
+        "config", "plotly", "plotly_object", "dygraph_csv", "dygraph_rows",
+        "chartist", "vegalite", "gviz_table", "gviz_datatable"]))
+    if kind == "config":
+        cfg = draw(st.sampled_from(
+            ["{}", "Highcharts.merge(base, {})",
+             "Object.assign({{}}, base, {})"])).format(draw(_config()))
+        return draw(st.sampled_from([
+            "new Chart({t},{g}{c});".format(
+                t=draw(st.sampled_from(
+                    ["ctx", "document.getElementById('c,)')"])),
+                g=g(), c=cfg),
+            f"chart.setOption({cfg}"
+            + draw(st.sampled_from(["", ", {notMerge: true}"])) + ");",
+            f"Highcharts.chart('hc,)',{g()}{cfg}"
+            + draw(st.sampled_from(["", f",{g()}{cb}"])) + ");",
+            f"Highcharts.stockChart('hs', {cfg});",
+            f"Highcharts.mapChart('hm', {cfg});",
+            f"$('#hq').highcharts({cfg});",
+            f"new ApexCharts(document.querySelector('#ax'),{g()}{cfg});",
+            f"AmCharts.makeChart('am{{',{g()}{cfg});",
+            f"c3.generate({cfg});",
+            f"bb.generate({cfg});",
+            f"new FusionCharts({cfg}).render();",
+            f"am4core.createFromConfig({cfg},{g()}'div', am4charts.XYChart);",
+            f"new frappe.Chart('#f)',{g()}{cfg});",
+        ]))
+    trace = (f"{{x: {_list(labels)}, y: {_list(vals)}, type: 'bar',"
+             f" hovertemplate: '%{{y}})'}}")
+    layout = f"{{title: {{text: {title}}}}}"
+    div = draw(st.sampled_from(["'d,)'", "document.getElementById('p')"]))
+    fn = draw(st.sampled_from(["newPlot", "react", "plot"]))
+    if kind == "plotly":
+        return (f"Plotly.{fn}({div},{g()}[{trace}],{g()}{layout}"
+                + draw(st.sampled_from(["", ", {responsive: true}"])) + ");")
+    if kind == "plotly_object":
+        return f"Plotly.{fn}({div}, {{data: [{trace}], layout: {layout}}});"
+    opts = (f"{{labels: ['x', 'v'], title: {title}, ylabel: 'y',"
+            f"{g()}valueFormatter: {cb}}}")
+    if kind == "dygraph_csv":
+        csv = " +\n ".join(["'x,A\\n'"] + [f"'{k},{v}\\n'"
+                                            for k, v in enumerate(vals)])
+        return (f"new Dygraph(document.getElementById('g,)'),{g()}{csv},"
+                f"{g()}{opts});")
+    if kind == "dygraph_rows":
+        rows = _list(f"[{k}, {v}]" for k, v in enumerate(vals))
+        return f"new Dygraph(el,{g()}{rows},{g()}{opts});"
+    if kind == "chartist":
+        ctor = draw(st.sampled_from(["Line", "Bar", "Pie"]))
+        series = _list(vals) if ctor == "Pie" else f"[{_list(vals)}]"
+        return (f"new Chartist.{ctor}('.ct,)',{g()}{{labels:"
+                f" {_list(labels)}, series: {series}}}"
+                + draw(st.sampled_from(
+                    ["", f", {{axisX: {{labelInterpolationFnc: {cb}}}}}"]))
+                + ");")
+    if kind == "vegalite":
+        values = _list(f"{{k: {lab}, v: {v}}}"
+                       for lab, v in zip(labels, vals))
+        spec = ("{$schema: 'https://vega.github.io/schema/vega-lite/v5.json',"
+                " mark: 'bar', encoding: {x: {field: 'k', type: 'nominal'},"
+                f"{g()}y: {{field: 'v', type: 'quantitative'}}}},"
+                f" data: {{values: {values}}}}}")
+        return (f"vegaEmbed('#vis',{g()}{spec}"
+                + draw(st.sampled_from(["", ", {actions: false}"]))
+                + ").then(function (r) { return r.view; });")
+    ctor = draw(st.sampled_from(["ColumnChart", "PieChart", "LineChart"]))
+    draw_opts = f"{{title: {title}, vAxis: {{title: 'v,)'}}}}"
+    if kind == "gviz_table":
+        body = [f"[{lab}, {v}]" for lab, v in zip(labels, vals)]
+        no_header = draw(st.booleans())
+        rows = _list(body if no_header else ["['k', 'n']"] + body)
+        flag = f",{g()}true" if no_header else ""
+        return (f"var data = google.visualization.arrayToDataTable({rows}"
+                f"{flag}); var chart = new google.visualization.{ctor}("
+                f"document.getElementById('gv')); chart.draw(data,{g()}"
+                f"{draw_opts});")
+    rows = _list(f"[{lab}, {v}]" for lab, v in zip(labels, vals))
+    return ("var dt = new google.visualization.DataTable();"
+            " dt.addColumn('string', 'k'); dt.addColumn('number', 'n');"
+            f" dt.addRows({rows}); var c2 = new google.visualization.{ctor}"
+            f"(el); c2.draw(dt,{g()}{draw_opts});")
+
+
+@given(st.lists(_call(), min_size=1, max_size=3))
+@settings(max_examples=300, deadline=None)
+def test_generated_calls_read_like_the_per_dialect_walkers(calls):
+    """Differential: a script of well-formed calls gives the same charts
+    through ``_call_args`` as through the seven walkers it replaced."""
+    script = "\n".join(calls)
+    assert charts_from_script(script) == oracle_charts(script)
+
+
+_CHART_MARK = re.compile(
+    r"new\s+Chart|setOption|[Hh]ighcharts|ApexCharts|AmCharts|generate"
+    r"|FusionCharts|createFromConfig|frappe|Plotly|Dygraph|Chartist"
+    r"|vegaEmbed|arrayToDataTable|addRows|vega-lite|\.draw\s*\(")
+_SCRIPT = re.compile(r"<script[^>]*>(.*?)</script>", re.S | re.I)
+
+
+def _scripts(text: str) -> list:
+    return _SCRIPT.findall(text) if "<script" in text.lower() else [text]
+
+
+def _corpus_scripts() -> set:
+    """Every chart script the other test modules carry as a string
+    constant (this one holds the intended changes), the scripts of the
+    page archetypes and of the adversarial inputs."""
+    found: set = set()
+    for name in sorted(os.listdir(HERE)):
+        if not name.endswith(".py") or name == os.path.basename(__file__):
+            continue
+        with open(os.path.join(HERE, name), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and _CHART_MARK.search(node.value):
+                found.update(_scripts(node.value))
+    pages = [build_rich_page(i) for i in range(3 * len(RICH_ARCHETYPES))]
+    pages += [build_page(i) for i in range(3 * len(ARCHETYPES))]
+    for page in pages:
+        found.update(_scripts(page["html"].decode("utf-8", "replace")))
+    for _, raw in ADVERSARIAL:
+        found.update(_scripts(raw.decode("utf-8", "replace")))
+    return {s for s in found if _CHART_MARK.search(s)}
+
+
+def test_corpus_scripts_read_like_the_per_dialect_walkers():
+    scripts = _corpus_scripts()
+    assert len(scripts) > 100
+    diverged = [s for s in sorted(scripts)
+                if charts_from_script(s) != oracle_charts(s)]
+    assert diverged == []
+
+
+# --- metamorphic: literal argument vs the same literal by variable
+_TRACES = "[{x: ['a', 'b'], y: [1, 2], type: 'bar', name: 't'}]"
+_LAYOUT = "{title: {text: 'Plotly title'}, yaxis: {title: 'units'}}"
+_DY_ROWS = "[[1, 10], [2, 20], [3, 15]]"
+_DY_OPTS = "{labels: ['x', 'v'], title: 'Dygraph title', ylabel: 'y'}"
+_GV_ROWS = "[['Task', 'Hours'], ['Work', 11], ['Eat', 2]]"
+_GV_OPTS = "{title: 'Daily', vAxis: {title: 'h'}}"
+_GVIZ = ("var data = google.visualization.arrayToDataTable({rows});\n"
+         "var chart = new google.visualization.ColumnChart("
+         "document.getElementById('gc'));\nchart.draw(data, {opts});")
+
+# name -> (call with ARG where the literal goes, the literal)
+_BY_VARIABLE = {
+    "chartjs": ("new Chart(ctx, ARG);",
+                "{type: 'bar', data: {labels: ['a', 'b'], datasets:"
+                " [{label: 's', data: [1, 2]}]}}"),
+    "echarts": ("myChart.setOption(ARG);",
+                "{title: {text: 'E'}, xAxis: {data: ['p', 'q']},"
+                " series: [{name: 's', type: 'line', data: [3, 4]}]}"),
+    "plotly_traces": (f"Plotly.newPlot('d', ARG, {_LAYOUT});", _TRACES),
+    "plotly_layout": (f"Plotly.newPlot('d', {_TRACES}, ARG);", _LAYOUT),
+    "plotly_one_object": ("Plotly.newPlot('d', ARG);",
+                          f"{{data: {_TRACES}, layout: {_LAYOUT}}}"),
+    "vegalite": ("vegaEmbed('#vis', ARG);",
+                 "{mark: 'bar', encoding: {x: {field: 'k', type: 'nominal'},"
+                 " y: {field: 'v', type: 'quantitative'}},"
+                 " data: {values: [{k: 'a', v: 1}, {k: 'b', v: 2}]}}"),
+    "chartist": ("new Chartist.Line('.ct', ARG);",
+                 "{labels: ['m', 'n'], series: [[1, 2]]}"),
+    "dygraph_rows": (f"new Dygraph(el, ARG, {_DY_OPTS});", _DY_ROWS),
+    "dygraph_opts": (f"new Dygraph(el, {_DY_ROWS}, ARG);", _DY_OPTS),
+    "gviz_rows": (_GVIZ.format(rows="ARG", opts=_GV_OPTS), _GV_ROWS),
+    "gviz_options": (_GVIZ.format(rows=_GV_ROWS, opts="ARG"), _GV_OPTS),
+}
+
+
+@pytest.mark.parametrize("where", ["above", "below"])
+@pytest.mark.parametrize("case", sorted(_BY_VARIABLE))
+def test_argument_by_variable_reads_like_the_literal(case, where):
+    """Hoisting a data-carrying literal into ``var hoisted = <literal>;``
+    (above the call, or below it: ``var`` hoisting) and passing
+    ``hoisted`` gives the same chart as the inline literal."""
+    call, literal = _BY_VARIABLE[case]
+    inline = charts_from_script(call.replace("ARG", literal))
+    assert inline, "the inline form must give a chart"
+    assign = f"var hoisted = {literal};"
+    by_name = call.replace("ARG", "hoisted")
+    script = (f"{assign}\n{by_name}" if where == "above"
+              else f"{by_name}\n{assign}")
+    assert charts_from_script(script) == inline
+
+
+_GVIZ_QUICKSTART = """
+google.charts.load('current', {'packages':['corechart']});
+google.charts.setOnLoadCallback(drawChart);
+function drawChart() {
+  var data = google.visualization.arrayToDataTable([
+    ['Task', 'Hours per Day'],
+    ['Work',     11],
+    ['Eat',      2],
+    ['Commute',  2],
+    ['Watch TV', 2],
+    ['Sleep',    7]
+  ]);
+  var options = {
+    title: 'My Daily Activities'
+  };
+  var chart = new google.visualization.PieChart(
+      document.getElementById('piechart'));
+  chart.draw(data, options);
+}
+"""
+
+
+def test_google_charts_quickstart_options_by_variable():
+    """The Google Charts quickstart passes its options by variable; the
+    title is read from that variable's object."""
+    (chart,) = charts_from_script(_GVIZ_QUICKSTART)
+    assert chart == {
+        "chart_type": "Pie", "title": "My Daily Activities",
+        "labels": ["Work", "Eat", "Commute", "Watch TV", "Sleep"],
+        "series": [("Hours per Day", [11.0, 2.0, 2.0, 2.0, 7.0])],
+    }
+
+
+def test_arguments_are_read_by_position():
+    """Dygraph data is argument 1, so a string element id in argument 0
+    is not read as the CSV; only a bare identifier resolves as a
+    variable, so ``setOption(app.config)`` does not read ``app``."""
+    (chart,) = charts_from_script(
+        "new Dygraph('graphdiv', 'Date,A\\n' + '2020,1\\n' + '2021,2\\n',"
+        " {title: 'T'});")
+    assert (chart["title"], chart["labels"], chart["series"]) == (
+        "T", ["2020", "2021"], [("A", [1.0, 2.0])])
+    assert charts_from_script(
+        "var app = {series: [{name: 'app', type: 'bar', data: [9]}],"
+        " config: {}}; myChart.setOption(app.config);") == []

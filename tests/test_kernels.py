@@ -2237,6 +2237,17 @@ _NESTED_ARIA_CELL = (
     "<div role='table'><div role='row'>"
     "<div role='cell'><div role='cell'>X</div></div>"
     "<div role='cell'>y</div></div></div>")
+# a plain display:none wrapper hides the ARIA rows or cells inside it,
+# as a display:none <tbody> hides its rows
+_HIDDEN_ARIA_ROW_WRAPPER = (
+    "<div role='table'><div style='display:none'><div role='row'>"
+    "<div role='cell'>SECRET</div><div role='cell'>S2</div></div></div>"
+    "<div role='row'><div role='cell'>a</div><div role='cell'>b</div>"
+    "</div></div>")
+_HIDDEN_ARIA_CELL_WRAPPER = (
+    "<div role='table'><div role='row'><div role='cell'>a</div>"
+    "<div style='display:none'><div role='cell'>SECRET</div></div>"
+    "<div role='cell'>b</div></div></div>")
 
 
 @pytest.mark.parametrize("form,html,want", [
@@ -2248,6 +2259,10 @@ _NESTED_ARIA_CELL = (
     pytest.param("aria", _NESTED_ARIA_CELL,
                  ("A1:B1", [{"r": 1, "c": {"0": "X", "1": "y"}}], None),
                  id="nested_cell-aria"),
+    pytest.param("aria", _HIDDEN_ARIA_ROW_WRAPPER, ("A1:B1", _ROWS_AB, None),
+                 id="hidden_row_wrapper-aria"),
+    pytest.param("aria", _HIDDEN_ARIA_CELL_WRAPPER,
+                 ("A1:B1", _ROWS_AB, None), id="hidden_cell_wrapper-aria"),
 ])
 def test_hidden_and_paint_rules_same_for_table_and_aria(form, html, want):
     """Hidden cells, rows and rowgroups and rowgroup paint read the same

@@ -281,6 +281,11 @@ def test_charts_from_script_is_total(s):
     assert isinstance(charts_from_script("vegaEmbed('#v', " + s + ")"), list)
     assert isinstance(
         charts_from_script("arrayToDataTable(" + s + ")"), list)
+    # the draw(...) options are only read for a chart that has a table
+    for wrap in ("Plotly.newPlot('d', ", "new Dygraph(el, ",
+                 "new Chartist.Bar('#c', ", "d.addColumn(",
+                 "arrayToDataTable([['k', 'n'], ['x', 1]]); c.draw(d, "):
+        assert isinstance(charts_from_script(wrap + s + ")"), list)
 
 
 @given(
