@@ -61,6 +61,83 @@ _CHART_CALLS = "".join("<figure><canvas></canvas><script>" + js
     " c2.draw(dt, {title: 'Sales /* */'});",
 ))
 
+# chart-dialect literals that are not chart calls: each one holds a word
+# a dialect's marker contains (Chart, setOption, generate, Plotly,
+# Dygraph, Chartist, vegaEmbed, arrayToDataTable, addColumn, vega-lite)
+# without being the marker, plus markers inside comments and strings
+_NEAR_MISS_LINES = (
+    "var palette = ['Chartreuse', 'ChartTitle', 'AmCharts.ready'];",
+    "function generateId(n) { return 'id-' + n; }",
+    "grid.addColumnHeader('x'); grid.addColumns(2);",
+    "settings.setOptions({lang: 'en'}); Highcharts.setOptions({});",
+    "var isPlotly = window.Plotly !== undefined; // Plotly.js absent",
+    "new Dygraphs.Legend(el); var DygraphX = null;",
+    "new Chartist.Legend('.ct'); var ChartistTheme = 'dark';",
+    "var vegaEmbedded = false; var arrayToDataTables = [];",
+    "am4core.useTheme(am4themes_animated); $(el).highchartsTheme();",
+    "var doc = 'call Plotly.newPlot(div, traces) to draw';",
+    "// new Chart(ctx, cfgFromComment)",
+    "/* vegaEmbed('#v', specInComment) */",
+    "var tip = \"arrayToDataTable(rowsInString)\";",
+)
+_NEAR_MISS_SCRIPT = "\n".join(
+    f"window.w{k} = function (x) {{ {_NEAR_MISS_LINES[k % 13]}"
+    f" if (x < {k % 97}) {{ return 'track' + x; }} return w{k}(x - 1); }};"
+    for k in range(80))
+
+# one real chart per marker, each in its own script, then one script
+# that mixes near misses with a real call
+_CHART_MARKER_NEAR_MISSES = (
+    "<script>" + _NEAR_MISS_SCRIPT + "</script>"
+    "<script type='application/json'>{\"$schema\": \"https://vega.github"
+    ".io/schema/vega/v5.json\", \"description\": \"not a vega-lite spec\","
+    " \"mark\": \"bar\", \"data\": {\"values\": [{\"k\": 1}]}}</script>"
+    + "".join("<figure><canvas></canvas><script>" + js
+              + "</script></figure>" for js in (
+        "new Chart(ctx, {type: 'line', data: {labels: ['a', 'b'],"
+        " datasets: [{label: 'cj', data: [1, 2]}]}});",
+        "chart.setOption({xAxis: {data: ['p']}, series: [{name: 'ec',"
+        " type: 'bar', data: [3]}]});",
+        "Highcharts.chart('hc', {title: {text: 'HC'}, series: [{name: 'h',"
+        " data: [4, 5]}]});",
+        "$('#hq').highcharts({series: [{name: 'hq', data: [6]}]});",
+        "new ApexCharts(el, {chart: {type: 'bar'}, series: [{name: 'ap',"
+        " data: [7, 8]}], xaxis: {categories: ['i', 'j']}});",
+        "AmCharts.makeChart('am', {type: 'serial', categoryField: 'k',"
+        " dataProvider: [{k: 'x', v: 9}], graphs: [{valueField: 'v'}]});",
+        "c3.generate({data: {columns: [['c3', 1, 2]]}});",
+        "new FusionCharts({type: 'column2d', dataSource: {data: [{label:"
+        " 'f', value: '3'}]}}).render();",
+        "am4core.createFromConfig({data: [{k: 'a', v: 4}], series:"
+        " [{type: 'ColumnSeries', dataFields: {valueY: 'v', categoryX:"
+        " 'k'}}]}, 'div', am4charts.XYChart);",
+        "new frappe.Chart('#f', {type: 'bar', data: {labels: ['u'],"
+        " datasets: [{name: 'fr', values: [5]}]}});",
+        "Plotly.newPlot('pd', [{x: ['a', 'b'], y: [1, 3], type: 'bar'}],"
+        " {title: 'PL'});",
+        "new Dygraph(el, 'x,A\\n1,2\\n2,4\\n', {title: 'DY'});",
+        "new Chartist.Bar('.ct', {labels: ['m'], series: [[6]]});",
+        "vegaEmbed('#vis', {$schema: 'https://vega.github.io/schema/"
+        "vega-lite/v5.json', mark: 'line', encoding: {x: {field: 'k',"
+        " type: 'nominal'}, y: {field: 'v', type: 'quantitative'}},"
+        " data: {values: [{k: 'a', v: 1}]}});",
+        "var data = google.visualization.arrayToDataTable([['k', 'n'],"
+        " ['a', 2]]); var c = new google.visualization.BarChart(el);"
+        " c.draw(data, {title: 'GV'});",
+        "var dt = new google.visualization.DataTable(); dt.addColumn("
+        "'string', 'k'); dt.addColumn('number', 'n'); dt.addRows([['a',"
+        " 3]]); new google.visualization.LineChart(el).draw(dt, {});",
+        "var generateId = 1; var ChartTitle = 'x'; // Plotly, Dygraph\n"
+        "new Chart(ctx2, {type: 'bar', data: {labels: ['z'], datasets:"
+        " [{label: 'mixed', data: [9]}]}});",
+    ))
+    + "<script>{\"$schema\": \"https://vega.github.io/schema/vega-lite/"
+    "v5.json\", \"mark\": \"point\", \"encoding\": {\"x\": {\"field\":"
+    " \"k\", \"type\": \"nominal\"}, \"y\": {\"field\": \"v\", \"type\":"
+    " \"quantitative\"}}, \"data\": {\"values\": [{\"k\": \"w\", \"v\":"
+    " 2}]}}</script>"
+)
+
 _TEXT_CASES = [
     ("comment_in_script",
      "<script>var s = '<!--'; x()</script>" + _BODY + "<!-- real -->"),
@@ -92,6 +169,7 @@ _TEXT_CASES = [
     ("astral_and_cjk",
      "<html lang=ja><body><h1>売上 😀</h1><p>€ ſ İ</p></body></html>"),
     ("chart_call_forms", _CHART_CALLS),
+    ("chart_marker_near_misses", _CHART_MARKER_NEAR_MISSES),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
