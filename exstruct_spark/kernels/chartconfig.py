@@ -11,7 +11,34 @@ unquoted keys, trailing commas, and callback functions, which no regex
 (and no strict-JSON parser) can read.  SURVEY.md §2.7 F7 flags exactly
 this.
 
-This module is that tokenizer, transplanted to the web shape:
+The module is organized around one table, ``_DIALECTS``: each chart
+dialect is stated once, as its literals, its finder, its normalizer and
+(for Google Charts) its context step, and ``charts_from_script`` is one
+loop over it.
+
+  * **literals** — substrings that every match of the dialect's marker
+    contains.  A finder runs only when one of them is in the script
+    (``str`` search at C speed), so a script without a chart, the
+    common case on crawled pages, costs one substring search per
+    literal and no regex scan;
+  * **finders** — a marker regex plus one rule naming the argument that
+    carries the data: the first/last ``{...}`` of a constructor in the
+    ``_MARKER_RE`` family (``new Chart``, ``.setOption``, Highcharts,
+    ApexCharts, amCharts, C3/billboard, FusionCharts, Frappe), Plotly's
+    trace array and the layout after it, argument 1 for Chartist,
+    Vega-Lite and Dygraph (argument 2 its options), argument 0 of
+    ``arrayToDataTable``, the ``addColumn``/``addRows`` DataTable
+    idiom, and a whole-script Vega-Lite JSON spec;
+  * **normalizers** (``_from_*``) — each dialect's config shape into the
+    engine's intermediate chart shape {chart_type, title, labels,
+    series: [(name, [values])], y_axis_title?}, incl. the modern
+    ECharts ``dataset.source`` table and the jQuery
+    ``$(sel).highcharts(cfg)`` form;
+  * **context** (``_gviz_context``) — a Google Charts data table's chart
+    type and ``draw(data, options)`` options, bound through the table's
+    variable.
+
+Underneath, the finders share one tokenizer:
 
   * ``_call_args``: one walk over a chart call's arguments, the direct
     analogue of ``_split_top_level_args`` — depth + string/comment/
@@ -21,28 +48,12 @@ This module is that tokenizer, transplanted to the web shape:
   * ``_arg_value``: one argument's value — a literal parses in place; a
     bare identifier (``const cfg = {...}; new Chart(ctx, cfg)``)
     resolves to its nearest object/array assignment, in every dialect;
-  * each dialect is a marker regex plus one rule naming the argument
-    that carries its data: the first/last ``{...}`` (``new Chart``,
-    ``.setOption`` and the rest of ``_MARKER_RE``), Plotly's trace array
-    and the layout after it, argument 1 for Chartist, Vega-Lite and
-    Dygraph (argument 2 its options), argument 0 of
-    ``arrayToDataTable`` and argument 1 of ``draw(...)``;
   * ``parse_js_value``: recursive-descent parse of the JS object-literal
     subset (objects with quoted/bare keys, arrays, single/double/backtick
     strings with backslash escapes, numbers, true/false/null/undefined,
     bare identifiers as strings); callback values (``function`` /
     ``=>``) are consumed as balanced token runs and yield ``None`` —
-    skipped, never crashed on;
-  * ``charts_from_script``: normalize the config dialects — Chart.js
-    ``{type, data:{labels, datasets:[{label, data}]}}``, ECharts/
-    Highcharts ``{title, xAxis, series:[{name, type, data}]}`` (incl.
-    the modern ECharts ``dataset.source`` table and the jQuery
-    ``$(sel).highcharts(cfg)`` form), Plotly trace arrays, Vega-Lite
-    JSON specs (``vegaEmbed`` calls or ``application/json`` blocks),
-    and Google Charts — BOTH ``arrayToDataTable`` row tables and the
-    imperative ``addColumn``/``addRows`` DataTable idiom — into the
-    engine's intermediate chart shape {chart_type, title, labels,
-    series: [(name, [values])], y_axis_title?}.
+    skipped, never crashed on.
 
 Pure Python, no Spark: runs inside the single mapInPandas extraction
 stage like every other kernel.
@@ -53,6 +64,8 @@ from __future__ import annotations
 import re
 from typing import Optional
 
+# the constructor-config family, one regex so its matches stay in
+# script order; its gate literals are its ``_DIALECTS`` entry
 _MARKER_RE = re.compile(
     r"new\s+Chart\s*\(|\.setOption\s*\("
     r"|Highcharts\s*\.\s*(?:chart|stockChart|mapChart)\s*\("
@@ -251,10 +264,11 @@ def _call_args(s: str, i: int) -> list:
 def _arg_value(s: str, arg: tuple, call_pos: int):
     """One argument's value.  A ``{``/``[``/string literal parses in
     place; a bare identifier resolves to the nearest ``name = {``/``[``
-    assignment above the call at ``call_pos`` (else the first one below
-    it: ``var`` hoisting), so ``const cfg = {...}; new Chart(ctx, cfg)``
-    reads like its inline twin.  Anything else (a call, a member path,
-    an expression) is None."""
+    assignment of that name (not of a property ``obj.name``) above the
+    call at ``call_pos`` (else the first one below it: ``var``
+    hoisting), so ``const cfg = {...}; new Chart(ctx, cfg)`` reads like
+    its inline twin.  Anything else (a call, a member path, an
+    expression) is None."""
     start, end, _ = arg
     i = _skip_ws(s, start)
     if i >= end:
@@ -265,8 +279,10 @@ def _arg_value(s: str, arg: tuple, call_pos: int):
     if m is None or _skip_ws(s, m.end()) < end:
         return None
     best = None
+    # (?<![\w$.]): the name itself, not a longer name or a property
+    # (``state.cfg = …``); a ``$`` name has no ``\b`` in front of it
     for am in re.finditer(
-            r"\b" + re.escape(m.group(0)) + r"\s*=\s*[{\[]", s):
+            r"(?<![\w$.])" + re.escape(m.group(0)) + r"\s*=\s*[{\[]", s):
         if am.start() < call_pos or best is None:
             best = am
         if am.start() >= call_pos:
@@ -290,10 +306,10 @@ _FIRST_ARG_MARKERS = ("setOption", "highcharts", "generate", "FusionCharts",
 
 
 def find_config_objects(script_text: str) -> list:
-    """The parsed config dict of every chart-constructor call: the first
-    or last ``{...}`` literal among its arguments (``_FIRST_ARG_MARKERS``
-    decides which), else the first or last argument read as a
-    variable."""
+    """``(cfg,)`` per chart-constructor call, ``cfg`` the parsed config
+    dict: the first or last ``{...}`` literal among its arguments
+    (``_FIRST_ARG_MARKERS`` decides which), else the first or last
+    argument read as a variable."""
     s = script_text or ""
     out = []
     for m in _MARKER_RE.finditer(s):
@@ -306,7 +322,7 @@ def find_config_objects(script_text: str) -> list:
         else:
             cfg = _nth_value(s, args, k, m.start())
         if isinstance(cfg, dict):
-            out.append(cfg)
+            out.append((cfg,))
     return out
 
 
@@ -1331,22 +1347,23 @@ _VEGA_MARK_TYPES = {
 
 
 def _find_vegalite_specs(script_text: str) -> list:
-    """Every ``vegaEmbed(selector, spec)`` call's spec (argument 1), plus
-    a whole-script JSON spec (the ``<script type="application/json">``
-    embedding) identified by its vega-lite ``$schema``."""
+    """``(spec,)`` for every ``vegaEmbed(selector, spec)`` call's spec
+    (argument 1), plus a whole-script JSON spec (the ``<script
+    type="application/json">`` embedding) identified by its vega-lite
+    ``$schema``."""
     s = script_text or ""
     out = []
     for m in _VEGA_RE.finditer(s):
         spec = _nth_value(s, _call_args(s, m.end()), 1, m.start())
         if isinstance(spec, dict):
-            out.append(spec)
+            out.append((spec,))
     stripped = s.lstrip()
     if stripped.startswith("{") and "vega-lite" in stripped:
         spec, _ = parse_js_value(stripped, 0)
         if isinstance(spec, dict) and "vega-lite" in str(
             spec.get("$schema") or ""
         ):
-            out.append(spec)
+            out.append((spec,))
     return out
 
 
@@ -1517,7 +1534,8 @@ _MAX_GVIZ_COLS = 64
 
 
 def _find_gviz_datatables(script_text: str) -> list:
-    """Imperative-API DataTables -> (rows_with_header, offset) pairs.
+    """Imperative-API DataTables -> ``(rows_with_header, False, offset,
+    receiver)``, the ``_find_gviz_tables`` shape.
 
     Columns accumulate per RECEIVER variable in document order (only
     addColumn calls BEFORE the addRows call count — receiver reuse
@@ -1564,7 +1582,7 @@ def _find_gviz_datatables(script_text: str) -> list:
             continue
         rows, _j = parse_js_value(s, m.end())
         if isinstance(rows, list) and rows:
-            out.append(([header] + rows, m.start(), recv))
+            out.append(([header] + rows, False, m.start(), recv))
     return out
 
 
@@ -1731,45 +1749,56 @@ def _gviz_context(script_text: str, from_pos: int = 0,
     return chart_type, title, y_title
 
 
+def _from_config(cfg: dict) -> Optional[dict]:
+    """A constructor config of the ``_MARKER_RE`` family: each library's
+    shape is tried in turn (their keys do not overlap)."""
+    return (_from_chartjs(cfg) or _from_echarts(cfg) or _from_amcharts(cfg)
+            or _from_c3(cfg) or _from_fusioncharts(cfg)
+            or _from_amcharts4(cfg) or _from_frappe(cfg))
+
+
+# Every chart dialect, once, in output order: (literals, finder,
+# normalizer, context).  Every match of the finder's marker contains one
+# of its literals, so a script holding none of them gives the dialect
+# no chart and the finder is not run: a chart-less script costs one
+# C-speed substring search per literal.  The finder returns the
+# normalizer's argument tuples; where there is a ``context`` step (the
+# two Google Charts data shapes) a tuple is ``(rows, no_header, offset,
+# variable)`` and the step reads the chart type and draw options.
+_DIALECTS = (
+    # "Chart" anchors new Chart, ApexCharts, AmCharts.makeChart,
+    # FusionCharts and frappe.Chart
+    (("Chart", "setOption", "Highcharts", "highcharts", "generate",
+      "createFromConfig"), find_config_objects, _from_config, None),
+    (("Plotly",), _find_plotly_calls, _from_plotly, None),
+    (("Dygraph",), _find_dygraph_calls, _from_dygraph, None),
+    (("Chartist",), _find_chartist_calls, _from_chartist, None),
+    # vegaEmbed calls, or a whole-script spec whose $schema is vega-lite
+    (("vegaEmbed", "vega-lite"), _find_vegalite_specs, _from_vegalite,
+     None),
+    (("arrayToDataTable",), _find_gviz_tables, _from_gviz, _gviz_context),
+    (("addColumn",), _find_gviz_datatables, _from_gviz, _gviz_context),
+)
+
+
 def charts_from_script(script_text: str) -> list:
     """One <script>'s text -> normalized chart dicts (possibly several —
-    a page can construct many charts in one script block)."""
+    a page can construct many charts in one script block), dialect by
+    dialect in ``_DIALECTS`` order."""
+    s = script_text or ""
     out = []
-    for cfg in find_config_objects(script_text):
-        chart = (_from_chartjs(cfg) or _from_echarts(cfg)
-                 or _from_amcharts(cfg) or _from_c3(cfg)
-                 or _from_fusioncharts(cfg) or _from_amcharts4(cfg)
-                 or _from_frappe(cfg))
-        if chart is not None:
-            out.append(chart)
-    for traces, layout in _find_plotly_calls(script_text):
-        chart = _from_plotly(traces, layout)
-        if chart is not None:
-            out.append(chart)
-    for data, opts in _find_dygraph_calls(script_text):
-        chart = _from_dygraph(data, opts)
-        if chart is not None:
-            out.append(chart)
-    for kind, cfg in _find_chartist_calls(script_text):
-        chart = _from_chartist(kind, cfg)
-        if chart is not None:
-            out.append(chart)
-    for spec in _find_vegalite_specs(script_text):
-        chart = _from_vegalite(spec)
-        if chart is not None:
-            out.append(chart)
-    for rows, no_header, pos, var in _find_gviz_tables(script_text):
-        chart_type, title, y_title = _gviz_context(script_text, pos, var)
-        chart = _from_gviz(rows, chart_type, title, no_header)
-        if chart is not None:
-            if y_title:
-                chart["y_axis_title"] = y_title
-            out.append(chart)
-    for rows, pos, recv in _find_gviz_datatables(script_text):
-        chart_type, title, y_title = _gviz_context(script_text, pos, recv)
-        chart = _from_gviz(rows, chart_type, title, no_header=False)
-        if chart is not None:
-            if y_title:
-                chart["y_axis_title"] = y_title
-            out.append(chart)
+    for literals, find, normalize, context in _DIALECTS:
+        if not any(lit in s for lit in literals):
+            continue
+        for found in find(s):
+            if context is None:
+                chart = normalize(*found)
+            else:
+                rows, no_header, pos, var = found
+                chart_type, title, y_title = context(s, pos, var)
+                chart = normalize(rows, chart_type, title, no_header)
+                if chart is not None and y_title:
+                    chart["y_axis_title"] = y_title
+            if chart is not None:
+                out.append(chart)
     return out

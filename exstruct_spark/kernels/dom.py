@@ -119,10 +119,15 @@ class Node:
     from ``parse_html`` (the native parser or ``_parse_html_fast``), and
     both set ``doc_nodes``, ``i0`` and ``i1``, so traversal has no
     unindexed path.
+
+    The ancestor link is an index too: ``pi`` is the parent's ``i0``, and
+    ``parent`` reads ``doc_nodes[pi]``.  So the only cycle in a tree is
+    ``doc_nodes`` itself, which ``release`` empties: the tree is then
+    freed by reference counting, not by the cyclic GC.  A node is not
+    valid after its document is released.
     """
 
-    __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1",
-                 "parent")
+    __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi")
 
     def __init__(self, tag: str, attrs: Optional[dict] = None):
         self.tag = tag
@@ -131,9 +136,15 @@ class Node:
         self.doc_nodes = None
         self.i0 = 0
         self.i1 = 0
-        # ancestor link for CSS combinator matching (kernels/css.py),
-        # set by the parser; None only on the document root.
-        self.parent: Optional["Node"] = None
+        # the parent's i0, set by the parser; None only on the root
+        self.pi = None
+
+    @property
+    def parent(self) -> Optional["Node"]:
+        """Ancestor link for CSS combinator matching (kernels/css.py);
+        None only on the document root."""
+        pi = self.pi
+        return None if pi is None else self.doc_nodes[pi]
 
     # -- traversal -------------------------------------------------------
     def _subtree(self) -> list:
@@ -393,7 +404,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             node.i0 = i0
             node.i1 = i0 + 1  # leaf until proven otherwise (scope close)
             parent = stack[-1]
-            node.parent = parent
+            node.pi = parent.i0
             parent.children.append(node)
             add_node(node)
             if xml_mode:
@@ -462,6 +473,17 @@ def parse_html(html: str, xml_mode: bool = False) -> Node:
     native scanner when it was built, else ``_parse_html_fast``: the
     same tree either way."""
     return _parse(html, xml_mode)
+
+
+def release(root: Node) -> None:
+    """Let a parsed document be freed by reference counting: empty its
+    ``doc_nodes`` list, the one reference cycle in the tree (every node
+    holds the list that holds it).  Its nodes are not valid afterwards.
+    The root drops the emptied index as well, so a released tree reads
+    as an unindexed one: ``children`` still links every node."""
+    dl = root.doc_nodes
+    root.doc_nodes = None
+    dl.clear()
 
 
 def decode_html_bytes(raw: bytes) -> str:

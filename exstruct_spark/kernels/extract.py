@@ -38,6 +38,7 @@ from exstruct_spark.kernels.dom import (
     decode_html_bytes,
     is_invisible,
     parse_html,
+    release,
     strip_tags_text,
 )
 from exstruct_spark.kernels.feeds import (
@@ -504,6 +505,9 @@ def extract_document(
                  and sniff_json_feed(html))
     robots = (not feed_kind and not json_feed and html
               and "<" not in html[:256] and sniff_robots(html))
+    # a parsed tree is released in a ``finally`` on every route, so the
+    # fallback path frees it too (dom.release: no cyclic garbage)
+    root = None
     if feed_kind or json_feed or robots:
         try:
             if robots:
@@ -511,8 +515,8 @@ def extract_document(
             elif json_feed:
                 feed = extract_json_feed(html)
             else:
-                feed = extract_feed(parse_html(html, xml_mode=True),
-                                    feed_kind)
+                root = parse_html(html, xml_mode=True)
+                feed = extract_feed(root, feed_kind)
             extraction.update(feed)
             main_text = normalize_main_text(feed_main_text(feed))
             n_lists = len(feed.get("items", ()))
@@ -520,6 +524,9 @@ def extract_document(
             status = "fallback"
             fallback_reason = f"feed:{type(exc).__name__}"
             extraction["fallback_reason"] = fallback_reason
+        finally:
+            if root is not None:
+                release(root)
         return _record(url, status, fallback_reason, main_text, extraction,
                        bytes_in, n_lists=n_lists)
 
@@ -1013,6 +1020,9 @@ def extract_document(
             extraction = {"doc": url}
             main_text = ""
             n_tables = n_shapes = n_arrows = n_charts = n_lists = n_links = 0
+        finally:
+            if root is not None:
+                release(root)
 
     if status == "fallback" or not main_text:
         # degraded text-only path (build_cells_tables_workbook analogue,

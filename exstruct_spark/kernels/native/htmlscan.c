@@ -1,7 +1,7 @@
 /* Native tag scan and tree build for exstruct_spark.kernels.dom.
 
    A port of dom._parse_html_fast, which stays the specification: this
-   module builds the same dom.Node trees (tag, attrs, children, parent,
+   module builds the same dom.Node trees (tag, attrs, children, pi,
    doc_nodes, i0/i1) and is tested against it differentially.  Only the
    scan and build loop live here.  The tag tables, the attribute parser
    with its cache, the tag-info cache and entity decoding stay in dom.py
@@ -35,7 +35,7 @@ static PyObject *doc_tag;         /* "#document" */
 
 /* byte offsets of Node's __slots__ */
 static Py_ssize_t off_tag, off_attrs, off_children, off_doc_nodes,
-    off_i0, off_i1, off_parent;
+    off_i0, off_i1, off_pi;
 
 #define SLOT(obj, off) (*(PyObject **)((char *)(obj) + (off)))
 
@@ -329,9 +329,9 @@ str_eq(PyObject *a, PyObject *b)
                   (size_t)n * PyUnicode_KIND(a)) == 0;
 }
 
+/* pi: the parent's i0 object (None for the root) */
 static PyObject *
-new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes,
-         PyObject *parent)
+new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes, PyObject *pi)
 {
     Py_ssize_t i0 = PyList_GET_SIZE(doc_nodes);
     PyObject *node, *children, *v0, *v1;
@@ -357,8 +357,8 @@ new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes,
     SLOT(node, off_doc_nodes) = doc_nodes;
     SLOT(node, off_i0) = v0;
     SLOT(node, off_i1) = v1;
-    Py_INCREF(parent);
-    SLOT(node, off_parent) = parent;
+    Py_INCREF(pi);
+    SLOT(node, off_pi) = pi;
     if (PyList_Append(doc_nodes, node) < 0) {
         Py_DECREF(node);
         return NULL;
@@ -518,7 +518,8 @@ build(PyObject *html, int xml_mode)
         attrs = lookup_attrs(html, &t, tok.a0, tok.a1);
         if (attrs == NULL)
             goto error;
-        node = new_node(tag, attrs, doc_nodes, st.node[st.len - 1]);
+        node = new_node(tag, attrs, doc_nodes,
+                        SLOT(st.node[st.len - 1], off_i0));
         Py_DECREF(attrs);
         if (node == NULL)
             goto error;
@@ -647,7 +648,7 @@ htmlscan_init(PyObject *self, PyObject *args)
                                             "doc_nodes")) < 0
             || (off_i0 = slot_offset((PyTypeObject *)node, "i0")) < 0
             || (off_i1 = slot_offset((PyTypeObject *)node, "i1")) < 0
-            || (off_parent = slot_offset((PyTypeObject *)node, "parent")) < 0)
+            || (off_pi = slot_offset((PyTypeObject *)node, "pi")) < 0)
         return NULL;
     if (doc_tag == NULL && (doc_tag = PyUnicode_InternFromString(
                                 "#document")) == NULL)

@@ -1,5 +1,11 @@
-"""The chart-call finders as they were before ``_call_args``, kept as a
-test-only oracle for the differential test in ``test_chart_calls.py``.
+"""Test-only oracles for the chart-call differential tests in
+``test_chart_calls.py``.
+
+``charts_ungated`` is ``charts_from_script`` as it was before the
+dialect table: every dialect's finder runs on every script, whether or
+not the script holds one of the dialect's literals.
+
+The rest are the chart-call finders as they were before ``_call_args``.
 
 Seven hand-copied argument walkers (``find_config_objects`` with
 ``_resolve_ident_config``, and the Chartist, Dygraph, Plotly,
@@ -13,6 +19,7 @@ from __future__ import annotations
 
 import re
 
+from exstruct_spark.kernels import chartconfig as cc
 from exstruct_spark.kernels.chartconfig import (
     _CHARTIST_RE,
     _DYGRAPH_RE,
@@ -592,8 +599,52 @@ def charts_from_script(script_text: str) -> list:
             if y_title:
                 chart["y_axis_title"] = y_title
             out.append(chart)
-    for rows, pos, recv in _find_gviz_datatables(script_text):
+    for rows, _, pos, recv in _find_gviz_datatables(script_text):
         chart_type, title, y_title = _gviz_context(script_text, pos, recv)
+        chart = _from_gviz(rows, chart_type, title, no_header=False)
+        if chart is not None:
+            if y_title:
+                chart["y_axis_title"] = y_title
+            out.append(chart)
+    return out
+
+
+def charts_ungated(script_text: str) -> list:
+    """``charts_from_script`` with no literal gate: the seven dialect
+    loops over the module's own finders and normalizers."""
+    out = []
+    for (cfg,) in cc.find_config_objects(script_text):
+        chart = (_from_chartjs(cfg) or _from_echarts(cfg)
+                 or _from_amcharts(cfg) or _from_c3(cfg)
+                 or _from_fusioncharts(cfg) or _from_amcharts4(cfg)
+                 or _from_frappe(cfg))
+        if chart is not None:
+            out.append(chart)
+    for traces, layout in cc._find_plotly_calls(script_text):
+        chart = _from_plotly(traces, layout)
+        if chart is not None:
+            out.append(chart)
+    for data, opts in cc._find_dygraph_calls(script_text):
+        chart = _from_dygraph(data, opts)
+        if chart is not None:
+            out.append(chart)
+    for kind, cfg in cc._find_chartist_calls(script_text):
+        chart = _from_chartist(kind, cfg)
+        if chart is not None:
+            out.append(chart)
+    for (spec,) in cc._find_vegalite_specs(script_text):
+        chart = _from_vegalite(spec)
+        if chart is not None:
+            out.append(chart)
+    for rows, no_header, pos, var in cc._find_gviz_tables(script_text):
+        chart_type, title, y_title = cc._gviz_context(script_text, pos, var)
+        chart = _from_gviz(rows, chart_type, title, no_header)
+        if chart is not None:
+            if y_title:
+                chart["y_axis_title"] = y_title
+            out.append(chart)
+    for rows, _, pos, recv in _find_gviz_datatables(script_text):
+        chart_type, title, y_title = cc._gviz_context(script_text, pos, recv)
         chart = _from_gviz(rows, chart_type, title, no_header=False)
         if chart is not None:
             if y_title:

@@ -6,7 +6,10 @@
   every chart script the suite and the page corpus carry;
 * a metamorphic test: a literal argument and the same literal passed by
   variable (assigned above or below the call) give the same chart;
-* the argument-position rules that changed with the rewrite.
+* the argument-position rules that changed with the rewrite;
+* a differential test of the dialect table's literal gate against the
+  same finders run ungated (``chart_oracle.charts_ungated``), on
+  generated calls, the corpus scripts and near-miss mutations of both.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from hypothesis import strategies as st
 
 from adversarial_pages import ADVERSARIAL
 from chart_oracle import charts_from_script as oracle_charts
+from chart_oracle import charts_ungated
+from exstruct_spark.kernels import chartconfig
 from exstruct_spark.kernels.chartconfig import charts_from_script
 from exstruct_spark.pages import (
     ARCHETYPES, RICH_ARCHETYPES, build_page, build_rich_page)
@@ -327,3 +332,149 @@ def test_arguments_are_read_by_position():
     assert charts_from_script(
         "var app = {series: [{name: 'app', type: 'bar', data: [9]}],"
         " config: {}}; myChart.setOption(app.config);") == []
+
+
+def test_assignment_lookup_skips_property_assignments():
+    """``state.cfg = {...}`` assigns a property, not the variable ``cfg``
+    that the call passes."""
+    (chart,) = charts_from_script(
+        "var cfg = {type: 'bar', data: {labels: ['a'], datasets: [{label:"
+        " 'right', data: [1]}]}}; state.cfg = {type: 'bar', data: {labels:"
+        " ['a'], datasets: [{label: 'wrong', data: [2]}]}};"
+        " new Chart(ctx, cfg);")
+    assert chart["series"] == [("right", [1.0])]
+
+
+@pytest.mark.parametrize("call", ["new Chart(ctx, $cfg);",
+                                  "myChart.setOption($cfg);"])
+def test_assignment_lookup_reads_dollar_names(call):
+    """A ``$`` variable name resolves like any other identifier; a
+    comparison with the same name above it is not its assignment."""
+    cfg = ("{type: 'bar', data: {labels: ['a'], datasets: [{label: 'd',"
+           " data: [3]}]}, series: [{name: 'd', type: 'bar', data: [3]}]}")
+    (chart,) = charts_from_script(
+        f"if ($cfg == [1]) {{}} var $cfg = {cfg}; {call}")
+    assert chart["series"] == [("d", [3.0])]
+
+
+# --- the dialect table's literal gate: a dialect's finder runs only when
+#     one of its literals is in the script.  Near misses hold a literal
+#     without being the marker, or hold the marker in a comment or string
+_NEAR_MISS = st.sampled_from([
+    "Chartreuse", "ChartTitle", "generateId(n)", "grid.addColumnHeader('x')",
+    "settings.setOptions({a: 1})", "Highcharts.setOptions({})",
+    "$(el).highchartsTheme()", "AmCharts.ready(f)", "am4core.useTheme(t)",
+    "var isPlotly = 1", "new Dygraphs.Legend(el)", "new Chartist.Legend(x)",
+    "vegaEmbedded", "arrayToDataTables", "'vega-lite'",
+    "// new Chart(ctx, cfg)\n", "/* vegaEmbed('#v', spec) */",
+    "'Plotly.newPlot(d, traces)'", "\"arrayToDataTable(rows)\"",
+    "/* c3.generate({data: {columns: [['x', 1]]}}) */",
+    "dt.addColumn('number', 'n')", "dt.addRows([['a', 1]])",
+])
+_WHOLE_SPEC = st.sampled_from([
+    '{"$schema": "https://vega.github.io/schema/vega-lite/v5.json",'
+    ' "mark": "bar", "encoding": {"x": {"field": "k", "type": "nominal"},'
+    ' "y": {"field": "v", "type": "quantitative"}}, "data": {"values":'
+    ' [{"k": "a", "v": 1}]}}',
+    '{"$schema": "https://vega.github.io/schema/vega/v5.json",'
+    ' "description": "no vega-lite here", "mark": "bar"}',
+])
+
+
+@st.composite
+def _mutated_script(draw):
+    """Generated calls (or a whole-script JSON spec, or nothing) with
+    near misses inserted at arbitrary offsets."""
+    base = draw(st.one_of(st.lists(_call(), max_size=3).map("\n".join),
+                          _WHOLE_SPEC))
+    for at, text in draw(st.lists(
+            st.tuples(st.integers(0, 1 << 16), _NEAR_MISS), max_size=5)):
+        at %= len(base) + 1
+        base = base[:at] + text + base[at:]
+    return base
+
+
+@given(_mutated_script())
+@settings(max_examples=400, deadline=None)
+def test_gated_dialects_read_like_the_ungated_finders(script):
+    assert charts_from_script(script) == charts_ungated(script)
+
+
+@given(st.lists(_call(), min_size=1, max_size=3))
+@settings(max_examples=200, deadline=None)
+def test_generated_calls_gated_like_ungated(calls):
+    script = "\n".join(calls)
+    assert charts_from_script(script) == charts_ungated(script)
+
+
+def test_corpus_scripts_gated_like_ungated():
+    scripts = _corpus_scripts()
+    assert len(scripts) > 100
+    diverged = [s for s in sorted(scripts)
+                if charts_from_script(s) != charts_ungated(s)]
+    assert diverged == []
+
+
+_SERIES = "{series: [{name: 's', type: 'bar', data: [1, 2]}]}"
+# one call per marker form, each holding no other dialect's literal
+_MARKER_FORMS = [
+    "new Chart(ctx, {type: 'bar', data: {labels: ['a'], datasets:"
+    " [{label: 's', data: [1]}]}});",
+    f"myChart.setOption({_SERIES});",
+    f"Highcharts.chart('c', {_SERIES});",
+    f"Highcharts.stockChart('c', {_SERIES});",
+    f"Highcharts.mapChart('c', {_SERIES});",
+    f"$('#c').highcharts({_SERIES});",
+    "new ApexCharts(el, {chart: {type: 'bar'}, series: [{name: 'a',"
+    " data: [1]}]});",
+    "AmCharts.makeChart('d', {type: 'serial', categoryField: 'k',"
+    " dataProvider: [{k: 'x', v: 9}], graphs: [{valueField: 'v'}]});",
+    "c3.generate({data: {columns: [['c3', 1, 2]]}});",
+    "bb.generate({data: {columns: [['bb', 1, 2]]}});",
+    "new FusionCharts({type: 'column2d', dataSource: {data: [{label:"
+    " 'f', value: '3'}]}});",
+    "am4core.createFromConfig({data: [{k: 'a', v: 4}], series: [{type:"
+    " 'ColumnSeries', dataFields: {valueY: 'v', categoryX: 'k'}}]},"
+    " 'div', kind);",
+    "new frappe.Chart('#f', {data: {labels: ['u'], datasets: [{name:"
+    " 'fr', values: [5]}]}});",
+    "Plotly.newPlot('d', [{y: [1, 2]}]);",
+    "new Dygraph(el, 'x,A\\n1,2\\n', {});",
+    "new Chartist.Line('.c', {labels: ['m'], series: [[1]]});",
+    "vegaEmbed('#v', {mark: 'bar', encoding: {y: {field: 'v', type:"
+    " 'quantitative'}}, data: {values: [{v: 1}]}});",
+    '{"$schema": "https://vega.github.io/schema/vega-lite/v5.json",'
+    ' "mark": "bar", "encoding": {"y": {"field": "v", "type":'
+    ' "quantitative"}}, "data": {"values": [{"v": 1}]}}',
+    "var d = google.visualization.arrayToDataTable([['k', 'n'],"
+    " ['a', 1]]);",
+    "d.addColumn('string', 'k'); d.addColumn('number', 'n');"
+    " d.addRows([['a', 1]]);",
+]
+
+
+@pytest.mark.parametrize("call", _MARKER_FORMS)
+def test_every_marker_form_passes_the_gate(call):
+    assert charts_from_script(call) == charts_ungated(call) != []
+
+def test_chart_less_script_runs_no_finder(monkeypatch):
+    """A script that holds none of a dialect's literals never reaches
+    that dialect's finder; each real call reaches its own (a Chartist
+    call also holds the config family's ``Chart``)."""
+    ran: list = []
+
+    def recording(k, find):
+        return lambda s: ran.append(k) or find(s)
+
+    monkeypatch.setattr(chartconfig, "_DIALECTS", tuple(
+        (lits, recording(k, find), norm, ctx)
+        for k, (lits, find, norm, ctx) in enumerate(chartconfig._DIALECTS)))
+    boilerplate = "\n".join(
+        f"window.track_{i} = function(x) {{ if (x < {i}) {{ return 'render'"
+        f" + x; }} return track_{i}(x - 1); }};" for i in range(200))
+    assert charts_from_script(boilerplate) == [] and ran == []
+    dialect = [0] * 13 + [1, 2, 3, 4, 4, 5, 6]
+    for k, call in zip(dialect, _MARKER_FORMS):
+        ran.clear()
+        assert charts_from_script(call + "\n" + boilerplate), call
+        assert k in ran, call

@@ -3,6 +3,7 @@ native scanner (``htmlscan.c``) builds the same trees it does."""
 
 from __future__ import annotations
 
+import gc
 import os
 import subprocess
 import sys
@@ -187,3 +188,61 @@ def test_parse_error_becomes_the_fallback_row(monkeypatch):
     assert rec["status"] == "fallback"
     assert rec["fallback_reason"] == "RecursionError"
     assert rec["main_text"] == "some text here"
+
+
+def _live_nodes() -> int:
+    return sum(type(o) is dom.Node for o in gc.get_objects())
+
+
+def _rich_page(archetype: str) -> dict:
+    from exstruct_spark.pages import RICH_ARCHETYPES
+
+    return build_rich_page(RICH_ARCHETYPES.index(archetype))
+
+
+@pytest.fixture(params=["native", "python"])
+def parser(request, monkeypatch):
+    if request.param == "native":
+        monkeypatch.setattr(dom, "_parse",
+                            request.getfixturevalue("native_parse"))
+    else:
+        monkeypatch.setattr(dom, "_parse", dom._parse_html_fast)
+    return request.param
+
+
+@pytest.mark.parametrize("doc", ["large_page", "rss_feed", "fallback"])
+def test_extracted_tree_is_freed_without_the_cyclic_gc(parser, doc,
+                                                       monkeypatch):
+    """``extract_document`` releases its parse tree on the HTML route,
+    the feed route and the fallback path: with the cyclic GC off, no
+    ``Node`` outlives the call."""
+    from exstruct_spark.kernels import extract
+    from perfbench.inputs import large_page
+
+    if doc == "rss_feed":
+        page = _rich_page("rss_feed")
+    else:
+        page = large_page(1, 0)
+    if doc == "fallback":
+        def failing(*args, **kwargs):
+            raise ValueError("kernel failure")
+        monkeypatch.setattr(extract, "extract_main_text", failing)
+    gc.collect()
+    gc.disable()
+    try:
+        before = _live_nodes()
+        rec = extract.extract_document(page["url"], page["html"])
+        after = _live_nodes()
+    finally:
+        gc.enable()
+    assert rec["status"] == ("fallback" if doc == "fallback" else "ok")
+    assert after == before
+
+
+def test_released_tree_keeps_its_children():
+    root = dom.parse_html("<div><p>a</p><p>b</p></div>")
+    p = root.find_first("p")
+    assert p.parent.tag == "div" and root.parent is None
+    dom.release(root)
+    assert root.doc_nodes is None
+    assert [c.tag for c in root.children[0].children] == ["p", "p"]
