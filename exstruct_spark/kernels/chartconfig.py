@@ -1751,7 +1751,7 @@ def _gviz_context(script_text: str, from_pos: int = 0,
 
 def _from_config(cfg: dict) -> Optional[dict]:
     """A constructor config of the ``_MARKER_RE`` family: each library's
-    shape is tried in turn (their keys do not overlap)."""
+    normalizer in turn, the first chart wins."""
     return (_from_chartjs(cfg) or _from_echarts(cfg) or _from_amcharts(cfg)
             or _from_c3(cfg) or _from_fusioncharts(cfg)
             or _from_amcharts4(cfg) or _from_frappe(cfg))

@@ -28,3 +28,16 @@ def native_parse():
                         "scanner did not build (see the WARNING on stderr)")
         pytest.skip("no C compiler: only the Python parser is available")
     return dom._native.parse
+
+
+@pytest.fixture(params=["native", "python"])
+def parser(request, monkeypatch):
+    """Runs a test once under each HTML parser ``parse_html`` can use."""
+    from exstruct_spark.kernels import dom
+
+    if request.param == "native":
+        monkeypatch.setattr(dom, "_parse",
+                            request.getfixturevalue("native_parse"))
+    else:
+        monkeypatch.setattr(dom, "_parse", dom._parse_html_fast)
+    return request.param

@@ -397,13 +397,8 @@ def _mutated_script(draw):
 @given(_mutated_script())
 @settings(max_examples=400, deadline=None)
 def test_gated_dialects_read_like_the_ungated_finders(script):
-    assert charts_from_script(script) == charts_ungated(script)
-
-
-@given(st.lists(_call(), min_size=1, max_size=3))
-@settings(max_examples=200, deadline=None)
-def test_generated_calls_gated_like_ungated(calls):
-    script = "\n".join(calls)
+    """Generated calls, with or without near misses, read the same
+    through the literal gate as through every finder run ungated."""
     assert charts_from_script(script) == charts_ungated(script)
 
 

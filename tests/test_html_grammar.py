@@ -200,16 +200,6 @@ def _rich_page(archetype: str) -> dict:
     return build_rich_page(RICH_ARCHETYPES.index(archetype))
 
 
-@pytest.fixture(params=["native", "python"])
-def parser(request, monkeypatch):
-    if request.param == "native":
-        monkeypatch.setattr(dom, "_parse",
-                            request.getfixturevalue("native_parse"))
-    else:
-        monkeypatch.setattr(dom, "_parse", dom._parse_html_fast)
-    return request.param
-
-
 @pytest.mark.parametrize("doc", ["large_page", "rss_feed", "fallback"])
 def test_extracted_tree_is_freed_without_the_cyclic_gc(parser, doc,
                                                        monkeypatch):

@@ -18,13 +18,10 @@ import json
 import os
 import sys
 
-import pytest
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path[:0] = [HERE, os.path.dirname(HERE)]  # also when run as a script
 
 from adversarial_pages import ADVERSARIAL, ROUTES  # noqa: E402
-from exstruct_spark.kernels import dom  # noqa: E402
 from exstruct_spark.kernels.extract import extract_document  # noqa: E402
 from exstruct_spark.pages import (  # noqa: E402
     ARCHETYPES, RICH_ARCHETYPES, build_page, build_rich_page)
@@ -127,16 +124,6 @@ BLESSED = {
     'route:robots_txt': '223818c6065b81a45a5b481c711d69621a60a990a71d69982ca4f3960753bd32',
     'route:whitespace_only': '248174079c513d77e1390b62d254684aa4e4440bf7889cb7036904e10dc4db3a',
 }
-
-
-@pytest.fixture(params=["native", "python"])
-def parser(request, monkeypatch):
-    if request.param == "native":
-        monkeypatch.setattr(dom, "_parse",
-                            request.getfixturevalue("native_parse"))
-    else:
-        monkeypatch.setattr(dom, "_parse", dom._parse_html_fast)
-    return request.param
 
 
 def test_kernel_fingerprint(parser):
