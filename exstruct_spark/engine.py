@@ -26,6 +26,7 @@ from __future__ import annotations
 import time
 import uuid
 from typing import Iterator, Optional
+from urllib.parse import urljoin
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,9 @@ from pyspark.sql import functions as F
 
 from exstruct_spark.config import ExtractOptions
 from exstruct_spark.golden import EXTRACT_SCHEMA_DDL, extract_pdf
-from exstruct_spark.kernels.extract import RECORD_FIELDS
+from exstruct_spark.kernels.extract import (
+    RECORD_FIELDS, _style_import_hrefs, stylesheet_refs,
+)
 
 # per-batch lineage columns extract_stage appends to every record
 _BATCH_FIELDS = (
@@ -111,247 +114,42 @@ def default_session(
 # <link rel=stylesheet href> is unread by the pure per-page extractor, yet
 # the crawl CONTAINS most of those CSS files as its own documents.  This is
 # the genuinely Spark-shaped operator the single-process reference cannot
-# have: a cheap JVM-regex harvest pass over the pages, an equi-join of the
-# harvested refs against the corpus's stylesheet documents (broadcast when
-# the css side fits — it is a tiny fraction of any real crawl), and a
-# per-page collect in link order.  The joined sheet texts ride the SAME
-# Arrow batch into the fused extraction stage, where kernels/css.py merges
-# them below same-document <style> rules.  At 10^12 docs: the harvest is
-# scan-local (whole-stage codegen, no Python), the refs->css join shuffles
-# only the refs (pages that actually link sheets), and the pages<-sheets
-# left join keys on url — the same key extract_stage repartitions by, so
-# AQE/exchange reuse co-locates it.
+# have: a harvest pass that runs the kernel's own stylesheet rule over the
+# pages (so the join keys ARE the list extraction applies — same charset
+# decode, route, parse and <base> rule), an equi-join of those refs
+# against the corpus's stylesheet documents (broadcast when the css side
+# fits — it is a tiny fraction of any real crawl), and a per-page collect
+# in link order.  The joined sheet texts ride the SAME Arrow batch into
+# the fused extraction stage, where kernels/css.py merges them below
+# same-document <style> rules.  At 10^12 docs: the harvest is one
+# Arrow-batched pass (a second parse of each page, no shuffle), the
+# refs->css join shuffles only the refs (pages that actually link
+# sheets), and the pages<-sheets left join keys on url — the same key
+# extract_stage repartitions by, so AQE/exchange reuse co-locates it.
 
-# quote-aware tag capture, mirroring dom._TOKEN_RE's attr alternation:
-# a quoted '>' inside an attribute must not truncate the tag, or the
-# harvest's href parse diverges from the kernel's
-_LINK_TAG_RE = r"(?i)<link\b(?:[^>\"']|\"[^\"]*\"|'[^']*')*>"
-_BASE_TAG_RE = r"(?i)<base\b(?:[^>\"']|\"[^\"]*\"|'[^']*')*>"
-_REL_STYLESHEET_RE = "(?i)\\brel\\s*=\\s*[\"']?[^\"'>]*\\bstylesheet\\b"
 _CSS_URL_RE = r"(?i)\.css([?#].*)?$"
-# @import url("x.css") / @import "x.css" — permissive single-group scan
-# (the inner join against corpus sheets drops any false positive)
-_CSS_IMPORT_RE = r"(?i)@import\s+(?:url\(\s*)?[\"']?([^\"'()\s;]+)"
 _MAX_IMPORTS_PER_SHEET = 8
 
 
-_TAG_NAME_RE = None  # lazily-compiled in _attrs_of_tag (worker-side)
-
-
-def _attrs_of_tag(tag_text: str) -> dict:
-    """Attribute dict of one captured tag, via the KERNEL's attr
-    parser (sixth-pass review lesson: every harvest-side
-    re-implementation of attribute parsing diverged from the kernel in
-    some corner — quoting, entities, data-* false matches; importing
-    the same function makes parity structural)."""
-    global _TAG_NAME_RE
-    import re as _re
-
-    from exstruct_spark.kernels.dom import _parse_attrs
-
-    if _TAG_NAME_RE is None:
-        _TAG_NAME_RE = _re.compile(r"^<[a-zA-Z][a-zA-Z0-9:-]*")
-    t = _TAG_NAME_RE.sub("", tag_text or "").rstrip(">")
-    # a self-close slash glued to an unquoted value (href=x/>) is the
-    # tokenizer's group, not value text
-    if t.endswith("/"):
-        t = t[:-1]
-    return _parse_attrs(t)
-
-
-def _first_base_href(tag_list) -> Optional[str]:
-    """Kernel rule: the FIRST <base> WITH a non-empty href wins."""
-    for t in (tag_list if tag_list is not None else ()):
-        h = (_attrs_of_tag(t).get("href") or "").strip()
-        if h:
-            return h
-    return None
-
-
-def _candidate_urls(page_url, bases, href) -> Optional[list]:
-    """href resolved under each base interpretation + no-base —
-    distinct, order-preserving.  Shared by the link and style-import
-    harvest UDFs."""
-    from urllib.parse import urljoin
-
-    cands: list = []
-    for b in (*bases, None):
-        try:
-            base = urljoin(page_url or "", b) if b else (page_url or "")
-            r = urljoin(base, href)
-        except ValueError:
-            continue
-        if r and r not in cands:
-            cands.append(r)
-    return cands or None
-
-
 def harvest_stylesheet_refs(pages: DataFrame) -> DataFrame:
-    """Pass-1 harvest: pages -> (url, link_order, css_url).
+    """Pass-1 harvest: pages -> (url, css_url, link_order).
 
-    Pure JVM (regexp over ``cast(html as string)`` — tolerant of non-UTF8
-    bytes, unlike ``decode``) except the final href resolution, which is
-    one Arrow-batched pandas UDF over the already-tiny harvested rows
-    (a few per page, zero for most).  The regex harvest is deliberately
-    permissive; the authoritative per-page list (exact DOM walk, base
-    resolution, first-wins dedup) is the ``stylesheets`` extraction
-    field — at join time permissive is correct because a harvested URL
-    that matches no corpus document simply drops out of the inner join.
+    One Arrow-batched pandas UDF runs the kernel's rule,
+    ``kernels.extract.stylesheet_refs``, over each page's bytes, so
+    ``css_url`` is exactly a URL of the page's ``stylesheets``
+    extraction field and ``link_order`` its position there (links in
+    document order, then inline ``<style>`` @imports; first-wins,
+    capped).  Pages with no applicable sheet give no rows.
     """
-    import pandas as pd  # noqa: F811 (kernel import pattern)
-    from pyspark.sql.functions import pandas_udf
+    @F.pandas_udf("array<string>")
+    def _refs(url: pd.Series, html: pd.Series) -> pd.Series:
+        return pd.Series([stylesheet_refs(u, h) for u, h in zip(url, html)],
+                         dtype=object)
 
-    @pandas_udf("array<string>")
-    def _resolve_candidates(page_url: pd.Series, bt_stripped: pd.Series,
-                            bt_noscript: pd.Series, bt_raw: pd.Series,
-                            link_tag: pd.Series) -> pd.Series:
-        out = []
-        for u, b1, b2, b3, tag in zip(page_url, bt_stripped,
-                                      bt_noscript, bt_raw, link_tag):
-            h = (_attrs_of_tag(tag).get("href") or "").strip()
-            if not h:
-                out.append(None)
-                continue
-            out.append(_candidate_urls(
-                u, (_first_base_href(b1), _first_base_href(b2),
-                    _first_base_href(b3)), h))
-        return pd.Series(out, dtype=object)
-
-    @pandas_udf("array<string>")
-    def _resolve_import_candidates(
-            page_url: pd.Series, bt_stripped: pd.Series,
-            bt_noscript: pd.Series, bt_raw: pd.Series,
-            href: pd.Series) -> pd.Series:
-        # style-block @import targets are raw CSS text — NO entity
-        # decoding (the DOM stores raw-text content verbatim)
-        out = []
-        for u, b1, b2, b3, h in zip(page_url, bt_stripped,
-                                    bt_noscript, bt_raw, href):
-            h = (h or "").strip()
-            if not h:
-                out.append(None)
-                continue
-            out.append(_candidate_urls(
-                u, (_first_base_href(b1), _first_base_href(b2),
-                    _first_base_href(b3)), h))
-        return pd.Series(out, dtype=object)
-
-    html_s = F.col("html").cast("string")
-    # BASE RESOLUTION CANDIDATES, not one guess (fourth/fifth-pass
-    # review findings): a regex cannot reproduce the DOM's
-    # comment/raw-text rules, and with the kernel as the apply-time
-    # authority a wrong join key silently loses the page's styling.
-    # So every link is resolved under FOUR base interpretations —
-    # comment-stripped (mirroring dom.py's unterminated-comment-to-EOF
-    # rule), script/style-then-comment-stripped (a fake '<base' string
-    # inside script raw text must not shadow the document's real base;
-    # close-tag rule mirrors dom's  </script\b ), raw (covers a real
-    # <base> the strips wrongly ate), and no-base — and each distinct
-    # result becomes a candidate join key.  Whichever matches the
-    # kernel's authoritative list is admitted; the extras are phantom
-    # join rows the admit filter discards (and the kernel orders
-    # admitted sheets by ITS list, so phantom link_order collisions
-    # cannot perturb the cascade).  Same design as the missing media
-    # filter: the harvest may over-include, never miss.  Base TAGS
-    # (not href values) ship to the UDF so the kernel attr parser
-    # reads them; first-8 cap bounds a hostile page.
-    _comment_re = r"(?s)<!--.*?(?:-->|$)"
-    _rawtext_re = r"(?is)<(script|style)\b.*?(?:</\1\b|$)"
-
-    def _base_tags(col):
-        return F.slice(
-            F.regexp_extract_all(col, F.lit(_BASE_TAG_RE), 0), 1, 8)
-
-    tags = pages.select(
+    return pages.select(
         "url",
-        _base_tags(
-            F.regexp_replace(html_s, _comment_re, "")
-        ).alias("bt_stripped"),
-        _base_tags(
-            F.regexp_replace(
-                F.regexp_replace(html_s, _rawtext_re, ""),
-                _comment_re, "")
-        ).alias("bt_noscript"),
-        _base_tags(html_s).alias("bt_raw"),
-        F.posexplode(
-            F.regexp_extract_all(html_s, F.lit(_LINK_TAG_RE), 0)
-        ).alias("link_order", "tag"),
-    )
-    # NO media filtering here, by design (r7 second-pass finding): a
-    # regex over raw tag text cannot reliably parse attributes (it
-    # matched inside data-media=/title= values), and a false NEGATIVE
-    # at harvest time would silently drop a sheet the page needs.  The
-    # harvest stays a pure over-approximation; the kernel's
-    # _stylesheet_refs (real attribute parse + media_applies_on_screen)
-    # is the single authority — extract_document applies a joined sheet
-    # only when its URL is on that authoritative list.
-    refs = (
-        tags.where(F.col("tag").rlike(_REL_STYLESHEET_RE))
-        .select(
-            "url", "link_order",
-            F.explode(
-                _resolve_candidates(
-                    "url", "bt_stripped", "bt_noscript",
-                    "bt_raw", "tag")
-            ).alias("css_url"),
-        )
-        .where(F.col("css_url").isNotNull())
-    )
-    # inline <style> @import targets (the legacy-theme idiom): style
-    # BLOCKS captured with the raw-text close rule (</style\b, like
-    # dom._RAW_CLOSE_RE), their @import hrefs harvested permissively
-    # (the kernel's strict top-of-sheet + media rule decides what
-    # actually applies); link_order offset keeps these keys after the
-    # page's links for the dedup min() — the kernel orders the cascade
-    # from its own list regardless.
-    _style_block_re = (r"(?is)<style\b(?:[^>\"']|\"[^\"]*\"|'[^']*')*>"
-                       r".*?(?:</style\b|$)")
-    style_imports = (
-        pages.select(
-            "url",
-            _base_tags(
-                F.regexp_replace(html_s, _comment_re, "")
-            ).alias("bt_stripped"),
-            _base_tags(
-                F.regexp_replace(
-                    F.regexp_replace(html_s, _rawtext_re, ""),
-                    _comment_re, "")
-            ).alias("bt_noscript"),
-            _base_tags(html_s).alias("bt_raw"),
-            F.posexplode(
-                F.slice(
-                    F.regexp_extract_all(
-                        html_s, F.lit(_style_block_re), 0),
-                    1, 8)
-            ).alias("style_pos", "block"),
-        )
-        .select(
-            "url", "bt_stripped", "bt_noscript", "bt_raw", "style_pos",
-            F.posexplode(
-                F.slice(
-                    F.regexp_extract_all(
-                        F.col("block"), F.lit(_CSS_IMPORT_RE), 1),
-                    1, _MAX_IMPORTS_PER_SHEET)
-            ).alias("imp_pos", "imp_href"),
-        )
-        .where(F.col("imp_href") != "")
-        .select(
-            "url",
-            (F.lit(100_000) + F.col("style_pos") * 100
-             + F.col("imp_pos")).alias("link_order"),
-            F.explode(
-                _resolve_import_candidates(
-                    "url", "bt_stripped", "bt_noscript",
-                    "bt_raw", "imp_href")
-            ).alias("css_url"),
-        )
-        .where(F.col("css_url").isNotNull())
-    )
-    refs = refs.unionByName(style_imports)
-    # same sheet linked twice: keep the first position (kernel parity)
-    return refs.groupBy("url", "css_url").agg(
-        F.min("link_order").alias("link_order")
-    )
+        F.posexplode(_refs("url", "html")).alias("link_order", "css_url"),
+    ).select("url", "css_url", "link_order")
 
 
 def attach_external_css(
@@ -371,9 +169,6 @@ def attach_external_css(
     of pages and heavily shared); pass False to let AQE pick the
     strategy for a css-heavy corpus.
     """
-    import pandas as pd  # noqa: F811 (kernel import pattern)
-    from pyspark.sql.functions import pandas_udf
-
     refs = harvest_stylesheet_refs(pages)
     if css_docs is None:
         css_docs = pages.where(F.col("url").rlike(_CSS_URL_RE))
@@ -386,39 +181,34 @@ def attach_external_css(
               .withColumn("link_url", F.col("css_url")))
 
     # ONE level of @import chasing: real sheets routinely import a base/
-    # theme sheet that is itself in the corpus.  Imported sheets order
-    # immediately BEFORE their importer (CSS applies @import rules ahead
-    # of the importing sheet's own), capped per sheet; a second import
-    # level is deliberately not chased (documented bound, not a loop).
-    @pandas_udf("string")
-    def _resolve_import(sheet_url: pd.Series,
-                        href: pd.Series) -> pd.Series:
-        from urllib.parse import urljoin
-
+    # theme sheet that is itself in the corpus.  A joined sheet's imports
+    # are read with the kernel's rule for <style> blocks (top of sheet
+    # only, media tail honoured) and resolved against the sheet's URL.
+    # Imported sheets order immediately BEFORE their importer (CSS
+    # applies @import rules ahead of the importing sheet's own), capped
+    # per sheet; a second import level is deliberately not chased
+    # (documented bound, not a loop).
+    @F.pandas_udf("array<string>")
+    def _sheet_imports(sheet_url: pd.Series,
+                       css_text: pd.Series) -> pd.Series:
         out = []
-        for u, h in zip(sheet_url, href):
-            try:
-                out.append(urljoin(u or "", h or "") or None)
-            except ValueError:
-                out.append(None)
+        for u, t in zip(sheet_url, css_text):
+            urls = []
+            hrefs = _style_import_hrefs(t or "")
+            for href in hrefs[:_MAX_IMPORTS_PER_SHEET]:
+                try:
+                    urls.append(urljoin(u or "", href))
+                except ValueError:
+                    continue
+            out.append(urls)
         return pd.Series(out, dtype=object)
 
     imports = (
         joined.select(
-            "url", "link_order", "css_url", "link_url",
-            F.posexplode(
-                F.slice(
-                    F.regexp_extract_all(
-                        F.col("css_text"), F.lit(_CSS_IMPORT_RE), 1),
-                    1, _MAX_IMPORTS_PER_SHEET)
-            ).alias("imp_pos", "imp_href"),
+            "url", "link_order", "link_url",
+            F.posexplode(_sheet_imports("css_url", "css_text")
+                         ).alias("imp_pos", "css_url"),
         )
-        .where(F.col("imp_href") != "")
-        .select(
-            "url", "link_order", "imp_pos", "link_url",
-            _resolve_import("css_url", "imp_href").alias("css_url"),
-        )
-        .where(F.col("css_url").isNotNull())
         .join(right, "css_url", "inner")
         .select("url", "link_order", "link_url",
                 F.lit(0).alias("tier"), "imp_pos", "css_text")
@@ -427,10 +217,8 @@ def attach_external_css(
         "url", "link_order", "link_url",
         F.lit(1).alias("tier"), F.lit(0).alias("imp_pos"), "css_text")
     # each entry carries the LINK's resolved URL (imports carry their
-    # importer's link URL) so the kernel can align entries against its
-    # own authoritative _stylesheet_refs list — the harvest being
-    # permissive is then safe: a sheet the kernel's media/attribute
-    # parse rejects is joined but never applied
+    # importer's link URL), which the kernel checks against its own
+    # _stylesheet_refs list (_admitted_sheets)
     per_page = (
         direct.unionByName(imports)
         .groupBy("url")

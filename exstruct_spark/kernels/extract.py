@@ -31,9 +31,10 @@ from exstruct_spark.kernels.areas import area_views, auto_areas
 from exstruct_spark.kernels.boilerplate import extract_main_text
 from exstruct_spark.kernels.charts import extract_charts
 from exstruct_spark.kernels.css import (
-    build_resolver, media_applies_on_screen, rules_from_sheets,
+    _style_text, build_resolver, media_applies_on_screen, rules_from_sheets,
 )
 from exstruct_spark.kernels.dom import (
+    RENDER_INERT,
     Node,
     decode_html_bytes,
     is_invisible,
@@ -286,9 +287,9 @@ _MAX_STYLESHEET_REFS = 16  # per document, link order
 
 
 # @import is only valid at the TOP of a sheet (after optional @charset
-# and @layer STATEMENTS); browsers ignore it after any other rule, so
-# the kernel applies the strict prefix rule — the Spark-side harvest
-# stays permissive (over-include is safe under the kernel authority)
+# and @layer STATEMENTS); browsers ignore it after any other rule.  One
+# rule for inline <style> blocks and for corpus-joined sheets (the
+# engine's one-level import chase reads them with it too)
 _IMPORT_PRELUDE_RE = re.compile(
     r"(?is)\s*(?:@charset\s+[^;]*;|@layer\s+[^;{]*;)")
 _IMPORT_STMT_RE = re.compile(
@@ -299,9 +300,9 @@ _MAX_IMPORT_SCAN = 4096  # bytes of sheet prefix scanned for @import
 
 
 def _style_import_hrefs(style_text: str) -> list:
-    """Top-of-sheet ``@import`` targets of one ``<style>`` block, in
-    order, honoring each import's media tail (``@import url(x) print;``
-    never applies on screen)."""
+    """Top-of-sheet ``@import`` targets of one sheet (a ``<style>``
+    block or a linked sheet's text), in order, honoring each import's
+    media tail (``@import url(x) print;`` never applies on screen)."""
     text = _CSS_COMMENT_RE.sub("", style_text[:_MAX_IMPORT_SCAN])
     out: list = []
     pos = 0
@@ -360,8 +361,7 @@ def _stylesheet_refs(link_nodes: list, base_url: str,
     for sn in style_nodes:
         if not media_applies_on_screen(sn.attrs.get("media")):
             continue
-        text = "".join(c for c in sn.children if type(c) is str)
-        for href in _style_import_hrefs(text):
+        for href in _style_import_hrefs(_style_text(sn)):
             resolved = urljoin(base_url, href)
             if resolved not in seen:
                 seen.add(resolved)
@@ -377,18 +377,16 @@ def _admitted_sheets(external_css, sheets: list) -> list:
 
     Entries are ``{u: link_url, t: text}`` structs (Arrow hands them
     over as dicts): a text is admitted only when its link URL is on
-    ``sheets`` — the kernel's authoritative applicable list
-    (_stylesheet_refs: real attribute parse, media semantics, caps).
-    The Spark-side harvest is a pure over-approximation, so a sheet it
-    wrongly kept (unparseable media attr, data-media= false match) is
-    joined but never applied.  Plain-string entries (direct kernel
-    calls, pre-join tests) carry no URL and are admitted as-is.
+    ``sheets`` — the kernel's applicable list (_stylesheet_refs: real
+    attribute parse, media semantics, caps).  The corpus join keys on
+    that same list (``stylesheet_refs``), so a joined entry is always
+    on it; the check keeps a hand-built ``external_css`` column to the
+    same rule.  Plain-string entries (direct kernel calls, pre-join
+    tests) carry no URL and are admitted as-is.
 
     ORDER comes from ``sheets`` (the kernel's document-order list),
     with array position as the secondary key (keeps a link's @imports
-    before the importing sheet): harvest candidate collisions can
-    perturb the join-side link_order, so it is never trusted for the
-    cascade (r7 fifth-pass finding)."""
+    before the importing sheet)."""
     allowed = {u: i for i, u in enumerate(sheets or ())}
     entries: list = []
     for pos, e in enumerate(external_css):
@@ -427,6 +425,72 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
             positions.setdefault(href, []).append(idx)
     # deterministic order: first-seen (dict preserves insertion)
     return positions
+
+
+def _route(raw: bytes) -> tuple:
+    """Content-type routing (parser-per-kind dispatch — the analogue of
+    the reference's backend dispatcher, core/cells.py:1897-1943):
+    ``(kind, html)``.  ``kind`` is 'pdf', a ``sniff_feed_kind`` result,
+    'json_feed', 'robots', 'empty' or 'html'; ``html`` is the decoded
+    text ('' for a PDF).  Feeds and sitemaps are the crawl's OTHER XML
+    document kinds: the first real tag decides, so HTML pages never
+    take a feed route."""
+    if is_pdf(raw):
+        return "pdf", ""
+    html = decode_html_bytes(raw)
+    if html:
+        feed_kind = sniff_feed_kind(html)
+        if feed_kind:
+            return feed_kind, html
+        if sniff_json_feed(html):
+            return "json_feed", html
+        if "<" not in html[:256] and sniff_robots(html):
+            return "robots", html
+    return ("html" if html.strip() else "empty"), html
+
+
+def _document_base(url: str, base_nodes: list) -> str:
+    """``<base href>``: the FIRST base with a non-empty href wins (HTML
+    spec), resolved against the page URL; the page URL without one."""
+    for b in base_nodes:
+        href = (b.attrs.get("href") or "").strip()
+        if href:
+            return urljoin(url, href)
+    return url
+
+
+def stylesheet_refs(url: str, raw: Optional[bytes]) -> list:
+    """The page's applicable external-stylesheet URLs, exactly the
+    ``stylesheets`` field ``extract_document`` gives the same bytes:
+    the same decode and route (PDF, feed, robots.txt and empty
+    documents have none), the same parse, the rendered walk's
+    ``<base>``/``<link>``/``<style>`` nodes (``template``/``noscript``
+    subtrees are inert) and ``_stylesheet_refs``.  This is the key list
+    of the external-CSS corpus join (engine.harvest_stylesheet_refs)."""
+    kind, html = _route(raw or b"")
+    if kind != "html":
+        return []
+    root = parse_html(html)
+    try:
+        found: dict = {"base": [], "link": [], "style": []}
+        skip_until = -1
+        for doc_idx, n in enumerate(root.iter()):
+            if doc_idx < skip_until:
+                continue
+            if n.tag in RENDER_INERT:
+                skip_until = n.i1
+            elif n.tag in found:
+                found[n.tag].append(n)
+        return _stylesheet_refs(found["link"],
+                                _document_base(url, found["base"]),
+                                found["style"])
+    except ValueError:
+        # urljoin rejected an href or base (a malformed IPv6 host):
+        # extract_document gives such a page a fallback record, which
+        # lists no stylesheets
+        return []
+    finally:
+        release(root)
 
 
 def _record(url: str, status: str, fallback_reason: str, main_text: str,
@@ -472,9 +536,8 @@ def extract_document(
     n_tables = n_shapes = n_arrows = n_charts = n_lists = n_links = 0
     truncated = False
 
-    # content-type routing (parser-per-kind dispatch — the analogue of the
-    # reference's backend dispatcher, core/cells.py:1897-1943)
-    if is_pdf(raw):
+    kind, html = _route(raw)
+    if kind == "pdf":
         try:
             pdf = extract_pdf_document(raw)
             extraction["content_type"] = "pdf"
@@ -496,27 +559,18 @@ def extract_document(
         return _record(url, status, fallback_reason, main_text, extraction,
                        bytes_in)
 
-    html = decode_html_bytes(raw)
-
-    # feed/sitemap routing (the crawl's OTHER XML document kinds): the
-    # first real tag decides, so HTML pages never enter this branch
-    feed_kind = sniff_feed_kind(html) if html else None
-    json_feed = (not feed_kind and html
-                 and sniff_json_feed(html))
-    robots = (not feed_kind and not json_feed and html
-              and "<" not in html[:256] and sniff_robots(html))
     # a parsed tree is released in a ``finally`` on every route, so the
     # fallback path frees it too (dom.release: no cyclic garbage)
     root = None
-    if feed_kind or json_feed or robots:
+    if kind != "html" and kind != "empty":
         try:
-            if robots:
+            if kind == "robots":
                 feed = extract_robots(html)
-            elif json_feed:
+            elif kind == "json_feed":
                 feed = extract_json_feed(html)
             else:
                 root = parse_html(html, xml_mode=True)
-                feed = extract_feed(root, feed_kind)
+                feed = extract_feed(root, kind)
             extraction.update(feed)
             main_text = normalize_main_text(feed_main_text(feed))
             n_lists = len(feed.get("items", ()))
@@ -530,7 +584,7 @@ def extract_document(
         return _record(url, status, fallback_reason, main_text, extraction,
                        bytes_in, n_lists=n_lists)
 
-    if not html.strip():
+    if kind == "empty":
         status = "fallback"
         fallback_reason = "empty_document"
     else:
@@ -647,21 +701,13 @@ def extract_document(
             if title:
                 extraction["title"] = title
 
-            # <base href>: the FIRST base with an href wins (HTML spec);
             # resolved once, shared by stylesheet + link resolution
-            effective_base = url
-            for b in groups["base"]:
-                b_href = (b.attrs.get("href") or "").strip()
-                if b_href:
-                    effective_base = urljoin(url, b_href)
-                    break
+            effective_base = _document_base(url, groups["base"])
 
-            # the AUTHORITATIVE applicable-stylesheet list (real
-            # attribute parse + media_applies_on_screen) — computed
-            # before the resolver so corpus-joined sheets are applied
-            # only when this list admits them: the Spark-side harvest
-            # is a deliberate over-approximation (r7 second-pass
-            # finding — a regex over tag text cannot parse attributes).
+            # the applicable-stylesheet list (real attribute parse +
+            # media_applies_on_screen) — the same list the corpus join
+            # keyed on (stylesheet_refs), computed before the resolver,
+            # which applies a joined sheet in this list's order.
             # Skipped when nothing consumes it (no joined sheets, no
             # structured-metadata output) — the hot path stays free.
             sheets = (

@@ -3237,8 +3237,9 @@ def test_rendered_visibility_contract():
 
 def test_stylesheet_media_print_filter():
     """Round 7: a print-only stylesheet never styles the rendered page
-    — both the kernel's stylesheets field and the Spark harvest skip
-    media='print' links unless the media list also names screen/all."""
+    — the kernel's stylesheets field, which is also the corpus join's
+    key list, skips media='print' links unless the media list also
+    names screen/all."""
     import json
 
     from exstruct_spark.golden import extract_document
@@ -5647,7 +5648,7 @@ def test_gviz_dotted_receiver_disambiguation():
 def test_admitted_sheets_document_order():
     """r7 fifth-pass review: admitted external sheets are ordered by
     the kernel's own document-order list, never by join-side array
-    position (phantom candidate collisions can perturb the latter)."""
+    position, and an entry whose URL is not on the list is dropped."""
     from exstruct_spark.kernels.extract import _admitted_sheets
 
     ext = [

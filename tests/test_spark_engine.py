@@ -976,6 +976,89 @@ def test_inline_style_import_corpus_join(spark):
         "00FF00": [[1, 0], [1, 1]]}
 
 
+def _first_table_colors(spark, rows, url):
+    """``colors_map`` of the first table of ``url`` after the corpus
+    CSS join and extraction of ``rows`` (None when it has none)."""
+    import json
+
+    from exstruct_spark.engine import attach_external_css
+
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    out = extract_stage(attach_external_css(pages))
+    rec = {r["url"]: r for r in out.collect()}[url]
+    ex = json.loads(rec["extraction_json"])
+    return ex, (ex.get("tables") or [{}])[0].get("colors_map")
+
+
+_TWO_CELLS = (b"<body><table><tr><td>x</td><td>y</td></tr>"
+              b"</table></body></html>")
+
+
+def test_linked_sheet_print_import_not_applied(spark):
+    """A joined sheet's @import with a print media tail never styles the
+    page (the kernel's top-of-sheet rule, as for <style> blocks); the
+    sheet's own rules do."""
+    rows = [
+        ("https://k.example/p",
+         b"<html><head><link rel='stylesheet' href='main.css'></head>"
+         + _TWO_CELLS),
+        ("https://k.example/main.css",
+         b"@import url('pr.css') print;\n"
+         b"td { background-color: #00FF00 }"),
+        ("https://k.example/pr.css",
+         b"table td { background-color: #FF0000 }"),
+    ]
+    _, colors = _first_table_colors(spark, rows, "https://k.example/p")
+    assert colors == {"00FF00": [[1, 0], [1, 1]]}
+
+
+def test_linked_sheet_late_import_not_applied(spark):
+    """A joined sheet's @import after another rule is ignored, as a
+    browser ignores it."""
+    rows = [
+        ("https://m.example/p",
+         b"<html><head><link rel='stylesheet' href='main.css'></head>"
+         + _TWO_CELLS),
+        ("https://m.example/main.css",
+         b"td{color:#000} @import url('late.css');\n"
+         b"td { background-color: #00FF00 }"),
+        ("https://m.example/late.css",
+         b"table td { background-color: #123456 }"),
+    ]
+    _, colors = _first_table_colors(spark, rows, "https://m.example/p")
+    assert colors == {"00FF00": [[1, 0], [1, 1]]}
+
+
+def test_latin1_page_link_joins(spark):
+    """A latin-1 page's non-ASCII href is decoded as extraction decodes
+    it, so the listed sheet is the joined and applied one."""
+    page = ("<html><head><link rel=stylesheet href='caf\xe9.css'>"
+            "</head>").encode("latin-1") + _TWO_CELLS
+    rows = [
+        ("https://l.example/p", page),
+        ("https://l.example/caf\xe9.css",
+         b"td { background-color: #00FF00 }"),
+    ]
+    ex, colors = _first_table_colors(spark, rows, "https://l.example/p")
+    assert ex["stylesheets"] == ["https://l.example/caf\xe9.css"]
+    assert colors == {"00FF00": [[1, 0], [1, 1]]}
+
+
+def test_utf16_bom_page_link_joins(spark):
+    """A UTF-16LE page with a byte-order mark gets its linked sheet."""
+    page = b"\xff\xfe" + (
+        "<html><head><link rel=stylesheet href='w.css'></head>"
+        "<body><table><tr><td>x</td><td>y</td></tr></table>"
+        "</body></html>").encode("utf-16-le")
+    rows = [
+        ("https://w.example/p", page),
+        ("https://w.example/w.css", b"td { background-color: #00FF00 }"),
+    ]
+    ex, colors = _first_table_colors(spark, rows, "https://w.example/p")
+    assert ex["stylesheets"] == ["https://w.example/w.css"]
+    assert colors == {"00FF00": [[1, 0], [1, 1]]}
+
+
 def test_local_workers_carry_no_jar_importers(spark):
     """Under ``spark_daemon`` a worker's ``importlib.invalidate_caches()``
     (run per task) has no jar central directory to re-read."""
