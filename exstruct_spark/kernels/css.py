@@ -637,7 +637,10 @@ def rules_from_sheets(sheets) -> list:
     Length test, not truthiness: the Arrow batch hands the joined
     ``external_css`` column over as a numpy array per row, and a
     MULTI-element numpy array raises on ``bool()`` (a single-element
-    one does not — which is why a one-sheet test can't catch this)."""
+    one does not — which is why a one-sheet test can't catch this).
+
+    A leading U+FEFF (a UTF-8 byte-order mark the corpus read kept as
+    text) is dropped, so it cannot glue itself to the first selector."""
     if sheets is None or len(sheets) == 0:
         return []
     budget = MAX_CSS_BYTES
@@ -647,7 +650,7 @@ def rules_from_sheets(sheets) -> list:
             break
         if not text or not isinstance(text, str):
             continue  # a None/empty sheet must not drop later ones
-        chunk = text[:budget]
+        chunk = text.removeprefix("\ufeff")[:budget]
         budget -= len(chunk)
         rules.extend(_parse_sheet_cached(chunk)[: MAX_RULES - len(rules)])
     return rules

@@ -125,9 +125,19 @@ class Node:
     ``doc_nodes`` itself, which ``release`` empties: the tree is then
     freed by reference counting, not by the cyclic GC.  A node is not
     valid after its document is released.
+
+    Source offsets: ``s0``/``s1`` bound the element's start tag in the
+    parsed string (``html[s0:s1]`` is the tag), ``e0``/``e1`` its close
+    (``html[e0:e1]`` is the end tag, ``html[s1:e0]`` the content and
+    ``html[s0:e1]`` the whole element).  An element closed without its
+    own end tag (by a later start tag, an ancestor's end tag or the end
+    of input) has ``e0 == e1`` at the start of the token that closed it;
+    a void or self-closed element has ``e0 == e1 == s1``.  The root spans
+    the whole string.  Extraction never reads them; edits splice at them.
     """
 
-    __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi")
+    __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi",
+                 "s0", "s1", "e0", "e1")
 
     def __init__(self, tag: str, attrs: Optional[dict] = None):
         self.tag = tag
@@ -138,6 +148,7 @@ class Node:
         self.i1 = 0
         # the parent's i0, set by the parser; None only on the root
         self.pi = None
+        self.s0 = self.s1 = self.e0 = self.e1 = 0
 
     @property
     def parent(self) -> Optional["Node"]:
@@ -388,6 +399,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                         end = len(doc_nodes)
                         for closed in stack[i:]:
                             closed.i1 = end
+                            closed.e0 = closed.e1 = start
                         del stack[i:]
                         break
                     if t in _CLOSE_BARRIERS:
@@ -405,6 +417,9 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             node.i1 = i0 + 1  # leaf until proven otherwise (scope close)
             parent = stack[-1]
             node.pi = parent.i0
+            # a leaf ends at its start tag until its scope closes
+            node.s0 = start
+            node.s1 = node.e0 = node.e1 = mend
             parent.children.append(node)
             add_node(node)
             if xml_mode:
@@ -419,13 +434,14 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                 mclose = _RAW_CLOSE_RE[tag].search(html, pos)
                 if mclose is None:
                     node.children.append(html[pos:])
-                    pos = n
+                    pos = node.e0 = n
                 else:
-                    close_idx = mclose.start()
+                    close_idx = node.e0 = mclose.start()
                     if close_idx > pos:
                         node.children.append(html[pos:close_idx])
                     gt = html.find(">", close_idx)
                     pos = n if gt == -1 else gt + 1
+                node.e1 = pos
                 continue
             stack.append(node)
         elif last == 4:
@@ -441,6 +457,8 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
                     end = len(doc_nodes)
                     for closed in stack[i:]:
                         closed.i1 = end
+                        closed.e0 = closed.e1 = start
+                    stack[i].e1 = mend
                     del stack[i:]
                     break
             # else: stray end tag ignored
@@ -454,6 +472,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
     end = len(doc_nodes)
     for open_node in stack:  # includes root: i0=0, i1=total
         open_node.i1 = end
+        open_node.e0 = open_node.e1 = n
     return root
 
 

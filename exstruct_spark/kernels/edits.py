@@ -10,8 +10,8 @@ bucket-scoped refresh (engine.py): the edit flows through the exact
 extraction path every other document takes, and only the edited urls'
 buckets re-extract.
 
-Ops (each addresses the ``table``-th ``<table`` in document order,
-0-based DOM row / cell indexes):
+Ops (each addresses the ``table``-th table, 0-based row / cell
+indexes — the addressing contract below):
   * ``set_value``     — replace a cell's content (reference set_value);
   * ``set_link``      — wrap the cell's text in ``<a href>`` (the
                         links_map carrier);
@@ -61,8 +61,29 @@ document's — no stored width to fit).  16 implemented + 5 n/a = all
 Semantics follow the reference's patch contract: ops apply in order,
 each yields status ``applied`` or ``skipped`` (bad address, malformed
 region) — a skipped op never aborts the batch (edit/types.py
-PatchStatus).  The scanner is positional (regex token walk with table
-depth tracking) so untouched bytes of the document are preserved
+PatchStatus).
+
+Addressing contract: every op parses the document once with the
+kernel's own grammar (``dom.parse_html``, the tree extraction reads)
+and finds its target in that tree, so an op edits the cell extraction
+reports, never markup extraction cannot see (a ``<table>`` inside a
+comment, a script string or an unbalanced-quote attribute value):
+  * ``table`` — the index among the ``<table>`` elements of the
+    rendered walk in document order, nested tables included and
+    ``<template>``/``<noscript>`` content skipped (``dom.RENDER_INERT``,
+    as ``extract_document``'s table bucket does);
+  * ``row`` — the index into ``tables._table_rows`` (the table's own
+    ``<tr>``s; a nested table's rows are its own);
+  * ``col`` — the index into ``tables._table_cells`` for the single-cell
+    ops, and a GRID column for the range ops, laid out from the same
+    cells and their ``tables._int_attr`` spans (``_grid_layout``).
+An extracted cell at artifact ``id``, row ``r`` (1-based) and column
+``c`` is therefore ``(table=id, row=r-1, col=c)`` as long as no hidden,
+``role=presentation`` or empty table precedes it (those are not
+artifacts but are counted here) and no hidden row precedes it in its
+table.  Splices happen at the source offsets the parser records on each
+node (``Node.s0``/``s1``/``e0``/``e1``: the start tag, the content, the
+element), so untouched bytes of the document are preserved
 byte-for-byte — which is what makes the bucket-refresh byte-identity
 test meaningful.
 """
@@ -70,93 +91,10 @@ test meaningful.
 from __future__ import annotations
 
 import re
-from typing import Optional
+from contextlib import contextmanager
 
-_TAG_START_RE = re.compile(r"<(/?)(table|tr|td|th)\b", re.IGNORECASE)
-
-
-def _scan_tag_end(html: str, pos: int, limit: int) -> int:
-    """Index just past the ``>`` terminating the tag whose attribute
-    region begins at ``pos``, or ``-1`` if none before ``limit``.
-
-    Attribute-aware: a ``>`` inside a BALANCED quoted attribute value
-    must not terminate the tag (title="a>b", inline JSON in data-*
-    attrs).  Quoted runs may not span ``<`` and a lone quote is a
-    literal, so an UNBALANCED quote degrades to truncate-at-first-'>'
-    instead of dropping the tag (which would silently renumber cells)
-    or spanning into later tags.  Hand-rolled linear scan — the regex
-    form of this rule had overlapping quote alternatives and went
-    exponential on unbalanced-quote input ('"a'*30 with no '>').
-
-    Two phases, both one left-to-right pass:
-      1. greedy: skip balanced runs, end at the first uncovered ``>``;
-      2. if phase 1 hits ``<``/limit, degrade to all-quotes-literal and
-         end at the first raw ``>`` (recorded during phase 1), even if
-         a balanced run covered it.
-    """
-    i = pos
-    first_raw_gt = -1
-    while i < limit:
-        c = html[i]
-        if c == ">":
-            return i + 1
-        if c == "<":
-            break
-        if c == '"' or c == "'":
-            close = html.find(c, i + 1, limit)
-            if close != -1 and html.find("<", i + 1, close) == -1:
-                if first_raw_gt == -1:
-                    g = html.find(">", i + 1, close)
-                    if g != -1:
-                        first_raw_gt = g
-                i = close + 1
-                continue
-        i += 1
-    return first_raw_gt + 1 if first_raw_gt != -1 else -1
-
-
-class _Tok:
-    """Minimal re.Match stand-in for the token scanner (the span/group
-    subset the walkers below use)."""
-
-    __slots__ = ("_start", "_end", "_g1", "_g2")
-
-    def __init__(self, start, end, g1, g2):
-        self._start, self._end, self._g1, self._g2 = start, end, g1, g2
-
-    def group(self, i):
-        return self._g1 if i == 1 else self._g2
-
-    def start(self):
-        return self._start
-
-    def end(self):
-        return self._end
-
-
-class _TokenScanner:
-    """Linear-time drop-in for the old ``_TOKEN_RE.finditer`` walk."""
-
-    @staticmethod
-    def finditer(html: str, pos: int = 0, endpos: Optional[int] = None):
-        limit = len(html) if endpos is None else endpos
-        search = _TAG_START_RE.search
-        while True:
-            m = search(html, pos, limit)
-            if m is None:
-                return
-            end = _scan_tag_end(html, m.end(), limit)
-            if end == -1:
-                # tag never terminates: not a token; resume just past
-                # its '<' so a tag-start inside the region is still
-                # seen (matches the regex engine's advance-by-one)
-                pos = m.start() + 1
-                continue
-            yield _Tok(m.start(), end, m.group(1), m.group(2))
-            pos = end
-
-
-_TOKEN_RE = _TokenScanner()
+from exstruct_spark.kernels import dom
+from exstruct_spark.kernels.tables import _table_rows
 
 
 def _escape(value) -> str:
@@ -164,124 +102,65 @@ def _escape(value) -> str:
     return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
-def _table_span(html: str, index: int) -> Optional[tuple]:
-    """(start, end) byte span of the ``index``-th ``<table`` element in
-    document order (nested tables count — same order extraction sees),
-    ``end`` pointing just past its ``</table>``."""
-    n = -1
-    for m in _TOKEN_RE.finditer(html):
-        if m.group(2).lower() == "table" and not m.group(1):
-            n += 1
-            if n == index:
-                depth = 1
-                for m2 in _TOKEN_RE.finditer(html, m.end()):
-                    if m2.group(2).lower() != "table":
-                        continue
-                    depth += -1 if m2.group(1) else 1
-                    if depth == 0:
-                        return m.start(), m2.end()
-                return m.start(), len(html)  # unclosed: to end
-    return None
-
-
-def _row_spans(html: str, t0: int, t1: int) -> list:
-    """[(row_start, row_end)] of the table's OWN ``<tr>`` elements
-    (rows of nested tables are skipped via depth tracking).  A row ends
-    at its ``</tr>``, the next sibling ``<tr``, or the table end."""
-    rows = []
-    depth = 0
-    open_start = None
-    for m in _TOKEN_RE.finditer(html, t0, t1):
-        kind = m.group(2).lower()
-        closing = bool(m.group(1))
-        if kind == "table":
-            depth += -1 if closing else 1
-            continue
-        if depth > 1 or kind != "tr":
-            continue
-        if not closing:
-            if open_start is not None:
-                rows.append((open_start, m.start()))
-            open_start = m.start()
+@contextmanager
+def _parsed_table(html: str, index: int):
+    """The ``index``-th table of ``html`` (module docstring), valid inside
+    the block; the parse tree is released when the block exits."""
+    root = dom.parse_html(html)
+    try:
+        k = -1
+        skip_to = -1
+        for n in root.find_all("table", *dom.RENDER_INERT):
+            if n.i0 < skip_to:
+                continue
+            if n.tag != "table":
+                skip_to = n.i1
+                continue
+            k += 1
+            if k == index:
+                break
         else:
-            if open_start is not None:
-                rows.append((open_start, m.end()))
-                open_start = None
-    if open_start is not None:
-        end = html.rfind("</table", open_start, t1)
-        rows.append((open_start, end if end > open_start else t1))
-    return rows
+            raise ValueError("table not found")
+        yield n
+    finally:
+        dom.release(root)
 
 
-def _cell_spans(html: str, r0: int, r1: int) -> list:
-    """[(cell_start, content_start, content_end, cell_end)] for the
-    row's own td/th cells (nested-table cells skipped)."""
-    cells = []
-    depth = 0
-    cur = None  # (cell_start, content_start)
-    for m in _TOKEN_RE.finditer(html, r0, r1):
-        kind = m.group(2).lower()
-        closing = bool(m.group(1))
-        if kind == "table":
-            depth += -1 if closing else 1
-            continue
-        if depth > 0:
-            continue
-        if kind == "tr":
-            # the row's own </tr> (or a stray <tr) terminates an
-            # unclosed cell BEFORE the tag — splicing must never
-            # swallow the row-closing markup
-            if cur is not None:
-                cells.append((cur[0], cur[1], m.start(), m.start()))
-                cur = None
-            continue
-        if not closing:  # <td / <th
-            if cur is not None:
-                cells.append((cur[0], cur[1], m.start(), m.start()))
-            cur = (m.start(), m.end())
-        else:            # </td / </th
-            if cur is not None:
-                cells.append((cur[0], cur[1], m.start(), m.end()))
-                cur = None
-    if cur is not None:
-        cells.append((cur[0], cur[1], r1, r1))
-    return cells
-
-
-def _locate_cell(html: str, table: int, row: int, col: int):
-    span = _table_span(html, table)
-    if span is None:
-        return None
-    rows = _row_spans(html, *span)
+def _cell(table, row: int, col: int):
+    """The ``col``-th cell node of the table's ``row``-th row."""
+    rows = _table_rows(table)
     if not 0 <= row < len(rows):
-        return None
-    cells = _cell_spans(html, *rows[row])
+        raise ValueError("cell not found")
+    cells = list(rows[row][2])
     if not 0 <= col < len(cells):
-        return None
-    return cells[col]
+        raise ValueError("cell not found")
+    return cells[col][0]
 
 
-_TEXT_STRIP_RE = re.compile(r"<[^>]*>")
+def _row_end(rows: list, r: int) -> int:
+    """End of row ``r``'s own markup: its element end, or the start of
+    the next row when that row opened inside it (a ``<tr>`` after an
+    unclosed ``<td>`` nests in the row the ``<td>`` belongs to)."""
+    end = rows[r][0].e1
+    if r + 1 < len(rows):
+        end = min(end, rows[r + 1][0].s0)
+    return end
 
 
 def op_set_value(html: str, table: int, row: int, col: int, value) -> str:
-    cell = _locate_cell(html, table, row, col)
-    if cell is None:
-        raise ValueError("cell not found")
-    _, c0, c1, _ = cell
-    return html[:c0] + _escape(value) + html[c1:]
+    with _parsed_table(html, table) as t:
+        cell = _cell(t, row, col)
+        return html[:cell.s1] + _escape(value) + html[cell.e0:]
 
 
 def op_set_link(html: str, table: int, row: int, col: int, href) -> str:
-    """Wrap the cell's TEXT (tags stripped) in an anchor — the cell's
-    link in links_map afterwards is exactly ``href``."""
-    cell = _locate_cell(html, table, row, col)
-    if cell is None:
-        raise ValueError("cell not found")
-    _, c0, c1, _ = cell
-    text = _TEXT_STRIP_RE.sub("", html[c0:c1])
+    """Wrap the cell's text (the text extraction reports) in an anchor —
+    the cell's link in links_map afterwards is exactly ``href``."""
     quoted = _escape(href).replace('"', "&quot;")
-    return (html[:c0] + f'<a href="{quoted}">' + text + "</a>" + html[c1:])
+    with _parsed_table(html, table) as t:
+        cell = _cell(t, row, col)
+        return (html[:cell.s1] + f'<a href="{quoted}">'
+                + _escape(cell.text_content()) + "</a>" + html[cell.e0:])
 
 
 # single- OR double-quoted style attribute (backreferenced delimiter;
@@ -302,12 +181,11 @@ def op_set_fill_color(html: str, table: int, row: int, col: int,
     """Set the cell's background (the colors_map carrier) by editing the
     open tag's style attribute — existing background declarations are
     replaced, other declarations kept."""
-    cell = _locate_cell(html, table, row, col)
-    if cell is None:
-        raise ValueError("cell not found")
-    cell_start, c0, _, _ = cell
-    open_tag = html[cell_start:c0]
     decl = f"background:{_check_style_value(color)}"
+    with _parsed_table(html, table) as t:
+        cell = _cell(t, row, col)
+        s0, s1 = cell.s0, cell.s1
+    open_tag = html[s0:s1]
     m = _STYLE_ATTR_RE.search(open_tag)
     if m:
         body = _BG_DECL_RE.sub("", m.group(3)).strip().rstrip(";")
@@ -316,45 +194,36 @@ def op_set_fill_color(html: str, table: int, row: int, col: int,
                    + m.group(4) + open_tag[m.end():])
     else:
         # inject before the closing '>'
-        gt = open_tag.rfind(">")
-        if gt < 0:
-            raise ValueError("malformed cell tag")
-        new_tag = open_tag[:gt] + f' style="{decl}"' + open_tag[gt:]
-    return html[:cell_start] + new_tag + html[c0:]
+        new_tag = open_tag[:-1] + f' style="{decl}">'
+    return html[:s0] + new_tag + html[s1:]
 
 
 def op_add_row(html: str, table: int, row: int, values,
                header: bool = False) -> str:
     """Insert a ``<tr>`` of ``values`` so it becomes row ``row`` (0-based;
     ``row`` may equal the current row count to append)."""
-    span = _table_span(html, table)
-    if span is None:
-        raise ValueError("table not found")
-    rows = _row_spans(html, *span)
-    if not 0 <= row <= len(rows):
-        raise ValueError("row index out of range")
     tag = "th" if header else "td"
     tr = "<tr>" + "".join(
         f"<{tag}>{_escape(v)}</{tag}>" for v in values) + "</tr>"
-    if row < len(rows):
-        at = rows[row][0]
-    elif rows:
-        at = rows[-1][1]
-    else:
-        end = html.rfind("</table", span[0], span[1])
-        at = end if end > span[0] else span[1]
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        if not 0 <= row <= len(rows):
+            raise ValueError("row index out of range")
+        if row < len(rows):
+            at = rows[row][0].s0
+        elif rows:
+            at = rows[-1][0].e1
+        else:
+            at = t.e0
     return html[:at] + tr + html[at:]
 
 
 def op_delete_row(html: str, table: int, row: int) -> str:
-    span = _table_span(html, table)
-    if span is None:
-        raise ValueError("table not found")
-    rows = _row_spans(html, *span)
-    if not 0 <= row < len(rows):
-        raise ValueError("row index out of range")
-    r0, r1 = rows[row]
-    return html[:r0] + html[r1:]
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        if not 0 <= row < len(rows):
+            raise ValueError("row index out of range")
+        return html[:rows[row][0].s0] + html[_row_end(rows, row):]
 
 
 # -- wave 2 (VERDICT r5 #4): style splices, conditional set, range set,
@@ -388,44 +257,7 @@ def _replace_style_decl(open_tag: str, prop: str, value: str) -> str:
         body = ";".join(kept + [decl])
         return (open_tag[:m.start()] + m.group(1) + body + m.group(4)
                 + open_tag[m.end():])
-    gt = open_tag.rfind(">")
-    if gt < 0:
-        raise ValueError("malformed cell tag")
-    return open_tag[:gt] + f' style="{decl}"' + open_tag[gt:]
-
-
-def _set_cell_style(html: str, table: int, row: int, col: int,
-                    prop: str, value: str) -> str:
-    cell = _locate_cell(html, table, row, col)
-    if cell is None:
-        raise ValueError("cell not found")
-    cell_start, c0, _, _ = cell
-    new_tag = _replace_style_decl(html[cell_start:c0], prop, value)
-    return html[:cell_start] + new_tag + html[c0:]
-
-
-def op_set_bold(html: str, table: int, row: int, col: int,
-                bold: bool = True) -> str:
-    """Reference ``set_bold`` (edit/types.py) — font-weight splice."""
-    return _set_cell_style(html, table, row, col, "font-weight",
-                           "bold" if bold else "normal")
-
-
-def op_set_font_size(html: str, table: int, row: int, col: int,
-                     size) -> str:
-    """Reference ``set_font_size`` — points, like Excel font sizes."""
-    if isinstance(size, bool) or not isinstance(size, (int, float)) \
-            or not 1 <= size <= 512:
-        raise ValueError("font size must be a number in [1, 512]")
-    sz = int(size) if float(size).is_integer() else float(size)
-    return _set_cell_style(html, table, row, col, "font-size", f"{sz}pt")
-
-
-def op_set_font_color(html: str, table: int, row: int, col: int,
-                      color: str) -> str:
-    """Reference ``set_font_color`` — CSS color splice."""
-    return _set_cell_style(html, table, row, col, "color",
-                           _check_style_value(color))
+    return open_tag[:-1] + f' style="{decl}">'
 
 
 _H_ALIGN = {"general", "left", "center", "right", "fill", "justify",
@@ -433,300 +265,12 @@ _H_ALIGN = {"general", "left", "center", "right", "fill", "justify",
 _V_ALIGN = {"top", "center", "bottom", "justify", "distributed"}
 
 
-def op_set_alignment(html: str, table: int, row: int, col: int,
-                     horizontal=None, vertical=None) -> str:
-    """Reference ``set_alignment`` — text-align / vertical-align splice;
-    the alignment vocabularies are the reference's literal types
-    (edit/types.py HorizontalAlignType/VerticalAlignType)."""
-    if horizontal is None and vertical is None:
-        raise ValueError("no alignment given")
-    if horizontal is not None:
-        h = str(horizontal).lower()
-        if h not in _H_ALIGN:
-            raise ValueError("bad horizontal alignment")
-        html = _set_cell_style(
-            html, table, row, col, "text-align",
-            {"centercontinuous": "center", "fill": "left",
-             "distributed": "justify", "general": "left"}.get(h, h))
-    if vertical is not None:
-        v = str(vertical).lower()
-        if v not in _V_ALIGN:
-            raise ValueError("bad vertical alignment")
-        html = _set_cell_style(
-            html, table, row, col, "vertical-align",
-            "justify" if v == "distributed" else v)
-    return html
-
-
-def op_set_value_if(html: str, table: int, row: int, col: int,
-                    expected, value) -> str:
-    """Reference ``set_value_if`` — conditional write: the cell is set
-    only when its current text equals ``expected``; a mismatch is a
-    skipped op (the reference's PatchStatus contract), never a silent
-    overwrite."""
-    cell = _locate_cell(html, table, row, col)
-    if cell is None:
-        raise ValueError("cell not found")
-    _, c0, c1, _ = cell
-    from html import unescape
-
-    # whitespace-collapsed comparison: extraction JSON reports collapsed
-    # text (dom text_content), so a client echoing the extractor's value
-    # must match a cell whose markup carries newlines/indentation
-    current = " ".join(
-        unescape(_TEXT_STRIP_RE.sub("", html[c0:c1])).split())
-    if current != " ".join(str(expected).split()):
-        raise ValueError("condition not met")
-    return html[:c0] + _escape(value) + html[c1:]
-
-
-def _splice_all(html: str, edits: list) -> str:
-    """Apply ``[(start, end, replacement)]`` splices back-to-front so
-    earlier byte offsets stay valid.  Shared by the multi-splice ops —
-    note zero-width insertions at equal offsets rely on the reverse
-    sort being applied to the full tuples (stable for distinct spans)."""
-    for start, end, repl in sorted(edits, reverse=True):
-        html = html[:start] + repl + html[end:]
-    return html
-
-
-def op_set_range_values(html: str, table: int, row: int, col: int,
-                        values) -> str:
-    """Reference ``set_range_values`` — a 2-D block write anchored at
-    (row, col), DOM indexes like set_value.  All-or-nothing: every
-    target address is validated BEFORE the first splice, so a partially
-    out-of-range block is one skipped op, not a half-applied write."""
-    if not isinstance(values, list) or not values or not all(
-        isinstance(r, list) for r in values
-    ):
-        raise ValueError("values must be a non-empty list of rows")
-    # ONE document walk: collect every target span up front, validate,
-    # then splice back-to-front (per-cell op_set_value calls re-tokenize
-    # the whole document per cell — O(block_cells x doc_size))
-    span = _table_span(html, table)
-    if span is None:
-        raise ValueError("table not found")
-    rows = _row_spans(html, *span)
-    edits: list = []
-    for dr, row_vals in enumerate(values):
-        if not row_vals:
-            continue  # an empty row has no target addresses (and may
-            # legitimately trail past the table — second-review finding)
-        r = row + dr
-        if not 0 <= r < len(rows):
-            raise ValueError("range exceeds table rows")
-        cells = _cell_spans(html, *rows[r])
-        for dc, v in enumerate(row_vals):
-            c = col + dc
-            if not 0 <= c < len(cells):
-                raise ValueError("range exceeds table columns")
-            _, c0, c1, _ = cells[c]
-            edits.append((c0, c1, _escape(v)))
-    return _splice_all(html, edits)
-
-
-_ROWSPAN_RE = re.compile(r"\browspan\s*=\s*[\"']?(\d+)", re.IGNORECASE)
-_COLSPAN_RE = re.compile(r"\bcolspan\s*=\s*[\"']?(\d+)", re.IGNORECASE)
-_SPAN_ATTR_STRIP_RE = re.compile(
-    r"\s*\b(?:rowspan|colspan)\s*=\s*(?:\"[^\"]*\"|'[^']*'|\S+)",
-    re.IGNORECASE,
-)
-
-
-def _grid_layout(html: str, table: int):
-    """(table_span, row_spans, layout) where ``layout[r]`` lists each
-    DOM cell of row r as ``(span4, grid_col, rowspan, colspan)`` with
-    GRID columns assigned under rowspan/colspan occupancy — the same
-    expansion the extraction grid walk performs, so merge/unmerge
-    address cells exactly like the reference's A1 ranges address the
-    sheet.  Spans are capped (rowspan by the rows that exist, colspan
-    at 1024) so adversarial span values cannot blow up the occupancy
-    set."""
-    tspan = _table_span(html, table)
-    if tspan is None:
-        raise ValueError("table not found")
-    rows = _row_spans(html, *tspan)
-    occupied: set = set()
-    layout: list = []
-    for r, (r0, r1) in enumerate(rows):
-        row_cells: list = []
-        c = 0
-        for cs in _cell_spans(html, r0, r1):
-            while (r, c) in occupied:
-                c += 1
-            open_tag = html[cs[0] : cs[1]]
-            m = _ROWSPAN_RE.search(open_tag)
-            rs = min(int(m.group(1)) if m else 1, len(rows) - r)
-            m = _COLSPAN_RE.search(open_tag)
-            cl = min(int(m.group(1)) if m else 1, 1024)
-            rs, cl = max(rs, 1), max(cl, 1)
-            for rr in range(r, r + rs):
-                for cc in range(c, c + cl):
-                    occupied.add((rr, cc))
-            row_cells.append((cs, c, rs, cl))
-            c += cl
-        layout.append(row_cells)
-    return tspan, rows, layout
-
-
-def _strip_span_attrs(open_tag: str) -> str:
-    return _SPAN_ATTR_STRIP_RE.sub("", open_tag)
-
-
-def op_merge_cells(html: str, table: int, r1: int, c1: int,
-                   r2: int, c2: int) -> str:
-    """Reference ``merge_cells`` — GRID coordinates (0-based, inclusive),
-    the HTML splice of an A1-range merge: the master cell at (r1, c1)
-    gains rowspan/colspan, every other cell whose origin lies inside the
-    rectangle is removed (its value is lost, exactly like an Excel
-    merge).  A rectangle that crosses an existing span — from inside or
-    outside — is a skipped op."""
-    if not (r1 <= r2 and c1 <= c2) or r1 < 0 or c1 < 0:
-        raise ValueError("bad merge rectangle")
-    if r1 == r2 and c1 == c2:
-        raise ValueError("degenerate merge")
-    _tspan, rows, layout = _grid_layout(html, table)
-    if r2 >= len(rows):
-        raise ValueError("merge exceeds table rows")
-    master = None
-    doomed: list = []
-    covered_area = 0
-    for r, row_cells in enumerate(layout):
-        for cs, gc, rs, cl in row_cells:
-            inside = r1 <= r <= r2 and c1 <= gc <= c2
-            extent_r, extent_c = r + rs - 1, gc + cl - 1
-            overlaps = not (extent_r < r1 or r > r2
-                            or extent_c < c1 or gc > c2)
-            if inside:
-                if extent_r > r2 or extent_c > c2 or rs > 1 or cl > 1:
-                    raise ValueError("merge crosses an existing span")
-                covered_area += rs * cl
-                if (r, gc) == (r1, c1):
-                    master = cs
-                else:
-                    doomed.append(cs)
-            elif overlaps:
-                raise ValueError("merge crosses an outside span")
-    if master is None:
-        raise ValueError("master cell not found")
-    if covered_area != (r2 - r1 + 1) * (c2 - c1 + 1):
-        # uncovered grid positions (ragged rows, or c2 past the table's
-        # width): merging would fabricate a colspan wider than the grid
-        # instead of addressing real cells — bad address, skipped op
-        raise ValueError("merge rectangle not fully covered by cells")
-    n_rows, n_cols = r2 - r1 + 1, c2 - c1 + 1
-    open_tag = _strip_span_attrs(html[master[0] : master[1]])
-    gt = open_tag.rfind(">")
-    if gt < 0:
-        raise ValueError("malformed cell tag")
-    attrs = (f' rowspan="{n_rows}"' if n_rows > 1 else "") + (
-        f' colspan="{n_cols}"' if n_cols > 1 else "")
-    new_tag = open_tag[:gt] + attrs + open_tag[gt:]
-    edits = [(s[0], s[3], "") for s in doomed]
-    edits.append((master[0], master[1], new_tag))
-    return _splice_all(html, edits)
-
-
-def op_unmerge_cells(html: str, table: int, row: int, col: int) -> str:
-    """Reference ``unmerge_cells`` — the master cell at GRID (row, col)
-    loses its rowspan/colspan and the vacated grid positions become
-    empty cells (blank, like Excel's unmerge), inserted at the correct
-    DOM positions via the occupancy layout."""
-    _tspan, rows, layout = _grid_layout(html, table)
-    if not 0 <= row < len(layout):
-        raise ValueError("row out of range")
-    master = None
-    for cs, gc, rs, cl in layout[row]:
-        if gc == col:
-            master = (cs, gc, rs, cl)
-            break
-    if master is None:
-        raise ValueError("cell not found")
-    cs, gc, rs, cl = master
-    if rs == 1 and cl == 1:
-        raise ValueError("cell is not merged")
-    tag = "th" if html[cs[0] : cs[0] + 3].lower().startswith("<th") else "td"
-    empty = f"<{tag}></{tag}>"
-    edits: list = []
-    new_tag = _strip_span_attrs(html[cs[0] : cs[1]])
-    edits.append((cs[0], cs[1], new_tag))
-    if cl > 1:  # master row: empties right after the master cell
-        edits.append((cs[3], cs[3], empty * (cl - 1)))
-    for rr in range(row + 1, row + rs):
-        # insert before the first cell whose grid col is PAST the span;
-        # else after the last cell before it; else just after <tr ...>
-        at = None
-        for cs2, gc2, _rs2, _cl2 in layout[rr]:
-            if gc2 > gc:
-                at = cs2[0]
-                break
-        if at is None:
-            before = [cs2 for cs2, gc2, _r, _c in layout[rr] if gc2 < gc]
-            if before:
-                at = before[-1][3]
-            else:
-                m = _TAG_START_RE.match(html, rows[rr][0])
-                at = _scan_tag_end(html, m.end(), rows[rr][1]) \
-                    if m else rows[rr][0]
-                if at == -1:
-                    raise ValueError("malformed row tag")
-        edits.append((at, at, empty * cl))
-    return _splice_all(html, edits)
-
-
-def op_draw_grid_border(html: str, table: int, r1: int, c1: int,
-                        r2: int, c2: int, style: str = "1px solid #000",
-                        ) -> str:
-    """Reference ``draw_grid_border`` — GRID coordinates (0-based,
-    inclusive): every cell whose origin lies inside the rectangle gains
-    a ``border`` declaration (the G1 border-signal carrier), existing
-    border declarations replaced, other styles kept.  Cells merged
-    ACROSS the rectangle boundary make the address ambiguous: skipped."""
-    if not (0 <= r1 <= r2 and 0 <= c1 <= c2):
-        raise ValueError("bad border rectangle")
-    _check_style_value(style)
-    _tspan, rows, layout = _grid_layout(html, table)
-    if r2 >= len(rows):
-        raise ValueError("border rectangle exceeds table rows")
-    # a rowspan reaching INTO the rectangle from an origin row above r1
-    # also splits it (fourth-review finding: origin-row iteration alone
-    # silently skipped top crossings)
-    for r in range(r1):
-        for _cs, gc, rs, cl in layout[r]:
-            if (r + rs - 1 >= r1 and gc <= c2 and gc + cl - 1 >= c1):
-                raise ValueError("border rectangle splits a merged cell")
-    edits: list = []
-    hit = False
-    for r in range(r1, r2 + 1):
-        for cs, gc, rs, cl in layout[r]:
-            if gc > c2 or gc + cl - 1 < c1:
-                continue
-            if gc < c1 or gc + cl - 1 > c2 or r + rs - 1 > r2:
-                raise ValueError("border rectangle splits a merged cell")
-            hit = True
-            new_tag = _replace_style_decl(html[cs[0] : cs[1]], "border",
-                                          style)
-            edits.append((cs[0], cs[1], new_tag))
-    if not hit:
-        raise ValueError("border rectangle covers no cells")
-    return _splice_all(html, edits)
-
-
-def op_set_style(html: str, table: int, r1: int, c1: int,
-                 r2: int, c2: int, bold=None, font_size=None,
-                 color=None, fill_color=None, horizontal=None,
-                 vertical=None, wrap_text=None) -> str:
-    """Reference ``set_style`` (edit/internal.py:1253) — the combined
-    style op over a cell RANGE (grid coordinates, like
-    ``draw_grid_border``): at least one style field required, each
-    mapped to the same CSS declaration its single-cell op uses.  A
-    range that splits a merged cell is a skipped op."""
-    fields = (bold, font_size, color, fill_color, horizontal, vertical,
-              wrap_text)
-    if all(f is None for f in fields):
-        raise ValueError("set_style requires at least one style field")
-    if not (0 <= r1 <= r2 and 0 <= c1 <= c2):
-        raise ValueError("bad style rectangle")
+def _style_decls(bold=None, font_size=None, color=None, fill_color=None,
+                 horizontal=None, vertical=None, wrap_text=None) -> list:
+    """``[(property, value)]`` for the given style fields, each validated
+    — the one mapping behind the single-cell style ops and
+    ``set_style``; the alignment vocabularies are the reference's
+    literal types (edit/types.py HorizontalAlignType/VerticalAlignType)."""
     decls: list = []
     if bold is not None:
         decls.append(("font-weight", "bold" if bold else "normal"))
@@ -757,33 +301,297 @@ def op_set_style(html: str, table: int, r1: int, c1: int,
                       "justify" if v == "distributed" else v))
     if wrap_text is not None:
         decls.append(("white-space", "normal" if wrap_text else "nowrap"))
-    _tspan, rows, layout = _grid_layout(html, table)
-    if r2 >= len(rows):
-        raise ValueError("style rectangle exceeds table rows")
-    # a rowspan reaching INTO the rectangle from an origin row above r1
-    # also splits it — same top-crossing check as draw_grid_border
-    # (r7 review finding: origin-row iteration alone silently left the
-    # entered grid positions unstyled instead of rejecting the op)
-    for r in range(r1):
-        for _cs, gc, rs, cl in layout[r]:
-            if (r + rs - 1 >= r1 and gc <= c2 and gc + cl - 1 >= c1):
-                raise ValueError("style rectangle splits a merged cell")
+    if not decls:
+        raise ValueError("no style field given")
+    return decls
+
+
+def _styled_tag(open_tag: str, decls: list) -> str:
+    for prop, value in decls:
+        open_tag = _replace_style_decl(open_tag, prop, value)
+    return open_tag
+
+
+def _set_cell_style(html: str, table: int, row: int, col: int,
+                    decls: list) -> str:
+    with _parsed_table(html, table) as t:
+        cell = _cell(t, row, col)
+        s0, s1 = cell.s0, cell.s1
+    return html[:s0] + _styled_tag(html[s0:s1], decls) + html[s1:]
+
+
+def op_set_bold(html: str, table: int, row: int, col: int,
+                bold: bool = True) -> str:
+    """Reference ``set_bold`` (edit/types.py) — font-weight splice."""
+    return _set_cell_style(html, table, row, col,
+                           _style_decls(bold=bool(bold)))
+
+
+def op_set_font_size(html: str, table: int, row: int, col: int,
+                     size) -> str:
+    """Reference ``set_font_size`` — points, like Excel font sizes."""
+    return _set_cell_style(html, table, row, col,
+                           _style_decls(font_size=size))
+
+
+def op_set_font_color(html: str, table: int, row: int, col: int,
+                      color: str) -> str:
+    """Reference ``set_font_color`` — CSS color splice."""
+    return _set_cell_style(html, table, row, col, _style_decls(color=color))
+
+
+def op_set_alignment(html: str, table: int, row: int, col: int,
+                     horizontal=None, vertical=None) -> str:
+    """Reference ``set_alignment`` — text-align / vertical-align splice."""
+    return _set_cell_style(html, table, row, col, _style_decls(
+        horizontal=horizontal, vertical=vertical))
+
+
+def op_set_value_if(html: str, table: int, row: int, col: int,
+                    expected, value) -> str:
+    """Reference ``set_value_if`` — conditional write: the cell is set
+    only when its current text equals ``expected``; a mismatch is a
+    skipped op (the reference's PatchStatus contract), never a silent
+    overwrite."""
+    with _parsed_table(html, table) as t:
+        cell = _cell(t, row, col)
+        # the text extraction reports (whitespace-collapsed), so a
+        # client echoing the extractor's value matches a cell whose
+        # markup carries newlines/indentation
+        if cell.text_content() != " ".join(str(expected).split()):
+            raise ValueError("condition not met")
+        return html[:cell.s1] + _escape(value) + html[cell.e0:]
+
+
+def _splice_all(html: str, edits: list) -> str:
+    """Apply ``[(start, end, replacement)]`` splices back-to-front so
+    earlier byte offsets stay valid.  Shared by the multi-splice ops —
+    note zero-width insertions at equal offsets rely on the reverse
+    sort being applied to the full tuples (stable for distinct spans)."""
+    for start, end, repl in sorted(edits, reverse=True):
+        html = html[:start] + repl + html[end:]
+    return html
+
+
+def op_set_range_values(html: str, table: int, row: int, col: int,
+                        values) -> str:
+    """Reference ``set_range_values`` — a 2-D block write anchored at
+    (row, col), DOM indexes like set_value.  All-or-nothing: every
+    target address is validated BEFORE the first splice, so a partially
+    out-of-range block is one skipped op, not a half-applied write."""
+    if not isinstance(values, list) or not values or not all(
+        isinstance(r, list) for r in values
+    ):
+        raise ValueError("values must be a non-empty list of rows")
+    # ONE parse: collect every target span up front, validate, then
+    # splice back-to-front (per-cell op_set_value calls would re-parse
+    # the whole document per cell — O(block_cells x doc_size))
     edits: list = []
-    hit = False
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        for dr, row_vals in enumerate(values):
+            if not row_vals:
+                continue  # an empty row has no target addresses (and may
+                # legitimately trail past the table — second-review finding)
+            r = row + dr
+            if not 0 <= r < len(rows):
+                raise ValueError("range exceeds table rows")
+            cells = list(rows[r][2])
+            for dc, v in enumerate(row_vals):
+                c = col + dc
+                if not 0 <= c < len(cells):
+                    raise ValueError("range exceeds table columns")
+                cell = cells[c][0]
+                edits.append((cell.s1, cell.e0, _escape(v)))
+    return _splice_all(html, edits)
+
+
+# unquoted values stop at '>' (the attribute grammar's ``[^\s>]*``), so
+# the tag keeps its closing '>'
+_SPAN_ATTR_STRIP_RE = re.compile(
+    r"\s*\b(?:rowspan|colspan)\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>]+)",
+    re.IGNORECASE,
+)
+
+
+def _grid_layout(rows: list) -> list:
+    """``layout[r]`` lists each cell of row ``r`` (``rows`` from
+    ``_table_rows``) as ``(cell, grid_col, rowspan, colspan)`` with GRID
+    columns assigned under rowspan/colspan occupancy — the same
+    expansion the extraction grid walk performs, so merge/unmerge
+    address cells exactly like the reference's A1 ranges address the
+    sheet.  Spans are capped (rowspan by the rows that exist, colspan
+    at 1024) so adversarial span values cannot blow up the occupancy
+    set."""
+    occupied: set = set()
+    layout: list = []
+    for r, (_tr, _group, cells) in enumerate(rows):
+        row_cells: list = []
+        c = 0
+        for cell, rs, cl, _is_header in cells:
+            while (r, c) in occupied:
+                c += 1
+            rs, cl = min(rs, len(rows) - r), min(cl, 1024)
+            for rr in range(r, r + rs):
+                for cc in range(c, c + cl):
+                    occupied.add((rr, cc))
+            row_cells.append((cell, c, rs, cl))
+            c += cl
+        layout.append(row_cells)
+    return layout
+
+
+def _strip_span_attrs(open_tag: str) -> str:
+    return _SPAN_ATTR_STRIP_RE.sub("", open_tag)
+
+
+def op_merge_cells(html: str, table: int, r1: int, c1: int,
+                   r2: int, c2: int) -> str:
+    """Reference ``merge_cells`` — GRID coordinates (0-based, inclusive),
+    the HTML splice of an A1-range merge: the master cell at (r1, c1)
+    gains rowspan/colspan, every other cell whose origin lies inside the
+    rectangle is removed (its value is lost, exactly like an Excel
+    merge).  A rectangle that crosses an existing span — from inside or
+    outside — is a skipped op."""
+    if not (r1 <= r2 and c1 <= c2) or r1 < 0 or c1 < 0:
+        raise ValueError("bad merge rectangle")
+    if r1 == r2 and c1 == c2:
+        raise ValueError("degenerate merge")
+    with _parsed_table(html, table) as t:
+        layout = _grid_layout(_table_rows(t))
+        if r2 >= len(layout):
+            raise ValueError("merge exceeds table rows")
+        master = None
+        doomed: list = []
+        covered_area = 0
+        for r, row_cells in enumerate(layout):
+            for cell, gc, rs, cl in row_cells:
+                inside = r1 <= r <= r2 and c1 <= gc <= c2
+                extent_r, extent_c = r + rs - 1, gc + cl - 1
+                overlaps = not (extent_r < r1 or r > r2
+                                or extent_c < c1 or gc > c2)
+                if inside:
+                    if extent_r > r2 or extent_c > c2 or rs > 1 or cl > 1:
+                        raise ValueError("merge crosses an existing span")
+                    covered_area += rs * cl
+                    if (r, gc) == (r1, c1):
+                        master = cell
+                    else:
+                        doomed.append(cell)
+                elif overlaps:
+                    raise ValueError("merge crosses an outside span")
+        if master is None:
+            raise ValueError("master cell not found")
+        if covered_area != (r2 - r1 + 1) * (c2 - c1 + 1):
+            # uncovered grid positions (ragged rows, or c2 past the
+            # table's width): merging would fabricate a colspan wider
+            # than the grid instead of addressing real cells — bad
+            # address, skipped op
+            raise ValueError("merge rectangle not fully covered by cells")
+        n_rows, n_cols = r2 - r1 + 1, c2 - c1 + 1
+        attrs = (f' rowspan="{n_rows}"' if n_rows > 1 else "") + (
+            f' colspan="{n_cols}"' if n_cols > 1 else "")
+        open_tag = _strip_span_attrs(html[master.s0:master.s1])
+        edits = [(d.s0, d.e1, "") for d in doomed]
+        edits.append((master.s0, master.s1, open_tag[:-1] + attrs + ">"))
+    return _splice_all(html, edits)
+
+
+def op_unmerge_cells(html: str, table: int, row: int, col: int) -> str:
+    """Reference ``unmerge_cells`` — the master cell at GRID (row, col)
+    loses its rowspan/colspan and the vacated grid positions become
+    empty cells (blank, like Excel's unmerge), inserted at the correct
+    DOM positions via the occupancy layout."""
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        layout = _grid_layout(rows)
+        if not 0 <= row < len(layout):
+            raise ValueError("row out of range")
+        for cell, gc, rs, cl in layout[row]:
+            if gc == col:
+                break
+        else:
+            raise ValueError("cell not found")
+        if rs == 1 and cl == 1:
+            raise ValueError("cell is not merged")
+        empty = f"<{cell.tag}></{cell.tag}>"
+        edits = [(cell.s0, cell.s1,
+                  _strip_span_attrs(html[cell.s0:cell.s1]))]
+        if cl > 1:  # master row: empties right after the master cell
+            edits.append((cell.e1, cell.e1, empty * (cl - 1)))
+        for rr in range(row + 1, row + rs):
+            # insert before the first cell whose grid col is PAST the
+            # span; else after the last cell before it; else just after
+            # the row's start tag
+            at = next((other.s0 for other, gc2, _rs, _cl in layout[rr]
+                       if gc2 > gc), None)
+            if at is None:
+                before = [other for other, gc2, _rs, _cl in layout[rr]
+                          if gc2 < gc]
+                at = before[-1].e1 if before else rows[rr][0].s1
+            edits.append((at, at, empty * cl))
+    return _splice_all(html, edits)
+
+
+def _rect_cells(layout: list, r1: int, c1: int, r2: int, c2: int) -> list:
+    """The cells whose origin lies in the GRID rectangle (0-based,
+    inclusive).  A merged cell crossing its boundary — including a
+    rowspan entering it from an origin row above ``r1`` — makes the
+    address ambiguous, as does a rectangle with no cell: both raise."""
+    if not (0 <= r1 <= r2 and 0 <= c1 <= c2):
+        raise ValueError("bad rectangle")
+    if r2 >= len(layout):
+        raise ValueError("rectangle exceeds table rows")
+    for r in range(r1):
+        for _cell, gc, rs, cl in layout[r]:
+            if r + rs - 1 >= r1 and gc <= c2 and gc + cl - 1 >= c1:
+                raise ValueError("rectangle splits a merged cell")
+    out: list = []
     for r in range(r1, r2 + 1):
-        for cs, gc, rs, cl in layout[r]:
+        for cell, gc, rs, cl in layout[r]:
             if gc > c2 or gc + cl - 1 < c1:
                 continue
             if gc < c1 or gc + cl - 1 > c2 or r + rs - 1 > r2:
-                raise ValueError("style rectangle splits a merged cell")
-            hit = True
-            tag = html[cs[0] : cs[1]]
-            for prop, val in decls:
-                tag = _replace_style_decl(tag, prop, val)
-            edits.append((cs[0], cs[1], tag))
-    if not hit:
-        raise ValueError("style rectangle covers no cells")
+                raise ValueError("rectangle splits a merged cell")
+            out.append(cell)
+    if not out:
+        raise ValueError("rectangle covers no cells")
+    return out
+
+
+def _style_rect(html: str, table: int, r1: int, c1: int, r2: int, c2: int,
+                decls: list) -> str:
+    with _parsed_table(html, table) as t:
+        cells = _rect_cells(_grid_layout(_table_rows(t)), r1, c1, r2, c2)
+        edits = [(c.s0, c.s1, _styled_tag(html[c.s0:c.s1], decls))
+                 for c in cells]
     return _splice_all(html, edits)
+
+
+def op_draw_grid_border(html: str, table: int, r1: int, c1: int,
+                        r2: int, c2: int, style: str = "1px solid #000",
+                        ) -> str:
+    """Reference ``draw_grid_border`` — GRID coordinates (0-based,
+    inclusive): every cell whose origin lies inside the rectangle gains
+    a ``border`` declaration (the G1 border-signal carrier), existing
+    border declarations replaced, other styles kept.  Cells merged
+    ACROSS the rectangle boundary make the address ambiguous: skipped."""
+    return _style_rect(html, table, r1, c1, r2, c2,
+                       [("border", _check_style_value(style))])
+
+
+def op_set_style(html: str, table: int, r1: int, c1: int,
+                 r2: int, c2: int, bold=None, font_size=None,
+                 color=None, fill_color=None, horizontal=None,
+                 vertical=None, wrap_text=None) -> str:
+    """Reference ``set_style`` (edit/internal.py:1253) — the combined
+    style op over a cell RANGE (grid coordinates, like
+    ``draw_grid_border``): at least one style field required, each
+    mapped to the same CSS declaration its single-cell op uses.  A
+    range that splits a merged cell is a skipped op."""
+    return _style_rect(html, table, r1, c1, r2, c2, _style_decls(
+        bold, font_size, color, fill_color, horizontal, vertical,
+        wrap_text))
 
 
 def op_set_dimensions(html: str, table: int, rows=None, row_height=None,
@@ -807,39 +615,36 @@ def op_set_dimensions(html: str, table: int, rows=None, row_height=None,
         raise ValueError("rows given without row_height")
     if has_cols and column_width is None:
         raise ValueError("columns given without column_width")
-    _tspan, row_spans, layout = _grid_layout(html, table)
     edits: list = []
-    if has_rows:
-        hv = (int(row_height) if float(row_height).is_integer()
-              else float(row_height))
-        for r in rows:
-            if not isinstance(r, int) or not 0 <= r < len(row_spans):
-                raise ValueError("row index out of range")
-            r0, r1 = row_spans[r]
-            m = _TAG_START_RE.match(html, r0)
-            end = _scan_tag_end(html, m.end(), r1) if m else -1
-            if end == -1:
-                raise ValueError("malformed row tag")
-            tag = _replace_style_decl(html[r0:end], "height", f"{hv}px")
-            edits.append((r0, end, tag))
-    if has_cols:
-        wv = (int(column_width) if float(column_width).is_integer()
-              else float(column_width))
-        wanted = set()
-        for c in columns:
-            if not isinstance(c, int) or c < 0:
-                raise ValueError("bad column index")
-            wanted.add(c)
-        hit = False
-        for row_cells in layout:
-            for cs, gc, _rs, cl in row_cells:
-                if cl == 1 and gc in wanted:
-                    hit = True
-                    tag = _replace_style_decl(html[cs[0] : cs[1]],
-                                              "width", f"{wv}px")
-                    edits.append((cs[0], cs[1], tag))
-        if not hit:
-            raise ValueError("no unmerged cell in the listed columns")
+    with _parsed_table(html, table) as t:
+        tr_rows = _table_rows(t)
+        layout = _grid_layout(tr_rows)
+        if has_rows:
+            hv = (int(row_height) if float(row_height).is_integer()
+                  else float(row_height))
+            for r in rows:
+                if not isinstance(r, int) or not 0 <= r < len(tr_rows):
+                    raise ValueError("row index out of range")
+                tr = tr_rows[r][0]
+                edits.append((tr.s0, tr.s1, _replace_style_decl(
+                    html[tr.s0:tr.s1], "height", f"{hv}px")))
+        if has_cols:
+            wv = (int(column_width) if float(column_width).is_integer()
+                  else float(column_width))
+            wanted = set()
+            for c in columns:
+                if not isinstance(c, int) or c < 0:
+                    raise ValueError("bad column index")
+                wanted.add(c)
+            hit = False
+            for row_cells in layout:
+                for cell, gc, _rs, cl in row_cells:
+                    if cl == 1 and gc in wanted:
+                        hit = True
+                        edits.append((cell.s0, cell.s1, _replace_style_decl(
+                            html[cell.s0:cell.s1], "width", f"{wv}px")))
+            if not hit:
+                raise ValueError("no unmerged cell in the listed columns")
     return _splice_all(html, edits)
 
 
@@ -859,14 +664,8 @@ def op_apply_table_style(html: str, table: int, style: str,
             not isinstance(table_name, str)
             or not _STYLE_TOKEN_RE.match(table_name)):
         raise ValueError("bad table name")
-    tspan = _table_span(html, table)
-    if tspan is None:
-        raise ValueError("table not found")
-    t0 = tspan[0]
-    m = _TAG_START_RE.match(html, t0)
-    end = _scan_tag_end(html, m.end(), tspan[1]) if m else -1
-    if end == -1:
-        raise ValueError("malformed table tag")
+    with _parsed_table(html, table) as t:
+        t0, end = t.s0, t.s1
     tag = html[t0:end]
     cm = _CLASS_ATTR_RE.search(tag)
     if cm:
@@ -876,11 +675,9 @@ def op_apply_table_style(html: str, table: int, style: str,
         tag = (tag[:cm.start()] + cm.group(1) + " ".join(classes)
                + cm.group(4) + tag[cm.end():])
     else:
-        gt = tag.rfind(">")
-        tag = tag[:gt] + f' class="{style}"' + tag[gt:]
+        tag = tag[:-1] + f' class="{style}">'
     if table_name is not None and "data-table-name" not in tag.lower():
-        gt = tag.rfind(">")
-        tag = tag[:gt] + f' data-table-name="{table_name}"' + tag[gt:]
+        tag = tag[:-1] + f' data-table-name="{table_name}">'
     return html[:t0] + tag + html[end:]
 
 
@@ -902,24 +699,24 @@ def op_create_chart(html: str, table: int, chart_type: str,
     ``series_from_rows``) names the labels/series; non-numeric data
     cells become nulls (Chart.js's own missing-point value)."""
     import json as _json
-    from html import unescape as _unescape
 
     ct = _CHART_TYPES.get(str(chart_type).lower())
     if ct is None:
         raise ValueError("unknown chart type")
     if not (0 <= r1 <= r2 and 0 <= c1 <= c2):
         raise ValueError("bad data range")
-    tspan, rows, layout = _grid_layout(html, table)
-    if r2 >= len(rows):
-        raise ValueError("data range exceeds table rows")
-    # grid -> matrix of collapsed cell texts (None where no cell origin)
+    # grid -> matrix of the cell texts extraction reports (None where no
+    # cell origin)
     grid: dict = {}
-    for r in range(r1, r2 + 1):
-        for cs, gc, _rs, _cl in layout[r]:
-            if c1 <= gc <= c2:
-                text = " ".join(_unescape(
-                    _TEXT_STRIP_RE.sub("", html[cs[1] : cs[2]])).split())
-                grid[(r, gc)] = text
+    with _parsed_table(html, table) as t:
+        layout = _grid_layout(_table_rows(t))
+        if r2 >= len(layout):
+            raise ValueError("data range exceeds table rows")
+        for r in range(r1, r2 + 1):
+            for cell, gc, _rs, _cl in layout[r]:
+                if c1 <= gc <= c2:
+                    grid[(r, gc)] = cell.text_content()
+        at = t.e1
     matrix = [[grid.get((r, c)) for c in range(c1, c2 + 1)]
               for r in range(r1, r2 + 1)]
     if series_from_rows:
@@ -978,7 +775,6 @@ def op_create_chart(html: str, table: int, chart_type: str,
         f'<script>new Chart(document.getElementById("{cid}"), '
         f"{cfg_js});</script>"
     )
-    at = tspan[1]
     return html[:at] + snippet + html[at:]
 
 
@@ -990,23 +786,13 @@ def design_snapshot(html: str, table: int) -> dict:
     module rewrites only open tags, so restoring them is an exact
     inverse; structural ops (merge, add_row) invalidate the snapshot
     and restore skips (shape check)."""
-    tspan, row_spans, layout = _grid_layout(html, table)
-    m = _TAG_START_RE.match(html, tspan[0])
-    end = _scan_tag_end(html, m.end(), tspan[1]) if m else -1
-    if end == -1:
-        raise ValueError("malformed table tag")
-    rows_out: list = []
-    cells_out: list = []
-    for r, (r0, r1) in enumerate(row_spans):
-        rm = _TAG_START_RE.match(html, r0)
-        rend = _scan_tag_end(html, rm.end(), r1) if rm else -1
-        if rend == -1:
-            raise ValueError("malformed row tag")
-        rows_out.append(html[r0:rend])
-        cells_out.append([html[cs[0] : cs[1]]
-                          for cs, _gc, _rs, _cl in layout[r]])
-    return {"table": table, "table_tag": html[tspan[0] : end],
-            "rows": rows_out, "cells": cells_out}
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        layout = _grid_layout(rows)
+        return {"table": table, "table_tag": html[t.s0:t.s1],
+                "rows": [html[tr.s0:tr.s1] for tr, _g, _c in rows],
+                "cells": [[html[cell.s0:cell.s1] for cell, _gc, _rs, _cl
+                           in row_cells] for row_cells in layout]}
 
 
 def op_restore_design_snapshot(html: str, design_snapshot: dict) -> str:
@@ -1028,24 +814,19 @@ def op_restore_design_snapshot(html: str, design_snapshot: dict) -> str:
             snap_cells, list) or len(snap_rows) != len(snap_cells)
             or not all(isinstance(rc, list) for rc in snap_cells)):
         raise ValueError("bad snapshot")
-    tspan, row_spans, layout = _grid_layout(html, table)
-    if len(row_spans) != len(snap_rows) or any(
-            len(layout[r]) != len(snap_cells[r])
-            for r in range(len(row_spans))):
-        raise ValueError("snapshot shape mismatch")
-    m = _TAG_START_RE.match(html, tspan[0])
-    end = _scan_tag_end(html, m.end(), tspan[1]) if m else -1
-    if end == -1:
-        raise ValueError("malformed table tag")
-    edits: list = [(tspan[0], end, str(table_tag))]
-    for r, (r0, r1) in enumerate(row_spans):
-        rm = _TAG_START_RE.match(html, r0)
-        rend = _scan_tag_end(html, rm.end(), r1) if rm else -1
-        if rend == -1:
-            raise ValueError("malformed row tag")
-        edits.append((r0, rend, str(snap_rows[r])))
-        for (cs, _gc, _rs, _cl), tag in zip(layout[r], snap_cells[r]):
-            edits.append((cs[0], cs[1], str(tag)))
+    with _parsed_table(html, table) as t:
+        rows = _table_rows(t)
+        layout = _grid_layout(rows)
+        if len(rows) != len(snap_rows) or any(
+                len(layout[r]) != len(snap_cells[r])
+                for r in range(len(rows))):
+            raise ValueError("snapshot shape mismatch")
+        edits: list = [(t.s0, t.s1, str(table_tag))]
+        for (tr, _g, _c), row_tag, row_cells, cell_tags in zip(
+                rows, snap_rows, layout, snap_cells):
+            edits.append((tr.s0, tr.s1, str(row_tag)))
+            for (cell, _gc, _rs, _cl), tag in zip(row_cells, cell_tags):
+                edits.append((cell.s0, cell.s1, str(tag)))
     return _splice_all(html, edits)
 
 

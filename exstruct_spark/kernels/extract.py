@@ -323,6 +323,15 @@ def _style_import_hrefs(style_text: str) -> list:
     return out
 
 
+def _join(base: str, href: str) -> Optional[str]:
+    """``urljoin``, or None where it rejects the URL (a malformed IPv6
+    host such as ``http://[x/``)."""
+    try:
+        return urljoin(base, href)
+    except ValueError:
+        return None
+
+
 def _stylesheet_refs(link_nodes: list, base_url: str,
                      style_nodes: list = ()) -> list:
     """Resolved external-stylesheet URLs in document order — the
@@ -332,7 +341,7 @@ def _stylesheet_refs(link_nodes: list, base_url: str,
     targets of inline ``<style>`` blocks (the legacy-theme idiom —
     their rules cascade with the other external sheets, the documented
     below-<style> approximation).  Deduplicated first-wins; capped
-    (caps-not-crashes)."""
+    (caps-not-crashes); an href ``urljoin`` rejects is skipped."""
     out: list = []
     seen: set = set()
     for ln in link_nodes:
@@ -352,8 +361,8 @@ def _stylesheet_refs(link_nodes: list, base_url: str,
             href = (attrs.get("href") or "").strip()
             if not href:
                 continue
-            resolved = urljoin(base_url, href)
-            if resolved not in seen:
+            resolved = _join(base_url, href)
+            if resolved is not None and resolved not in seen:
                 seen.add(resolved)
                 out.append(resolved)
                 if len(out) >= _MAX_STYLESHEET_REFS:
@@ -362,8 +371,8 @@ def _stylesheet_refs(link_nodes: list, base_url: str,
         if not media_applies_on_screen(sn.attrs.get("media")):
             continue
         for href in _style_import_hrefs(_style_text(sn)):
-            resolved = urljoin(base_url, href)
-            if resolved not in seen:
+            resolved = _join(base_url, href)
+            if resolved is not None and resolved not in seen:
                 seen.add(resolved)
                 out.append(resolved)
                 if len(out) >= _MAX_STYLESHEET_REFS:
@@ -451,11 +460,12 @@ def _route(raw: bytes) -> tuple:
 
 def _document_base(url: str, base_nodes: list) -> str:
     """``<base href>``: the FIRST base with a non-empty href wins (HTML
-    spec), resolved against the page URL; the page URL without one."""
+    spec), resolved against the page URL; the page URL without one, or
+    when ``urljoin`` rejects that href (the spec's fallback base URL)."""
     for b in base_nodes:
         href = (b.attrs.get("href") or "").strip()
         if href:
-            return urljoin(url, href)
+            return _join(url, href) or url
     return url
 
 
@@ -484,11 +494,6 @@ def stylesheet_refs(url: str, raw: Optional[bytes]) -> list:
         return _stylesheet_refs(found["link"],
                                 _document_base(url, found["base"]),
                                 found["style"])
-    except ValueError:
-        # urljoin rejected an href or base (a malformed IPv6 host):
-        # extract_document gives such a page a fallback record, which
-        # lists no stylesheets
-        return []
     finally:
         release(root)
 

@@ -2,7 +2,8 @@
 
    A port of dom._parse_html_fast, which stays the specification: this
    module builds the same dom.Node trees (tag, attrs, children, pi,
-   doc_nodes, i0/i1) and is tested against it differentially.  Only the
+   doc_nodes, i0/i1 and the source offsets s0/s1/e0/e1) and is tested
+   against it differentially.  Only the
    scan and build loop live here.  The tag tables, the attribute parser
    with its cache, the tag-info cache and entity decoding stay in dom.py
    and are handed over once by init().
@@ -35,7 +36,7 @@ static PyObject *doc_tag;         /* "#document" */
 
 /* byte offsets of Node's __slots__ */
 static Py_ssize_t off_tag, off_attrs, off_children, off_doc_nodes,
-    off_i0, off_i1, off_pi;
+    off_i0, off_i1, off_pi, off_s0, off_s1, off_e0, off_e1;
 
 #define SLOT(obj, off) (*(PyObject **)((char *)(obj) + (off)))
 
@@ -299,19 +300,37 @@ stack_push(Stack *s, PyObject *node)
     return 0;
 }
 
-/* set i1 = len(doc_nodes) on stack[i:] and pop them */
+/* set i1 = len(doc_nodes) on stack[i:] and pop them.  The closing
+   token starts at `at`: stack[i] ends at e1 = `end` (past its own end
+   tag), the elements above it are closed implicitly (e0 = e1 = at). */
 static int
-close_from(Stack *s, Py_ssize_t i, PyObject *doc_nodes)
+close_from(Stack *s, Py_ssize_t i, PyObject *doc_nodes, Py_ssize_t at,
+           Py_ssize_t end)
 {
-    PyObject *end = PyLong_FromSsize_t(PyList_GET_SIZE(doc_nodes));
+    PyObject *i1 = PyLong_FromSsize_t(PyList_GET_SIZE(doc_nodes));
+    PyObject *v_at = PyLong_FromSsize_t(at);
+    PyObject *v_end = at == end ? v_at : PyLong_FromSsize_t(end);
     Py_ssize_t k;
-    if (end == NULL)
+    if (i1 == NULL || v_at == NULL || v_end == NULL) {
+        Py_XDECREF(i1);
+        Py_XDECREF(v_at);
+        if (v_end != v_at)
+            Py_XDECREF(v_end);
         return -1;
-    for (k = i; k < s->len; k++) {
-        Py_INCREF(end);
-        slot_set(s->node[k], off_i1, end);
     }
-    Py_DECREF(end);
+    for (k = i; k < s->len; k++) {
+        PyObject *e1 = k == i ? v_end : v_at;
+        Py_INCREF(i1);
+        slot_set(s->node[k], off_i1, i1);
+        Py_INCREF(v_at);
+        slot_set(s->node[k], off_e0, v_at);
+        Py_INCREF(e1);
+        slot_set(s->node[k], off_e1, e1);
+    }
+    Py_DECREF(i1);
+    Py_DECREF(v_at);
+    if (v_end != v_at)
+        Py_DECREF(v_end);
     s->len = i;
     return 0;
 }
@@ -329,22 +348,29 @@ str_eq(PyObject *a, PyObject *b)
                   (size_t)n * PyUnicode_KIND(a)) == 0;
 }
 
-/* pi: the parent's i0 object (None for the root) */
+/* pi: the parent's i0 object (None for the root); [s0, s1): the start
+   tag, where a leaf also ends (e0 = e1 = s1) until its scope closes */
 static PyObject *
-new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes, PyObject *pi)
+new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes, PyObject *pi,
+         Py_ssize_t s0, Py_ssize_t s1)
 {
     Py_ssize_t i0 = PyList_GET_SIZE(doc_nodes);
-    PyObject *node, *children, *v0, *v1;
+    PyObject *node, *children, *v0, *v1, *vs0, *vs1;
     node = node_type->tp_alloc(node_type, 0);
     if (node == NULL)
         return NULL;
     children = PyList_New(0);
     v0 = PyLong_FromSsize_t(i0);
     v1 = PyLong_FromSsize_t(i0 + 1);  /* leaf until its scope closes */
-    if (children == NULL || v0 == NULL || v1 == NULL) {
+    vs0 = PyLong_FromSsize_t(s0);
+    vs1 = PyLong_FromSsize_t(s1);
+    if (children == NULL || v0 == NULL || v1 == NULL || vs0 == NULL
+            || vs1 == NULL) {
         Py_XDECREF(children);
         Py_XDECREF(v0);
         Py_XDECREF(v1);
+        Py_XDECREF(vs0);
+        Py_XDECREF(vs1);
         Py_DECREF(node);
         return NULL;
     }
@@ -359,6 +385,12 @@ new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes, PyObject *pi)
     SLOT(node, off_i1) = v1;
     Py_INCREF(pi);
     SLOT(node, off_pi) = pi;
+    SLOT(node, off_s0) = vs0;
+    Py_INCREF(vs1);
+    Py_INCREF(vs1);
+    SLOT(node, off_s1) = vs1;
+    SLOT(node, off_e0) = vs1;
+    SLOT(node, off_e1) = vs1;
     if (PyList_Append(doc_nodes, node) < 0) {
         Py_DECREF(node);
         return NULL;
@@ -441,7 +473,7 @@ build(PyObject *html, int xml_mode)
     doc_nodes = PyList_New(0);
     if (doc_nodes == NULL)
         return NULL;
-    root = new_node(doc_tag, no_attrs, doc_nodes, Py_None);
+    root = new_node(doc_tag, no_attrs, doc_nodes, Py_None, 0, 0);
     if (root == NULL)
         goto error;
     Py_INCREF(root);
@@ -483,7 +515,7 @@ build(PyObject *html, int xml_mode)
             if (!(is_void && !xml_mode)) {  /* void end tag: ignored */
                 for (k = st.len - 1; k > 0; k--) {
                     if (str_eq(SLOT(st.node[k], off_tag), tag)) {
-                        if (close_from(&st, k, doc_nodes) < 0)
+                        if (close_from(&st, k, doc_nodes, i, tok.end) < 0)
                             goto error;
                         break;
                     }
@@ -504,7 +536,7 @@ build(PyObject *html, int xml_mode)
                 if (hit < 0)
                     goto error;
                 if (hit) {
-                    if (close_from(&st, k, doc_nodes) < 0)
+                    if (close_from(&st, k, doc_nodes, i, i) < 0)
                         goto error;
                     break;
                 }
@@ -519,7 +551,7 @@ build(PyObject *html, int xml_mode)
         if (attrs == NULL)
             goto error;
         node = new_node(tag, attrs, doc_nodes,
-                        SLOT(st.node[st.len - 1], off_i0));
+                        SLOT(st.node[st.len - 1], off_i0), i, tok.end);
         Py_DECREF(attrs);
         if (node == NULL)
             goto error;
@@ -531,12 +563,12 @@ build(PyObject *html, int xml_mode)
         }
         if (is_raw) {
             /* raw text up to the close tag: no entity decoding, no tags */
-            PyObject *children = SLOT(node, off_children);
+            PyObject *children = SLOT(node, off_children), *e0, *e1;
             Py_ssize_t c = find_raw_close(&t, pos, tag);
             if (c < 0) {
                 if (append_text(html, &t, pos, t.n, children, 0) < 0)
                     goto error;
-                pos = t.n;
+                pos = c = t.n;
             }
             else {
                 if (c > pos && append_text(html, &t, pos, c, children, 0) < 0)
@@ -545,6 +577,12 @@ build(PyObject *html, int xml_mode)
                 pos = k < 0 ? t.n : k + 1;
             }
             scan = pos;
+            if ((e0 = PyLong_FromSsize_t(c)) == NULL)
+                goto error;
+            slot_set(node, off_e0, e0);
+            if ((e1 = PyLong_FromSsize_t(pos)) == NULL)
+                goto error;
+            slot_set(node, off_e1, e1);
             Py_CLEAR(info);
             continue;
         }
@@ -556,7 +594,7 @@ build(PyObject *html, int xml_mode)
                                  SLOT(st.node[st.len - 1], off_children),
                                  1) < 0)
         goto error;
-    if (close_from(&st, 0, doc_nodes) < 0)
+    if (close_from(&st, 0, doc_nodes, t.n, t.n) < 0)
         goto error;
     PyMem_Free(st.node);
     Py_DECREF(doc_nodes);
@@ -648,7 +686,11 @@ htmlscan_init(PyObject *self, PyObject *args)
                                             "doc_nodes")) < 0
             || (off_i0 = slot_offset((PyTypeObject *)node, "i0")) < 0
             || (off_i1 = slot_offset((PyTypeObject *)node, "i1")) < 0
-            || (off_pi = slot_offset((PyTypeObject *)node, "pi")) < 0)
+            || (off_pi = slot_offset((PyTypeObject *)node, "pi")) < 0
+            || (off_s0 = slot_offset((PyTypeObject *)node, "s0")) < 0
+            || (off_s1 = slot_offset((PyTypeObject *)node, "s1")) < 0
+            || (off_e0 = slot_offset((PyTypeObject *)node, "e0")) < 0
+            || (off_e1 = slot_offset((PyTypeObject *)node, "e1")) < 0)
         return NULL;
     if (doc_tag == NULL && (doc_tag = PyUnicode_InternFromString(
                                 "#document")) == NULL)

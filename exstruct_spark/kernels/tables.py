@@ -72,8 +72,9 @@ def _table_rows(table: Node) -> list:
     """The <table>'s OWN rows as ``(tr, rowgroup or None, cells)``;
     ``cells`` lazily yields ``(cell, rowspan, colspan, is_header)`` for
     the row's td/th children.  A nested <table> owns its rows (it
-    extracts as its own artifact), so its subtree is skipped — the same
-    row addressing as kernels/edits.py ``_row_spans``."""
+    extracts as its own artifact), so its subtree is skipped.  The cell
+    edit ops (kernels/edits.py) address rows and cells through this
+    enumerator and ``_table_cells`` too."""
     rows = []
     skip_to = -1
     # [1:] drops the table itself (find_all is pre-order including self)

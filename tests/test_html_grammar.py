@@ -19,8 +19,9 @@ from exstruct_spark.pages import build_page, build_rich_page
 
 def tree_signature(root) -> list:
     """Everything a kernel can read off a parsed tree: per node in
-    document order its tag, attrs, i0/i1, parent (by index) and children
-    (strings verbatim, nodes by index), plus len(doc_nodes)."""
+    document order its tag, attrs, i0/i1, source offsets s0/s1/e0/e1,
+    parent (by index) and children (strings verbatim, nodes by index),
+    plus len(doc_nodes)."""
     dl = root.doc_nodes
     index = {id(n): k for k, n in enumerate(dl)}
     assert root.parent is None and dl[0] is root
@@ -30,7 +31,8 @@ def tree_signature(root) -> list:
         parent = None if n.parent is None else index[id(n.parent)]
         if k:
             assert n in n.parent.children
-        sig.append((n.tag, n.attrs, n.i0, n.i1, parent,
+        sig.append((n.tag, n.attrs, n.i0, n.i1, n.s0, n.s1, n.e0, n.e1,
+                    parent,
                     [c if type(c) is str else ("#node", index[id(c)])
                      for c in n.children]))
     return sig
@@ -135,6 +137,81 @@ def test_native_matches_python_hypothesis(native_parse, xml_mode):
         assert_same_tree(native_parse, html, xml_mode)
 
     check()
+
+
+def assert_offsets(root, html: str) -> None:
+    """The source offsets bound each element: ``html[s0:s1]`` is its
+    start tag, ``html[e0:e1]`` its end tag or empty, ``s0 <= s1 <= e0 <=
+    e1``, and it lies inside its parent's content ``[s1, e0]``, after
+    its previous element sibling."""
+    n = len(html)
+    assert (root.s0, root.s1, root.e0, root.e1) == (0, 0, n, n)
+    for node in root.doc_nodes[1:]:
+        assert node.s0 <= node.s1 <= node.e0 <= node.e1
+        m = dom._TOKEN_RE.fullmatch(html, node.s0, node.s1)
+        assert m and m.lastindex == 3 and m.group(1).lower() == node.tag
+        if node.e0 < node.e1:
+            if node.tag in dom._RAW_TEXT_TAGS:
+                # the raw-text close folds case (U+0130 in '</scrİpt>')
+                assert html.startswith("</", node.e0)
+            else:
+                m = dom._TOKEN_RE.fullmatch(html, node.e0, node.e1)
+                assert m and m.lastindex == 4
+                assert m.group(4).lower() == node.tag
+        parent = node.parent
+        assert parent.s1 <= node.s0 and node.e1 <= parent.e0
+    for node in root.doc_nodes:
+        prev_end = node.s1
+        for child in node.element_children():
+            assert child.s0 >= prev_end
+            prev_end = child.e1
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+@pytest.mark.parametrize("name", sorted(NAMED) + sorted(XML_NAMED))
+def test_offsets_named_case(parser, name, xml_mode):
+    html = {**NAMED, **XML_NAMED}[name]
+    assert_offsets(dom.parse_html(html, xml_mode), html)
+
+
+def test_offsets_corpus_and_adversarial_pages(parser):
+    pages = [page["html"] for i in range(30)
+             for page in (build_page(i), build_rich_page(i))]
+    pages += [raw for _, raw in ADVERSARIAL]
+    for raw in pages:
+        html = dom.decode_html_bytes(raw)
+        for xml_mode in (False, True):
+            assert_offsets(dom.parse_html(html, xml_mode), html)
+
+
+@pytest.mark.parametrize("xml_mode", [False, True])
+def test_offsets_hypothesis(parser, xml_mode):
+    @settings(max_examples=500, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow,
+                                     HealthCheck.function_scoped_fixture])
+    @given(html=MARKUP | st.text())
+    def check(html):
+        assert_offsets(dom.parse_html(html, xml_mode), html)
+
+    check()
+
+
+def test_offsets_of_implicit_closes():
+    """Worked example: an element closed by a later start tag, by an
+    ancestor's end tag or by the end of input ends where that token
+    starts; a void element ends at its start tag."""
+    html = "<table><tr><td>a<td>b</tr></table><br><p>x"
+    root = dom.parse_html(html)
+    spans = [(n.tag, html[n.s0:n.s1], html[n.s1:n.e0], html[n.e0:n.e1])
+             for n in root.doc_nodes[1:]]
+    assert spans == [
+        ("table", "<table>", "<tr><td>a<td>b</tr>", "</table>"),
+        ("tr", "<tr>", "<td>a<td>b", "</tr>"),
+        ("td", "<td>", "a", ""),
+        ("td", "<td>", "b", ""),
+        ("br", "<br>", "", ""),
+        ("p", "<p>", "x", ""),
+    ]
 
 
 @pytest.mark.parametrize("xml_mode", [False, True])

@@ -4795,17 +4795,20 @@ def test_cell_edit_tokenizer_linear_on_unbalanced_quotes():
     """ADVICE r5 high: the old regex tokenizer's quote alternation was
     ambiguous and went exponential (~2.7x per 2 chars) on
     unbalanced-quote input — a ~60-byte crafted tag hung an executor
-    forever via MCP edit_document or apply_cell_edits.  The linear
-    scanner must stay sub-millisecond on the crafted pattern and on
-    much larger hostile inputs, while still tokenizing balanced '>'
-    attrs whole and degrading (not dropping) on unbalanced garbage."""
+    forever via MCP edit_document or apply_cell_edits.  The ops now
+    find cells in the kernel's parse tree, whose scan is linear: both
+    hostile inputs stay fast through ``apply_ops``."""
     import time
-    from exstruct_spark.kernels.edits import _TOKEN_RE, apply_ops
+    from exstruct_spark.kernels.edits import apply_ops
 
+    # the crafted tag is no tag at all, so there is no table to edit
     attack = "<td " + '"a' * 30 + "<"
     t0 = time.monotonic()
-    assert list(_TOKEN_RE.finditer(attack)) == []
+    out, st = apply_ops(attack, [
+        {"op": "set_value", "table": 0, "row": 0, "col": 0, "value": "Q"},
+    ])
     assert time.monotonic() - t0 < 0.5
+    assert st == ["skipped"] and out == attack
 
     # same shape, 100x larger, embedded in a real op application
     big = "<table><tr><td>keep</td>" + "<td " + '"a' * 3000 + "<"
@@ -4815,15 +4818,6 @@ def test_cell_edit_tokenizer_linear_on_unbalanced_quotes():
     ])
     assert time.monotonic() - t0 < 1.0
     assert st == ["applied"] and "<td>Q</td>" in out
-
-    # balanced '>' in attrs still spans the tag whole
-    toks = list(_TOKEN_RE.finditer('<td title="a>b">v</td>'))
-    assert [(t.start(), t.end()) for t in toks] == [(0, 16), (17, 22)]
-
-    # degraded truncation keeps the tag (never drops it): a balanced
-    # run covering the only '>' is re-read as literals
-    toks = list(_TOKEN_RE.finditer('<td t" =>"b'))
-    assert len(toks) == 1 and toks[0].end() == 9
 
 
 def test_cell_edit_wave2_style_and_conditional_ops():
@@ -4990,21 +4984,27 @@ def test_cell_edit_draw_grid_border():
 
 
 def test_cell_edit_unbalanced_quote_keeps_cell_indexing():
-    """Second-review finding: an UNBALANCED quote in an attribute must
-    not drop the tag from tokenization (which silently renumbers cells
-    and edits the wrong one) — it degrades to truncate-at-first-'>',
-    keeping indices stable, while balanced quotes containing '>' still
-    tokenize whole."""
+    """An UNBALANCED quote in an attribute value: the kernel's grammar
+    reads no tag there (its '<' stays text), so extraction reports
+    ``y|z`` at columns 0 and 1 — and the edit at each column lands on
+    the cell extraction reads there."""
     from exstruct_spark.kernels.edits import apply_ops
 
     html = ('<table><tr><td title="oops>x</td>'
             '<td class="c">y</td><td>z</td></tr></table>')
+
+    def first_row(page):
+        rec = extract_document("https://x/q", page.encode())
+        return json.loads(rec["extraction_json"])["tables"][0]["rows"][0]
+
+    assert first_row(html)["c"] == {"0": "y", "1": "z"}
     out, st = apply_ops(html, [
-        {"op": "set_value", "table": 0, "row": 0, "col": 1, "value": "Q"},
+        {"op": "set_value", "table": 0, "row": 0, "col": 0, "value": "Q"},
     ])
     assert st == ["applied"]
-    assert '<td class="c">Q</td>' in out      # the RIGHT cell changed
-    assert "<td>z</td>" in out                # col 2 untouched
+    assert '<td class="c">Q</td>' in out      # the cell read at col 0
+    assert "<td>z</td>" in out                # col 1 untouched
+    assert first_row(out)["c"] == {"0": "Q", "1": "z"}
 
 
 def test_chartconfig_plotly_dialect():
@@ -5315,6 +5315,24 @@ def test_external_sheet_parse_memo():
     again = _parse_sheet_cached(text)
     assert first is again  # memo hit, not a re-parse
     assert _parse_sheet_cached(text + " ") is not first
+
+
+def test_joined_sheet_byte_order_mark_is_dropped():
+    """A corpus sheet saved with a UTF-8 byte-order mark reaches the
+    kernel with a leading U+FEFF; its first rule still applies."""
+    html = (b"<html><head><link rel=stylesheet href='/s.css'></head><body>"
+            b"<table><tr><td>a</td><td>1</td></tr>"
+            b"<tr><td>b</td><td>2</td></tr></table></body></html>")
+
+    def colors(text):
+        rec = extract_document("https://x.test/p", html, external_css=[
+            {"u": "https://x.test/s.css", "t": text}])
+        return json.loads(rec["extraction_json"])["tables"][0].get(
+            "colors_map")
+
+    sheet = "td { background-color:#00FF00 }"
+    assert colors("\ufeff" + sheet) == colors(sheet) == {
+        "00FF00": [[1, 0], [1, 1], [2, 0], [2, 1]]}
 
 
 def test_gviz_receiver_reuse_resets_columns():

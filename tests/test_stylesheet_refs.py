@@ -7,7 +7,8 @@ generated ``<head>`` markup that mixes links, bases and styles with the
 hazards a second grammar got wrong (commented and unterminated-comment
 bases, ``<!--`` and fake bases in script text, ``</script x>``, links in
 ``<template>``/``<noscript>``, attribute decoys, entity hrefs, empty
-bases, media/alternate/disabled links, inline ``@import``), encoded as
+bases, media/alternate/disabled links, inline ``@import``, an href
+``urljoin`` rejects), encoded as
 UTF-8, latin-1 and UTF-16 with a byte-order mark.
 """
 
@@ -53,13 +54,26 @@ def test_corpus_inputs(parser):
     # a PDF carrying link markup still takes the PDF route: no sheets
     assert stylesheet_refs("https://routes.example/x", b"%PDF-1.4\n"
                            b"<link rel=stylesheet href=a.css>") == []
-    # an href urljoin rejects: the record is a fallback listing no
-    # sheets, and the key list is empty rather than an error
-    bad = (b"<link rel=stylesheet href='http://[x/a.css'>"
-           b"<p>Enough visible words for a content block here.</p>")
-    assert extract_document("https://b.example/p", bad)["status"] \
-        == "fallback"
-    assert stylesheet_refs("https://b.example/p", bad) == []
+
+
+def test_rejected_hrefs_are_skipped(parser):
+    """A stylesheet or ``<base>`` href that ``urljoin`` rejects (a
+    malformed IPv6 host) is skipped: the page still extracts ``ok``, a
+    rejected base falls back to the page URL, and the key list matches
+    the record."""
+    body = b"<p>Enough visible words for a content block here.</p>"
+    cases = [
+        (b"<link rel=stylesheet href='http://[x/a.css'>"
+         b"<link rel=stylesheet href='b.css'>",
+         ["https://b.example/d/b.css"]),
+        (b"<base href='http://[x/'><link rel=stylesheet href='b.css'>",
+         ["https://b.example/d/b.css"]),
+        (b"<style>@import url('http://[x/i.css');</style>", []),
+    ]
+    for head, want in cases:
+        rec = extract_document("https://b.example/d/p", head + body)
+        assert (rec["status"], rec["fallback_reason"]) == ("ok", ""), head
+        assert _agrees("https://b.example/d/p", head + body) == want, head
 
 
 _BODY = ("</head><body><p>Enough visible words for a content block "
@@ -111,7 +125,7 @@ _HEAD_PARTS = [
 _HREFS = [
     "a.css", "/root.css", "../up.css", "sub/b.css",
     "https://other.example/x.css", "s.css?a=1&amp;b=2", "caf\xe9.css",
-    "//proto.example/p.css", "#frag", "a.css",
+    "//proto.example/p.css", "#frag", "a.css", "http://[x/a.css",
 ]
 
 _head = st.lists(
