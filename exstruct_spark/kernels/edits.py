@@ -787,12 +787,12 @@ def design_snapshot(html: str, table: int) -> dict:
     inverse; structural ops (merge, add_row) invalidate the snapshot
     and restore skips (shape check)."""
     with _parsed_table(html, table) as t:
-        rows = _table_rows(t)
-        layout = _grid_layout(rows)
+        rows = [(tr, [cell for cell, *_ in cells])
+                for tr, _group, cells in _table_rows(t)]
         return {"table": table, "table_tag": html[t.s0:t.s1],
-                "rows": [html[tr.s0:tr.s1] for tr, _g, _c in rows],
-                "cells": [[html[cell.s0:cell.s1] for cell, _gc, _rs, _cl
-                           in row_cells] for row_cells in layout]}
+                "rows": [html[tr.s0:tr.s1] for tr, _cells in rows],
+                "cells": [[html[c.s0:c.s1] for c in cells]
+                          for _tr, cells in rows]}
 
 
 def op_restore_design_snapshot(html: str, design_snapshot: dict) -> str:
@@ -815,18 +815,18 @@ def op_restore_design_snapshot(html: str, design_snapshot: dict) -> str:
             or not all(isinstance(rc, list) for rc in snap_cells)):
         raise ValueError("bad snapshot")
     with _parsed_table(html, table) as t:
-        rows = _table_rows(t)
-        layout = _grid_layout(rows)
+        rows = [(tr, [cell for cell, *_ in cells])
+                for tr, _group, cells in _table_rows(t)]
         if len(rows) != len(snap_rows) or any(
-                len(layout[r]) != len(snap_cells[r])
-                for r in range(len(rows))):
+                len(cells) != len(tags)
+                for (_tr, cells), tags in zip(rows, snap_cells)):
             raise ValueError("snapshot shape mismatch")
         edits: list = [(t.s0, t.s1, str(table_tag))]
-        for (tr, _g, _c), row_tag, row_cells, cell_tags in zip(
-                rows, snap_rows, layout, snap_cells):
+        for (tr, cells), row_tag, cell_tags in zip(rows, snap_rows,
+                                                   snap_cells):
             edits.append((tr.s0, tr.s1, str(row_tag)))
-            for (cell, _gc, _rs, _cl), tag in zip(row_cells, cell_tags):
-                edits.append((cell.s0, cell.s1, str(tag)))
+            edits += [(c.s0, c.s1, str(tag))
+                      for c, tag in zip(cells, cell_tags)]
     return _splice_all(html, edits)
 
 
