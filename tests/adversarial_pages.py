@@ -170,6 +170,9 @@ _TEXT_CASES = [
      "<html lang=ja><body><h1>売上 😀</h1><p>€ ſ İ</p></body></html>"),
     ("chart_call_forms", _CHART_CALLS),
     ("chart_marker_near_misses", _CHART_MARKER_NEAR_MISSES),
+    ("template_rows",
+     "<table><tr><td>a</td><td>b</td></tr><template><tr><td>INERT</td>"
+     "<td>x</td></tr></template></table>"),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
