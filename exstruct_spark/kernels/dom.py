@@ -14,6 +14,12 @@ tolerant of unclosed tags, stray end tags, and void elements, and total
 specification; ``native/htmlscan.c`` is a native port of its scan and build
 loop that ``parse_html`` runs when it could be compiled (``native``),
 tested against the Python parser for identical trees.
+
+The subtree text walk is native the same way: ``_text_content_py`` is
+its specification, and when the module is built ``Node.text_content``
+is ``htmlscan.c``'s ``text``, installed as a method descriptor (no Python
+frame per call), tested against the Python body for identical strings.
+Without a build both Python bodies run; there is no other runtime path.
 """
 
 from __future__ import annotations
@@ -102,6 +108,46 @@ _IMPLICIT_CLOSE = {
 
 _WS_RE = re.compile(r"\s+")
 _NO_ATTRS: dict = {}  # shared empty attrs (never mutated)
+
+
+def _text_content_py(node: "Node") -> str:
+    """Whitespace-collapsed text of the subtree, skipping script/style.
+
+    The specification of the native walk (``htmlscan.c`` ``text``),
+    which runs as ``Node.text_content`` whenever the scanner is built;
+    this body runs only without it.  Parity role: ``_extract_text``
+    over ``.//a:t`` nodes (reference ooxml_drawing.py:924-930) —
+    concatenate then strip.  Iterative (explicit stack) so adversarially
+    deep nesting cannot blow the recursion limit (fallback-not-fail
+    applies to MALFORMED input; deep-but-valid input should extract
+    normally).
+    """
+    if node.tag in RAW_TEXT_SKIP:
+        return ""
+    children = node.children
+    # fast paths for the dominant leaf shapes (table cells, anchors,
+    # headings): no children, or a single text child (r8)
+    if not children:
+        return ""
+    if len(children) == 1 and type(children[0]) is str:
+        return _WS_RE.sub(" ", children[0]).strip()
+    parts: list = []
+    # stack holds nodes to enter and sentinel strings to emit
+    stack: list = list(reversed(children))
+    while stack:
+        item = stack.pop()
+        if type(item) is str:
+            parts.append(item)
+            continue
+        c = item
+        if c.tag in RAW_TEXT_SKIP:
+            continue
+        is_block = c.tag in BLOCK_ELEMENTS or c.tag == "br"
+        if is_block:
+            parts.append(" ")
+            stack.append(" ")  # emitted after the subtree drains
+        stack.extend(reversed(c.children))  # C-level push (r8)
+    return _WS_RE.sub(" ", "".join(parts)).strip()
 
 
 class Node:
@@ -197,41 +243,8 @@ class Node:
         return [c for c in self.children if type(c) is Node]
 
     # -- text ------------------------------------------------------------
-    def text_content(self) -> str:
-        """Whitespace-collapsed text of the subtree, skipping script/style.
-
-        Parity role: ``_extract_text`` over ``.//a:t`` nodes (reference
-        ooxml_drawing.py:924-930) — concatenate then strip.  Iterative
-        (explicit stack) so adversarially deep nesting cannot blow the
-        recursion limit (fallback-not-fail applies to MALFORMED input;
-        deep-but-valid input should extract normally).
-        """
-        if self.tag in RAW_TEXT_SKIP:
-            return ""
-        children = self.children
-        # fast paths for the dominant leaf shapes (table cells, anchors,
-        # headings): no children, or a single text child (r8)
-        if not children:
-            return ""
-        if len(children) == 1 and type(children[0]) is str:
-            return _WS_RE.sub(" ", children[0]).strip()
-        parts: list = []
-        # stack holds nodes to enter and sentinel strings to emit
-        stack: list = list(reversed(children))
-        while stack:
-            item = stack.pop()
-            if type(item) is str:
-                parts.append(item)
-                continue
-            c = item
-            if c.tag in RAW_TEXT_SKIP:
-                continue
-            is_block = c.tag in BLOCK_ELEMENTS or c.tag == "br"
-            if is_block:
-                parts.append(" ")
-                stack.append(" ")  # emitted after the subtree drains
-            stack.extend(reversed(c.children))  # C-level push (r8)
-        return _WS_RE.sub(" ", "".join(parts)).strip()
+    # replaced by the native walk when htmlscan.c is built (module end)
+    text_content = _text_content_py
 
     def preformatted_text(self) -> str:
         """VERBATIM text of the subtree (``<pre>``/``<code>`` blocks):
@@ -479,8 +492,10 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
 _native = native.load()
 if _native is not None:
     _native.init(Node, _NO_ATTRS, _ATTR_CACHE, _parse_attrs, _TAG_INFO,
-                 _tag_info, _unescape, _CLOSE_BARRIERS)
+                 _tag_info, _unescape, _CLOSE_BARRIERS, RAW_TEXT_SKIP,
+                 BLOCK_ELEMENTS)
     _parse = _native.parse
+    Node.text_content = _native.text_content
 else:
     _parse = _parse_html_fast
 

@@ -625,6 +625,9 @@ def op_set_dimensions(html: str, table: int, rows=None, row_height=None,
             for r in rows:
                 if not isinstance(r, int) or not 0 <= r < len(tr_rows):
                     raise ValueError("row index out of range")
+            # one splice per distinct row: a repeated index would splice
+            # the same start tag twice at the same offsets
+            for r in dict.fromkeys(rows):
                 tr = tr_rows[r][0]
                 edits.append((tr.s0, tr.s1, _replace_style_decl(
                     html[tr.s0:tr.s1], "height", f"{hv}px")))

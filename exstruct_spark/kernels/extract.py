@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import re
 import unicodedata
+from bisect import bisect_left
 from typing import Optional
 from urllib.parse import urljoin
 
@@ -99,18 +100,22 @@ def normalize_main_text(s: str) -> str:
     return unicodedata.normalize("NFC", _ZERO_WIDTH_RE.sub("", s))
 
 
-def _section_views(sections: list, table_node_ids: dict) -> list:
+def _section_views(sections: list, table_starts: list,
+                   table_ids: list) -> list:
     """Region-scoped views: the PrintAreaView analogue (reference
     models/__init__.py:178-185, 437-455 + the rows⋈area containment join
     io/__init__.py:199-235).  Each <section>/<article> becomes a view:
     first heading as title, contained table artifact ids (containment =
-    DOM subtree membership — the in-document J1 join), text size."""
+    DOM subtree membership — the in-document J1 join), text size.
+    ``table_starts`` holds the ``i0`` of each table artifact's node in
+    ascending order and ``table_ids`` its artifact id: a section's
+    subtree is its ``[i0, i1)`` slice, so its tables are one bisected
+    run."""
     views: list = []
     for i, sec in enumerate(sections):
         heading = sec.find_first("h1", "h2", "h3", "h4", "h5", "h6")
-        contained = [
-            table_node_ids[id(n)] for n in sec.iter() if id(n) in table_node_ids
-        ]
+        contained = table_ids[bisect_left(table_starts, sec.i0):
+                              bisect_left(table_starts, sec.i1)]
         text = sec.text_content()
         view: dict = {"id": i, "tag": sec.tag}
         if heading is not None:
@@ -752,7 +757,10 @@ def extract_document(
                 tables = []
                 figure_table_ids: dict = {}
                 fig_of_table: dict = {}
-                table_node_ids: dict = {}
+                # i0 and artifact id of each table artifact's node, in
+                # document order (table_like is walk-ordered)
+                table_starts: list = []
+                table_ids: list = []
                 for fig in groups["figure"]:
                     for t in fig.find_all("table"):
                         fig_of_table[id(t)] = id(fig)
@@ -773,7 +781,8 @@ def extract_document(
                         # the whole artifact: charts bind series ranges to
                         # the companion grid, not just its id (J7)
                         figure_table_ids[fig_of_table[id(t_node)]] = art
-                    table_node_ids[id(t_node)] = art["id"]
+                    table_starts.append(t_node.i0)
+                    table_ids.append(art["id"])
                     tables.append(art)
                 for g in detect_grid_candidates(
                     body, opts.detection, opts.alpha_keys, css
@@ -813,7 +822,7 @@ def extract_document(
                 n_tables = len(tables)
             else:
                 figure_table_ids = {}
-                table_node_ids = {}
+                table_starts = table_ids = []
 
             if opts.include_shapes:
                 shapes_all: list = []
@@ -1059,7 +1068,8 @@ def extract_document(
                     extraction["stylesheets"] = sheets
 
             if opts.include_sections:
-                sections = _section_views(groups["section"], table_node_ids)
+                sections = _section_views(groups["section"], table_starts,
+                                          table_ids)
                 if sections:
                     extraction["sections"] = sections
 

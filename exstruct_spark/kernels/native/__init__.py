@@ -1,4 +1,4 @@
-"""Build and load the native HTML scanner (``htmlscan.c``).
+"""Build and load the native HTML scanner and text walk (``htmlscan.c``).
 
 The extension is compiled on first import with the interpreter's own C
 compiler settings (``sysconfig``: ``CC``, the include directory and the
@@ -14,7 +14,8 @@ costs one hash of the source file.
 When no compiler is available or the build fails, ``load()`` returns
 ``None`` and logs one WARNING on stderr with the reason;
 ``dom.parse_html`` then runs the pure-Python parser, which builds the
-same trees.
+same trees, and ``Node.text_content`` the Python text walk, which
+returns the same strings.
 
 Prebuild for executor images (run as the user the workers run as)::
 

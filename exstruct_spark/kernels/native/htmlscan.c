@@ -1,12 +1,13 @@
-/* Native tag scan and tree build for exstruct_spark.kernels.dom.
+/* Native tag scan, tree build and subtree text for
+   exstruct_spark.kernels.dom.
 
-   A port of dom._parse_html_fast, which stays the specification: this
-   module builds the same dom.Node trees (tag, attrs, children, pi,
-   doc_nodes, i0/i1 and the source offsets s0/s1/e0/e1) and is tested
-   against it differentially.  Only the
-   scan and build loop live here.  The tag tables, the attribute parser
-   with its cache, the tag-info cache and entity decoding stay in dom.py
-   and are handed over once by init().
+   parse() is a port of dom._parse_html_fast, which stays the
+   specification: it builds the same dom.Node trees (tag, attrs,
+   children, pi, doc_nodes, i0/i1 and the source offsets s0/s1/e0/e1)
+   and is tested against it differentially.  Only the scan and build
+   loop live here.  The tag tables, the attribute parser with its cache,
+   the tag-info cache and entity decoding stay in dom.py and are handed
+   over once by init().
 
    The scan reproduces dom._TOKEN_RE.search exactly:
      - at each '<' the alternatives are tried in pattern order (start
@@ -17,7 +18,17 @@
      - '$' in the comment and CDATA alternatives also matches just
        before a final '\n';
    and the raw-text close search reproduces re.compile(r"</tag\b", re.I)
-   (Unicode case folding of ASCII letters, Unicode word boundary). */
+   (Unicode case folding of ASCII letters, Unicode word boundary).
+
+   text() is the one subtree text walk, a port of dom._text_content_py
+   (its specification, tested against it differentially).  init() also
+   makes it Node.text_content, a method descriptor, so a call runs no
+   Python frame.  It walks the children lists through the Node slots
+   with a heap stack (no recursion, whatever the depth), skips
+   RAW_TEXT_SKIP subtrees, puts a space around each BLOCK_ELEMENTS
+   member and <br>, and collapses whitespace as it writes, which is
+   _WS_RE.sub(" ", s).strip(): re's \s and str.strip() both test
+   Py_UNICODE_ISSPACE. */
 
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -32,6 +43,8 @@ static PyObject *tag_info_cache;  /* dom._TAG_INFO */
 static PyObject *tag_info;        /* dom._tag_info */
 static PyObject *unescape;        /* html.unescape */
 static PyObject *barriers;        /* dom._CLOSE_BARRIERS */
+static PyObject *raw_text_skip;   /* dom.RAW_TEXT_SKIP */
+static PyObject *block_elements;  /* dom.BLOCK_ELEMENTS */
 static PyObject *doc_tag;         /* "#document" */
 
 /* byte offsets of Node's __slots__ */
@@ -608,14 +621,297 @@ error:
     return NULL;
 }
 
+/* ---- subtree text: dom._text_content_py ------------------------------
+
+   Characters go straight into an output buffer whose kind is the
+   narrowest one that holds every character written so far: it starts
+   one byte wide and widens only when a wider character is written, so
+   the result is built at its final kind and copied once.  Whitespace
+   (Py_UNICODE_ISSPACE, the predicate of both re's \s and str.strip)
+   is collapsed as it is written: a run becomes one owed space, paid
+   only before the next written character, so none leads or trails. */
+
+typedef struct {
+    void *buf;
+    int kind;             /* 1, 2 or 4 bytes per character */
+    Py_UCS4 maxchar;      /* widest character written */
+    Py_ssize_t len, cap;  /* in characters */
+    int owed;             /* a space is due before the next character */
+    char small[512];
+} Out;
+
+static int
+out_reserve(Out *o, Py_ssize_t extra)
+{
+    Py_ssize_t cap;
+    void *p;
+    if (o->len + extra <= o->cap)
+        return 0;
+    cap = o->cap * 2 > o->len + extra ? o->cap * 2 : o->len + extra;
+    if (cap > PY_SSIZE_T_MAX / 4) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    if (o->buf == o->small) {
+        p = PyMem_Malloc((size_t)cap * o->kind);
+        if (p != NULL)
+            memcpy(p, o->small, (size_t)o->len * o->kind);
+    }
+    else
+        p = PyMem_Realloc(o->buf, (size_t)cap * o->kind);
+    if (p == NULL) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    o->buf = p;
+    o->cap = cap;
+    return 0;
+}
+
+/* re-encode the buffer at the kind that holds ch */
+static int
+out_widen(Out *o, Py_UCS4 ch)
+{
+    int kind = ch > 0xFFFF ? 4 : 2;
+    Py_ssize_t k;
+    void *p = PyMem_Malloc((size_t)o->cap * kind);
+    if (p == NULL) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    for (k = 0; k < o->len; k++)
+        PyUnicode_WRITE(kind, p, k, PyUnicode_READ(o->kind, o->buf, k));
+    if (o->buf != o->small)
+        PyMem_Free(o->buf);
+    o->buf = p;
+    o->kind = kind;
+    return 0;
+}
+
+/* append s, collapsing whitespace; room for len(s) + 1 is reserved
+   (the owed space plus every character, at most) */
+static int
+out_text(Out *o, PyObject *s)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(s), k;
+    int kind = PyUnicode_KIND(s);
+    const void *d = PyUnicode_DATA(s);
+    if (out_reserve(o, n + 1) < 0)
+        return -1;
+    for (k = 0; k < n; k++) {
+        Py_UCS4 c = PyUnicode_READ(kind, d, k);
+        if (Py_UNICODE_ISSPACE(c)) {
+            o->owed = o->len > 0;
+            continue;
+        }
+        if ((o->kind == 1 && c > 0xFF) || (o->kind == 2 && c > 0xFFFF)) {
+            if (out_widen(o, c) < 0)
+                return -1;
+        }
+        if (o->owed) {
+            PyUnicode_WRITE(o->kind, o->buf, o->len, ' ');
+            o->len++;
+            o->owed = 0;
+        }
+        PyUnicode_WRITE(o->kind, o->buf, o->len, c);
+        o->len++;
+        if (c > o->maxchar)
+            o->maxchar = c;
+    }
+    return 0;
+}
+
+static PyObject *
+out_finish(Out *o)
+{
+    PyObject *s = PyUnicode_New(o->len, o->maxchar);
+    if (s != NULL)
+        memcpy(PyUnicode_DATA(s), o->buf, (size_t)o->len * o->kind);
+    return s;
+}
+
+/* one open element of the walk: its children list (a held reference),
+   the next index, and whether a space follows its content */
+typedef struct {
+    PyObject *children;
+    Py_ssize_t next;
+    int block;
+} Frame;
+
+/* 1: text skips the subtree (RAW_TEXT_SKIP), 2: spaces around it
+   (BLOCK_ELEMENTS or br), 0: neither; -1 on error */
+static int
+text_class(PyObject *node)
+{
+    PyObject *tag = SLOT(node, off_tag);
+    int hit;
+    if (tag == NULL) {
+        PyErr_SetString(PyExc_AttributeError, "tag");
+        return -1;
+    }
+    if ((hit = PySet_Contains(raw_text_skip, tag)) != 0)
+        return hit;
+    if ((hit = PySet_Contains(block_elements, tag)) != 0)
+        return hit < 0 ? -1 : 2;
+    return PyUnicode_Check(tag) && PyUnicode_CompareWithASCIIString(
+        tag, "br") == 0 ? 2 : 0;
+}
+
+static PyObject *
+children_of(PyObject *node)
+{
+    PyObject *children = SLOT(node, off_children);
+    if (children == NULL || !PyList_Check(children)) {
+        PyErr_SetString(PyExc_TypeError, "Node.children must be a list");
+        return NULL;
+    }
+    Py_INCREF(children);
+    return children;
+}
+
+static PyObject *
+subtree_text(PyObject *node)
+{
+    Out o;
+    Frame small[32], *st = small;
+    Py_ssize_t depth = 0, cap = 32;
+    PyObject *result = NULL;
+    int cls;
+
+    o.buf = o.small;
+    o.kind = PyUnicode_1BYTE_KIND;
+    o.maxchar = 0;
+    o.len = o.owed = 0;
+    o.cap = sizeof(o.small);
+
+    Py_INCREF(node);
+    cls = text_class(node);
+    if (cls < 0)
+        goto done;
+    if (cls == 1) {
+        result = PyUnicode_New(0, 0);
+        goto done;
+    }
+    if ((st[0].children = children_of(node)) == NULL)
+        goto done;
+    st[0].next = 0;
+    st[0].block = 0;
+    depth = 1;
+    while (depth) {
+        Frame *f = &st[depth - 1];
+        PyObject *item;
+        if (f->next >= PyList_GET_SIZE(f->children)) {
+            if (f->block)
+                o.owed = o.len > 0;
+            Py_DECREF(f->children);
+            depth--;
+            continue;
+        }
+        item = PyList_GET_ITEM(f->children, f->next);
+        f->next++;
+        if (PyUnicode_CheckExact(item)) {
+            if (out_text(&o, item) < 0)
+                goto done;
+            continue;
+        }
+        if (!PyObject_TypeCheck(item, node_type)) {
+            PyErr_Format(PyExc_TypeError,
+                         "Node.children holds a %.100s",
+                         Py_TYPE(item)->tp_name);
+            goto done;
+        }
+        Py_INCREF(item);
+        cls = text_class(item);
+        if (cls == 1 || cls < 0) {
+            Py_DECREF(item);
+            if (cls < 0)
+                goto done;
+            continue;
+        }
+        if (cls == 2)
+            o.owed = o.len > 0;
+        if (depth == cap) {
+            Frame *p;
+            if (st == small) {
+                p = PyMem_Malloc(2 * cap * sizeof(Frame));
+                if (p != NULL)
+                    memcpy(p, small, sizeof(small));
+            }
+            else
+                p = PyMem_Realloc(st, 2 * cap * sizeof(Frame));
+            if (p == NULL) {
+                Py_DECREF(item);
+                PyErr_NoMemory();
+                goto done;
+            }
+            st = p;
+            cap *= 2;
+        }
+        f = &st[depth];
+        f->children = children_of(item);
+        Py_DECREF(item);
+        if (f->children == NULL)
+            goto done;
+        f->next = 0;
+        f->block = cls == 2;
+        depth++;
+    }
+    result = out_finish(&o);
+
+done:
+    while (depth)
+        Py_DECREF(st[--depth].children);
+    if (st != small)
+        PyMem_Free(st);
+    if (o.buf != o.small)
+        PyMem_Free(o.buf);
+    Py_DECREF(node);
+    return result;
+}
+
+static int
+check_ready(void)
+{
+    if (node_type == NULL) {
+        PyErr_SetString(PyExc_RuntimeError, "_htmlscan.init() not called");
+        return -1;
+    }
+    return 0;
+}
+
+/* text(node): the module function */
+static PyObject *
+htmlscan_text(PyObject *self, PyObject *node)
+{
+    if (check_ready() < 0)
+        return NULL;
+    if (!PyObject_TypeCheck(node, node_type)) {
+        PyErr_Format(PyExc_TypeError, "text() needs a %.100s, not %.100s",
+                     node_type->tp_name, Py_TYPE(node)->tp_name);
+        return NULL;
+    }
+    return subtree_text(node);
+}
+
+/* Node.text_content(): the method descriptor binds self, type-checked */
+static PyObject *
+node_text_content(PyObject *self, PyObject *unused)
+{
+    return subtree_text(self);
+}
+
+static PyMethodDef text_content_def = {
+    "text_content", node_text_content, METH_NOARGS,
+    "Whitespace-collapsed text of the subtree, skipping script, style, "
+    "template and noscript; block elements and <br> separate words.  "
+    "Native dom._text_content_py."};
+
 static PyObject *
 htmlscan_parse(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
 {
     int xml_mode = 0;
-    if (node_type == NULL) {
-        PyErr_SetString(PyExc_RuntimeError, "_htmlscan.init() not called");
+    if (check_ready() < 0)
         return NULL;
-    }
     if (nargs < 1 || nargs > 2) {
         PyErr_SetString(PyExc_TypeError, "parse(html, xml_mode=False)");
         return NULL;
@@ -673,10 +969,11 @@ set_ref(PyObject **dst, PyObject *v)
 static PyObject *
 htmlscan_init(PyObject *self, PyObject *args)
 {
-    PyObject *node, *na, *ac, *pa, *tic, *ti, *ue, *bar;
-    if (!PyArg_ParseTuple(args, "O!O!O!OO!OOO:init", &PyType_Type, &node,
+    PyObject *node, *na, *ac, *pa, *tic, *ti, *ue, *bar, *rts, *blk, *descr;
+    if (!PyArg_ParseTuple(args, "O!O!O!OO!OOOO!O!:init", &PyType_Type, &node,
                           &PyDict_Type, &na, &PyDict_Type, &ac, &pa,
-                          &PyDict_Type, &tic, &ti, &ue, &bar))
+                          &PyDict_Type, &tic, &ti, &ue, &bar,
+                          &PyFrozenSet_Type, &rts, &PyFrozenSet_Type, &blk))
         return NULL;
     if ((off_tag = slot_offset((PyTypeObject *)node, "tag")) < 0
             || (off_attrs = slot_offset((PyTypeObject *)node, "attrs")) < 0
@@ -703,16 +1000,31 @@ htmlscan_init(PyObject *self, PyObject *args)
     set_ref(&tag_info, ti);
     set_ref(&unescape, ue);
     set_ref(&barriers, bar);
+    set_ref(&raw_text_skip, rts);
+    set_ref(&block_elements, blk);
+    /* text_content: a method descriptor of Node, so node.text_content()
+       calls subtree_text with no Python frame in between */
+    descr = PyDescr_NewMethod(node_type, &text_content_def);
+    if (descr == NULL || PyModule_AddObjectRef(self, "text_content",
+                                               descr) < 0) {
+        Py_XDECREF(descr);
+        return NULL;
+    }
+    Py_DECREF(descr);
     Py_RETURN_NONE;
 }
 
 static PyMethodDef htmlscan_methods[] = {
     {"init", htmlscan_init, METH_VARARGS,
      "init(Node, no_attrs, attr_cache, parse_attrs, tag_info_cache, "
-     "tag_info, unescape, close_barriers): hand over dom.py's tables."},
+     "tag_info, unescape, close_barriers, raw_text_skip, block_elements): "
+     "hand over dom.py's tables; sets text_content, the Node method "
+     "descriptor of text()."},
     {"parse", (PyCFunction)(void (*)(void))htmlscan_parse, METH_FASTCALL,
      "parse(html, xml_mode=False) -> dom.Node: the tree "
      "dom._parse_html_fast builds."},
+    {"text", htmlscan_text, METH_O,
+     "text(node) -> str: the string dom._text_content_py(node) returns."},
     {NULL, NULL, 0, NULL},
 };
 

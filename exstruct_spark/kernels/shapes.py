@@ -280,6 +280,29 @@ def extract_svg_shapes(svg: Node) -> tuple:
     return shapes, arrows
 
 
+def _list_item_tree(li: Node, depth: int, max_depth: int) -> dict:
+    """One ``<li>`` as ``{text, nodes}``: its own text, and its nested
+    lists' items as child nodes down to ``max_depth``.  Module-level, not
+    a closure: a recursive closure refers to itself through its cell, a
+    reference cycle only the cyclic GC can free."""
+    own_text_parts = []
+    child_nodes: list = []
+    for ch in li.children:
+        if isinstance(ch, str):
+            own_text_parts.append(ch)
+        elif ch.tag in ("ul", "ol") and depth < max_depth:
+            for sub in ch.element_children():
+                if sub.tag == "li":
+                    child_nodes.append(
+                        _list_item_tree(sub, depth + 1, max_depth))
+        elif ch.tag not in ("ul", "ol"):
+            own_text_parts.append(ch.text_content())
+    node: dict = {"text": re.sub(r"\s+", " ", " ".join(own_text_parts)).strip()}
+    if child_nodes:
+        node["nodes"] = child_nodes
+    return node
+
+
 def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
     """Deep <ul>/<ol> nesting -> SmartArt-like recursive node trees.
 
@@ -293,23 +316,6 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
     qualifies.
     Returns list of ``{text, nodes: [...]}`` trees.
     """
-
-    def build(li: Node, depth: int) -> dict:
-        own_text_parts = []
-        child_nodes: list = []
-        for ch in li.children:
-            if isinstance(ch, str):
-                own_text_parts.append(ch)
-            elif ch.tag in ("ul", "ol") and depth < max_depth:
-                for sub in ch.element_children():
-                    if sub.tag == "li":
-                        child_nodes.append(build(sub, depth + 1))
-            elif ch.tag not in ("ul", "ol"):
-                own_text_parts.append(ch.text_content())
-        node: dict = {"text": re.sub(r"\s+", " ", " ".join(own_text_parts)).strip()}
-        if child_nodes:
-            node["nodes"] = child_nodes
-        return node
 
     def depth_of(lst: Node, depth: int = 1) -> int:
         best = depth
@@ -354,6 +360,7 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
             continue
         if depth_of(lst) < 2:
             continue
-        items = [build(li, 1) for li in lst.element_children() if li.tag == "li"]
+        items = [_list_item_tree(li, 1, max_depth)
+                 for li in lst.element_children() if li.tag == "li"]
         trees.extend(items)
     return trees

@@ -36,7 +36,8 @@ from exstruct_spark.kernels.a1 import col_index_to_alpha, make_range
 from exstruct_spark.kernels.clusters import merge_rectangles, nonempty_clusters
 from exstruct_spark.kernels.coerce import coerce_scalar
 from exstruct_spark.kernels.colors import cell_background
-from exstruct_spark.kernels.dom import Node, is_hidden, visibility_of
+from exstruct_spark.kernels.dom import (
+    RENDER_INERT, Node, is_hidden, visibility_of)
 
 
 _own_attrs = attrgetter("attrs")  # effective attrs when no <style> rules
@@ -72,16 +73,17 @@ def _table_rows(table: Node) -> list:
     """The <table>'s OWN rows as ``(tr, rowgroup or None, cells)``;
     ``cells`` lazily yields ``(cell, rowspan, colspan, is_header)`` for
     the row's td/th children.  A nested <table> owns its rows (it
-    extracts as its own artifact), so its subtree is skipped.  The cell
-    edit ops (kernels/edits.py) address rows and cells through this
-    enumerator and ``_table_cells`` too."""
+    extracts as its own artifact), so its subtree is skipped, and so is
+    a ``RENDER_INERT`` one (a <template> or <noscript> copy is never
+    rendered).  The cell edit ops (kernels/edits.py) address rows and
+    cells through this enumerator and ``_table_cells`` too."""
     rows = []
     skip_to = -1
     # [1:] drops the table itself (find_all is pre-order including self)
-    for n in table.find_all("tr", "table")[1:]:
+    for n in table.find_all("tr", "table", *RENDER_INERT)[1:]:
         if n.i0 < skip_to:
             continue
-        if n.tag == "table":
+        if n.tag != "tr":
             skip_to = n.i1
             continue
         group = n.parent if n.parent.tag in _ROWGROUPS else None

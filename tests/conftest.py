@@ -32,7 +32,9 @@ def native_parse():
 
 @pytest.fixture(params=["native", "python"])
 def parser(request, monkeypatch):
-    """Runs a test once under each HTML parser ``parse_html`` can use."""
+    """Runs a test once natively (the native parser and text walk) and
+    once in pure Python (``_parse_html_fast`` and ``_text_content_py``),
+    the two builds ``dom`` can run as."""
     from exstruct_spark.kernels import dom
 
     if request.param == "native":
@@ -40,4 +42,5 @@ def parser(request, monkeypatch):
                             request.getfixturevalue("native_parse"))
     else:
         monkeypatch.setattr(dom, "_parse", dom._parse_html_fast)
+        monkeypatch.setattr(dom.Node, "text_content", dom._text_content_py)
     return request.param

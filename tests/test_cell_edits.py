@@ -209,3 +209,27 @@ def test_unmerge_unquoted_spans_keeps_the_tag():
     assert st == ["applied"]
     assert out == ("<table><tr><td>a</td><td>b</td></tr>"
                    "<tr><td></td><td>c</td></tr></table>")
+
+
+def test_template_rows_are_neither_extracted_nor_addressed():
+    """``<tr>``s inside a ``<template>`` child of a ``<table>`` are inert:
+    extraction reports only the rendered row, and no edit address
+    reaches the template's row."""
+    html = ("<table><tr><td>a</td><td>b</td></tr><template><tr><td>INERT"
+            "</td><td>x</td></tr></template></table>")
+    rows = declared_tables(html)[0]["rows"]
+    assert [row["c"] for row in rows] == [{"0": "a", "1": "b"}]
+    out, st = apply_ops(html, [{"op": "set_value", "table": 0, "row": 1,
+                                "col": 0, "value": VALUE}])
+    assert st == ["skipped"] and out == html
+
+
+def test_set_dimensions_styles_a_repeated_row_once():
+    """A row listed twice gets one ``height`` declaration, not a second
+    splice at stale offsets."""
+    html = "<table><tr><td>a</td></tr><tr><td>b</td></tr></table>"
+    out, st = apply_ops(html, [{"op": "set_dimensions", "table": 0,
+                                "rows": [0, 0, 1], "row_height": 5}])
+    assert st == ["applied"]
+    assert out == ('<table><tr style="height:5px"><td>a</td></tr>'
+                   '<tr style="height:5px"><td>b</td></tr></table>')

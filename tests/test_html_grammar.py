@@ -235,14 +235,16 @@ def test_parse_html_raises_instead_of_a_second_grammar():
 
 
 def test_unbuildable_native_falls_back_with_one_warning(tmp_path):
-    """No usable cache directory: the Python parser runs, one WARNING
-    names the reason on stderr, stdout stays clean."""
+    """No usable cache directory: the Python parser and text walk run,
+    one WARNING names the reason on stderr, stdout stays clean."""
     not_a_dir = tmp_path / "cache"
     not_a_dir.write_text("")
     code = ("from exstruct_spark.kernels import dom; "
             "assert dom._native is None and "
             "dom._parse is dom._parse_html_fast; "
-            "dom.parse_html('<p>x</p>')")
+            "assert dom.Node.text_content is dom._text_content_py; "
+            "root = dom.parse_html('<p>x<br>y <script>z</script></p>'); "
+            "assert root.text_content() == 'x y'")
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -277,19 +279,38 @@ def _rich_page(archetype: str) -> dict:
     return build_rich_page(RICH_ARCHETYPES.index(archetype))
 
 
-@pytest.mark.parametrize("doc", ["large_page", "rss_feed", "fallback"])
+def _every_input() -> list:
+    """``(url, raw)`` of every corpus archetype, rich page, adversarial
+    input and non-page route."""
+    from adversarial_pages import ROUTES
+    from exstruct_spark.pages import ARCHETYPES, RICH_ARCHETYPES
+
+    pages = [build_page(i) for i in range(len(ARCHETYPES))]
+    pages += [build_rich_page(i) for i in range(len(RICH_ARCHETYPES))]
+    return ([(p["url"], p["html"]) for p in pages]
+            + [(f"https://adversarial.example/{name}", raw)
+               for name, raw in ADVERSARIAL + ROUTES])
+
+
+@pytest.mark.parametrize("doc", ["large_page", "rss_feed", "fallback",
+                                 "every_input"])
 def test_extracted_tree_is_freed_without_the_cyclic_gc(parser, doc,
                                                        monkeypatch):
     """``extract_document`` releases its parse tree on the HTML route,
-    the feed route and the fallback path: with the cyclic GC off, no
-    ``Node`` outlives the call."""
+    the feed route and the fallback path, and leaves no cyclic garbage
+    on any input: with the cyclic GC off, no ``Node`` outlives the call
+    and a collection afterwards finds nothing to free."""
     from exstruct_spark.kernels import extract
     from perfbench.inputs import large_page
 
-    if doc == "rss_feed":
+    if doc == "every_input":
+        docs = _every_input()
+    elif doc == "rss_feed":
         page = _rich_page("rss_feed")
+        docs = [(page["url"], page["html"])]
     else:
         page = large_page(1, 0)
+        docs = [(page["url"], page["html"])]
     if doc == "fallback":
         def failing(*args, **kwargs):
             raise ValueError("kernel failure")
@@ -298,12 +319,16 @@ def test_extracted_tree_is_freed_without_the_cyclic_gc(parser, doc,
     gc.disable()
     try:
         before = _live_nodes()
-        rec = extract.extract_document(page["url"], page["html"])
+        recs = [extract.extract_document(url, raw) for url, raw in docs]
         after = _live_nodes()
+        garbage = gc.collect()
     finally:
         gc.enable()
-    assert rec["status"] == ("fallback" if doc == "fallback" else "ok")
+    if doc != "every_input":
+        assert recs[0]["status"] == ("fallback" if doc == "fallback"
+                                     else "ok")
     assert after == before
+    assert garbage == 0
 
 
 def test_released_tree_keeps_its_children():

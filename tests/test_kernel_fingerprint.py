@@ -74,7 +74,7 @@ BLESSED = {
     'adversarial:self_closing_slash': 'e0535f44a886c7986aca6cbc8317f7e9b3af9c75184fa9f9b798164a1cc31885',
     'adversarial:stray_angles': '0fb8df3c988f01eb57ebdb8db48b21c28af1ad48222a5ea75c9cdcafb606f400',
     'adversarial:style_close_spaced': '8faf9926bfc9d2525311fa35be3491125d4100a569acb6fbc9927615eb45f0c4',
-    'adversarial:template_rows': '5b6fb5e550efece382e9aca13d126b3a569816bb8c4eca3c064827307e4e320f',
+    'adversarial:template_rows': '38d2dbf2ef916e3e0be53551c4f8bca6410150635164127356d9fd057d4616cd',
     'adversarial:unterminated_attr_quote': '2ec6bb490257606d8d5d49880563021fbd05334f1f009407337855ddd7b20cc8',
     'adversarial:unterminated_comment': '509b0f79f2d7367ba0a260e868b658fb17ea94ad5045ce7574e990c540e39ff7',
     'adversarial:unterminated_quote_closed_later': 'c7a3137c43a525dd3f9350afed1ae91ea7d64073c830594afab41e482394aa36',
