@@ -173,6 +173,10 @@ _TEXT_CASES = [
     ("template_rows",
      "<table><tr><td>a</td><td>b</td></tr><template><tr><td>INERT</td>"
      "<td>x</td></tr></template></table>"),
+    ("duplicate_attrs",
+     "<table><tr><td style='background:red' style='background:blue'>x</td>"
+     "<td><a href='/first' href='/second'>y</a></td></tr></table>"
+     "<p style='color:red' style='display:none'>first wins: shown</p>"),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
