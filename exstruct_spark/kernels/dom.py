@@ -344,6 +344,8 @@ def _parse_attrs(raw: str) -> dict:
     attrs: dict = {}
     for m in _ATTR_RE.finditer(raw):
         name = m.group(1).lower()
+        if name in attrs:
+            continue  # a repeated attribute is ignored: the first wins
         val = m.group(2)
         if val is None:
             attrs[name] = None

@@ -64,7 +64,7 @@ BLESSED = {
     'adversarial:comment_in_script': 'aa5513c72b1e6f0a045084d7c6a3a373984fad793708f9a37d8c2d10519ca940',
     'adversarial:comment_in_style': '36c7e54ce3d6a1bf798b08dec7e879aa41466c822b8f4af3043d0b37fa21bbd8',
     'adversarial:deep_nesting': 'a69eab4eb3c7a9bc8b5777ef4c9f76fb3c4fac89baa7c733fede21ba4db6296f',
-    'adversarial:duplicate_attrs': '983fbda706465d1445d1d2335d2c4ff5a749c739109d033c214c081e04ccb347',
+    'adversarial:duplicate_attrs': '3956e3da8fd8f5fdc31566ac0a371e862826fc49c84743626656d2707dbfb083',
     'adversarial:empty': 'c77a45f4fadf47f1b8083b09c5c4cd4660cbae404c30971d1d0c29191e849152',
     'adversarial:entities': '338f59206561a29775401636d671fd843af46c12a839cf1df37fa0e09cc8590a',
     'adversarial:huge_attribute': '2231fc0ead614f8ce3b55bfbc3ac08cb3ba103703ac5c3b9b716683ac2ba574e',
