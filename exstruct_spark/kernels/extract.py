@@ -62,7 +62,8 @@ from exstruct_spark.kernels.structured import (
     from_microdata,
     from_rdfa,
 )
-from exstruct_spark.kernels.tables import detect_grid_candidates, extract_table
+from exstruct_spark.kernels.tables import (
+    detect_grid_candidates, extract_table, is_table_like)
 
 _DEFAULT_OPTS = ExtractOptions()
 
@@ -223,6 +224,27 @@ def _node_or_ancestor_hidden(node: Node, css) -> bool:
             return True
         n = n.parent
     return False
+
+
+def declared_tables(nodes: list, cfg, alpha_keys: bool = False, css=None,
+                    anchored: bool = False):
+    """The declared table artifacts of ``nodes`` (a document's
+    ``is_table_like`` nodes in rendered-walk order) as ``(node,
+    artifact, anchors)``, in artifact order.  A hidden table (attr,
+    inline, or class-resolved display:none on itself or an ancestor) is
+    not rendered — the browser-visible contract — and an empty one is no
+    artifact.  With ``anchored``, ``anchors`` is the grid's address map
+    (``tables._expand_grid``), else None.  Extraction and the cell edit
+    ops (kernels/edits.py) both number tables through this loop."""
+    n = 0
+    for node in nodes:
+        if _node_or_ancestor_hidden(node, css):
+            continue
+        anchors = ([], {}) if anchored else None
+        art = extract_table(node, n, cfg, alpha_keys, css, anchors)
+        if art is not None:
+            n += 1
+            yield node, art, anchors
 
 
 _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
@@ -673,27 +695,19 @@ def extract_document(
                         bucket.append((doc_idx, n))
                     elif bucket is table_bucket:
                         bucket.append(n)
-                        if ((n.attrs.get("role") or "").strip().lower()
-                                not in ("presentation", "none")):
-                            # role=presentation/none is the author's own
-                            # declaration that this <table> is LAYOUT,
-                            # not data (the table-layout-era idiom) — its
-                            # content flows as ordinary text instead
+                        if is_table_like(n):
                             table_like.append(n)
                     else:
                         bucket.append(n)
                 attrs = n.attrs
                 if attrs:
-                    # normalized exactly like detect_grid_candidates /
-                    # extract_table so all three role sites agree (an
-                    # element with role="Table" / " table " must be
-                    # collected by whoever claims it)
                     if "itemscope" in attrs:
                         micro_scopes.append(n)
                     if "typeof" in attrs:
                         rdfa_scopes.append(n)
-                    role = (attrs.get("role") or "").strip().lower()
-                    if role in ("table", "grid") and n.tag != "table":
+                    # the ARIA form (a <table> was judged above)
+                    if ("role" in attrs and bucket is not table_bucket
+                            and is_table_like(n)):
                         table_like.append(n)
                     cls = attrs.get("class")
                     if cls:
@@ -764,18 +778,8 @@ def extract_document(
                 for fig in groups["figure"]:
                     for t in fig.find_all("table"):
                         fig_of_table[id(t)] = id(fig)
-                for t_node in table_like:
-                    # a hidden table (attr, inline, or class-resolved
-                    # display:none on itself or an ancestor) is not
-                    # rendered — the browser-visible contract
-                    if _node_or_ancestor_hidden(t_node, css):
-                        continue
-                    art = extract_table(
-                        t_node, len(tables), opts.detection, opts.alpha_keys,
-                        css,
-                    )
-                    if art is None:
-                        continue
+                for t_node, art, _ in declared_tables(
+                        table_like, opts.detection, opts.alpha_keys, css):
                     truncated = truncated or bool(art.get("truncated"))
                     if id(t_node) in fig_of_table:
                         # the whole artifact: charts bind series ranges to

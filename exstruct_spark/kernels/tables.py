@@ -75,8 +75,7 @@ def _table_rows(table: Node) -> list:
     the row's td/th children.  A nested <table> owns its rows (it
     extracts as its own artifact), so its subtree is skipped, and so is
     a ``RENDER_INERT`` one (a <template> or <noscript> copy is never
-    rendered).  The cell edit ops (kernels/edits.py) address rows and
-    cells through this enumerator and ``_table_cells`` too."""
+    rendered)."""
     rows = []
     skip_to = -1
     # [1:] drops the table itself (find_all is pre-order including self)
@@ -89,6 +88,18 @@ def _table_rows(table: Node) -> list:
         group = n.parent if n.parent.tag in _ROWGROUPS else None
         rows.append((n, group, _table_cells(n)))
     return rows
+
+
+def is_table_like(node: Node) -> bool:
+    """Whether ``node`` declares a table: a ``<table>`` that is not
+    ``role=presentation``/``none`` (the author's mark of a LAYOUT table,
+    whose content flows as ordinary text), or ``role=table``/``grid`` on
+    any other element (the ARIA form).  The one rule behind extraction's
+    table walk and the cell edits' table index."""
+    role = _role(node)
+    if node.tag == "table":
+        return role not in ("presentation", "none")
+    return role in ("table", "grid")
 
 
 def _aria_find(node: Node, roles: tuple, eff) -> list:
@@ -152,7 +163,7 @@ def _col_paint(table: Node, cfg: DetectionConfig, css=None) -> list:
 
 
 def _expand_grid(rows: list, col_bg: list, has_links: bool,
-                 cfg: DetectionConfig, css=None):
+                 cfg: DetectionConfig, css=None, anchors=None):
     """Occupancy-grid expansion of one declared table's rows (from
     ``_table_rows`` or ``_aria_rows``).
 
@@ -164,6 +175,13 @@ def _expand_grid(rows: list, col_bg: list, has_links: bool,
     of (r, c) that came from header cells, and ``colors`` maps (r, c) ->
     normalized background color (the colors_map source, reference
     core/cells.py:277-310).
+
+    ``anchors``, when given as ``(rows, cells)`` (an empty list and an
+    empty dict), receives the address map of the grid: ``rows[r]`` is
+    the row node of grid row ``r`` and ``cells[(r, c)]`` is ``(cell
+    node, rowspan, colspan)`` for each placed, non-blank anchor cell,
+    spans capped as ``merged_items`` caps them.  The cell edit ops
+    (kernels/edits.py) address cells through it.
     """
     # class-resolved style (kernels/css.py) falls back to the bare attrs
     # when no <style> rules exist — the common case stays an identity read
@@ -203,14 +221,14 @@ def _expand_grid(rows: list, col_bg: list, has_links: bool,
         vis = visibility_of(r_eff)
         if not is_hidden(r_eff) and vis != "collapse":
             kept.append((row_cells, r_eff, group_blank or vis == "hidden",
-                         group_bg))
+                         group_bg, row))
     truncated = len(kept) > cfg.max_rows
     kept = kept[: cfg.max_rows]
     n_cols = 0
     empty_run = 0
     n_rows_scanned = 0
     span_floor = -1  # deepest row still covered by an active rowspan
-    for r, (row_cells, r_eff, row_blank, group_bg) in enumerate(kept):
+    for r, (row_cells, r_eff, row_blank, group_bg, _row) in enumerate(kept):
         n_rows_scanned = r + 1
         row_had_content = False
         # paint order cell > row > rowgroup > column: cells with no
@@ -281,6 +299,10 @@ def _expand_grid(rows: list, col_bg: list, has_links: bool,
                     for cc in range(c, c2 + 1):
                         if (rr, cc) != (r, c):
                             occupied.add((rr, cc))
+            if anchors is not None and not blank:
+                anchors[1][(r, c)] = (
+                    cell, min(rowspan, cfg.max_rows - r),
+                    min(colspan, cfg.max_cols - c))
             n_cols = max(n_cols, c + colspan)
             c += colspan
         # W3 empty-run early termination (the reference stops scanning a
@@ -291,6 +313,8 @@ def _expand_grid(rows: list, col_bg: list, has_links: bool,
         if empty_run >= cfg.max_empty_run:
             truncated = True
             break
+    if anchors is not None:
+        anchors[0].extend(k[4] for k in kept[:n_rows_scanned])
     return (
         cells, merged_items, links, th_cells, colors,
         n_rows_scanned, min(n_cols, cfg.max_cols), truncated,
@@ -385,12 +409,13 @@ def score_candidate(
 
 def extract_table(
     table: Node, index: int, cfg: DetectionConfig, alpha_keys: bool = False,
-    css=None,
+    css=None, anchors=None,
 ) -> Optional[dict]:
     """One <table> element — or one ARIA ``role="table"``/``grid``
     container (G7 declared-table twin) — -> table artifact dict (or None
     if empty).  Dispatch is on the node itself, so callers feed both
-    kinds through one loop in document order."""
+    kinds through one loop in document order.  ``anchors`` is passed to
+    ``_expand_grid``."""
     # a native <table> keeps the tr/td walk even when it redundantly
     # declares role="table"/"grid" (very common ARIA pattern on real
     # pages) — the ARIA row/cell walk only applies to non-table
@@ -404,7 +429,7 @@ def extract_table(
         cells, merged_items, links, th_cells, colors,
         n_rows, n_cols, truncated,
     ) = _expand_grid(rows, col_bg, table.find_first("a") is not None,
-                     cfg, css)
+                     cfg, css, anchors)
     if not cells:
         return None
     # the direct <th> signal counts only when row 0 consists ENTIRELY of
@@ -703,9 +728,7 @@ def detect_grid_candidates(
             for inner in node.iter():
                 claimed.add(id(inner))
             continue
-        if (node.attrs.get("role") or "").strip().lower() in (
-            "table", "grid",
-        ):
+        if is_table_like(node):
             # ARIA-declared tables belong to the DECLARED path
             # (extract_table via _aria_rows) — detection must not
             # re-claim their subtree as a heuristic grid

@@ -117,11 +117,13 @@ TOOLS = [
     },
     {
         "name": "edit_document",
-        "description": "Apply cell-level edit ops (set_value, set_link, "
-                       "set_fill_color, add_row, delete_row) to an HTML "
-                       "document; returns the patched HTML and per-op "
-                       "applied/skipped statuses (the reference's "
-                       "workbook-edit tool family, web-document form).",
+        # "{ops}" is filled from the live op table (_tool_list)
+        "description": "Apply cell-level edit ops ({ops}) to an HTML "
+                       "document, addressed (table, row, col) as the "
+                       "extraction reports each cell; returns the "
+                       "patched HTML and per-op applied/skipped statuses "
+                       "(the reference's workbook-edit tool family, "
+                       "web-document form).",
         "inputSchema": {
             "type": "object",
             "properties": {
@@ -497,6 +499,18 @@ def _op_registry() -> dict:
     return out
 
 
+def _tool_list() -> list:
+    """``TOOLS`` with edit_document's op names read from ``edits._OPS``,
+    so its description cannot drift from the ops it accepts (read on
+    ``tools/list``, not at start-up, which stays free of kernel
+    imports)."""
+    from exstruct_spark.kernels import edits
+
+    ops = ", ".join(edits._OPS)
+    return [dict(t, description=t["description"].format(ops=ops))
+            if t["name"] == "edit_document" else t for t in TOOLS]
+
+
 def _call_list_ops(args: dict) -> dict:
     ops = _op_registry()
     return {"ops": [{"op": o["op"],
@@ -580,7 +594,7 @@ def handle(msg: dict):
         return None
     if method == "tools/list":
         return {"jsonrpc": "2.0", "id": msg_id,
-                "result": {"tools": TOOLS}}
+                "result": {"tools": _tool_list()}}
     if method == "tools/call":
         params = msg.get("params") or {}
         name = params.get("name")
