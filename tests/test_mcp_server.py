@@ -41,6 +41,12 @@ def test_mcp_handshake_and_tools():
                      "extract_file", "validate_input", "get_runtime_info",
                      "list_ops", "describe_op", "read_links_map",
                      "read_colors_map"]
+    # the edit tool's description lists every op it accepts
+    from exstruct_spark.kernels.edits import _OPS
+
+    (edit,) = [t for t in tools["result"]["tools"]
+               if t["name"] == "edit_document"]
+    assert all(op in edit["description"] for op in _OPS)
     assert err["error"]["code"] == -32601
 
 
