@@ -138,6 +138,32 @@ _CHART_MARKER_NEAR_MISSES = (
     " 2}]}}</script>"
 )
 
+# chart calls that only a lexer reads right: real configs inside a
+# comment, a string and a regex literal; configs passed by position
+# (a variable before a settings object, a variable before a callback, a
+# nested call after a selector); a comment before the gviz no-header
+# flag; a commented-out draw above the real one.  One script each.
+CHART_CODE_VIEW_SCRIPTS = (
+    "/* new Chart(ctx, {type: 'bar', data: {labels: ['a'], datasets:"
+    " [{label: 'commented', data: [1]}]}}) */ var ready = true;",
+    "var help = \"call c3.generate({data: {columns: [['quoted', 1, 2]]}})\";"
+    " // new Dygraph(el, 'x,A\\n1,2\\n', {title: 'line comment'});",
+    "var re = /Plotly.newPlot('d', [{y: [1, 2]}])/; var s ="
+    " 'it'.replace(/'/g, '');",
+    "var option = {series: [{name: 'byvar', type: 'bar', data: [3, 4]}]};"
+    " myChart.setOption(option, {notMerge: true});",
+    "var cfg = {title: {text: 'HC'}, series: [{name: 'cb', data: [5]}]};"
+    " Highcharts.chart('c', cfg, function (ch) { ch.redraw(); });",
+    "new frappe.Chart('#f', Object.assign({}, base, {data: {labels: ['u'],"
+    " datasets: [{name: 'fr', values: [6]}]}}));",
+    "var data = google.visualization.arrayToDataTable([['a', 1], ['b', 2]],"
+    " /* first row is data */ true); var chart = new google.visualization"
+    ".ColumnChart(el); chart.draw(data, {title: 'Flag'});",
+    "var data = google.visualization.arrayToDataTable([['k', 'n'],"
+    " ['x', 7]]); var chart = new google.visualization.LineChart(el);\n"
+    "// chart.draw(data, {title: 'Old'});\nchart.draw(data, {title: 'New'});",
+)
+
 _TEXT_CASES = [
     ("comment_in_script",
      "<script>var s = '<!--'; x()</script>" + _BODY + "<!-- real -->"),
@@ -177,6 +203,9 @@ _TEXT_CASES = [
      "<table><tr><td style='background:red' style='background:blue'>x</td>"
      "<td><a href='/first' href='/second'>y</a></td></tr></table>"
      "<p style='color:red' style='display:none'>first wins: shown</p>"),
+    ("chart_code_view",
+     "".join("<figure><canvas></canvas><script>" + js + "</script></figure>"
+             for js in CHART_CODE_VIEW_SCRIPTS)),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
