@@ -22,13 +22,14 @@ loop over it.
     common case on crawled pages, costs one substring search per
     literal and no regex scan;
   * **finders** — a marker regex plus one rule naming the argument that
-    carries the data: the first/last ``{...}`` of a constructor in the
-    ``_MARKER_RE`` family (``new Chart``, ``.setOption``, Highcharts,
-    ApexCharts, amCharts, C3/billboard, FusionCharts, Frappe), Plotly's
-    trace array and the layout after it, argument 1 for Chartist,
-    Vega-Lite and Dygraph (argument 2 its options), argument 0 of
-    ``arrayToDataTable``, the ``addColumn``/``addRows`` DataTable
-    idiom, and a whole-script Vega-Lite JSON spec;
+    carries the data: argument 0 or the last non-callback argument of a
+    constructor in the ``_MARKER_RE`` family (``new Chart``,
+    ``.setOption``, Highcharts, ApexCharts, amCharts, C3/billboard,
+    FusionCharts, Frappe), Plotly's trace array and the layout after it,
+    argument 1 for Chartist, Vega-Lite and Dygraph (argument 2 its
+    options), argument 0 of ``arrayToDataTable``, the
+    ``addColumn``/``addRows`` DataTable idiom, and a whole-script
+    Vega-Lite JSON spec;
   * **normalizers** (``_from_*``) — each dialect's config shape into the
     engine's intermediate chart shape {chart_type, title, labels,
     series: [(name, [values])], y_axis_title?}, incl. the modern
@@ -38,13 +39,21 @@ loop over it.
     type and ``draw(data, options)`` options, bound through the table's
     variable.
 
-Underneath, the finders share one tokenizer:
+Underneath, the finders share one lexer and one grammar:
 
-  * ``_call_args``: one walk over a chart call's arguments, the direct
-    analogue of ``_split_top_level_args`` — depth + string/comment/
-    regex-literal state machine, callbacks (``function`` / ``=>``)
-    consumed whole, commas split at paren and bracket depth 0, and the
-    balanced ``{...}`` spans of each argument recorded on the way;
+  * ``_code_view``: the script lexed once, after the first dialect gate
+    hits — a string of the script's length in which comments are spaces
+    and the bodies of strings and regex literals are spaces between
+    their kept delimiters.  It is the only code that knows JS string,
+    comment and regex-literal syntax; everything below reads structure
+    from the view, so a marker, a brace or a comma inside a comment or a
+    string is not there, and reads string values from the script at the
+    same offsets;
+  * ``_call_args``: one walk over a chart call's arguments in the view,
+    the direct analogue of ``_split_top_level_args`` — callbacks
+    (``function`` / ``=>``) consumed whole, commas split at paren and
+    bracket depth 0, and the balanced ``{...}`` spans of each argument
+    recorded on the way;
   * ``_arg_value``: one argument's value — a literal parses in place; a
     bare identifier (``const cfg = {...}; new Chart(ctx, cfg)``)
     resolves to its nearest object/array assignment, in every dialect;
@@ -75,7 +84,7 @@ _MARKER_RE = re.compile(
     r"|\b(?:c3|bb)\s*\.\s*generate\s*\("  # config is the ONLY argument
     r"|new\s+FusionCharts\s*\("           # ditto
     r"|am4core\s*\.\s*createFromConfig\s*\("  # config is the FIRST arg
-    r"|new\s+frappe\s*\.\s*Chart\s*\("  # (selector, cfg): first OBJECT
+    r"|new\s+frappe\s*\.\s*Chart\s*\("  # (selector, cfg): the LAST
 )
 
 # Plotly's config is an ARRAY of trace objects (not a single {...}), so
@@ -83,185 +92,168 @@ _MARKER_RE = re.compile(
 _PLOTLY_RE = re.compile(r"Plotly\s*\.\s*(?:newPlot|react|plot)\s*\(")
 
 _NUM_START = set("-+.0123456789")
+_NUM_RE = re.compile(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?")
 _IDENT_RE = re.compile(r"[A-Za-z_$][A-Za-z0-9_$]*")
-_WS_AND_COMMENTS_RE = re.compile(r"(?:\s+|//[^\n]*|/\*.*?\*/)+", re.S)
+_WS_RE = re.compile(r"\s+")
+_QUOTES = "\"'`"
 
-
-def _skip_ws(s: str, i: int) -> int:
-    m = _WS_AND_COMMENTS_RE.match(s, i)
-    return m.end() if m else i
-
-
-def _scan_string(s: str, i: int) -> int:
-    """i at the opening quote -> index just past the closing quote.
-    Backslash escapes (the JS rule; the reference's SERIES dialect used
-    quote-doubling instead — same state machine, different escape)."""
-    q = s[i]
-    i += 1
-    n = len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if ch == q:
-            return i + 1
-        i += 1
-    return n  # unterminated: consume to end (fallback-not-fail)
-
-
-def _scan_regex(s: str, i: int) -> int:
-    """i at the '/' opening a JS regex literal -> index past the closing
-    '/' and its flags.  Char classes may contain unescaped '/'; an
-    unterminated-on-this-line literal bails at the newline (then it was
-    division after all)."""
-    i += 1
-    n = len(s)
-    in_class = False
-    while i < n:
-        ch = s[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if ch == "[":
-            in_class = True
-        elif ch == "]":
-            in_class = False
-        elif ch == "/" and not in_class:
-            i += 1
-            while i < n and s[i].isalpha():
-                i += 1
-            return i
-        elif ch == "\n":
-            return i
-        i += 1
-    return n
-
-
-# a '/' after one of these (or at expression start) begins a REGEX
-# LITERAL, not division — the standard JS lexing heuristic.  Without it a
-# callback like .replace(/\}/g, '') corrupts the brace depth (a confirmed
-# executor-hang in review).
+# the next string (closed, with its backslash escapes), line comment, or
+# lone quote (an unterminated string) or '/' (a block comment, a regex
+# literal or division)
+_LEX_RE = re.compile(
+    r"'[^'\\]*(?:\\[\s\S][^'\\]*)*'"
+    r'|"[^"\\]*(?:\\[\s\S][^"\\]*)*"'
+    r"|`[^`\\]*(?:\\[\s\S][^`\\]*)*`"
+    r"|//[^\n]*|[\"'`/]")
+# a regex-literal body after its opening '/': a character class may hold
+# '/', and a newline ends an unterminated literal (then it was division
+# after all)
+_REGEX_BODY_RE = re.compile(
+    r"(?:[^\\/\[\n]+|\\[\s\S]?|\[(?:[^\\\]\n]+|\\[\s\S]?)*\]?)*")
+# a '/' after one of these (or at the start of the script) begins a
+# regex literal, not division: the standard JS lexing heuristic.
+# Without it a callback like .replace(/\}/g, '') corrupts the brace
+# depth (it once hung an executor).
 _REGEX_PREV = set("([{,=:;!&|?+-*/%<>~^")
 
 
-def _slash(s: str, i: int, prev) -> int:
-    """Handle '/' at i given the previous significant char: comment,
-    regex literal, or division.  Always advances."""
-    j = _skip_ws(s, i)
-    if j > i:
-        return j  # comment (or trailing ws)
-    if prev is None or prev in _REGEX_PREV:
-        j = _scan_regex(s, i)
-        return j if j > i else i + 1
-    return i + 1  # division operator
-
-
-def _extract_balanced(s: str, i: int) -> Optional[str]:
-    """i at '{' -> the balanced object-literal text, or None if unmatched.
-    Depth + string/regex/comment awareness, like
-    _extract_series_args_text."""
-    if i >= len(s) or s[i] != "{":
-        return None
-    depth = 0
-    start = i
+def _code_view(s: str) -> str:
+    """The script as its code alone: a string of the same length in
+    which comments are spaces and the bodies of strings and regex
+    literals are spaces between their kept delimiters, so an offset into
+    the view is an offset into ``s``.  The one JS lexer of the module:
+    backslash escapes, a ``/`` read as a regex literal after one of
+    ``_REGEX_PREV`` (a comment or a regex literal counts as ``/``, a
+    string as a quote) or at the start, and as division otherwise, an
+    unterminated string running to the end, an unterminated regex
+    literal to the end of its line, and an unclosed ``/*`` read as a
+    lone ``/``.  The previous significant character is tracked on the
+    way, so the view costs one pass."""
+    parts: list = []
+    prev = None  # the previous significant character
+    start = pos = 0  # s[start:] not yet in parts; the scan resumes at pos
     n = len(s)
-    prev = None
-    while i < n:
-        ch = s[i]
-        if ch in "\"'`":
-            i = _scan_string(s, i)
+    last_close = s.rfind("*/")  # a "/*" well before it is a comment
+    while True:
+        m = _LEX_RE.search(s, pos)
+        if m is None:
+            break
+        k, e = m.span()
+        ch = s[k]
+        if ch != "/":
+            if e - k == 1:  # an unterminated string
+                parts += (s[start:k], ch, " " * (n - k - 1))
+                start = n
+                break
+            parts += (s[start:k], ch, " " * (e - k - 2), ch)
             prev = '"'
-            continue
-        if ch == "/":
-            i = _slash(s, i, prev)
+        elif e - k > 1 or (s.startswith("*", e) and last_close > e):
+            if e - k == 1:  # a closed block comment
+                e = s.find("*/", e + 1) + 2
+            parts += (s[start:k], " " * (e - k))
             prev = "/"
-            continue
-        if ch == "{":
-            depth += 1
-        elif ch == "}":
-            depth -= 1
-            if depth == 0:
-                return s[start : i + 1]
-        if not ch.isspace():
-            prev = ch
-        i += 1
-    return None
+        else:
+            # code since the last token may hold the previous
+            # significant character (a division's '/' included)
+            j = k - 1
+            while j >= start and s[j].isspace():
+                j -= 1
+            if j >= start:
+                prev = s[j]
+            if prev is not None and prev not in _REGEX_PREV:
+                pos = e  # division: stays in the code
+                continue
+            b = _REGEX_BODY_RE.match(s, e).end()
+            parts += (s[start:k], "/", " " * (b - e))
+            e = b
+            if b < n and s[b] == "/":
+                e = b + 1
+                while e < n and s[e].isalpha():
+                    e += 1
+                parts.append(s[b:e])
+            prev = "/"
+        start = pos = e
+    parts.append(s[start:])
+    return "".join(parts)
 
 
-def _call_args(s: str, i: int) -> list:
-    """``i`` just past a call's ``(`` -> one ``(start, end, objects)`` per
-    top-level argument, the call's own ``)`` (or the end of the script)
-    ending the walk.  ``objects`` are the ``(start, end)`` spans of the
-    balanced ``{...}`` literals in the argument, nested calls included
-    (``Highcharts.merge(base, {...})``).  Strings, comments and regex
-    literals are skipped, a ``function``/``=>`` value is consumed whole,
-    and commas split only at paren and bracket depth 0: the
-    ``_split_top_level_args`` of the reference's SERIES tokenizer.  An
-    unmatched ``{`` runs its argument to the end of the script; an empty
-    trailing argument (``f(a, )``) is dropped."""
-    n = len(s)
+def _skip_ws(v: str, i: int) -> int:
+    m = _WS_RE.match(v, i)
+    return m.end() if m else i
+
+
+def _string_end(v: str, i: int) -> int:
+    """``i`` at a string's opening quote in the code view -> the index
+    past its closing quote (the end of the script when unterminated)."""
+    j = v.find(v[i], i + 1)
+    return len(v) if j < 0 else j + 1
+
+
+# what ends a call argument or a skipped value, or starts a callback
+_ARG_TOKEN_RE = re.compile(r"[(){}\[\],]|=>|(?<![\w$])function(?![\w$])")
+_NEST_RE = re.compile(r"[(){}\[\],]")
+_BRACE_RE = re.compile(r"[{}]")
+# an argument that never carries a config: a callback (``function …``,
+# ``(a, b) => …``, ``a => …``) or a number (amCharts' ``makeChart(div,
+# cfg, delay)``)
+_NOT_CONFIG_RE = re.compile(
+    r"\s*(?:function(?![\w$])|(?:\([^()]*\)|[\w$]+)\s*=>|[-+]?\.?\d)")
+
+
+def _call_args(v: str, i: int) -> list:
+    """``i`` just past a call's ``(`` in the code view -> one ``(start,
+    end, objects)`` per top-level argument, the call's own ``)`` (or the
+    end of the script) ending the walk.  ``objects`` are the ``(start,
+    end)`` spans of the balanced ``{...}`` literals in the argument,
+    nested calls included (``Highcharts.merge(base, {...})``).  A
+    ``function``/``=>`` value is consumed whole, and commas split only at
+    paren and bracket depth 0: the ``_split_top_level_args`` of the
+    reference's SERIES tokenizer.  An unmatched ``{`` runs its argument to
+    the end of the script; an empty trailing argument (``f(a, )``) is
+    dropped."""
     args: list = []
     start, objects = i, []
     parens = brackets = 0
-    prev = None
-    while i < n:
-        ch = s[i]
-        if ch in "\"'`":
-            i = _scan_string(s, i)
-            prev = '"'
-            continue
-        if ch == "/":
-            i = _slash(s, i, prev)
-            prev = "/"
-            continue
-        # a callback ARGUMENT (Highcharts.chart('c', cfg, function(){…})
-        # or an arrow) is not a config object: consume the whole
-        # function expression, body braces and all (review r3 #2)
-        if (
-            ch == "f"
-            and s.startswith("function", i)
-            and not (prev and (prev.isalnum() or prev in "_$"))
-            and _IDENT_RE.match(s, i).group(0) == "function"
-        ):
-            i = max(_skip_function_value(s, i), i + 1)
-            prev = ")"
-            continue
-        if ch == "=" and s[i + 1 : i + 2] == ">":
-            i = max(_skip_function_value(s, i), i + 2)
-            prev = ")"
-            continue
-        if ch == "{":
-            obj = _extract_balanced(s, i)
-            if obj is None:
-                i = n
+    while True:
+        m = _ARG_TOKEN_RE.search(v, i)
+        if m is None:
+            i = len(v)
+            break
+        k, i = m.span()
+        tok = m.group()
+        if tok == "{":  # only braces count up to the matching '}'
+            depth = 0
+            for b in _BRACE_RE.finditer(v, k):
+                depth += 1 if b.group() == "{" else -1
+                if not depth:
+                    break
+            else:
+                i = len(v)
                 break
-            objects.append((i, i + len(obj)))
-            i += len(obj)
-            prev = "}"
-            continue
-        if ch == ")":
+            i = b.end()
+            objects.append((k, i))
+        elif tok == "function" or tok == "=>":
+            i = max(_skip_function_value(v, k), i)
+        elif tok == ")":
             if not parens:
+                i = k
                 break
             parens -= 1
-        elif ch == "(":
+        elif tok == "(":
             parens += 1
-        elif ch == "[":
+        elif tok == "[":
             brackets += 1
-        elif ch == "]":
+        elif tok == "]":
             brackets -= brackets > 0
-        elif ch == "," and not parens and not brackets:
-            args.append((start, i, objects))
-            start, objects = i + 1, []
-        if not ch.isspace():
-            prev = ch
-        i += 1
-    if objects or _skip_ws(s, start) < i:
+        elif tok == "," and not parens and not brackets:
+            args.append((start, k, objects))
+            start, objects = i, []
+    if objects or _skip_ws(v, start) < i:
         args.append((start, i, objects))
     return args
 
 
-def _arg_value(s: str, arg: tuple, call_pos: int):
+def _arg_value(s: str, v: str, arg: tuple, call_pos: int):
     """One argument's value.  A ``{``/``[``/string literal parses in
     place; a bare identifier resolves to the nearest ``name = {``/``[``
     assignment of that name (not of a property ``obj.name``) above the
@@ -270,31 +262,31 @@ def _arg_value(s: str, arg: tuple, call_pos: int):
     its inline twin.  Anything else (a call, a member path, an
     expression) is None."""
     start, end, _ = arg
-    i = _skip_ws(s, start)
+    i = _skip_ws(v, start)
     if i >= end:
         return None
-    if s[i] in "{[\"'`":
-        return parse_js_value(s, i)[0]
-    m = _IDENT_RE.match(s, i)
-    if m is None or _skip_ws(s, m.end()) < end:
+    if v[i] in "{[\"'`":
+        return _parse_value(s, v, i)[0]
+    m = _IDENT_RE.match(v, i)
+    if m is None or _skip_ws(v, m.end()) < end:
         return None
     best = None
     # (?<![\w$.]): the name itself, not a longer name or a property
     # (``state.cfg = …``); a ``$`` name has no ``\b`` in front of it
     for am in re.finditer(
-            r"(?<![\w$.])" + re.escape(m.group(0)) + r"\s*=\s*[{\[]", s):
+            r"(?<![\w$.])" + re.escape(m.group(0)) + r"\s*=\s*[{\[]", v):
         if am.start() < call_pos or best is None:
             best = am
         if am.start() >= call_pos:
             break
-    return None if best is None else parse_js_value(s, best.end() - 1)[0]
+    return None if best is None else _parse_value(s, v, best.end() - 1)[0]
 
 
-def _nth_value(s: str, args: list, k: int, call_pos: int):
+def _nth_value(s: str, v: str, args: list, k: int, call_pos: int):
     """``_arg_value`` of argument ``k`` (negative counts from the end);
     None when the call has no such argument."""
     if -len(args) <= k < len(args):
-        return _arg_value(s, args[k], call_pos)
+        return _arg_value(s, v, args[k], call_pos)
     return None
 
 
@@ -302,65 +294,49 @@ def _nth_value(s: str, args: list, k: int, call_pos: int):
 # setOption argument is notMerge/lazyUpdate settings); the rest take the
 # LAST (new Chart(ctx, cfg), new ApexCharts(el, cfg), ...)
 _FIRST_ARG_MARKERS = ("setOption", "highcharts", "generate", "FusionCharts",
-                      "createFromConfig", "frappe")
+                      "createFromConfig")
 
 
-def find_config_objects(script_text: str) -> list:
+def find_config_objects(s: str, v: str) -> list:
     """``(cfg,)`` per chart-constructor call, ``cfg`` the parsed config
-    dict: the first or last ``{...}`` literal among its arguments
-    (``_FIRST_ARG_MARKERS`` decides which), else the first or last
-    argument read as a variable."""
-    s = script_text or ""
+    dict: argument 0 for ``_FIRST_ARG_MARKERS``, else the last argument
+    that is not a callback or a number.  A literal or a bare identifier is read by
+    ``_arg_value``; a nested call (``Highcharts.merge(base, {...})``)
+    gives its own first or last ``{...}`` literal."""
     out = []
-    for m in _MARKER_RE.finditer(s):
+    for m in _MARKER_RE.finditer(v):
         k = 0 if any(w in m.group(0) for w in _FIRST_ARG_MARKERS) else -1
-        args = _call_args(s, m.end())
-        objects = [span for _, _, objs in args for span in objs]
-        if objects:
-            a, b = objects[k]
-            cfg = parse_js_value(s[a:b])[0]
-        else:
-            cfg = _nth_value(s, args, k, m.start())
+        args = _call_args(v, m.end())
+        if k:
+            args = [a for a in args
+                    if not _NOT_CONFIG_RE.match(v, a[0], a[1])]
+        if not args:
+            continue
+        arg = args[k]
+        cfg = _arg_value(s, v, arg, m.start())
+        if cfg is None and arg[2]:
+            cfg = _parse_value(s, v, arg[2][k][0])[0]
         if isinstance(cfg, dict):
             out.append((cfg,))
     return out
 
 
-def _skip_function_value(s: str, i: int, prev=None) -> int:
-    """Consume a callback value (function/arrow) as a balanced token run
-    up to the next top-level ',' or closing '}' / ']'.  May return i
+def _skip_function_value(v: str, i: int) -> int:
+    """Consume a value the parser does not read (a function, an arrow, a
+    call, a stray token) in the code view as a balanced run up to the
+    next top-level ',' or closing ')', '}' or ']'.  May return i
     unchanged when already AT a top-level terminator — callers needing
-    guaranteed progress must advance themselves.
-
-    ``prev`` seeds the previous-significant-char context for the leading
-    character: the stray-token fallback passes a value-like char so a '/'
-    that FOLLOWS a parsed value lexes as division, not a regex literal
-    (ADVICE r3: data: [10/2, 4] must lose only the unparseable element,
-    not swallow everything to the next '/'/newline)."""
+    guaranteed progress must advance themselves."""
     depth = 0
-    n = len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "\"'`":
-            i = _scan_string(s, i)
-            prev = '"'
-            continue
-        if ch == "/":
-            i = _slash(s, i, prev)
-            prev = "/"
-            continue
+    for m in _NEST_RE.finditer(v, i):
+        ch = m.group()
         if ch in "({[":
             depth += 1
-        elif ch in ")}]":
-            if depth == 0:
-                return i
+        elif not depth:
+            return m.start()
+        elif ch != ",":
             depth -= 1
-        elif ch == "," and depth == 0:
-            return i
-        if not ch.isspace():
-            prev = ch
-        i += 1
-    return n
+    return len(v)
 
 
 _JS_ESCAPES = {
@@ -372,6 +348,8 @@ _JS_ESCAPES = {
 def _decode_js_string(body: str) -> str:
     """Decode JS string escapes: named escapes, \\uXXXX, \\u{X..}, \\xXX;
     an unknown escape yields the bare char (the JS rule, so \\q -> q)."""
+    if "\\" not in body:
+        return body
     out: list = []
     i = 0
     n = len(body)
@@ -417,97 +395,101 @@ def _decode_js_string(body: str) -> str:
     return "".join(out)
 
 
+_JS_WORDS = {"true": True, "false": False, "null": None, "undefined": None}
+
+
 def parse_js_value(s: str, i: int = 0):
-    """Recursive-descent parse of one JS value -> (python_value, next_i).
-    Unparseable/callback values yield (None, i_past) — skip, don't fail."""
-    i = _skip_ws(s, i)
-    if i >= len(s):
+    """Recursive-descent parse of one JS value of ``s`` at ``i`` ->
+    (python_value, next_i).  Unparseable/callback values yield (None,
+    i_past) — skip, don't fail."""
+    return _parse_value(s, _code_view(s), i)
+
+
+def _parse_value(s: str, v: str, i: int):
+    """``parse_js_value`` on the script's code view ``v``: the structure
+    is read from ``v``, string values and keys from ``s``."""
+    i = _skip_ws(v, i)
+    if i >= len(v):
         return None, i
-    ch = s[i]
+    ch = v[i]
     if ch == "{":
-        return _parse_object(s, i)
+        return _parse_object(s, v, i)
     if ch == "[":
-        return _parse_array(s, i)
-    if ch in "\"'`":
-        j = _scan_string(s, i)
+        return _parse_array(s, v, i)
+    if ch in _QUOTES:
+        j = _string_end(v, i)
         return _decode_js_string(s[i + 1 : j - 1]), j
     if ch in _NUM_START:
-        m = re.match(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?", s[i:])
+        m = _NUM_RE.match(v, i)
         if m:
             txt = m.group(0)
             val = float(txt) if any(c in txt for c in ".eE") else int(txt)
-            return val, i + m.end()
-        return None, max(_skip_function_value(s, i), i + 1)
-    m = _IDENT_RE.match(s, i)
-    if m:
-        word = m.group(0)
-        j = _skip_ws(s, m.end())
-        # callback or constructor call: consume the balanced run
-        if word == "function" or word == "new" or (j < len(s) and s[j] == "("):
-            return None, max(_skip_function_value(s, i), i + 1)
-        if j + 1 < len(s) and s[j : j + 2] == "=>":
-            return None, max(_skip_function_value(s, i), i + 1)
-        return {
-            "true": True, "false": False, "null": None, "undefined": None,
-        }.get(word, word), m.end()
-    # stray token (a ')' from a mis-nested script, an arithmetic '/'
-    # after a value, etc.): ALWAYS advance — a same-index return here
-    # looped forever (confirmed in review).  prev='0' = value-like
-    # context, so a leading '/' is division, not a regex literal.
-    return None, max(_skip_function_value(s, i, prev="0"), i + 1)
+            return val, m.end()
+    else:
+        m = _IDENT_RE.match(v, i)
+        if m:
+            word = m.group(0)
+            j = _skip_ws(v, m.end())
+            # not a callback or a constructor call
+            if word not in ("function", "new") \
+                    and not v.startswith(("(", "=>"), j):
+                return _JS_WORDS.get(word, word), m.end()
+    # a callback, a call or a stray token (a ')' from a mis-nested
+    # script, an arithmetic '/' after a value, etc.): consume the
+    # balanced run and ALWAYS advance — a same-index return here once
+    # looped forever
+    return None, max(_skip_function_value(v, i), i + 1)
 
 
-def _parse_object(s: str, i: int):
+def _parse_object(s: str, v: str, i: int):
     obj: dict = {}
     i += 1  # past '{'
-    n = len(s)
+    n = len(v)
     while i < n:
-        i = _skip_ws(s, i)
-        if i < n and s[i] == "}":
+        i = _skip_ws(v, i)
+        if i < n and v[i] == "}":
             return obj, i + 1
         # key: quoted string, bare identifier, or computed [expr] (skipped)
-        if i < n and s[i] in "\"'`":
-            j = _scan_string(s, i)
+        if i < n and v[i] in _QUOTES:
+            j = _string_end(v, i)
             key = s[i + 1 : j - 1]
             i = j
         else:
-            m = _IDENT_RE.match(s, i)
+            m = _IDENT_RE.match(v, i)
             if not m:
                 i0 = i
-                i = _skip_function_value(s, i)
-                i = _skip_ws(s, i)
-                if i < n and s[i] == ",":
+                i = _skip_ws(v, _skip_function_value(v, i))
+                if i < n and v[i] == ",":
                     i += 1
                 if i <= i0:  # stray terminator: force progress (no hangs)
                     i = i0 + 1
                 continue
             key, i = m.group(0), m.end()
-        i = _skip_ws(s, i)
-        if i < n and s[i] == ":":
-            val, i = parse_js_value(s, i + 1)
-            # spread/shorthand keys with parse failures stay out
+        i = _skip_ws(v, i)
+        if i < n and v[i] == ":":
+            val, i = _parse_value(s, v, i + 1)
             obj[key] = val
         else:
             obj[key] = None  # ES6 shorthand {x}
-        i = _skip_ws(s, i)
-        if i < n and s[i] == ",":
+        i = _skip_ws(v, i)
+        if i < n and v[i] == ",":
             i += 1
     return obj, i
 
 
-def _parse_array(s: str, i: int):
+def _parse_array(s: str, v: str, i: int):
     arr: list = []
     i += 1  # past '['
-    n = len(s)
+    n = len(v)
     while i < n:
-        i = _skip_ws(s, i)
-        if i < n and s[i] == "]":
+        i = _skip_ws(v, i)
+        if i < n and v[i] == "]":
             return arr, i + 1
         i0 = i
-        val, i = parse_js_value(s, i)
+        val, i = _parse_value(s, v, i)
         arr.append(val)
-        i = _skip_ws(s, i)
-        if i < n and s[i] == ",":
+        i = _skip_ws(v, i)
+        if i < n and v[i] == ",":
             i += 1
         if i <= i0:  # no forward progress on a stray token: never loop
             i = i0 + 1
@@ -1076,13 +1058,12 @@ _CHARTIST_RE = re.compile(
     r"new\s+Chartist\s*\.\s*(Line|Bar|Pie)\s*\(")
 
 
-def _find_chartist_calls(script_text: str) -> list:
+def _find_chartist_calls(s: str, v: str) -> list:
     """``new Chartist.Bar('#sel', data, opts?)`` -> (kind, data): the
     chart TYPE lives in the constructor name, the data is argument 1."""
-    s = script_text or ""
     out = []
-    for m in _CHARTIST_RE.finditer(s):
-        cfg = _nth_value(s, _call_args(s, m.end()), 1, m.start())
+    for m in _CHARTIST_RE.finditer(v):
+        cfg = _nth_value(s, v, _call_args(v, m.end()), 1, m.start())
         if isinstance(cfg, dict):
             out.append((m.group(1), cfg))
     return out
@@ -1154,41 +1135,40 @@ def _from_frappe(cfg: dict) -> Optional[dict]:
 _DYGRAPH_RE = re.compile(r"new\s+Dygraph\s*\(")
 
 
-def _scan_concat_strings(s: str, i: int):
+def _scan_concat_strings(s: str, v: str, i: int):
     """``i`` at a quote char: read ``'lit' (+ 'lit')*`` -> (joined,
     next_i).  Dygraphs pages ship their CSV as a chain of string
     literals joined with ``+`` across source lines."""
     parts: list = []
-    n = len(s)
-    while i < n and s[i] in "\"'`":
-        j = _scan_string(s, i)
+    n = len(v)
+    while i < n and v[i] in _QUOTES:
+        j = _string_end(v, i)
         parts.append(_decode_js_string(s[i + 1 : j - 1]))
         i = j
-        k = _skip_ws(s, i)
-        if k < n and s[k] == "+":
-            k2 = _skip_ws(s, k + 1)
-            if k2 < n and s[k2] in "\"'`":
+        k = _skip_ws(v, i)
+        if k < n and v[k] == "+":
+            k2 = _skip_ws(v, k + 1)
+            if k2 < n and v[k2] in _QUOTES:
                 i = k2
                 continue
         break
     return "".join(parts), i
 
 
-def _find_dygraph_calls(script_text: str) -> list:
+def _find_dygraph_calls(s: str, v: str) -> list:
     """Every ``new Dygraph(el, data, opts?)`` call -> (data, opts): data
     is argument 1, a joined ``'a' + 'b'`` CSV string chain or an
     array of rows, and the options argument 2."""
-    s = script_text or ""
     out = []
-    for m in _DYGRAPH_RE.finditer(s):
-        args = _call_args(s, m.end())
+    for m in _DYGRAPH_RE.finditer(v):
+        args = _call_args(v, m.end())
         if len(args) < 2:
             continue
-        i = _skip_ws(s, args[1][0])
-        data = (_scan_concat_strings(s, i)[0]
-                if i < len(s) and s[i] in "\"'`"
-                else _arg_value(s, args[1], m.start()))
-        opts = _nth_value(s, args, 2, m.start())
+        i = _skip_ws(v, args[1][0])
+        data = (_scan_concat_strings(s, v, i)[0]
+                if i < len(v) and v[i] in _QUOTES
+                else _arg_value(s, v, args[1], m.start()))
+        opts = _nth_value(s, v, args, 2, m.start())
         out.append((data, opts if isinstance(opts, dict) else {}))
     return out
 
@@ -1253,19 +1233,19 @@ def _from_dygraph(data, opts: dict) -> Optional[dict]:
     return out
 
 
-def _find_plotly_calls(script_text: str) -> list:
+def _find_plotly_calls(s: str, v: str) -> list:
     """Every ``Plotly.newPlot/react/plot`` call -> (traces, layout): the
     first array argument and the object argument after it, or the
     one-object ``{data: [...], layout: {...}}`` form."""
-    s = script_text or ""
     out = []
-    for m in _PLOTLY_RE.finditer(s):
-        args = _call_args(s, m.end())
+    for m in _PLOTLY_RE.finditer(v):
+        args = _call_args(v, m.end())
         traces = layout = None
         for k, arg in enumerate(args):
-            val = _arg_value(s, arg, m.start())
+            val = _arg_value(s, v, arg, m.start())
             if isinstance(val, list):
-                traces, layout = val, _nth_value(s, args, k + 1, m.start())
+                traces, layout = val, _nth_value(s, v, args, k + 1,
+                                                 m.start())
                 break
             if isinstance(val, dict) and isinstance(val.get("data"), list):
                 traces, layout = val["data"], val.get("layout")
@@ -1346,20 +1326,19 @@ _VEGA_MARK_TYPES = {
 }
 
 
-def _find_vegalite_specs(script_text: str) -> list:
+def _find_vegalite_specs(s: str, v: str) -> list:
     """``(spec,)`` for every ``vegaEmbed(selector, spec)`` call's spec
     (argument 1), plus a whole-script JSON spec (the ``<script
     type="application/json">`` embedding) identified by its vega-lite
     ``$schema``."""
-    s = script_text or ""
     out = []
-    for m in _VEGA_RE.finditer(s):
-        spec = _nth_value(s, _call_args(s, m.end()), 1, m.start())
+    for m in _VEGA_RE.finditer(v):
+        spec = _nth_value(s, v, _call_args(v, m.end()), 1, m.start())
         if isinstance(spec, dict):
             out.append((spec,))
-    stripped = s.lstrip()
-    if stripped.startswith("{") and "vega-lite" in stripped:
-        spec, _ = parse_js_value(stripped, 0)
+    i = _skip_ws(s, 0)
+    if s.startswith("{", i) and "vega-lite" in s:
+        spec = _parse_value(s, v, i)[0]
         if isinstance(spec, dict) and "vega-lite" in str(
             spec.get("$schema") or ""
         ):
@@ -1488,19 +1467,18 @@ _GVIZ_TYPES = {
 }
 
 
-def _find_gviz_tables(script_text: str) -> list:
+def _find_gviz_tables(s: str, v: str) -> list:
     """Every arrayToDataTable call's rows (argument 0) -> (rows,
     no_header, offset, var): ``no_header`` True when the documented
     second argument ``true`` (first row is data) follows."""
-    s = script_text or ""
     out = []
-    for m in _GVIZ_DATA_RE.finditer(s):
-        args = _call_args(s, m.end())
-        rows = _nth_value(s, args, 0, m.start())
+    for m in _GVIZ_DATA_RE.finditer(v):
+        args = _call_args(v, m.end())
+        rows = _nth_value(s, v, args, 0, m.start())
         if not isinstance(rows, list):
             continue
         no_header = (len(args) > 1
-                     and s[args[1][0]:args[1][1]].strip() == "true")
+                     and v[args[1][0]:args[1][1]].strip() == "true")
         # the call offset keys the per-chart context association
         # (ADVICE r6: a script building several charts must not label
         # them all from the first); the assigned VARIABLE (when the call
@@ -1513,7 +1491,7 @@ def _find_gviz_tables(script_text: str) -> list:
         am = re.search(
             r"(?<![\w.$])(\w+)\s*=\s*google\s*\."
             r"\s*visualization\s*\.\s*$",
-            s[max(0, m.start() - 120) : m.start()])
+            v[max(0, m.start() - 120) : m.start()])
         out.append((rows, no_header, m.start(),
                     am.group(1) if am else None))
     return out
@@ -1522,8 +1500,8 @@ def _find_gviz_tables(script_text: str) -> list:
 # the imperative DataTable idiom: new google.visualization.DataTable()
 # + receiver.addColumn(type, label) + receiver.addRows([[...], ...]) —
 # the other common Google Charts data shape besides arrayToDataTable
-_GVIZ_ADDCOL_RE = re.compile(r"\b(\w+)\s*\.\s*addColumn\s*\(\s*")
-_GVIZ_ADDROWS_RE = re.compile(r"\b(\w+)\s*\.\s*addRows\s*\(\s*")
+_GVIZ_ADDCOL_RE = re.compile(r"\b(\w+)\s*\.\s*addColumn\s*\(")
+_GVIZ_ADDROWS_RE = re.compile(r"\b(\w+)\s*\.\s*addRows\s*\(")
 # a fresh DataTable assigned to the same variable starts a NEW column
 # set for that receiver (r7 review finding: without this, chart 2's
 # header inherited chart 1's columns on receiver reuse)
@@ -1533,7 +1511,7 @@ _GVIZ_NEWDT_RE = re.compile(
 _MAX_GVIZ_COLS = 64
 
 
-def _find_gviz_datatables(script_text: str) -> list:
+def _find_gviz_datatables(s: str, v: str) -> list:
     """Imperative-API DataTables -> ``(rows_with_header, False, offset,
     receiver)``, the ``_find_gviz_tables`` shape.
 
@@ -1543,33 +1521,26 @@ def _find_gviz_datatables(script_text: str) -> list:
     the synthesized header row is each column's label (falling back to
     the type string), matching the shape ``_from_gviz`` already
     normalizes.  addColumn({label, type}) object form supported."""
-    s = script_text or ""
     cols: list = []  # (pos, receiver, header_cell)
-    for m in _GVIZ_ADDCOL_RE.finditer(s):
-        val, j = parse_js_value(s, m.end())
+    for m in _GVIZ_ADDCOL_RE.finditer(v):
+        args = _call_args(v, m.end())
+        val = _nth_value(s, v, args, 0, m.start())
         cell = None
         if isinstance(val, dict):
             cell = val.get("label") or val.get("type")
         elif isinstance(val, str):
             cell = val
-            k = j
-            while k < len(s) and s[k].isspace():
-                k += 1
-            if k < len(s) and s[k] == ",":
-                k += 1
-                while k < len(s) and s[k].isspace():
-                    k += 1
-                label, _ = parse_js_value(s, k)
-                if isinstance(label, str) and label:
-                    cell = label
+            label = _nth_value(s, v, args, 1, m.start())
+            if isinstance(label, str) and label:
+                cell = label
         if cell is not None:
             cols.append((m.start(), m.group(1), str(cell)))
     if not cols:
         return []
     resets = [(m.start(), m.group(1))
-              for m in _GVIZ_NEWDT_RE.finditer(s)]
+              for m in _GVIZ_NEWDT_RE.finditer(v)]
     out = []
-    for m in _GVIZ_ADDROWS_RE.finditer(s):
+    for m in _GVIZ_ADDROWS_RE.finditer(v):
         recv = m.group(1)
         # columns count from the receiver's LAST re-construction before
         # this addRows — a reused variable never inherits a previous
@@ -1580,7 +1551,7 @@ def _find_gviz_datatables(script_text: str) -> list:
                   if r == recv and floor < p < m.start()][:_MAX_GVIZ_COLS]
         if len(header) < 2:
             continue
-        rows, _j = parse_js_value(s, m.end())
+        rows = _nth_value(s, v, _call_args(v, m.end()), 0, m.start())
         if isinstance(rows, list) and rows:
             out.append(([header] + rows, False, m.start(), recv))
     return out
@@ -1645,7 +1616,7 @@ def _from_gviz(rows: list, chart_type: str, title: str,
     }
 
 
-def _gviz_context(script_text: str, from_pos: int = 0,
+def _gviz_context(s: str, v: str, from_pos: int = 0,
                   data_var: str = None):
     """(chart_type, title, y_title) from the constructor name and the
     draw call's OPTIONS OBJECT — the title must come from the parsed
@@ -1661,10 +1632,9 @@ def _gviz_context(script_text: str, from_pos: int = 0,
     script order interleaved).  With a draw chosen by variable, the
     chart TYPE prefers the constructor assigned to that draw's
     receiver; otherwise the nearest following chart constructor."""
-    s = script_text or ""
 
     def _ctor_from(pos):
-        for ctor in _GVIZ_CTOR_RE.finditer(s, pos):
+        for ctor in _GVIZ_CTOR_RE.finditer(v, pos):
             # the first CHART constructor wins — pages routinely build
             # a NumberFormat/DataView/DataTable before the chart itself
             mapped = _GVIZ_TYPES.get(ctor.group(1).lower())
@@ -1682,7 +1652,7 @@ def _gviz_context(script_text: str, from_pos: int = 0,
     # (fifth-pass review finding)
     draws = list(re.finditer(
         r"(?:(?<![\w$.])((?:[\w$]+\s*\.\s*)*[\w$]+)\s*)?"
-        r"\.\s*draw\s*\(\s*(\w+)?", s))
+        r"\.\s*draw\s*\(\s*(\w+)?", v))
     chosen = None
     if data_var:
         mine = [m for m in draws if m.group(2) == data_var]
@@ -1720,7 +1690,7 @@ def _gviz_context(script_text: str, from_pos: int = 0,
         for cand in re.finditer(
                 r"(?<![\w$.])(?:window\s*\.\s*)?" + recv_re +
                 r"\s*=\s*new\s+google\s*\.\s*(?:visualization|charts)"
-                r"\s*\.\s*(\w+)", s):
+                r"\s*\.\s*(\w+)", v):
             if cand.start() >= chosen[0].start():
                 break
             rm = cand
@@ -1735,7 +1705,7 @@ def _gviz_context(script_text: str, from_pos: int = 0,
     for m in chosen:
         # the options are argument 1 of the draw's own '(' (the match
         # itself may end past the first argument)
-        opts = _nth_value(s, _call_args(s, s.index("(", m.start()) + 1),
+        opts = _nth_value(s, v, _call_args(v, v.index("(", m.start()) + 1),
                           1, m.start())
         if isinstance(opts, dict):
             if isinstance(opts.get("title"), str):
@@ -1761,10 +1731,11 @@ def _from_config(cfg: dict) -> Optional[dict]:
 # normalizer, context).  Every match of the finder's marker contains one
 # of its literals, so a script holding none of them gives the dialect
 # no chart and the finder is not run: a chart-less script costs one
-# C-speed substring search per literal.  The finder returns the
-# normalizer's argument tuples; where there is a ``context`` step (the
-# two Google Charts data shapes) a tuple is ``(rows, no_header, offset,
-# variable)`` and the step reads the chart type and draw options.
+# C-speed substring search per literal.  The finder reads the script and
+# its code view and returns the normalizer's argument tuples; where there
+# is a ``context`` step (the two Google Charts data shapes) a tuple is
+# ``(rows, no_header, offset, variable)`` and the step reads the chart
+# type and draw options.
 _DIALECTS = (
     # "Chart" anchors new Chart, ApexCharts, AmCharts.makeChart,
     # FusionCharts and frappe.Chart
@@ -1786,16 +1757,19 @@ def charts_from_script(script_text: str) -> list:
     a page can construct many charts in one script block), dialect by
     dialect in ``_DIALECTS`` order."""
     s = script_text or ""
+    v = None  # the code view, built once the first gate hits
     out = []
     for literals, find, normalize, context in _DIALECTS:
         if not any(lit in s for lit in literals):
             continue
-        for found in find(s):
+        if v is None:
+            v = _code_view(s)
+        for found in find(s, v):
             if context is None:
                 chart = normalize(*found)
             else:
                 rows, no_header, pos, var = found
-                chart_type, title, y_title = context(s, pos, var)
+                chart_type, title, y_title = context(s, v, pos, var)
                 chart = normalize(rows, chart_type, title, no_header)
                 if chart is not None and y_title:
                     chart["y_axis_title"] = y_title

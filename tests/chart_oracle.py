@@ -10,9 +10,16 @@ The rest are the chart-call finders as they were before ``_call_args``.
 Seven hand-copied argument walkers (``find_config_objects`` with
 ``_resolve_ident_config``, and the Chartist, Dygraph, Plotly,
 Vega-Lite, ``arrayToDataTable`` and ``draw(...)`` walkers), copied
-verbatim from ``kernels/chartconfig.py``.  The lexer helpers, the
-``addColumn``/``addRows`` parse and every ``_from_*`` normalizer are
-imported from the module itself, so only the argument reading differs.
+verbatim from ``kernels/chartconfig.py``, with the lexer helpers they
+used (``_scan_string``, ``_slash``, ``_extract_balanced``,
+``_skip_function_value``, ``parse_js_value``, ``_scan_concat_strings``)
+and the ``addColumn``/``addRows`` parse frozen here too, so their
+meaning cannot drift with the module's code view.  Constants, string
+decoding and every ``_from_*`` normalizer are imported from the module.
+
+Two rules differ from the copies, as they do in the module: Frappe's
+config is its last argument, and comments around the
+``arrayToDataTable`` no-header flag read as whitespace.
 """
 
 from __future__ import annotations
@@ -23,15 +30,19 @@ from exstruct_spark.kernels import chartconfig as cc
 from exstruct_spark.kernels.chartconfig import (
     _CHARTIST_RE,
     _DYGRAPH_RE,
+    _GVIZ_ADDCOL_RE,
+    _GVIZ_ADDROWS_RE,
     _GVIZ_CTOR_RE,
     _GVIZ_DATA_RE,
+    _GVIZ_NEWDT_RE,
     _GVIZ_TYPES,
     _IDENT_RE,
     _MARKER_RE,
+    _MAX_GVIZ_COLS,
+    _NUM_START,
     _PLOTLY_RE,
     _VEGA_RE,
-    _extract_balanced,
-    _find_gviz_datatables,
+    _decode_js_string,
     _from_amcharts,
     _from_amcharts4,
     _from_c3,
@@ -44,12 +55,285 @@ from exstruct_spark.kernels.chartconfig import (
     _from_gviz,
     _from_plotly,
     _from_vegalite,
-    _scan_concat_strings,
-    _scan_string,
-    _skip_function_value,
-    _slash,
-    parse_js_value,
 )
+
+# --- the lexer helpers and the value parser, frozen as they were before
+#     the code view: each scan lexes strings, comments and regex literals
+#     locally, from where it starts
+_WS_AND_COMMENTS_RE = re.compile(r"(?:\s+|//[^\n]*|/\*.*?\*/)+", re.S)
+_NUM_RE = re.compile(r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?")
+
+
+def _skip_ws(s: str, i: int) -> int:
+    m = _WS_AND_COMMENTS_RE.match(s, i)
+    return m.end() if m else i
+
+
+def _scan_string(s: str, i: int) -> int:
+    """i at the opening quote -> index just past the closing quote."""
+    q = s[i]
+    i += 1
+    n = len(s)
+    while i < n:
+        ch = s[i]
+        if ch == "\\":
+            i += 2
+            continue
+        if ch == q:
+            return i + 1
+        i += 1
+    return n
+
+
+def _scan_regex(s: str, i: int) -> int:
+    """i at the '/' opening a regex literal -> index past its flags, or
+    at the newline that ends an unterminated one."""
+    i += 1
+    n = len(s)
+    in_class = False
+    while i < n:
+        ch = s[i]
+        if ch == "\\":
+            i += 2
+            continue
+        if ch == "[":
+            in_class = True
+        elif ch == "]":
+            in_class = False
+        elif ch == "/" and not in_class:
+            i += 1
+            while i < n and s[i].isalpha():
+                i += 1
+            return i
+        elif ch == "\n":
+            return i
+        i += 1
+    return n
+
+
+_REGEX_PREV = set("([{,=:;!&|?+-*/%<>~^")
+
+
+def _slash(s: str, i: int, prev) -> int:
+    """'/' at i given the previous significant char: comment, regex
+    literal, or division.  Always advances."""
+    j = _skip_ws(s, i)
+    if j > i:
+        return j
+    if prev is None or prev in _REGEX_PREV:
+        j = _scan_regex(s, i)
+        return j if j > i else i + 1
+    return i + 1
+
+
+def _extract_balanced(s: str, i: int):
+    """i at '{' -> the balanced object-literal text, or None."""
+    if i >= len(s) or s[i] != "{":
+        return None
+    depth = 0
+    start = i
+    n = len(s)
+    prev = None
+    while i < n:
+        ch = s[i]
+        if ch in "\"'`":
+            i = _scan_string(s, i)
+            prev = '"'
+            continue
+        if ch == "/":
+            i = _slash(s, i, prev)
+            prev = "/"
+            continue
+        if ch == "{":
+            depth += 1
+        elif ch == "}":
+            depth -= 1
+            if depth == 0:
+                return s[start : i + 1]
+        if not ch.isspace():
+            prev = ch
+        i += 1
+    return None
+
+
+def _skip_function_value(s: str, i: int, prev=None) -> int:
+    """Consume a callback value up to the next top-level ',' or closing
+    '}' / ']'; ``prev`` seeds the division-or-regex context."""
+    depth = 0
+    n = len(s)
+    while i < n:
+        ch = s[i]
+        if ch in "\"'`":
+            i = _scan_string(s, i)
+            prev = '"'
+            continue
+        if ch == "/":
+            i = _slash(s, i, prev)
+            prev = "/"
+            continue
+        if ch in "({[":
+            depth += 1
+        elif ch in ")}]":
+            if depth == 0:
+                return i
+            depth -= 1
+        elif ch == "," and depth == 0:
+            return i
+        if not ch.isspace():
+            prev = ch
+        i += 1
+    return n
+
+
+def parse_js_value(s: str, i: int = 0):
+    """Recursive-descent parse of one JS value -> (value, next_i)."""
+    i = _skip_ws(s, i)
+    if i >= len(s):
+        return None, i
+    ch = s[i]
+    if ch == "{":
+        return _parse_object(s, i)
+    if ch == "[":
+        return _parse_array(s, i)
+    if ch in "\"'`":
+        j = _scan_string(s, i)
+        return _decode_js_string(s[i + 1 : j - 1]), j
+    if ch in _NUM_START:
+        m = _NUM_RE.match(s, i)
+        if m:
+            txt = m.group(0)
+            val = float(txt) if any(c in txt for c in ".eE") else int(txt)
+            return val, m.end()
+        return None, max(_skip_function_value(s, i), i + 1)
+    m = _IDENT_RE.match(s, i)
+    if m:
+        word = m.group(0)
+        j = _skip_ws(s, m.end())
+        if word == "function" or word == "new" or (j < len(s) and s[j] == "("):
+            return None, max(_skip_function_value(s, i), i + 1)
+        if j + 1 < len(s) and s[j : j + 2] == "=>":
+            return None, max(_skip_function_value(s, i), i + 1)
+        return {
+            "true": True, "false": False, "null": None, "undefined": None,
+        }.get(word, word), m.end()
+    return None, max(_skip_function_value(s, i, prev="0"), i + 1)
+
+
+def _parse_object(s: str, i: int):
+    obj: dict = {}
+    i += 1
+    n = len(s)
+    while i < n:
+        i = _skip_ws(s, i)
+        if i < n and s[i] == "}":
+            return obj, i + 1
+        if i < n and s[i] in "\"'`":
+            j = _scan_string(s, i)
+            key = s[i + 1 : j - 1]
+            i = j
+        else:
+            m = _IDENT_RE.match(s, i)
+            if not m:
+                i0 = i
+                i = _skip_function_value(s, i)
+                i = _skip_ws(s, i)
+                if i < n and s[i] == ",":
+                    i += 1
+                if i <= i0:
+                    i = i0 + 1
+                continue
+            key, i = m.group(0), m.end()
+        i = _skip_ws(s, i)
+        if i < n and s[i] == ":":
+            val, i = parse_js_value(s, i + 1)
+            obj[key] = val
+        else:
+            obj[key] = None
+        i = _skip_ws(s, i)
+        if i < n and s[i] == ",":
+            i += 1
+    return obj, i
+
+
+def _parse_array(s: str, i: int):
+    arr: list = []
+    i += 1
+    n = len(s)
+    while i < n:
+        i = _skip_ws(s, i)
+        if i < n and s[i] == "]":
+            return arr, i + 1
+        i0 = i
+        val, i = parse_js_value(s, i)
+        arr.append(val)
+        i = _skip_ws(s, i)
+        if i < n and s[i] == ",":
+            i += 1
+        if i <= i0:
+            i = i0 + 1
+    return arr, i
+
+
+def _scan_concat_strings(s: str, i: int):
+    """``i`` at a quote: read ``'lit' (+ 'lit')*`` -> (joined, next_i)."""
+    parts: list = []
+    n = len(s)
+    while i < n and s[i] in "\"'`":
+        j = _scan_string(s, i)
+        parts.append(_decode_js_string(s[i + 1 : j - 1]))
+        i = j
+        k = _skip_ws(s, i)
+        if k < n and s[k] == "+":
+            k2 = _skip_ws(s, k + 1)
+            if k2 < n and s[k2] in "\"'`":
+                i = k2
+                continue
+        break
+    return "".join(parts), i
+
+
+def _find_gviz_datatables(script_text: str) -> list:
+    """Imperative-API DataTables -> ``(rows_with_header, False, offset,
+    receiver)``: columns accumulate per receiver, from its last
+    ``new DataTable()`` up to the ``addRows`` call."""
+    s = script_text or ""
+    cols: list = []
+    for m in _GVIZ_ADDCOL_RE.finditer(s):
+        val, j = parse_js_value(s, m.end())
+        cell = None
+        if isinstance(val, dict):
+            cell = val.get("label") or val.get("type")
+        elif isinstance(val, str):
+            cell = val
+            k = j
+            while k < len(s) and s[k].isspace():
+                k += 1
+            if k < len(s) and s[k] == ",":
+                k += 1
+                while k < len(s) and s[k].isspace():
+                    k += 1
+                label, _ = parse_js_value(s, k)
+                if isinstance(label, str) and label:
+                    cell = label
+        if cell is not None:
+            cols.append((m.start(), m.group(1), str(cell)))
+    if not cols:
+        return []
+    resets = [(m.start(), m.group(1))
+              for m in _GVIZ_NEWDT_RE.finditer(s)]
+    out = []
+    for m in _GVIZ_ADDROWS_RE.finditer(s):
+        recv = m.group(1)
+        floor = max((p for p, r in resets
+                     if r == recv and p < m.start()), default=-1)
+        header = [c for p, r, c in cols
+                  if r == recv and floor < p < m.start()][:_MAX_GVIZ_COLS]
+        if len(header) < 2:
+            continue
+        rows, _j = parse_js_value(s, m.end())
+        if isinstance(rows, list) and rows:
+            out.append(([header] + rows, False, m.start(), recv))
+    return out
 
 
 def find_config_objects(script_text: str) -> list:
@@ -63,8 +347,7 @@ def find_config_objects(script_text: str) -> list:
         marker = m.group(0)
         want_first = ("setOption" in marker or "highcharts" in marker
                       or "generate" in marker or "FusionCharts" in marker
-                      or "createFromConfig" in marker
-                      or "frappe" in marker)
+                      or "createFromConfig" in marker)
         i = m.end()
         n = len(script_text)
         depth = 0
@@ -410,7 +693,8 @@ def _find_gviz_tables(script_text: str) -> list:
             if ch == "[":
                 rows, j = parse_js_value(s, i)
                 if isinstance(rows, list):
-                    tail = s[j : j + 40]
+                    # comments around the flag read as whitespace
+                    tail = _WS_AND_COMMENTS_RE.sub(" ", s[j : j + 40])
                     no_header = bool(
                         re.match(r"\s*,\s*true\b", tail))
                     # the call offset keys the per-chart context
@@ -612,39 +896,41 @@ def charts_from_script(script_text: str) -> list:
 def charts_ungated(script_text: str) -> list:
     """``charts_from_script`` with no literal gate: the seven dialect
     loops over the module's own finders and normalizers."""
+    s = script_text
+    v = cc._code_view(s)
     out = []
-    for (cfg,) in cc.find_config_objects(script_text):
+    for (cfg,) in cc.find_config_objects(s, v):
         chart = (_from_chartjs(cfg) or _from_echarts(cfg)
                  or _from_amcharts(cfg) or _from_c3(cfg)
                  or _from_fusioncharts(cfg) or _from_amcharts4(cfg)
                  or _from_frappe(cfg))
         if chart is not None:
             out.append(chart)
-    for traces, layout in cc._find_plotly_calls(script_text):
+    for traces, layout in cc._find_plotly_calls(s, v):
         chart = _from_plotly(traces, layout)
         if chart is not None:
             out.append(chart)
-    for data, opts in cc._find_dygraph_calls(script_text):
+    for data, opts in cc._find_dygraph_calls(s, v):
         chart = _from_dygraph(data, opts)
         if chart is not None:
             out.append(chart)
-    for kind, cfg in cc._find_chartist_calls(script_text):
+    for kind, cfg in cc._find_chartist_calls(s, v):
         chart = _from_chartist(kind, cfg)
         if chart is not None:
             out.append(chart)
-    for (spec,) in cc._find_vegalite_specs(script_text):
+    for (spec,) in cc._find_vegalite_specs(s, v):
         chart = _from_vegalite(spec)
         if chart is not None:
             out.append(chart)
-    for rows, no_header, pos, var in cc._find_gviz_tables(script_text):
-        chart_type, title, y_title = cc._gviz_context(script_text, pos, var)
+    for rows, no_header, pos, var in cc._find_gviz_tables(s, v):
+        chart_type, title, y_title = cc._gviz_context(s, v, pos, var)
         chart = _from_gviz(rows, chart_type, title, no_header)
         if chart is not None:
             if y_title:
                 chart["y_axis_title"] = y_title
             out.append(chart)
-    for rows, _, pos, recv in _find_gviz_datatables(script_text):
-        chart_type, title, y_title = cc._gviz_context(script_text, pos, recv)
+    for rows, _, pos, recv in cc._find_gviz_datatables(s, v):
+        chart_type, title, y_title = cc._gviz_context(s, v, pos, recv)
         chart = _from_gviz(rows, chart_type, title, no_header=False)
         if chart is not None:
             if y_title:

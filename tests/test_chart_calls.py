@@ -1,9 +1,13 @@
-"""Chart-call argument reading (``kernels/chartconfig.py``: one
-``_call_args`` walk and one ``_arg_value`` rule for every dialect).
+"""Chart-call argument reading (``kernels/chartconfig.py``: one code
+view per script, one ``_call_args`` walk and one ``_arg_value`` rule for
+every dialect).
 
 * a differential test against the seven per-dialect argument walkers it
-  replaced (``chart_oracle.py``), on generated well-formed calls and on
-  every chart script the suite and the page corpus carry;
+  replaced (``chart_oracle.py``, with their lexer frozen), on generated
+  well-formed calls and on every chart script the suite and the page
+  corpus carry;
+* a decoy differential: comment, string and regex-literal copies of
+  other calls inserted into generated scripts change nothing;
 * a metamorphic test: a literal argument and the same literal passed by
   variable (assigned above or below the call) give the same chart;
 * the argument-position rules that changed with the rewrite;
@@ -15,18 +19,20 @@
 from __future__ import annotations
 
 import ast
+import json
 import os
 import re
+import timeit
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from adversarial_pages import ADVERSARIAL
+from adversarial_pages import ADVERSARIAL, CHART_CODE_VIEW_SCRIPTS
 from chart_oracle import charts_from_script as oracle_charts
 from chart_oracle import charts_ungated
 from exstruct_spark.kernels import chartconfig
-from exstruct_spark.kernels.chartconfig import charts_from_script
+from exstruct_spark.kernels.chartconfig import _code_view, charts_from_script
 from exstruct_spark.pages import (
     ARCHETYPES, RICH_ARCHETYPES, build_page, build_rich_page)
 
@@ -38,8 +44,8 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 #     arrow values, configs built by a nested call, trailing options
 _TEXT = st.sampled_from(["a", "b,)", "c{", "d)", "e, f", "g}", "h/i"])
 _NUMS = st.lists(st.integers(0, 99), min_size=1, max_size=4)
-_GAP = st.sampled_from(
-    [" ", "", "\n", " /* ) */ ", " // ,\n ", " /* { */ "])
+_GAPS = [" ", "", "\n", " /* ) */ ", " // ,\n ", " /* { */ "]
+_GAP = st.sampled_from(_GAPS)
 _CALLBACK = st.sampled_from([
     "function (v) { return String(v).replace(/[{}]/g, ')'); }",
     "(v) => v.replace(/\\}/g, ',')",
@@ -56,11 +62,11 @@ def _list(items) -> str:
 
 
 @st.composite
-def _config(draw):
+def _config(draw, gaps=_GAP):
     """One config object in a Chart.js-family dialect."""
     labels = [_q(t) for t in draw(st.lists(_TEXT, min_size=1, max_size=3))]
     vals, name, title = draw(_NUMS), _q(draw(_TEXT)), _q(draw(_TEXT))
-    gap, cb = draw(_GAP), draw(_CALLBACK)
+    gap, cb = draw(gaps), draw(_CALLBACK)
     return draw(st.sampled_from([
         # Chart.js
         f"{{type: 'bar',{gap}data: {{labels: {_list(labels)}, datasets:"
@@ -96,9 +102,10 @@ def _config(draw):
 
 
 @st.composite
-def _call(draw):
-    """One well-formed chart call statement."""
-    g = lambda: draw(_GAP)  # noqa: E731
+def _call(draw, gaps=_GAP):
+    """One well-formed chart call statement, its argument gaps drawn
+    from ``gaps``."""
+    g = lambda: draw(gaps)  # noqa: E731
     labels = [_q(t) for t in draw(st.lists(_TEXT, min_size=1, max_size=3))]
     vals, title, cb = draw(_NUMS), _q(draw(_TEXT)), draw(_CALLBACK)
     kind = draw(st.sampled_from([
@@ -107,7 +114,7 @@ def _call(draw):
     if kind == "config":
         cfg = draw(st.sampled_from(
             ["{}", "Highcharts.merge(base, {})",
-             "Object.assign({{}}, base, {})"])).format(draw(_config()))
+             "Object.assign({{}}, base, {})"])).format(draw(_config(gaps)))
         return draw(st.sampled_from([
             "new Chart({t},{g}{c});".format(
                 t=draw(st.sampled_from(
@@ -228,11 +235,178 @@ def _corpus_scripts() -> set:
 
 
 def test_corpus_scripts_read_like_the_per_dialect_walkers():
-    scripts = _corpus_scripts()
+    """The fingerprint's ``chart_code_view`` scripts hold the intended
+    changes (markers in comments, strings and regex literals, configs by
+    position), so the walkers are not their oracle; the named cases below
+    are."""
+    scripts = _corpus_scripts() - set(CHART_CODE_VIEW_SCRIPTS)
     assert len(scripts) > 100
     diverged = [s for s in sorted(scripts)
                 if charts_from_script(s) != oracle_charts(s)]
     assert diverged == []
+
+
+# --- decoys: copies of chart calls that are not code.  A comment copy
+#     may go wherever whitespace may (a statement boundary, an argument
+#     gap); a string or regex-literal copy is a statement of its own
+def _block_comment(call: str) -> str:
+    return "/* " + call.replace("*/", "* /") + " */"
+
+
+def _line_comment(call: str) -> str:
+    return "// " + call.replace("\n", " ") + "\n"
+
+
+def _string_statement(call: str, q: str) -> str:
+    body = call.replace("\\", "\\\\").replace(q, "\\" + q).replace("\n", "\\n")
+    return f"var help = {q}{body}{q};"
+
+
+def _regex_statement(call: str) -> str:
+    body = re.sub(r"[\\/\[\]]", r"\\\g<0>", call.replace("\n", " "))
+    return f"var re = /{body}/g;"
+
+
+_COMMENT_DECOYS = (_block_comment, _line_comment)
+_STATEMENT_DECOYS = _COMMENT_DECOYS + (
+    lambda c: _string_statement(c, "'"), lambda c: _string_statement(c, '"'),
+    lambda c: _string_statement(c, "`"), _regex_statement)
+_DECOY_GAP = "\x00"  # a gap that holds a comment decoy
+
+
+@st.composite
+def _decoyed_script(draw):
+    """``(script with decoys, the same script without them)``: generated
+    calls with decoys before each call, after the last one, and in
+    argument gaps; the decoys are other generated calls."""
+    def decoy(forms):
+        return draw(st.sampled_from(forms))(draw(_call()))
+
+    calls = draw(st.lists(_call(st.sampled_from(_GAPS + [_DECOY_GAP])),
+                          min_size=1, max_size=3))
+    plain, decoyed = [], []
+    for call in calls + [""]:
+        decoyed += [decoy(_STATEMENT_DECOYS)
+                    for _ in range(draw(st.integers(0, 2)))]
+        plain.append(call.replace(_DECOY_GAP, " "))
+        decoyed.append(re.sub(_DECOY_GAP,
+                              lambda _: f" {decoy(_COMMENT_DECOYS)} ", call))
+    return "\n".join(decoyed), "\n".join(plain)
+
+
+@given(_decoyed_script())
+@settings(max_examples=300, deadline=None)
+def test_decoys_change_no_chart(scripts):
+    """Differential: decoys read as nothing, so a script with them gives
+    what the per-dialect walkers give on the script without them."""
+    decoyed, plain = scripts
+    assert charts_from_script(decoyed) == oracle_charts(plain)
+
+
+_JS_TEXT = st.text(st.sampled_from(list("ab1 \n\\/*'\"`[](){},=+;")),
+                   max_size=80)
+
+
+@given(_JS_TEXT)
+@settings(max_examples=500, deadline=None)
+def test_code_view_keeps_offsets(s):
+    """The view has the script's length, and each of its characters is
+    the script's own or a space; a string literal keeps only its
+    delimiters, and the code after it reads on."""
+    v = _code_view(s)
+    assert len(v) == len(s)
+    assert all(a == b or a == " " for a, b in zip(v, s))
+    lit = json.dumps(s)
+    assert _code_view(f"f({lit}) / 2") == \
+        'f("' + " " * (len(lit) - 2) + '") / 2'
+
+
+_CHART = ("new Chart(ctx, {type: 'bar', data: {labels: ['a'], datasets:"
+          " [{label: 'real', data: [1]}]}});")
+_REAL = [("Column", ["a"], [("real", [1.0])])]
+
+
+def _read(script: str) -> list:
+    return [(c["chart_type"], c["labels"], c["series"])
+            for c in charts_from_script(script)]
+
+
+@pytest.mark.parametrize("decoy", [
+    "/* new Chart(ctx, {type: 'bar', data: {labels: ['a'], datasets:"
+    " [{label: 'commented', data: [1]}]}}) */",
+    "var help = \"call c3.generate({data: {columns: [['x', 1, 2]]}})\";",
+    "// Plotly.newPlot('d', [{x: ['a'], y: [1]}]);\n",
+    "// new Dygraph(el, 'x,A\\n1,2\\n', {title: 'T'});\n",
+    "var re = /Plotly.newPlot('d', [{y: [1, 2]}])/;",
+    "var s = 'it'.replace(/'/g, '');",
+])
+def test_a_marker_that_is_not_code_gives_no_chart(decoy):
+    """A chart call in a comment, a string or a regex literal is no
+    chart, and the real call after it still reads; a regex literal
+    holding a quote does not open a string."""
+    assert _read(decoy) == []
+    assert _read(decoy + "\n" + _CHART) == _REAL
+
+
+def test_config_is_taken_by_position():
+    """The config is argument 0 for ``setOption``, else the last
+    argument that is not a callback or a number, so a trailing settings
+    object, callback or delay does not hide a config passed by variable;
+    a nested call after a selector gives its own last ``{...}``."""
+    assert _read(
+        "var option = {series: [{name: 'v', type: 'bar', data: [3]}]};"
+        " myChart.setOption(option, {notMerge: true});") == [
+        ("Column", [], [("v", [3.0])])]
+    assert _read(
+        "var cfg = {series: [{name: 'h', data: [5]}]};"
+        " Highcharts.chart('c', cfg, function (ch) { ch.redraw(); });") == [
+        ("Line", [], [("h", [5.0])])]
+    assert _read(
+        "new frappe.Chart('#f', Object.assign({}, base, {data: {labels:"
+        " ['u'], datasets: [{name: 'fr', values: [6]}]}}));") == [
+        ("Line", ["u"], [("fr", [6.0])])]
+    assert _read(
+        "AmCharts.makeChart('d', {type: 'serial', categoryField: 'k',"
+        " dataProvider: [{k: 'x', v: 9}], graphs: [{valueField: 'v'}]},"
+        " 500);") == [("Line", ["x"], [("v", [9.0])])]
+
+
+def test_gviz_reads_code_around_the_table():
+    """A comment before the no-header flag hides nothing, and a
+    commented-out draw is not the chart's draw."""
+    (flag,) = charts_from_script(
+        "var data = google.visualization.arrayToDataTable([['a', 1],"
+        " ['b', 2]], /* first row is data */ true);")
+    assert (flag["labels"], flag["series"]) == (["a", "b"], [("s0", [1.0, 2.0])])
+    (drawn,) = charts_from_script(
+        "var data = google.visualization.arrayToDataTable([['k', 'n'],"
+        " ['x', 7]]); var chart = new google.visualization.LineChart(el);\n"
+        "// chart.draw(data, {title: 'Old'});\n"
+        "chart.draw(data, {title: 'New'});")
+    assert drawn["title"] == "New"
+
+
+def _dense_script(lines: int) -> str:
+    """A block of divisions, a block of strings, regex literals and
+    comments, and one real call."""
+    return ("x = a / b / 2 / c;\n" * lines
+            + "s = 'q\\'s' + \"r\" + `t` / c; y = /re[/]/g.test(z); // it's\n"
+            * lines + _CHART)
+
+
+def test_code_view_is_linear():
+    """A 1.6 MB script dense in slashes and quotes, holding one real
+    call, costs the view about four times what a quarter of it costs (a
+    view that re-reads the text behind each '/' or token costs sixteen
+    times)."""
+    script, quarter = _dense_script(20_000), _dense_script(5_000)
+    assert len(script) > 1_500_000
+    assert _read(script) == _REAL
+
+    def cost(s):
+        return min(timeit.repeat(lambda: _code_view(s), number=1, repeat=3))
+
+    assert cost(script) < 8 * cost(quarter)
 
 
 # --- metamorphic: literal argument vs the same literal by variable
@@ -268,6 +442,11 @@ _BY_VARIABLE = {
     "dygraph_opts": (f"new Dygraph(el, {_DY_ROWS}, ARG);", _DY_OPTS),
     "gviz_rows": (_GVIZ.format(rows="ARG", opts=_GV_OPTS), _GV_ROWS),
     "gviz_options": (_GVIZ.format(rows=_GV_ROWS, opts="ARG"), _GV_OPTS),
+    "echarts_settings": ("myChart.setOption(ARG, {notMerge: true});",
+                         "{series: [{name: 's', type: 'bar', data: [5]}]}"),
+    "highcharts_callback": (
+        "Highcharts.chart('c', ARG, function (ch) { ch.redraw(); });",
+        "{title: {text: 'H'}, series: [{name: 'h', data: [6, 7]}]}"),
 }
 
 
@@ -459,7 +638,7 @@ def test_chart_less_script_runs_no_finder(monkeypatch):
     ran: list = []
 
     def recording(k, find):
-        return lambda s: ran.append(k) or find(s)
+        return lambda s, v: ran.append(k) or find(s, v)
 
     monkeypatch.setattr(chartconfig, "_DIALECTS", tuple(
         (lits, recording(k, find), norm, ctx)
@@ -467,6 +646,8 @@ def test_chart_less_script_runs_no_finder(monkeypatch):
     boilerplate = "\n".join(
         f"window.track_{i} = function(x) {{ if (x < {i}) {{ return 'render'"
         f" + x; }} return track_{i}(x - 1); }};" for i in range(200))
+    monkeypatch.setattr(chartconfig, "_code_view", lambda s: ran.append(
+        "view") or _code_view(s))
     assert charts_from_script(boilerplate) == [] and ran == []
     dialect = [0] * 13 + [1, 2, 3, 4, 4, 5, 6]
     for k, call in zip(dialect, _MARKER_FORMS):

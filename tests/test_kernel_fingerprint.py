@@ -59,7 +59,7 @@ BLESSED = {
     'adversarial:bare_comment_open_newline': '9259d8e561234f48267f8c396cef86323b7e6ccb903cec167744739bb6026e3e',
     'adversarial:cdata_before_final_newline': 'f703dd4833a98d7edb688b7017fdcfe43333af838a483b38c02c6481678922fd',
     'adversarial:chart_call_forms': '565ee09e4bceae669dec90b7d166f0d4cb5fa34a8e1025fdcbd5db70b78dda72',
-    'adversarial:chart_code_view': 'a8d40495ce4b59fcd04fa667707fc7d220c1ff28eb04ec68ccc1b613761a495c',
+    'adversarial:chart_code_view': '6b34ddd987884c4f53cfa1913ce37783aea71d2d0ebb49a05a895547c7daddba',
     'adversarial:chart_marker_near_misses': 'f30d3087fc21c1661553dbcc5ddbf0022ebd21701e30d30ccb94123cfa889897',
     'adversarial:comment_before_final_newline': '1afc486f1e1548d4cb0f984b2080c50870c2be1200c5d5703c21399815ecf580',
     'adversarial:comment_in_script': 'aa5513c72b1e6f0a045084d7c6a3a373984fad793708f9a37d8c2d10519ca940',

@@ -1526,6 +1526,7 @@ def test_chartconfig_never_hangs_and_lexes_regex_literals():
     parser (a confirmed 120s+ executor hang pre-fix) nor corrupt brace
     depth."""
     from exstruct_spark.kernels.chartconfig import (
+        _code_view,
         charts_from_script,
         find_config_objects,
         parse_js_value,
@@ -1554,7 +1555,8 @@ def test_chartconfig_never_hangs_and_lexes_regex_literals():
         "f: v => v.replace(/[{}/]+/g, '-')})"
     )
     assert echarts and echarts[0]["series"] == [("n", [3.0])]
-    assert find_config_objects("new Chart(c, )") == []
+    script = "new Chart(c, )"
+    assert find_config_objects(script, _code_view(script)) == []
 
 
 def test_chartconfig_echarts_dataset_api():
