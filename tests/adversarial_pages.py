@@ -164,6 +164,37 @@ CHART_CODE_VIEW_SCRIPTS = (
     "// chart.draw(data, {title: 'Old'});\nchart.draw(data, {title: 'New'});",
 )
 
+
+def _nested_list(depth: int) -> str:
+    return "[" * depth + "1" + "]" * depth
+
+
+# values the serializer must write exactly: a non-ASCII meta key whose
+# value strips empty in an otherwise ASCII record, ld+json props with
+# empty values under non-ASCII names, Infinity/NaN, -0.0, 1e16, the
+# smallest subnormal, an int past 64 bits, quotes, backslashes, control
+# characters and a surrogate-pair escape, and lists nested deeper than
+# the native encoder's depth bound (one block past json.loads' own limit)
+_SERIALIZER_VALUES = (
+    "<html><head><meta property='og:título' content='   '>"
+    "<meta property='og:title' content='T'>"
+    "<script type='application/ld+json'>{\"@context\": \"https://schema.org\","
+    " \"@type\": \"Product\", \"name\": \"Q\\\"uote\\\\ back\\u0001\\b"
+    "\\u001b\\u007f end\", \"名前\": \"\", \"ключ\": null, \"clé\": \"   \","
+    " \"ü\": [], \"ñ\": {}, \"é\": [\"\"], \"width\": -0.0, \"height\": 1e16,"
+    " \"depth\": 5e-324, \"sku\": 1180591620717411303424, \"weight\": Infinity,"
+    " \"price\": NaN, \"low\": -Infinity, \"gtin\": \"pair \\ud83d\\ude00 end\","
+    " \"brand\": {\"@type\": \"Brand\", \"name\": \"\", \"ゼ\": \"\"},"
+    " \"isAvailable\": true, \"ok\": false, \"nest\": " + _nested_list(150)
+    + ", \"offers\": [{\"@type\": \"Offer\", \"price\": 0, \"priceCurrency\":"
+    " \"\\u20ac\"}]}</script>"
+    "<script type='application/ld+json'>[" + _nested_list(300)
+    + ", {\"@type\": \"Deep\", \"name\": \"d\"}]</script>"
+    "<script type='application/ld+json'>" + _nested_list(3000) + "</script>"
+    "</head><body><main><p>Serializer values page with enough visible words"
+    " to pass.</p></main></body></html>"
+)
+
 _TEXT_CASES = [
     ("comment_in_script",
      "<script>var s = '<!--'; x()</script>" + _BODY + "<!-- real -->"),
@@ -206,6 +237,7 @@ _TEXT_CASES = [
     ("chart_code_view",
      "".join("<figure><canvas></canvas><script>" + js + "</script></figure>"
              for js in CHART_CODE_VIEW_SCRIPTS)),
+    ("serializer_values", _SERIALIZER_VALUES),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]

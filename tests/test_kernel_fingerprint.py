@@ -74,6 +74,7 @@ BLESSED = {
     'adversarial:script_close_unicode_fold': 'a4921f0ae846c7caf348f4e0b7b8af7d249db1a3d7a5a6286a2a96631a3f0138',
     'adversarial:script_close_word_boundary': 'e8d21eedd24876b36f753f9eca07b52f406adde00f6e741ef0ff3bf11550c6ce',
     'adversarial:self_closing_slash': 'e0535f44a886c7986aca6cbc8317f7e9b3af9c75184fa9f9b798164a1cc31885',
+    'adversarial:serializer_values': 'e357c1d8fde908dea3facec6f650ae80ca8b35e3ce38591c3eb8aa00cfe44cc3',
     'adversarial:stray_angles': '0fb8df3c988f01eb57ebdb8db48b21c28af1ad48222a5ea75c9cdcafb606f400',
     'adversarial:style_close_spaced': '8faf9926bfc9d2525311fa35be3491125d4100a569acb6fbc9927615eb45f0c4',
     'adversarial:template_rows': '38d2dbf2ef916e3e0be53551c4f8bca6410150635164127356d9fd057d4616cd',
