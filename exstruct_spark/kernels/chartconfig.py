@@ -81,7 +81,9 @@ _MARKER_RE = re.compile(
     r"|\.highcharts\s*\("  # jQuery plugin form: config is the FIRST arg
     r"|new\s+ApexCharts\s*\("  # config is the LAST (2nd) argument
     r"|AmCharts\s*\.\s*makeChart\s*\("  # ditto (div id, config)
-    r"|\b(?:c3|bb)\s*\.\s*generate\s*\("  # config is the ONLY argument
+    # "\b(?:c3|bb)" as a lookbehind, so that every alternative starts
+    # with a literal and re can skip ahead on the first character
+    r"|(?:c3|bb)(?<!\w..)\s*\.\s*generate\s*\("  # the ONLY argument
     r"|new\s+FusionCharts\s*\("           # ditto
     r"|am4core\s*\.\s*createFromConfig\s*\("  # config is the FIRST arg
     r"|new\s+frappe\s*\.\s*Chart\s*\("  # (selector, cfg): the LAST

@@ -1,4 +1,5 @@
-"""Build and load the native HTML scanner and text walk (``htmlscan.c``).
+"""Build and load the native HTML scanner, text walk and canonical JSON
+encoder (``htmlscan.c``).
 
 The extension is compiled on first import with the interpreter's own C
 compiler settings (``sysconfig``: ``CC``, the include directory and the
@@ -14,8 +15,10 @@ costs one hash of the source file.
 When no compiler is available or the build fails, ``load()`` returns
 ``None`` and logs one WARNING on stderr with the reason;
 ``dom.parse_html`` then runs the pure-Python parser, which builds the
-same trees, and ``Node.text_content`` the Python text walk, which
-returns the same strings.
+same trees, ``Node.text_content`` the Python text walk, which returns
+the same strings, and ``serialize.canonical_json`` its Python
+specification, which writes the same text.  ``load()`` builds and loads
+once per process; every caller gets the same module.
 
 Prebuild for executor images (run as the user the workers run as)::
 
@@ -24,6 +27,7 @@ Prebuild for executor images (run as the user the workers run as)::
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import importlib.machinery
 import importlib.util
@@ -91,9 +95,10 @@ def build(target: str) -> None:
             os.unlink(tmp)
 
 
+@functools.cache
 def load():
-    """The compiled scanner module, or ``None`` (with one WARNING) when
-    it cannot be built or loaded."""
+    """The compiled module, or ``None`` (with one WARNING) when it
+    cannot be built or loaded."""
     try:
         target = target_path()
         if not os.path.exists(target):
@@ -104,8 +109,8 @@ def load():
         module = importlib.util.module_from_spec(spec)
         loader.exec_module(module)
         return module
-    except Exception as exc:  # any failure means the Python parser
+    except Exception as exc:  # any failure means the Python bodies
         log.warning("native HTML parser unavailable, using the Python "
-                    "parser (identical output): %s: %s",
+                    "parser and serializer (identical output): %s: %s",
                     type(exc).__name__, exc)
         return None

@@ -1,5 +1,6 @@
 /* Native tag scan, tree build and subtree text for
-   exstruct_spark.kernels.dom.
+   exstruct_spark.kernels.dom, and the canonical JSON encoder for
+   exstruct_spark.kernels.serialize.
 
    parse() is a port of dom._parse_html_fast, which stays the
    specification: it builds the same dom.Node trees (tag, attrs,
@@ -28,7 +29,13 @@
    RAW_TEXT_SKIP subtrees, puts a space around each BLOCK_ELEMENTS
    member and <br>, and collapses whitespace as it writes, which is
    _WS_RE.sub(" ", s).strip(): re's \s and str.strip() both test
-   Py_UNICODE_ISSPACE. */
+   Py_UNICODE_ISSPACE.
+
+   canonical_json() strips empty values and writes compact JSON in one
+   walk, a port of serialize._canonical_json_py (strip_empty, then
+   json.dumps), its specification, tested against it differentially.
+   It returns None for values outside its exact types, and the
+   specification then runs. */
 
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -869,6 +876,233 @@ done:
     return result;
 }
 
+/* ---- canonical JSON: serialize._canonical_json_py ---------------------
+
+   One recursive walk strips empty members (None, "", and dicts, lists
+   and tuples with nothing kept below them) and writes compact JSON, as
+   json.dumps(strip_empty(v), ensure_ascii=False, separators=(",", ":"))
+   does.  Only exact types are handled: dict with str keys, list,
+   tuple, str, int, finite float, bool and None.  Anything else, and
+   containers nested JSON_MAX_DEPTH deep, makes the walk give up and
+   return None, and serialize.canonical_json runs the specification on
+   the whole value.
+
+   A member is tested for emptiness (json_kept) before its key or comma
+   is written, so nothing written is ever taken back: the writer widens
+   its kind for every character it is given and never narrows it again,
+   so a rolled-back non-ASCII key would leave a result whose kind is too
+   wide for its text. */
+
+#define JSON_MAX_DEPTH 100
+
+enum { JSON_OK = 0, JSON_ERROR = -1, JSON_GIVE_UP = 1 };
+
+/* 0 when strip_empty drops v as a member, else 1.  A value outside the
+   exact types, or a container at the depth bound, counts as kept: the
+   writer then reaches it and gives up. */
+static int
+json_kept(PyObject *v, int depth)
+{
+    PyTypeObject *tp = Py_TYPE(v);
+    if (v == Py_None)
+        return 0;
+    if (tp == &PyUnicode_Type)
+        return PyUnicode_GET_LENGTH(v) > 0;
+    if (tp == &PyDict_Type) {
+        Py_ssize_t pos = 0;
+        PyObject *k, *x;
+        if (depth >= JSON_MAX_DEPTH)
+            return 1;
+        while (PyDict_Next(v, &pos, &k, &x))
+            if (json_kept(x, depth + 1))
+                return 1;
+        return 0;
+    }
+    if (tp == &PyList_Type || tp == &PyTuple_Type) {
+        Py_ssize_t i, n = PySequence_Fast_GET_SIZE(v);
+        PyObject **items = PySequence_Fast_ITEMS(v);
+        if (depth >= JSON_MAX_DEPTH)
+            return 1;
+        for (i = 0; i < n; i++)
+            if (json_kept(items[i], depth + 1))
+                return 1;
+        return 0;
+    }
+    return 1;
+}
+
+/* index of the first character of s[i:n] that json escapes: '"', '\\'
+   or a control character below 0x20; n when there is none */
+#define JSON_SCAN(T)                                                    \
+    do {                                                                \
+        const T *p = (const T *)d;                                      \
+        for (; i < n; i++)                                              \
+            if (p[i] < 0x20 || p[i] == '"' || p[i] == '\\')             \
+                return i;                                               \
+    } while (0)
+
+static Py_ssize_t
+json_next_escape(int kind, const void *d, Py_ssize_t i, Py_ssize_t n)
+{
+    switch (kind) {
+    case PyUnicode_1BYTE_KIND: JSON_SCAN(Py_UCS1); break;
+    case PyUnicode_2BYTE_KIND: JSON_SCAN(Py_UCS2); break;
+    default: JSON_SCAN(Py_UCS4); break;
+    }
+    return n;
+}
+
+/* s as a JSON string with json's ensure_ascii=False escapes: the short
+   forms for '"', '\\', \n, \r, \t, \b and \f, \u00xx (lowercase hex)
+   for the other control characters, every other character raw (lone
+   surrogates included) */
+static int
+json_write_str(_PyUnicodeWriter *w, PyObject *s)
+{
+    static const char hex[] = "0123456789abcdef";
+    Py_ssize_t n, run = 0, i;
+    int kind;
+    const void *d;
+#if PY_VERSION_HEX < 0x030C0000
+    if (PyUnicode_READY(s) < 0)
+        return -1;
+#endif
+    n = PyUnicode_GET_LENGTH(s);
+    kind = PyUnicode_KIND(s);
+    d = PyUnicode_DATA(s);
+    if (_PyUnicodeWriter_WriteChar(w, '"') < 0)
+        return -1;
+    for (i = json_next_escape(kind, d, 0, n); i < n;
+         i = json_next_escape(kind, d, run, n)) {
+        Py_UCS4 c = PyUnicode_READ(kind, d, i);
+        char esc[6] = {'\\', 0, '0', '0', 0, 0};
+        Py_ssize_t len = 2;
+        if (i > run && _PyUnicodeWriter_WriteSubstring(w, s, run, i) < 0)
+            return -1;
+        switch (c) {
+        case '"': esc[1] = '"'; break;
+        case '\\': esc[1] = '\\'; break;
+        case '\n': esc[1] = 'n'; break;
+        case '\r': esc[1] = 'r'; break;
+        case '\t': esc[1] = 't'; break;
+        case '\b': esc[1] = 'b'; break;
+        case '\f': esc[1] = 'f'; break;
+        default:
+            esc[1] = 'u';
+            esc[4] = hex[c >> 4];
+            esc[5] = hex[c & 0xF];
+            len = 6;
+        }
+        if (_PyUnicodeWriter_WriteASCIIString(w, esc, len) < 0)
+            return -1;
+        run = i + 1;
+    }
+    if (n > run && _PyUnicodeWriter_WriteSubstring(w, s, run, n) < 0)
+        return -1;
+    return _PyUnicodeWriter_WriteChar(w, '"');
+}
+
+/* repr(v) through the exact type's tp_repr, as json's encoder writes
+   int and float */
+static int
+json_write_repr(_PyUnicodeWriter *w, PyObject *v)
+{
+    PyObject *r = Py_TYPE(v)->tp_repr(v);
+    int rc;
+    if (r == NULL)
+        return -1;
+    rc = _PyUnicodeWriter_WriteStr(w, r);
+    Py_DECREF(r);
+    return rc;
+}
+
+/* v, whose container members are kept only when json_kept says so;
+   JSON_OK, JSON_ERROR (an exception is set) or JSON_GIVE_UP */
+static int
+json_write(_PyUnicodeWriter *w, PyObject *v, int depth)
+{
+    PyTypeObject *tp = Py_TYPE(v);
+    int rc, first = 1;
+    if (tp == &PyUnicode_Type)
+        return json_write_str(w, v);
+    if (tp == &PyDict_Type) {
+        Py_ssize_t pos = 0;
+        PyObject *k, *x;
+        if (depth >= JSON_MAX_DEPTH)
+            return JSON_GIVE_UP;
+        if (_PyUnicodeWriter_WriteChar(w, '{') < 0)
+            return JSON_ERROR;
+        while (PyDict_Next(v, &pos, &k, &x)) {
+            if (!json_kept(x, depth + 1))
+                continue;
+            if (!PyUnicode_CheckExact(k))
+                return JSON_GIVE_UP;
+            if ((!first && _PyUnicodeWriter_WriteChar(w, ',') < 0)
+                    || json_write_str(w, k) < 0
+                    || _PyUnicodeWriter_WriteChar(w, ':') < 0)
+                return JSON_ERROR;
+            first = 0;
+            if ((rc = json_write(w, x, depth + 1)) != JSON_OK)
+                return rc;
+        }
+        return _PyUnicodeWriter_WriteChar(w, '}') < 0 ? JSON_ERROR : JSON_OK;
+    }
+    if (tp == &PyList_Type || tp == &PyTuple_Type) {
+        Py_ssize_t i, n = PySequence_Fast_GET_SIZE(v);
+        PyObject **items = PySequence_Fast_ITEMS(v);
+        if (depth >= JSON_MAX_DEPTH)
+            return JSON_GIVE_UP;
+        if (_PyUnicodeWriter_WriteChar(w, '[') < 0)
+            return JSON_ERROR;
+        for (i = 0; i < n; i++) {
+            PyObject *x = items[i];
+            if (!json_kept(x, depth + 1))
+                continue;
+            if (!first && _PyUnicodeWriter_WriteChar(w, ',') < 0)
+                return JSON_ERROR;
+            first = 0;
+            if ((rc = json_write(w, x, depth + 1)) != JSON_OK)
+                return rc;
+        }
+        return _PyUnicodeWriter_WriteChar(w, ']') < 0 ? JSON_ERROR : JSON_OK;
+    }
+    if (v == Py_None)
+        rc = _PyUnicodeWriter_WriteASCIIString(w, "null", 4);
+    else if (v == Py_True)
+        rc = _PyUnicodeWriter_WriteASCIIString(w, "true", 4);
+    else if (v == Py_False)
+        rc = _PyUnicodeWriter_WriteASCIIString(w, "false", 5);
+    else if (tp == &PyLong_Type)
+        rc = json_write_repr(w, v);
+    else if (tp == &PyFloat_Type) {
+        if (!Py_IS_FINITE(PyFloat_AS_DOUBLE(v)))
+            return JSON_GIVE_UP;
+        rc = json_write_repr(w, v);
+    }
+    else
+        return JSON_GIVE_UP;
+    return rc < 0 ? JSON_ERROR : JSON_OK;
+}
+
+/* canonical_json(value): the text, or None where the specification
+   must run */
+static PyObject *
+htmlscan_canonical_json(PyObject *self, PyObject *value)
+{
+    _PyUnicodeWriter w;
+    int rc;
+    _PyUnicodeWriter_Init(&w);
+    w.overallocate = 1;
+    rc = json_write(&w, value, 0);
+    if (rc != JSON_OK) {
+        _PyUnicodeWriter_Dealloc(&w);
+        if (rc == JSON_ERROR)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    return _PyUnicodeWriter_Finish(&w);
+}
+
 static int
 check_ready(void)
 {
@@ -1025,12 +1259,18 @@ static PyMethodDef htmlscan_methods[] = {
      "dom._parse_html_fast builds."},
     {"text", htmlscan_text, METH_O,
      "text(node) -> str: the string dom._text_content_py(node) returns."},
+    {"canonical_json", htmlscan_canonical_json, METH_O,
+     "canonical_json(value) -> str: serialize._canonical_json_py(value), "
+     "or None when value holds a type, a float or a depth the native "
+     "walk leaves to it."},
     {NULL, NULL, 0, NULL},
 };
 
 static struct PyModuleDef htmlscan_module = {
     PyModuleDef_HEAD_INIT, "_htmlscan",
-    "Native tag scan and tree build for exstruct_spark.kernels.dom.", -1,
+    "Native tag scan, tree build and subtree text for "
+    "exstruct_spark.kernels.dom; canonical JSON for "
+    "exstruct_spark.kernels.serialize.", -1,
     htmlscan_methods,
 };
 

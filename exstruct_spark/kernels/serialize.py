@@ -5,6 +5,14 @@ recursive empty-value stripping (``io/__init__.py:92-128``
 ``dict_without_empty_values``) followed by compact
 ``json.dumps(ensure_ascii=False)`` (``io/serialize.py:70-73``).
 
+``canonical_json`` runs a native walk (``native/htmlscan.c``
+``canonical_json``) that strips and encodes in one pass.
+``_canonical_json_py``, ``strip_empty`` then ``json.dumps``, is its
+specification: it runs when the module is not built, and on a whole
+value the native walk leaves to it (a subclass, a non-``str`` key, a
+NaN or infinity, deep nesting), so both give the same text and raise
+the same errors.
+
 Byte-identity contract: serialization happens INSIDE the extraction
 kernel, before any Arrow round-trip, so int-vs-float distinctions and
 unicode bytes survive untouched (SURVEY.md §7.4).
@@ -16,6 +24,8 @@ import hashlib
 import json
 from itertools import islice
 from typing import Any
+
+from exstruct_spark.kernels import native
 
 _DROP = object()  # marks a member strip_empty removes (None is a value)
 
@@ -80,14 +90,28 @@ def strip_empty(value: Any) -> Any:
     return value
 
 
-def canonical_json(value: Any) -> str:
-    """Compact, non-ASCII-preserving JSON with empty values stripped.
+def _canonical_json_py(value: Any) -> str:
+    """The specification of ``canonical_json``.
 
     ``separators=(",", ":")`` + ``ensure_ascii=False`` matches the
     reference's compact emitter (io/serialize.py:70-73).  Key order is
     insertion order (deterministic by construction in the kernels).
     """
     return json.dumps(strip_empty(value), ensure_ascii=False, separators=(",", ":"))
+
+
+_native = native.load()
+_encode = None if _native is None else _native.canonical_json
+
+
+def canonical_json(value: Any) -> str:
+    """Compact, non-ASCII-preserving JSON with empty values stripped:
+    the native walk's text, else ``_canonical_json_py``'s."""
+    if _encode is not None:
+        text = _encode(value)
+        if text is not None:
+            return text
+    return _canonical_json_py(value)
 
 
 def sha256_hex(text: str) -> str:

@@ -262,17 +262,18 @@ def _confine(path: str) -> str:
     return resolved
 
 
-def _record_reply(rec: dict) -> dict:
-    """The reply view of one extraction record."""
-    return {
-        "status": rec["status"],
-        "main_text": rec["main_text"],
-        "extraction": json.loads(rec["extraction_json"] or "{}"),
-        "truncated": bool(rec["truncated"]),
-    }
+def _record_reply(rec: dict, **head) -> str:
+    """The reply text of one extraction record: ``head`` (``path`` for
+    ``extract_file``), ``status``, ``main_text``, ``extraction`` and
+    ``truncated``.  The record's canonical ``extraction_json`` is
+    spliced in as it is, never decoded and encoded again."""
+    text = json.dumps({**head, "status": rec["status"],
+                       "main_text": rec["main_text"]}, ensure_ascii=False)
+    return (f'{text[:-1]}, "extraction": {rec["extraction_json"] or "{}"}, '
+            f'"truncated": {json.dumps(bool(rec["truncated"]))}}}')
 
 
-def _call_extract_html(args: dict) -> dict:
+def _call_extract_html(args: dict) -> str:
     from exstruct_spark.config import ExtractOptions
     from exstruct_spark.golden import extract_document
 
@@ -353,7 +354,7 @@ def _call_read_table_range(args: dict) -> dict:
     return out
 
 
-def _call_extract_file(args: dict) -> dict:
+def _call_extract_file(args: dict) -> str:
     from exstruct_spark.config import ExtractOptions
     from exstruct_spark.golden import extract_document
 
@@ -369,7 +370,7 @@ def _call_extract_file(args: dict) -> dict:
     opts = (ExtractOptions.from_mode(args["mode"])
             if args.get("mode") else ExtractOptions())
     rec = extract_document("file://" + resolved, raw, opts)
-    return {"path": resolved, **_record_reply(rec)}
+    return _record_reply(rec, path=resolved)
 
 
 def _call_media_probe(args: dict) -> dict:
@@ -604,13 +605,15 @@ def handle(msg: dict):
                     "error": {"code": -32602,
                               "message": f"unknown tool {name!r}"}}
         try:
+            # a tool returns a dict, or its reply's JSON text when it
+            # splices one it already holds (the extraction tools)
             result = fn(params.get("arguments") or {})
+            if not isinstance(result, str):
+                result = json.dumps(result, ensure_ascii=False)
             return {
                 "jsonrpc": "2.0", "id": msg_id,
                 "result": {
-                    "content": [{"type": "text",
-                                 "text": json.dumps(result,
-                                                    ensure_ascii=False)}],
+                    "content": [{"type": "text", "text": result}],
                     "isError": False,
                 },
             }

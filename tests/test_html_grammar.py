@@ -235,16 +235,20 @@ def test_parse_html_raises_instead_of_a_second_grammar():
 
 
 def test_unbuildable_native_falls_back_with_one_warning(tmp_path):
-    """No usable cache directory: the Python parser and text walk run,
-    one WARNING names the reason on stderr, stdout stays clean."""
+    """No usable cache directory: the Python parser, text walk and
+    serializer run, one WARNING names the reason on stderr, stdout stays
+    clean."""
     not_a_dir = tmp_path / "cache"
     not_a_dir.write_text("")
-    code = ("from exstruct_spark.kernels import dom; "
+    code = ("from exstruct_spark.kernels import dom, serialize; "
             "assert dom._native is None and "
             "dom._parse is dom._parse_html_fast; "
             "assert dom.Node.text_content is dom._text_content_py; "
+            "assert serialize._encode is None; "
             "root = dom.parse_html('<p>x<br>y <script>z</script></p>'); "
-            "assert root.text_content() == 'x y'")
+            "assert root.text_content() == 'x y'; "
+            "assert serialize.canonical_json({'a': [None, 'é']}) == "
+            "'{\"a\":[\"é\"]}'")
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -407,3 +407,78 @@ def test_mcp_edit_document_roundtrip():
     rows = ex["extraction"]["tables"][0]["rows"]
     assert rows[0]["c"]["1"] == 9.5
     assert rows[2]["c"] == {"0": "c", "1": 3}
+
+
+def _load_server():
+    """``jobs/mcp_server.py`` as a module, to call ``handle`` in-process."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "mcp_server.py")
+    spec = importlib.util.spec_from_file_location("mcp_server_in_process",
+                                                  path)
+    server = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(server)
+    return server
+
+
+def _tool_text(server, name, arguments):
+    resp = server.handle({"jsonrpc": "2.0", "id": 7, "method": "tools/call",
+                          "params": {"name": name, "arguments": arguments}})
+    assert resp["result"]["isError"] is False, resp
+    return resp["result"]["content"][0]["text"]
+
+
+def test_extraction_replies_splice_the_record_json(tmp_path, monkeypatch):
+    """For every fingerprint input, and a record whose extraction_json is
+    empty, the extract_html and extract_file replies hold the record's
+    extraction_json verbatim, and their ``extraction`` parses to it.
+    The record is the one the tool got from ``golden.extract_document``,
+    looked up at call time (the traced server rebinds that name)."""
+    import os
+
+    from exstruct_spark import golden
+    from test_kernel_fingerprint import _slice
+
+    server = _load_server()
+    root = os.path.realpath(tmp_path)
+    monkeypatch.setattr(server, "SERVED_ROOT", root)
+    extract = golden.extract_document
+    records = []
+
+    def recording(*args, **kwargs):
+        rec = extract(*args, **kwargs)
+        if records and records[-1] == "blank":
+            rec = dict(rec, extraction_json="")
+        records.append(rec)
+        return rec
+
+    monkeypatch.setattr(golden, "extract_document", recording)
+    cases = [(url, raw) for _, url, raw in _slice()]
+    cases.append(("https://blank.example/", b"<p>blank record json</p>"))
+    for k, (url, raw) in enumerate(cases):
+        path = os.path.join(root, f"doc{k}.html")
+        with open(path, "wb") as fh:
+            fh.write(raw)
+        for name, arguments, head in (
+                ("extract_html",
+                 {"url": url, "html": raw.decode("utf-8", "replace")}, []),
+                ("extract_file", {"path": f"doc{k}.html"}, ["path"])):
+            if k == len(cases) - 1:
+                records.append("blank")
+            text = _tool_text(server, name, arguments)
+            rec = records.pop()
+            records.clear()
+            reply = json.loads(text)
+            assert list(reply) == head + ["status", "main_text",
+                                          "extraction", "truncated"]
+            assert rec["extraction_json"] in text
+            assert reply["extraction"] == json.loads(
+                rec["extraction_json"] or "{}")
+            assert reply["status"] == rec["status"]
+            assert reply["main_text"] == rec["main_text"]
+            assert reply["truncated"] is bool(rec["truncated"])
+            if head:
+                assert reply["path"] == path
+    assert rec["extraction_json"] == "" and reply["extraction"] == {}
