@@ -195,6 +195,61 @@ _SERIALIZER_VALUES = (
     " to pass.</p></main></body></html>"
 )
 
+# content a browser does not render, inside and around content it does:
+# hidden spans in a paragraph, a cell, a list item, a link, a caption, a
+# figcaption and a section heading, and a class-hidden wrapper around a
+# paragraph, a link, an image, a list and an SVG, each in display:none,
+# hidden-attribute and visibility:hidden forms
+_HIDDEN_DESCENDANTS = (
+    "<html><head><title>Hidden descendants</title><style>.h{display:none}"
+    " .v{visibility:hidden}</style></head><body><main>"
+    "<p>A visible paragraph with enough words to be kept as content ok."
+    "<span style='display:none'>SECRET1</span></p>"
+    "<p>Another visible paragraph, long enough to stay in the main text."
+    "<span class=v>VSECRET1</span><span style='visibility:hidden'>VSECRET2"
+    "</span></p>"
+    "<div class=h><p>A class-hidden paragraph with enough words to be kept"
+    " as content.</p><a href='/secret'>secret link</a>"
+    "<img src='/secret.png' alt='secret img'>"
+    "<ul><li>hidden list<ul><li>hidden inner</li></ul></li></ul>"
+    "<svg width='50' height='50'><rect x='0' y='0' width='20' height='20'>"
+    "</rect><text x='5' y='5'>SVGSECRET</text></svg></div>"
+    "<div style='visibility:hidden'><p>A visibility-hidden paragraph with"
+    " enough words to be kept.</p><a href='/vsecret'>v link</a>"
+    "<img src='/vsecret.png' alt='v img'></div>"
+    "<table><caption>Prices <span hidden>CAPSECRET</span></caption>"
+    "<tr><th>item</th><th>link</th></tr>"
+    "<tr><td>a<span style='display:none'>SECRET2</span></td>"
+    "<td><a href='/cell-hidden' style='display:none'>HL</a>"
+    "<a href='/cell-shown'>shown</a></td></tr>"
+    "<tr><td>b<span class=v>VCELL</span></td><td>2</td></tr></table>"
+    "<ul><li>one <span hidden>LISECRET</span><ul><li>nested"
+    "<span class=h>NSECRET</span></li><li hidden>HIDDENITEM</li></ul></li>"
+    "<li>two</li></ul>"
+    "<p>A link paragraph <a href='/ok'>ok link<span hidden>ASECRET</span>"
+    "</a> with enough words to be kept here.</p>"
+    "<figure><img src='/fig.png' alt='fig'><figcaption>cap "
+    "<span hidden>SECRETCAP</span></figcaption></figure>"
+    "<section><h2 class=h>HIDDEN TITLE</h2><h2>Shown title</h2>"
+    "<p>The section body text is long enough to be kept as content.</p>"
+    "</section>"
+    "<svg width='50' height='50'><rect x='0' y='0' width='20' height='20'>"
+    "</rect><rect class=h x='30' y='30' width='5' height='5'></rect>"
+    "<text x='5' y='5'>shown <tspan hidden>TSECRET</tspan></text></svg>"
+    "</main></body></html>"
+)
+
+# an <article> only inside a <template> and a <main> only inside a
+# display:none wrapper, before the rendered <main>
+_UNRENDERED_CONTENT_ROOT = (
+    "<html><body><template><article><p>Template article text that must"
+    " never become the main text of this page.</p></article></template>"
+    "<div style='display:none'><main><p>Hidden main text that a browser"
+    " never shows to the reader of this page.</p></main></div>"
+    "<main><p>The visible main paragraph with enough words to be the main"
+    " text.</p></main></body></html>"
+)
+
 _TEXT_CASES = [
     ("comment_in_script",
      "<script>var s = '<!--'; x()</script>" + _BODY + "<!-- real -->"),
@@ -238,6 +293,8 @@ _TEXT_CASES = [
      "".join("<figure><canvas></canvas><script>" + js + "</script></figure>"
              for js in CHART_CODE_VIEW_SCRIPTS)),
     ("serializer_values", _SERIALIZER_VALUES),
+    ("hidden_descendants", _HIDDEN_DESCENDANTS),
+    ("unrendered_content_root", _UNRENDERED_CONTENT_ROOT),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
