@@ -799,10 +799,16 @@ class ExtractionJob:
             for pdf in batches:
                 htmls = []
                 statuses = []
-                for url, hb in zip(pdf["url"], pdf["html"]):
+                # a staged external_css column: the ops address the
+                # tables extraction reports under the same cascade
+                sheets = (pdf["external_css"].tolist()
+                          if "external_css" in pdf.columns
+                          else [None] * len(pdf))
+                for url, hb, ext in zip(pdf["url"], pdf["html"], sheets):
                     text = decode_html_bytes(
                         bytes(hb) if hb is not None else b"")
-                    new, st = apply_ops(text, _json.loads(ops_map[url]))
+                    new, st = apply_ops(text, _json.loads(ops_map[url]),
+                                        url, ext)
                     htmls.append(bytearray(new.encode("utf-8")))
                     statuses.append(_json.dumps(st))
                 out = pdf.copy()

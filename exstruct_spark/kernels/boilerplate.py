@@ -6,8 +6,9 @@ the web analogue of exstruct's density/coverage/header candidate gates
 score each block, keep content blocks, join as main text.
 
 Rules (deterministic, config-driven — thresholds in ``ExtractOptions``):
-  1. blocks live under semantic content roots when present
-     (<article>/<main>, else <body>);
+  1. blocks live under semantic content roots when present (the first
+     rendered <article>/<main>, else <body>), and a subtree the browser
+     does not render (``Node.unrendered``) holds none;
   2. <nav>/<header>/<footer>/<aside> subtrees and high link-density
      blocks are boilerplate; so are subtrees whose class/id TOKENS
      carry a negative hint (sidebar/comment/ad/cookie/...) without a
@@ -27,7 +28,7 @@ Rules (deterministic, config-driven — thresholds in ``ExtractOptions``):
 from __future__ import annotations
 
 from exstruct_spark.config import ExtractOptions
-from exstruct_spark.kernels.dom import RENDER_INERT, Node, is_invisible
+from exstruct_spark.kernels.dom import Node
 
 _BOILERPLATE_TAGS = frozenset({"nav", "header", "footer", "aside"})
 
@@ -80,21 +81,23 @@ def _link_text_len(node: Node) -> int:
     total = 0
     for i in range(node.i0, node.i1):
         n = dl[i]
-        if n.tag == "a":
+        if n.tag == "a" and not n.unrendered:
             total += len(n.text_content())
     return total
 
 
 def _collect_blocks(node: Node, out: list) -> None:
     """Collect candidate text blocks in document order, pruning
-    boilerplate and structurally-parsed subtrees.  Iterative so deep
-    nesting cannot blow the recursion limit."""
+    unrendered, boilerplate and structurally-parsed subtrees.  Iterative
+    so deep nesting cannot blow the recursion limit."""
     stack = [node]
     first = True
     while stack:
         n = stack.pop()
         if not first:
-            if n.tag in _SKIP_SUBTREES or n.tag in RENDER_INERT:
+            if n.unrendered:
+                continue
+            if n.tag in _SKIP_SUBTREES:
                 # role=presentation/none tables are LAYOUT by the
                 # author's own declaration — their block content is
                 # ordinary page text, not structural table data
@@ -102,14 +105,7 @@ def _collect_blocks(node: Node, out: list) -> None:
                         (n.attrs.get("role") or "").strip().lower()
                         in ("presentation", "none"))):
                     continue
-            # a hidden container hides its whole subtree from rendering
-            # (cookie banners, modals, a/b-test variants) — its text is
-            # not page content; visibility:hidden ink-free boxes read
-            # the same for TEXT.  Attr/inline check only on the descent
-            # (cheap); class-resolved display:none is applied to block
-            # nodes by the caller when a resolver exists.
-            if n.attrs and (is_invisible(n.attrs)
-                            or _hint_is_boilerplate(n.attrs)):
+            if n.attrs and _hint_is_boilerplate(n.attrs):
                 continue
             if n.tag in _BLOCK_TAGS:
                 out.append(n)  # block content is atomic
@@ -123,19 +119,19 @@ def _collect_blocks(node: Node, out: list) -> None:
 
 
 def _content_root(root: Node) -> Node:
+    """The first rendered <article>, else <main>, else <body>."""
     for tag in ("article", "main"):
-        found = root.find_first(tag)
+        found = root.first_rendered(tag)
         if found is not None:
             return found
     body = root.find_first("body")
     return body if body is not None else root
 
 
-def extract_main_text(root: Node, opts: ExtractOptions,
-                      css=None) -> str:
-    """DOM -> main text, one kept block per line.  ``css`` (a
-    kernels/css.py StyleResolver) lets class-declared ``display:none``
-    blocks (``.hidden``-style banners) drop like their inline twins."""
+def extract_main_text(root: Node, opts: ExtractOptions) -> str:
+    """DOM -> main text, one kept block per line.  Reads the tree's
+    rendering mark (``Node.unrendered``): hidden banners, modals and
+    ``<template>`` copies are no content."""
     content_root = _content_root(root)
     blocks: list = []
     _collect_blocks(content_root, blocks)
@@ -143,10 +139,6 @@ def extract_main_text(root: Node, opts: ExtractOptions,
     kept: list = []
     decisions: list = []  # (node, text, is_content)
     for blk in blocks:
-        if css is not None and css and is_invisible(
-                css.effective_attrs(blk)):
-            decisions.append((blk, "", False))
-            continue
         text = blk.text_content()
         if not text:
             decisions.append((blk, text, False))

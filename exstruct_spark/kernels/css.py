@@ -58,15 +58,20 @@ The resolved output is an ordinary ``style`` declaration string merged
 into a COPY of the element's attrs, so ``kernels/borders.py`` and
 ``kernels/colors.py`` evaluate it with their existing predicates,
 unchanged.
+
+``mark_unrendered`` is the one visibility decision of a document: it
+marks (``Node.unrendered``) every subtree whose effective attrs are
+``dom.is_invisible``, once, before any artifact family reads the tree.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
+from itertools import islice
 from typing import Optional
 
-from exstruct_spark.kernels.dom import Node
+from exstruct_spark.kernels.dom import Node, is_invisible, mark_subtree
 
 # caps-not-crashes: bound the work one adversarial page can demand
 MAX_CSS_BYTES = 262_144   # per document, across all <style> blocks
@@ -922,7 +927,7 @@ class StyleResolver:
     existing ``cell_background`` / border predicates resolve.
     """
 
-    __slots__ = ("rules", "_by_id", "_by_class", "_by_tag",
+    __slots__ = ("rules", "hide_keys", "_by_id", "_by_class", "_by_tag",
                  "_sibling_cache")
 
     def __init__(self, style_nodes: list, extra_rules: list = None):
@@ -957,18 +962,33 @@ class StyleResolver:
         by_id: dict = {}
         by_class: dict = {}
         by_tag: dict = {}
+        # the same keys of the rules that declare display or visibility:
+        # only a node holding one can be hidden by a rule
+        hide_ids: set = set()
+        hide_classes: set = set()
+        hide_tags: set = set()
         for order, ((chain, combs, spec), decls) in enumerate(rules):
             tag, classes, sel_id, _ps, _as = chain[-1]
             entry = (spec, order, chain, combs, decls)
+            hides = any(prop in ("display", "visibility")
+                        for prop, _v, _i in decls)
             if sel_id is not None:
                 by_id.setdefault(sel_id, []).append(entry)
+                if hides:
+                    hide_ids.add(sel_id)
             elif classes:
                 by_class.setdefault(classes[0], []).append(entry)
+                if hides:
+                    hide_classes.add(classes[0])
             else:
                 # tag may be None for a pseudo-only rightmost compound
                 # (":first-child", "*:nth-child(odd)") — the None key
                 # is the universal bucket probed for every node
                 by_tag.setdefault(tag, []).append(entry)
+                if hides:
+                    hide_tags.add(tag)
+        self.hide_keys = ((hide_ids, hide_classes, hide_tags)
+                          if hide_ids or hide_classes or hide_tags else None)
         self._by_id = by_id
         self._by_class = by_class
         self._by_tag = by_tag
@@ -1052,6 +1072,57 @@ class StyleResolver:
 
 
 _EMPTY_RESOLVER = StyleResolver([])
+
+
+def _may_hide(node: Node, hide_keys) -> bool:
+    """Whether ``node`` can be invisible: its own attrs carry
+    ``hidden`` or ``style``, or it holds a key (id, class, tag, or any
+    node for a universal rule) of a rule that declares display or
+    visibility."""
+    attrs = node.attrs
+    if "hidden" in attrs or "style" in attrs:
+        return True
+    ids, classes, tags = hide_keys
+    if None in tags or node.tag in tags:
+        return True
+    if ids and attrs.get("id") in ids:
+        return True
+    cls = attrs.get("class")
+    return bool(classes and cls and not classes.isdisjoint(cls.split()))
+
+
+def mark_unrendered(root: Node, candidates: list, css=None) -> list:
+    """Mark every subtree of the document ``root`` that renders no ink:
+    each node whose effective attrs (``css``, a ``StyleResolver`` or
+    None) are ``dom.is_invisible``, with its whole subtree.  The one
+    place the visibility decision is made; every family reads the mark.
+
+    ``candidates`` are the document's rendered nodes whose own attrs
+    carry ``hidden`` or ``style``, in document order (the extraction
+    walk collects them).  When ``css`` holds a rule that declares
+    display or visibility, every rendered node holding one of those
+    rules' keys is a candidate too.  A page with neither does no work.
+    Candidates are visited in document order; one inside a subtree
+    already marked is skipped.  Returns the roots of the marked
+    subtrees, disjoint, in document order."""
+    hide_keys = css.hide_keys if css is not None else None
+    if hide_keys is not None:
+        # [1:]: the root is the document, not an element
+        candidates = [n for n in islice(root.doc_nodes, 1, None)
+                      if not n.unrendered and _may_hide(n, hide_keys)]
+    hidden: list = []
+    if not candidates:
+        return hidden
+    eff = css.effective_attrs if css is not None else None
+    marked_to = -1
+    for n in candidates:
+        if n.i0 < marked_to:
+            continue
+        if is_invisible(n.attrs if eff is None else eff(n)):
+            mark_subtree(n)
+            marked_to = n.i1
+            hidden.append(n)
+    return hidden
 
 
 def build_resolver(style_nodes: Optional[list],

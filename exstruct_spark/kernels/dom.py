@@ -24,6 +24,7 @@ Without a build both Python bodies run; there is no other runtime path.
 
 from __future__ import annotations
 
+import codecs
 import re
 from html import unescape as _unescape
 from typing import Iterator, Optional
@@ -111,7 +112,9 @@ _NO_ATTRS: dict = {}  # shared empty attrs (never mutated)
 
 
 def _text_content_py(node: "Node") -> str:
-    """Whitespace-collapsed text of the subtree, skipping script/style.
+    """Whitespace-collapsed text of the subtree, skipping script/style
+    and every ``unrendered`` child subtree (the node itself is read
+    whether or not it is marked).
 
     The specification of the native walk (``htmlscan.c`` ``text``),
     which runs as ``Node.text_content`` whenever the scanner is built;
@@ -140,7 +143,7 @@ def _text_content_py(node: "Node") -> str:
             parts.append(item)
             continue
         c = item
-        if c.tag in RAW_TEXT_SKIP:
+        if c.tag in RAW_TEXT_SKIP or c.unrendered:
             continue
         is_block = c.tag in BLOCK_ELEMENTS or c.tag == "br"
         if is_block:
@@ -180,10 +183,18 @@ class Node:
     of input) has ``e0 == e1`` at the start of the token that closed it;
     a void or self-closed element has ``e0 == e1 == s1``.  The root spans
     the whole string.  Extraction never reads them; edits splice at them.
+
+    Rendering mark: ``unrendered`` is True on every node of a subtree a
+    browser does not render (a ``<template>``/``<noscript>`` subtree, or
+    one whose effective attrs are ``is_invisible``).  Both parsers set it
+    False; it is the one write after parse, made once per document
+    (``css.mark_unrendered`` and the inert skip of the extraction walk)
+    before any family reads the tree.  The text walks skip a marked
+    child, and every rendered-content family drops marked nodes.
     """
 
     __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi",
-                 "s0", "s1", "e0", "e1")
+                 "s0", "s1", "e0", "e1", "unrendered")
 
     def __init__(self, tag: str, attrs: Optional[dict] = None):
         self.tag = tag
@@ -195,6 +206,7 @@ class Node:
         # the parent's i0, set by the parser; None only on the root
         self.pi = None
         self.s0 = self.s1 = self.e0 = self.e1 = 0
+        self.unrendered = False
 
     @property
     def parent(self) -> Optional["Node"]:
@@ -239,6 +251,16 @@ class Node:
                 return n
         return None
 
+    def first_rendered(self, *tags: str):
+        """The first node of the subtree (self included), in document
+        order, whose tag is one of ``tags`` and that is not
+        ``unrendered``; None if there is none."""
+        first = self.find_first(*tags)  # stops early: the common case
+        if first is None or not first.unrendered:
+            return first
+        return next((n for n in self.find_all(*tags) if not n.unrendered),
+                    None)
+
     def element_children(self) -> list:
         return [c for c in self.children if type(c) is Node]
 
@@ -251,7 +273,8 @@ class Node:
         no whitespace collapsing — code indentation and line breaks are
         content there, and a training corpus that collapses them ships
         broken code.  ``<br>`` becomes a newline; script/style skipped;
-        CR/LF normalized; outer blank lines trimmed."""
+        CR/LF normalized; outer blank lines trimmed; ``unrendered``
+        children skipped."""
         if self.tag in RAW_TEXT_SKIP:
             return ""
         parts: list = []
@@ -261,7 +284,7 @@ class Node:
             if type(item) is str:
                 parts.append(item)
                 continue
-            if item.tag in RAW_TEXT_SKIP:
+            if item.tag in RAW_TEXT_SKIP or item.unrendered:
                 continue
             if item.tag == "br":
                 parts.append("\n")
@@ -435,6 +458,7 @@ def _parse_html_fast(html: str, xml_mode: bool = False) -> Node:
             # a leaf ends at its start tag until its scope closes
             node.s0 = start
             node.s1 = node.e0 = node.e1 = mend
+            node.unrendered = False
             parent.children.append(node)
             add_node(node)
             if xml_mode:
@@ -511,6 +535,12 @@ def parse_html(html: str, xml_mode: bool = False) -> Node:
     return _parse(html, xml_mode)
 
 
+def mark_subtree(node: Node) -> None:
+    """Set ``unrendered`` on ``node`` and every node below it."""
+    for n in node.doc_nodes[node.i0:node.i1]:
+        n.unrendered = True
+
+
 def release(root: Node) -> None:
     """Let a parsed document be freed by reference counting: empty its
     ``doc_nodes`` list, the one reference cycle in the tree (every node
@@ -520,6 +550,16 @@ def release(root: Node) -> None:
     dl = root.doc_nodes
     root.doc_nodes = None
     dl.clear()
+
+
+# Python codecs a meta charset can name that are no page encoding (none
+# is an Encoding Standard label): some raise whatever ``errors`` says
+# (idna, punycode, undefined), the others decode to lone surrogates,
+# which no UTF-8 string can carry (utf-7 and the escape codecs).  A page
+# naming one takes the unknown-label path.
+_NOT_PAGE_CODECS = frozenset((
+    "idna", "punycode", "undefined", "utf-7", "unicode-escape",
+    "raw-unicode-escape"))
 
 
 def decode_html_bytes(raw: bytes) -> str:
@@ -548,7 +588,8 @@ def decode_html_bytes(raw: bytes) -> str:
     m = re.search(r'charset=["\']?([a-z0-9_\-]+)', head)
     if m:
         try:
-            return raw.decode(m.group(1), errors="replace")
+            if codecs.lookup(m.group(1)).name not in _NOT_PAGE_CODECS:
+                return raw.decode(m.group(1), errors="replace")
         except LookupError:
             pass
     return raw.decode("latin-1", errors="replace")

@@ -68,11 +68,13 @@ and column ``c`` is ``(table=id, row=r-1, col=c)``, and every op's
 ``row``/``col`` is a position in that grid.  Each op parses the
 document with the kernel's own grammar and takes the address map that
 extraction's grid expansion records (``extract.declared_tables``,
-``tables._expand_grid``), resolved against the page's own ``<style>``
-rules.  So hidden, ``role=presentation`` and empty tables, hidden rows
-and cells, and the slots a span covers are not addressable, ARIA grids
-are, and nothing in a comment, a script string, a ``<template>`` copy
-or an attribute value is.  Ops that write ``<tr>`` or
+``tables._expand_grid``), under extraction's cascade and rendering
+mark (``extract._render_cascade``: the page's own ``<style>`` rules and
+the corpus-joined sheets ``apply_ops`` is given).  So hidden,
+``role=presentation`` and empty tables, hidden rows and cells, and the
+slots a span covers are not addressable, ARIA grids are, and nothing in
+a comment, a script string, a ``<template>`` copy or an attribute value
+is.  Ops that write ``<tr>`` or
 ``rowspan``/``colspan`` markup (``add_row``, ``merge_cells``,
 ``unmerge_cells``) skip ARIA grids.  Splices happen at the source
 offsets the parser records on each node (``Node.s0``/``s1``/``e0``/
@@ -86,15 +88,22 @@ from __future__ import annotations
 
 import re
 from contextlib import contextmanager
+from contextvars import ContextVar
 from itertools import islice
 
 from exstruct_spark.config import DetectionConfig
 from exstruct_spark.kernels import dom
-from exstruct_spark.kernels.css import build_resolver
-from exstruct_spark.kernels.extract import declared_tables
+from exstruct_spark.kernels.extract import _render_cascade, declared_tables
 from exstruct_spark.kernels.tables import is_table_like
 
 _DETECTION = DetectionConfig()
+
+# (url, external_css) of the page ``apply_ops`` is editing, so the
+# cascade of every op's parse sees the page's base URL and corpus-joined
+# sheets as extraction does.  A context variable, not an op argument:
+# the op functions' signatures are the op vocabulary (the MCP server
+# lists them), and the page is no part of an op.
+_PAGE: ContextVar = ContextVar("page", default=("", None))
 
 
 def _escape(value) -> str:
@@ -111,20 +120,26 @@ def _parsed_table(html: str, index: int):
     when the block exits."""
     root = dom.parse_html(html)
     try:
-        styles: list = []
+        by_tag: dict = {"base": [], "link": [], "style": []}
         nodes: list = []
+        candidates: list = []
         skip_to = -1
         for n in root.iter():  # the rendered walk, as extraction's
             if n.i0 < skip_to:
                 continue
             if n.tag in dom.RENDER_INERT:
+                dom.mark_subtree(n)
                 skip_to = n.i1
-            elif n.tag == "style":
-                styles.append(n)
+                continue
+            if n.tag in by_tag:
+                by_tag[n.tag].append(n)
             elif is_table_like(n):
                 nodes.append(n)
-        found = declared_tables(nodes, _DETECTION, css=build_resolver(styles),
-                                anchored=True)
+            if "style" in n.attrs or "hidden" in n.attrs:
+                candidates.append(n)
+        url, external_css = _PAGE.get()
+        css = _render_cascade(root, url, by_tag, candidates, external_css)[2]
+        found = declared_tables(nodes, _DETECTION, css=css, anchored=True)
         for node, _art, (rows, cells) in islice(found, index, None):
             yield node, rows, cells
             break
@@ -818,8 +833,13 @@ _OPS = {
 }
 
 
-def apply_ops(html: str, ops: list) -> tuple:
+def apply_ops(html: str, ops: list, url: str = "",
+              external_css=None) -> tuple:
     """Apply an op list in order -> (patched_html, statuses).
+
+    ``url`` and ``external_css`` are the page's URL and corpus-joined
+    sheets (``extract_document``'s arguments of the same names): the
+    ops address the tables extraction reports under the same cascade.
 
     Each op is a dict: ``{"op": name, "table": i, ...}`` with the op's
     keyword arguments.  Statuses mirror the reference's PatchStatus:
@@ -827,18 +847,22 @@ def apply_ops(html: str, ops: list) -> tuple:
     region) — a skipped op never aborts the rest (edit/types.py
     parity; X3 fallback-not-fail)."""
     statuses = []
-    for op in ops:
-        # totality over arbitrary JSON shapes: a non-dict op entry or a
-        # non-string op name is a skipped op, never an exception
-        name = op.get("op") if isinstance(op, dict) else None
-        fn = _OPS.get(name) if isinstance(name, str) else None
-        if fn is None:
-            statuses.append("skipped")
-            continue
-        kwargs = {k: v for k, v in op.items() if k != "op"}
-        try:
-            html = fn(html, **kwargs)
-            statuses.append("applied")
-        except (ValueError, TypeError):
-            statuses.append("skipped")
+    token = _PAGE.set((url, external_css))
+    try:
+        for op in ops:
+            # totality over arbitrary JSON shapes: a non-dict op entry or
+            # a non-string op name is a skipped op, never an exception
+            name = op.get("op") if isinstance(op, dict) else None
+            fn = _OPS.get(name) if isinstance(name, str) else None
+            if fn is None:
+                statuses.append("skipped")
+                continue
+            kwargs = {k: v for k, v in op.items() if k != "op"}
+            try:
+                html = fn(html, **kwargs)
+                statuses.append("applied")
+            except (ValueError, TypeError):
+                statuses.append("skipped")
+    finally:
+        _PAGE.reset(token)
     return html, statuses

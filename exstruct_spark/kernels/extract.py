@@ -32,13 +32,13 @@ from exstruct_spark.kernels.areas import area_views, auto_areas
 from exstruct_spark.kernels.boilerplate import extract_main_text
 from exstruct_spark.kernels.charts import extract_charts
 from exstruct_spark.kernels.css import (
-    _style_text, build_resolver, media_applies_on_screen, rules_from_sheets,
+    _style_text, build_resolver, mark_unrendered, media_applies_on_screen,
+    rules_from_sheets,
 )
 from exstruct_spark.kernels.dom import (
     RENDER_INERT,
-    Node,
     decode_html_bytes,
-    is_invisible,
+    mark_subtree,
     parse_html,
     release,
     strip_tags_text,
@@ -105,16 +105,17 @@ def _section_views(sections: list, table_starts: list,
                    table_ids: list) -> list:
     """Region-scoped views: the PrintAreaView analogue (reference
     models/__init__.py:178-185, 437-455 + the rows⋈area containment join
-    io/__init__.py:199-235).  Each <section>/<article> becomes a view:
-    first heading as title, contained table artifact ids (containment =
-    DOM subtree membership — the in-document J1 join), text size.
+    io/__init__.py:199-235).  Each rendered <section>/<article> becomes
+    a view: first rendered heading as title, contained table artifact ids
+    (containment = DOM subtree membership — the in-document J1 join),
+    text size.
     ``table_starts`` holds the ``i0`` of each table artifact's node in
     ascending order and ``table_ids`` its artifact id: a section's
     subtree is its ``[i0, i1)`` slice, so its tables are one bisected
     run."""
     views: list = []
-    for i, sec in enumerate(sections):
-        heading = sec.find_first("h1", "h2", "h3", "h4", "h5", "h6")
+    for i, sec in enumerate(s for s in sections if not s.unrendered):
+        heading = sec.first_rendered("h1", "h2", "h3", "h4", "h5", "h6")
         contained = table_ids[bisect_left(table_starts, sec.i0):
                               bisect_left(table_starts, sec.i1)]
         text = sec.text_content()
@@ -207,38 +208,21 @@ def _best_image_src(im, picture_srcsets: Optional[list]) -> str:
     return src
 
 
-_HIDDEN_WALK_CAP = 32  # ancestor probes per table (caps-not-crashes)
 MAX_EMBEDS = 64        # embedded-media pointers kept per document
-
-
-def _node_or_ancestor_hidden(node: Node, css) -> bool:
-    """True when the node or any ancestor renders no ink (``hidden``
-    attr / ``display:none`` / ``visibility:hidden|collapse``, class
-    rules resolved) — the visibility contract a browser applies to the
-    whole subtree."""
-    n = node
-    for _ in range(_HIDDEN_WALK_CAP):
-        if n is None or n.tag == "#document":
-            return False
-        if is_invisible(css.effective_attrs(n) if css else n.attrs):
-            return True
-        n = n.parent
-    return False
 
 
 def declared_tables(nodes: list, cfg, alpha_keys: bool = False, css=None,
                     anchored: bool = False):
     """The declared table artifacts of ``nodes`` (a document's
     ``is_table_like`` nodes in rendered-walk order) as ``(node,
-    artifact, anchors)``, in artifact order.  A hidden table (attr,
-    inline, or class-resolved display:none on itself or an ancestor) is
-    not rendered — the browser-visible contract — and an empty one is no
-    artifact.  With ``anchored``, ``anchors`` is the grid's address map
-    (``tables._expand_grid``), else None.  Extraction and the cell edit
-    ops (kernels/edits.py) both number tables through this loop."""
+    artifact, anchors)``, in artifact order.  An ``unrendered`` table is
+    no artifact, and neither is an empty one.  With ``anchored``,
+    ``anchors`` is the grid's address map (``tables._expand_grid``),
+    else None.  Extraction and the cell edit ops (kernels/edits.py) both
+    number tables through this loop."""
     n = 0
     for node in nodes:
-        if _node_or_ancestor_hidden(node, css):
+        if node.unrendered:
             continue
         anchors = ([], {}) if anchored else None
         art = extract_table(node, n, cfg, alpha_keys, css, anchors)
@@ -329,8 +313,11 @@ _MAX_IMPORT_SCAN = 4096  # bytes of sheet prefix scanned for @import
 def _style_import_hrefs(style_text: str) -> list:
     """Top-of-sheet ``@import`` targets of one sheet (a ``<style>``
     block or a linked sheet's text), in order, honoring each import's
-    media tail (``@import url(x) print;`` never applies on screen)."""
-    text = _CSS_COMMENT_RE.sub("", style_text[:_MAX_IMPORT_SCAN])
+    media tail (``@import url(x) print;`` never applies on screen).  A
+    leading U+FEFF (a byte-order mark kept as text) is dropped, as
+    ``css.rules_from_sheets`` drops it."""
+    text = _CSS_COMMENT_RE.sub(
+        "", style_text.removeprefix("\ufeff")[:_MAX_IMPORT_SCAN])
     out: list = []
     pos = 0
     while True:
@@ -445,7 +432,9 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
     coordinate — so downstream link-graph joins can recover WHERE each
     href occurs, not just how often (counts stay derivable as len()).
 
-    ``anchors`` is a list of (doc_order_index, node) pairs.
+    ``anchors`` is a list of (doc_order_index, node) pairs; an
+    ``unrendered`` anchor is no link (a ``display:none`` hover menu
+    included: one rendering rule for every rendered family).
     ``absolutize``: resolve relative hrefs against the document url (the
     S5 relationship-resolution analogue, reference ooxml_drawing.py:
     863-921) — off by default to keep hrefs verbatim as join keys.
@@ -453,7 +442,7 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
     positions: dict = {}
     for idx, a in anchors:
         href = a.get("href")
-        if href:
+        if href and not a.unrendered:
             if absolutize and base_url:
                 href = urljoin(base_url, href)
             if normalize:
@@ -525,17 +514,73 @@ def stylesheet_refs(url: str, raw: Optional[bytes]) -> list:
         release(root)
 
 
+def _spans_between(html: str, nodes: list):
+    """The source of ``html`` outside the elements ``nodes`` (disjoint,
+    in document order), in pieces."""
+    pos = 0
+    for n in nodes:
+        yield html[pos:n.s0]
+        pos = n.e1
+    yield html[pos:]
+
+
+def _render_cascade(root, url: str, found: dict, candidates: list,
+                    external_css=None, want_sheets: bool = False) -> tuple:
+    """``(base, sheets, css, hidden)`` of a parsed page, its hidden
+    subtrees marked.  ``found`` maps ``base``, ``link`` and ``style`` to the
+    rendered walk's nodes of that tag and ``candidates`` are the nodes
+    whose attrs carry ``hidden`` or ``style`` (``css.mark_unrendered``).
+    ``base`` is the document base, ``sheets`` the applicable-stylesheet
+    list (computed only when corpus-joined sheets ride in or
+    ``want_sheets``; the corpus join keyed on the same list) and ``css``
+    the resolver of the page's ``<style>`` rules with the admitted
+    joined sheets cascading below them, or None without rules;
+    ``hidden`` lists the roots of the marked subtrees.  The one cascade
+    of ``extract_document`` and the cell edit ops (kernels/edits.py)."""
+    base = _document_base(url, found["base"])
+    # length test, not truthiness: Arrow hands list columns to the
+    # kernel as numpy arrays, whose bool() is ambiguous
+    joined = external_css is not None and len(external_css) > 0
+    sheets = (_stylesheet_refs(found["link"], base, found["style"])
+              if joined or want_sheets else [])
+    css = build_resolver(
+        found["style"],
+        rules_from_sheets(_admitted_sheets(external_css, sheets))
+        if joined else None)
+    if not css.rules:
+        # rule-free resolver: every effective_attrs call is an identity
+        # return — pass None so the per-cell/per-block call sites take
+        # their attrs fast path outright (r8)
+        css = None
+    return base, sheets, css, mark_unrendered(root, candidates, css)
+
+
+_LONE_SURROGATE_RE = re.compile("[\ud800-\udfff]")
+
+
 def _record(url: str, status: str, fallback_reason: str, main_text: str,
             extraction: dict, bytes_in: int, n_tables: int = 0,
             n_shapes: int = 0, n_arrows: int = 0, n_charts: int = 0,
             n_lists: int = 0, n_links: int = 0,
             truncated: bool = False) -> dict:
     """The ``RECORD_FIELDS`` record of one document: serializes
-    ``extraction`` and hashes it and the (already normalized) text."""
+    ``extraction`` and hashes it and the (already normalized) text.
+
+    A lone surrogate (a JSON ``\\ud800`` escape in ld+json or a JSON
+    feed) has no UTF-8 form, so neither the hash nor the Arrow hand-off
+    could carry it: it becomes U+FFFD, which is what the WHATWG UTF-8
+    encoder writes.  The hash's strict encode is the detector, so a
+    clean record pays nothing."""
     extraction_json = canonical_json(extraction)
+    try:
+        text_sha, json_sha = sha256_hex(main_text), sha256_hex(extraction_json)
+    except UnicodeEncodeError:
+        main_text = _LONE_SURROGATE_RE.sub("\ufffd", main_text)
+        extraction_json = _LONE_SURROGATE_RE.sub("\ufffd", extraction_json)
+        text_sha, json_sha = sha256_hex(main_text), sha256_hex(extraction_json)
     return dict(zip(_RECORD_NAMES, (
         url, status, fallback_reason, main_text, extraction_json,
-        sha256_hex(main_text), sha256_hex(extraction_json),
+        text_sha, json_sha,
         n_tables, n_shapes, n_arrows, n_charts, n_lists, n_links,
         bytes_in, truncated,
     )))
@@ -655,7 +700,8 @@ def extract_document(
             table_like: list = []
             get_bucket = groups.get
             # rendered walk: <template>/<noscript> subtrees are inert
-            # in a browser, so their markup never feeds the collectors.
+            # in a browser, so their markup never feeds the collectors
+            # and every node of them is marked ``unrendered``.
             # Implemented as an integer skip guard over the C-fast
             # indexed iteration (root.iter() is the prebuilt doc list;
             # a generator resume per node costs ~10% corpus throughput
@@ -668,7 +714,9 @@ def extract_document(
             a_bucket = groups["a"]
             table_bucket = groups["table"]
             skip_until = -1
-            noscript_imgs: list = []
+            noscripts: list = []
+            # nodes whose own attrs may hide them (css.mark_unrendered)
+            render_candidates: list = []
             for doc_idx, n in enumerate(root.iter()):
                 if doc_idx < skip_until:
                     continue
@@ -681,11 +729,13 @@ def extract_document(
                             # carrier: real pages ship `<img data-src=...>
                             # <noscript><img src=real></noscript>` so
                             # no-JS readers (and crawlers) still see the
-                            # image.  Harvest its <img> nodes for the
-                            # images family only — the subtree stays out
-                            # of every other collector.
+                            # image.  Its <img> nodes are harvested for
+                            # the images family only (the one exception
+                            # to the rendering mark) — the subtree stays
+                            # out of every other collector.
                             if n.tag == "noscript" and opts.include_images:
-                                noscript_imgs.extend(n.find_all("img"))
+                                noscripts.append(n)
+                            mark_subtree(n)
                             skip_until = n.i1
                             continue
                     elif bucket is a_bucket:
@@ -701,6 +751,8 @@ def extract_document(
                         bucket.append(n)
                 attrs = n.attrs
                 if attrs:
+                    if "style" in attrs or "hidden" in attrs:
+                        render_candidates.append(n)
                     if "itemscope" in attrs:
                         micro_scopes.append(n)
                     if "typeof" in attrs:
@@ -719,53 +771,31 @@ def extract_document(
                                 doc_idx
                             )
             body = groups["body"][0] if groups["body"] else root
+
+            # class-rule resolution (kernels/css.py): same-document
+            # <style> blocks feed the border/color kernels — the web
+            # twin of the reference's indirect-styling resolution
+            # (theme/indexed colors, core/cells.py:578-686) — with the
+            # corpus-joined sheets cascading below them, and hidden
+            # subtrees are marked before any family reads the tree.
+            # The stylesheet list is computed only when something
+            # consumes it (joined sheets, structured-metadata output).
+            effective_base, sheets, css, hidden = _render_cascade(
+                root, url, groups, render_candidates, external_css,
+                opts.include_structured)
+
             title = (
                 groups["title"][0].text_content() if groups["title"] else ""
             )
             if title:
                 extraction["title"] = title
 
-            # resolved once, shared by stylesheet + link resolution
-            effective_base = _document_base(url, groups["base"])
-
-            # the applicable-stylesheet list (real attribute parse +
-            # media_applies_on_screen) — the same list the corpus join
-            # keyed on (stylesheet_refs), computed before the resolver,
-            # which applies a joined sheet in this list's order.
-            # Skipped when nothing consumes it (no joined sheets, no
-            # structured-metadata output) — the hot path stays free.
-            sheets = (
-                _stylesheet_refs(groups["link"], effective_base,
-                                 groups["style"])
-                if ((external_css is not None and len(external_css))
-                    or opts.include_structured)
-                else []
-            )
-
-            # class-rule resolution (kernels/css.py): same-document
-            # <style> blocks feed the border/color kernels — the web
-            # twin of the reference's indirect-styling resolution
-            # (theme/indexed colors, core/cells.py:578-686).  Shared
-            # empty resolver when the page has no <style>: zero cost.
-            # External sheets (corpus join) cascade below <style>.
-            # (length test, not truthiness: Arrow hands list columns to
-            # the kernel as numpy arrays, whose bool() is ambiguous)
-            css = build_resolver(
-                groups["style"],
-                rules_from_sheets(
-                    _admitted_sheets(external_css, sheets))
-                if external_css is not None and len(external_css)
-                else None,
-            )
-            if not css.rules:
-                # rule-free resolver: every effective_attrs call is an
-                # identity return — pass None so the per-cell/per-block
-                # call sites take their attrs fast path outright (r8)
-                css = None
-
-            # resolver built BEFORE the main-text pass so class-
-            # declared display:none blocks drop like inline ones
-            main_text = extract_main_text(root, opts, css)
+            main_text = extract_main_text(root, opts)
+            if not main_text and hidden:
+                # the degraded text below reads the markup: cut out the
+                # source of every hidden subtree first (template and
+                # noscript content strip_tags_text drops itself)
+                html = "".join(_spans_between(html, hidden))
 
             if opts.include_tables:
                 tables = []
@@ -832,6 +862,8 @@ def extract_document(
                 shapes_all: list = []
                 arrows_all: list = []
                 for svg in groups["svg"]:
+                    if svg.unrendered:
+                        continue
                     shapes, arrows = extract_svg_shapes(svg)
                     base = len(shapes_all)
                     for s in shapes:
@@ -893,7 +925,7 @@ def extract_document(
                     extraction["links_map"] = links
                 n_links = len(links)
 
-            if opts.include_images and (groups["img"] or noscript_imgs):
+            if opts.include_images and (groups["img"] or noscripts):
                 # image-text pair harvesting (the LAION-style multimodal
                 # curation input): every <img src> in document order with
                 # its alt text, the enclosing <figure>'s figcaption (the
@@ -902,7 +934,7 @@ def extract_document(
                 # text) rows for caption-dataset mining.
                 fig_caption: dict = {}
                 for fig in groups["figure"]:
-                    cap = fig.find_first("figcaption")
+                    cap = fig.first_rendered("figcaption")
                     if cap is None:
                         continue
                     cap_text = cap.text_content().strip()
@@ -927,6 +959,8 @@ def extract_document(
                         picture_srcsets[id(im)] = srcsets
                 images = []
                 for im in groups["img"]:
+                    if im.unrendered:
+                        continue
                     src = _best_image_src(im, picture_srcsets.get(id(im)))
                     if not src:
                         continue
@@ -946,7 +980,11 @@ def extract_document(
                 # deduped by src: when the lazy <img data-src> already
                 # yielded the URL the noscript twin is a duplicate; when
                 # the rendered img was placeholder-only (JS-config lazy
-                # loading) the noscript copy is the ONLY carrier.
+                # loading) the noscript copy is the ONLY carrier.  A
+                # <noscript> inside a hidden subtree carries nothing.
+                noscript_imgs = [im for ns in noscripts
+                                 if not ns.parent.unrendered
+                                 for im in ns.find_all("img")]
                 if noscript_imgs:
                     seen_srcs = {e["src"] for e in images}
                     for im in noscript_imgs:
@@ -976,6 +1014,8 @@ def extract_document(
                 for node in groups["iframe"]:
                     if len(embeds) >= MAX_EMBEDS:
                         break
+                    if node.unrendered:
+                        continue
                     tag = node.tag
                     attrs = node.attrs
                     src = (attrs.get("data" if tag == "object" else "src")

@@ -4,7 +4,8 @@
 
    parse() is a port of dom._parse_html_fast, which stays the
    specification: it builds the same dom.Node trees (tag, attrs,
-   children, pi, doc_nodes, i0/i1 and the source offsets s0/s1/e0/e1)
+   children, pi, doc_nodes, i0/i1, the source offsets s0/s1/e0/e1 and
+   unrendered, False)
    and is tested against it differentially.  Only the scan and build
    loop live here.  The tag tables, the attribute parser with its cache,
    the tag-info cache and entity decoding stay in dom.py and are handed
@@ -26,8 +27,10 @@
    makes it Node.text_content, a method descriptor, so a call runs no
    Python frame.  It walks the children lists through the Node slots
    with a heap stack (no recursion, whatever the depth), skips
-   RAW_TEXT_SKIP subtrees, puts a space around each BLOCK_ELEMENTS
-   member and <br>, and collapses whitespace as it writes, which is
+   RAW_TEXT_SKIP subtrees and the subtree of every child whose
+   unrendered slot is True (the node it starts from is read), puts a
+   space around each BLOCK_ELEMENTS member and <br>, and collapses
+   whitespace as it writes, which is
    _WS_RE.sub(" ", s).strip(): re's \s and str.strip() both test
    Py_UNICODE_ISSPACE.
 
@@ -56,7 +59,7 @@ static PyObject *doc_tag;         /* "#document" */
 
 /* byte offsets of Node's __slots__ */
 static Py_ssize_t off_tag, off_attrs, off_children, off_doc_nodes,
-    off_i0, off_i1, off_pi, off_s0, off_s1, off_e0, off_e1;
+    off_i0, off_i1, off_pi, off_s0, off_s1, off_e0, off_e1, off_unrendered;
 
 #define SLOT(obj, off) (*(PyObject **)((char *)(obj) + (off)))
 
@@ -411,6 +414,7 @@ new_node(PyObject *tag, PyObject *attrs, PyObject *doc_nodes, PyObject *pi,
     SLOT(node, off_s1) = vs1;
     SLOT(node, off_e0) = vs1;
     SLOT(node, off_e1) = vs1;
+    SLOT(node, off_unrendered) = Py_NewRef(Py_False);
     if (PyList_Append(doc_nodes, node) < 0) {
         Py_DECREF(node);
         return NULL;
@@ -827,6 +831,8 @@ subtree_text(PyObject *node)
                          Py_TYPE(item)->tp_name);
             goto done;
         }
+        if (SLOT(item, off_unrendered) == Py_True)
+            continue;
         Py_INCREF(item);
         cls = text_class(item);
         if (cls == 1 || cls < 0) {
@@ -1137,7 +1143,8 @@ node_text_content(PyObject *self, PyObject *unused)
 static PyMethodDef text_content_def = {
     "text_content", node_text_content, METH_NOARGS,
     "Whitespace-collapsed text of the subtree, skipping script, style, "
-    "template and noscript; block elements and <br> separate words.  "
+    "template, noscript and unrendered children; block elements and <br> "
+    "separate words.  "
     "Native dom._text_content_py."};
 
 static PyObject *
@@ -1221,7 +1228,9 @@ htmlscan_init(PyObject *self, PyObject *args)
             || (off_s0 = slot_offset((PyTypeObject *)node, "s0")) < 0
             || (off_s1 = slot_offset((PyTypeObject *)node, "s1")) < 0
             || (off_e0 = slot_offset((PyTypeObject *)node, "e0")) < 0
-            || (off_e1 = slot_offset((PyTypeObject *)node, "e1")) < 0)
+            || (off_e1 = slot_offset((PyTypeObject *)node, "e1")) < 0
+            || (off_unrendered = slot_offset((PyTypeObject *)node,
+                                             "unrendered")) < 0)
         return NULL;
     if (doc_tag == NULL && (doc_tag = PyUnicode_InternFromString(
                                 "#document")) == NULL)

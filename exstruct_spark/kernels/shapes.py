@@ -152,7 +152,8 @@ def extract_svg_shapes(svg: Node) -> tuple:
     Shapes: ``{id, text?, l, t, w, h}`` — id sequential 1-based in document
     order over non-connector elements (W1).  Arrows: ``{begin_id, end_id,
     direction, approximation_level?}`` from line/path/polyline elements
-    carrying an arrow marker (``marker-end``) or class hint.
+    carrying an arrow marker (``marker-end``) or class hint.  An
+    ``unrendered`` element is neither.
     """
     shapes: list = []
     labels: list = []
@@ -160,7 +161,7 @@ def extract_svg_shapes(svg: Node) -> tuple:
     elem_id_map: dict = {}  # svg element id attr -> shape id (tier-1 key)
     next_id = 1
     for node in svg.iter():
-        if node.tag == "svg":
+        if node.tag == "svg" or node.unrendered:
             continue
         box = _shape_bbox(node)
         if box is not None:
@@ -282,17 +283,30 @@ def extract_svg_shapes(svg: Node) -> tuple:
 
 def _list_item_tree(li: Node, depth: int, max_depth: int) -> dict:
     """One ``<li>`` as ``{text, nodes}``: its own text, and its nested
-    lists' items as child nodes down to ``max_depth``.  Module-level, not
-    a closure: a recursive closure refers to itself through its cell, a
-    reference cycle only the cyclic GC can free."""
+    lists' items as child nodes down to ``max_depth``; ``unrendered``
+    children are skipped, and the text on either side of one joins as
+    if it were not there.  Module-level, not a closure: a recursive
+    closure refers to itself through its cell, a reference cycle only
+    the cyclic GC can free."""
     own_text_parts = []
     child_nodes: list = []
+    # text, then only unrendered elements: the next text joins it
+    after_text = skipped = False
     for ch in li.children:
         if isinstance(ch, str):
-            own_text_parts.append(ch)
-        elif ch.tag in ("ul", "ol") and depth < max_depth:
+            if after_text and skipped:
+                own_text_parts[-1] += ch
+            else:
+                own_text_parts.append(ch)
+            after_text, skipped = True, False
+            continue
+        if ch.unrendered:
+            skipped = True
+            continue
+        after_text = False
+        if ch.tag in ("ul", "ol") and depth < max_depth:
             for sub in ch.element_children():
-                if sub.tag == "li":
+                if sub.tag == "li" and not sub.unrendered:
                     child_nodes.append(
                         _list_item_tree(sub, depth + 1, max_depth))
         elif ch.tag not in ("ul", "ol"):
@@ -314,13 +328,14 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
     ``<dt>`` is a level-1 node and its following ``<dd>``s are its
     children — inherently depth 2, so a dl with any dt+dd pair
     qualifies.
+    An ``unrendered`` list, item, term or definition is none.
     Returns list of ``{text, nodes: [...]}`` trees.
     """
 
     def depth_of(lst: Node, depth: int = 1) -> int:
         best = depth
         for n in lst.find_all("ul", "ol"):
-            if n is not lst:
+            if n is not lst and not n.unrendered:
                 best = max(best, depth + 1)
         return best
 
@@ -332,7 +347,7 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
         return re.sub(r"\s+", " ", s).strip()
 
     for lst in lists:
-        if id(lst) in claimed:
+        if id(lst) in claimed or lst.unrendered:
             continue
         for inner in lst.iter():
             claimed.add(id(inner))
@@ -345,6 +360,7 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
                     kids.extend(ch.element_children())
                 else:
                     kids.append(ch)
+            kids = [ch for ch in kids if not ch.unrendered]
             for ch in kids:
                 if ch.tag == "dt":
                     cur = {"text": norm(ch.text_content())}
@@ -361,6 +377,7 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
         if depth_of(lst) < 2:
             continue
         items = [_list_item_tree(li, 1, max_depth)
-                 for li in lst.element_children() if li.tag == "li"]
+                 for li in lst.element_children()
+                 if li.tag == "li" and not li.unrendered]
         trees.extend(items)
     return trees

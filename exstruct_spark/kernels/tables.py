@@ -273,7 +273,7 @@ def _expand_grid(rows: list, col_bg: list, has_links: bool,
             # tables carry no links, and the per-cell subtree walk is the
             # grid pass's hottest incidental cost (profiled)
             if has_links and not blank:
-                a = cell.find_first("a")
+                a = cell.first_rendered("a")
                 if a is not None and a.get("href"):
                     links[(r, c)] = a.get("href")
                     row_had_content = True
@@ -445,10 +445,12 @@ def extract_table(
     rs = [r for r, _ in cells]
     cs = [c for _, c in cells]
     rng = make_range(min(rs), min(cs), max(rs), max(cs))
-    # the table's OWN caption: a nested table's (or, in an ARIA
-    # container, one buried in a cell) names that table, not this one
+    # the table's OWN rendered caption: a nested table's (or, in an
+    # ARIA container, one buried in a cell) names that table, not
+    # this one
     caption = next(
-        (ch for ch in table.element_children() if ch.tag == "caption"),
+        (ch for ch in table.element_children()
+         if ch.tag == "caption" and not ch.unrendered),
         None)
     if caption is not None:
         name = caption.text_content()
@@ -464,7 +466,7 @@ def extract_table(
             if anc is None or anc.tag == "#document":
                 break
             if anc.tag == "figure":
-                fc = anc.find_first("figcaption")
+                fc = anc.first_rendered("figcaption")
                 if fc is not None:
                     name = fc.text_content()
                 break
@@ -599,6 +601,12 @@ def _boxes_to_candidates(
     return out
 
 
+def _rendered_children(node: Node) -> list:
+    """A div row's rendered element children: the cells of a grid
+    detector (an unrendered one is no cell)."""
+    return [c for c in node.children if type(c) is Node and not c.unrendered]
+
+
 def _structural_candidates(
     node: Node, cfg: DetectionConfig, alpha_keys: bool, idx: int
 ) -> list:
@@ -609,8 +617,8 @@ def _structural_candidates(
     # gate comprehension, the widths pass, and the cell loop)
     row_kids = []
     for ch in node.children:
-        if type(ch) is Node and ch.tag == "div":
-            kids = ch.element_children()
+        if type(ch) is Node and ch.tag == "div" and not ch.unrendered:
+            kids = _rendered_children(ch)
             if kids:
                 row_kids.append(kids)
     if len(row_kids) < 2:
@@ -653,8 +661,8 @@ def _border_candidates(
 
     rows = []
     for ch in node.children:  # one child walk (r8, same as structural)
-        if type(ch) is Node and ch.tag == "div":
-            kids = ch.element_children()
+        if type(ch) is Node and ch.tag == "div" and not ch.unrendered:
+            kids = _rendered_children(ch)
             if kids:
                 rows.append((ch, kids))
     if len(rows) < 2:
@@ -703,30 +711,11 @@ def detect_grid_candidates(
     """
     out: list = []
     claimed: set = set()
-    # rendered walk: template/noscript content never becomes a grid
-    # (same integer skip guard as the extraction walk — keeps the
-    # iteration on the C-fast prebuilt doc list for indexed trees)
-    base = root.i0
-    skip_until = -1
-    for pos, node in enumerate(root.iter()):
-        if pos < skip_until:
-            continue
-        if node.tag in ("template", "noscript") \
-                and node.i1 - base > pos:
-            skip_until = node.i1 - base
-            continue
-        if node.tag not in ("div", "section"):
-            continue
-        if id(node) in claimed:
-            continue
-        eff = css.effective_attrs(node) if css else node.attrs
-        if is_hidden(eff) or visibility_of(eff) in ("hidden", "collapse"):
-            # a hidden container hides its whole subtree (browser
-            # visibility contract), and an ink-free visibility:hidden
-            # one paints no border/fill signal — nothing inside is a
-            # VISUAL grid either
-            for inner in node.iter():
-                claimed.add(id(inner))
+    for node in root.iter():
+        # an unrendered container (hidden, or template/noscript
+        # content) is no visual grid, and neither is anything inside it
+        if (node.tag not in ("div", "section") or node.unrendered
+                or id(node) in claimed):
             continue
         if is_table_like(node):
             # ARIA-declared tables belong to the DECLARED path

@@ -8,7 +8,8 @@ in ARIA grids.  The named cases are markup a second tokenizer or a
 second table count misread (a table inside a comment, a script string, a
 ``<template>`` or ``<noscript>`` copy, an unbalanced-quote attribute;
 tables and rows extraction gives no address); the hypothesis test mixes
-them with unclosed ``td``/``tr``, spans, hidden rows and nested grids.
+them with unclosed ``td``/``tr``, spans, hidden rows, hidden content
+inside cells and nested grids.
 Each ``set_value`` must read back at its address after re-extraction,
 and change no byte outside one cell's content.
 """
@@ -92,6 +93,9 @@ NAMED = {
     "empty_table": "<table><tr><td> </td></tr></table>" + TABLE,
     "hidden_row": ("<table><tr style='display:none'><td>h</td><td>i</td>"
                    "</tr><tr><td>a</td><td>b</td></tr></table>"),
+    # hidden content inside the cells is no part of their text
+    "hidden_spans": ("<table><tr><td>a<span hidden>h</span></td><td>b"
+                     "<span style='display:none'>i</span></td></tr></table>"),
 }
 
 
@@ -102,6 +106,30 @@ def test_named_case_edits_the_extracted_cell(parser, name):
     assert first == ({"0": "y", "1": "z"} if name == "unbalanced_quote"
                      else {"0": "a", "1": "b"})
     assert assert_edits_read_back(html) == 2
+
+
+JOINED_PAGE = ("<link rel=stylesheet href='/s.css'><table class=h><tr><td>x"
+               "</td></tr></table><table><tr><td>a</td></tr></table>")
+JOINED_SHEETS = [{"u": "https://p.example/s.css", "t": ".h{display:none}"}]
+
+
+def test_a_table_hidden_by_a_joined_sheet_takes_no_address(parser):
+    """A table hidden only by a corpus-joined sheet is no artifact, so
+    table 0 is the visible one: ``apply_ops`` with the page's url and
+    joined sheets edits ``a``, as extraction under the same sheets
+    reads it, and leaves the hidden ``x`` alone."""
+    url = "https://p.example/page"
+    rec = extract_document(url, JOINED_PAGE.encode(),
+                           external_css=JOINED_SHEETS)
+    tables = json.loads(rec["extraction_json"])["tables"]
+    assert [t["rows"] for t in tables] == [[{"r": 1, "c": {"0": "a"}}]]
+    op = {"op": "set_value", "table": 0, "row": 0, "col": 0, "value": VALUE}
+    out, status = apply_ops(JOINED_PAGE, [op], url, JOINED_SHEETS)
+    assert status == ["applied"]
+    assert out == JOINED_PAGE.replace("<td>a</td>", f"<td>{VALUE}</td>")
+    # without the sheets the page's own cascade holds: table 0 is x
+    out, _ = apply_ops(JOINED_PAGE, [op])
+    assert out == JOINED_PAGE.replace("<td>x", f"<td>{VALUE}")
 
 
 def test_hidden_row_does_not_shift_the_row(parser):
@@ -219,6 +247,10 @@ KINDS = ["data"] * 8 + ["hidden", "presentation", "empty"]
 ROW_ATTRS = [""] * 6 + [" hidden", ' style="display:none"',
                         ' style="visibility:collapse"']
 TEXT = st.text(alphabet="abcdefgh", min_size=1, max_size=4)
+# hidden content a cell may hold after its text
+HIDDEN_SPANS = [""] * 4 + ["<span hidden>zz</span>",
+                           '<span style="display:none">zy</span>',
+                           '<b style="visibility:hidden">zx</b>']
 
 
 @st.composite
@@ -259,6 +291,7 @@ def page(draw):
                 if kind != "empty" and ((r, c) == (0, 0)
                                         or draw(st.booleans())):
                     out.append(draw(TEXT))
+                out.append(draw(st.sampled_from(HIDDEN_SPANS)))
                 out.append(noise())
                 if depth < 2 and kind != "empty" and draw(
                         st.integers(0, 6)) == 0:

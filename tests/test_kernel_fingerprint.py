@@ -68,7 +68,7 @@ BLESSED = {
     'adversarial:duplicate_attrs': '3956e3da8fd8f5fdc31566ac0a371e862826fc49c84743626656d2707dbfb083',
     'adversarial:empty': 'c77a45f4fadf47f1b8083b09c5c4cd4660cbae404c30971d1d0c29191e849152',
     'adversarial:entities': '338f59206561a29775401636d671fd843af46c12a839cf1df37fa0e09cc8590a',
-    'adversarial:hidden_descendants': '30d3524f1189f3d580124b55cf1c3e60f8046cef5a43492f17998a4fe8058847',
+    'adversarial:hidden_descendants': '62e84af36066465687c80b3f30ad45c9da1df7be0be2cf88b44d8cc8c956ae6e',
     'adversarial:huge_attribute': '2231fc0ead614f8ce3b55bfbc3ac08cb3ba103703ac5c3b9b716683ac2ba574e',
     'adversarial:non_utf8_garbage': '48a51fdda940aa25f03b7ffacbc42dd7d6ffead40299fb234ad9736f4e4a2771',
     'adversarial:non_utf8_latin1': 'd83368469601ae2407716ab81aedc989aed16eb497148cd6963d727b43426ea2',
@@ -79,7 +79,7 @@ BLESSED = {
     'adversarial:stray_angles': '0fb8df3c988f01eb57ebdb8db48b21c28af1ad48222a5ea75c9cdcafb606f400',
     'adversarial:style_close_spaced': '8faf9926bfc9d2525311fa35be3491125d4100a569acb6fbc9927615eb45f0c4',
     'adversarial:template_rows': '38d2dbf2ef916e3e0be53551c4f8bca6410150635164127356d9fd057d4616cd',
-    'adversarial:unrendered_content_root': 'f5ff0a8a9dc50ed918dfa84db027ad36c72315b04c9180dcf2645bc9c95a0ba4',
+    'adversarial:unrendered_content_root': '01f24c6b0a8f5b52656c54e9d8356e7cc602077a486da8beaa1ce7e779f56f48',
     'adversarial:unterminated_attr_quote': '2ec6bb490257606d8d5d49880563021fbd05334f1f009407337855ddd7b20cc8',
     'adversarial:unterminated_comment': '509b0f79f2d7367ba0a260e868b658fb17ea94ad5045ce7574e990c540e39ff7',
     'adversarial:unterminated_quote_closed_later': 'c7a3137c43a525dd3f9350afed1ae91ea7d64073c830594afab41e482394aa36',

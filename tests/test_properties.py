@@ -4,6 +4,7 @@ canonical JSON is always parseable.  (The reference relies on example
 tests only, SURVEY.md §5 'Not used: property-based testing' — we add it.)"""
 
 import json
+import re
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -473,3 +474,107 @@ def test_cell_edit_ops_total(html, ops):
     assert isinstance(out, str)
     assert len(statuses) == len(ops)
     assert set(statuses) <= {"applied", "skipped"}
+
+
+# -- the batch kernel is total: every route, one row, Arrow-ready strings --
+_SURROGATE = "\\ud800"  # a JSON escape of a lone surrogate
+_LABELS = ["utf-7", "unicode_escape", "raw_unicode_escape", "punycode",
+           "idna", "undefined"]
+
+
+@st.composite
+def _route_input(draw) -> bytes:
+    """One document of any route, some with a lone-surrogate escape in
+    their JSON or a meta charset that is no page encoding."""
+    word = draw(st.text(alphabet="abcé漢 ", max_size=6))
+    name = word + draw(st.sampled_from(["", _SURROGATE,
+                                        _SURROGATE + "\\udc00x"]))
+    kind = draw(st.sampled_from(
+        ["html", "ldjson", "label", "pdf", "rss", "atom", "json_feed",
+         "robots", "utf16", "garbage"]))
+    if kind == "html":
+        return ("<p>" + word + " enough words for a content block.</p>"
+                ).encode()
+    if kind == "ldjson":
+        return ("<script type='application/ld+json'>{\"@type\": \"Thing\","
+                " \"name\": \"" + name + "\"}</script><p>" + word
+                + " enough words for a content block.</p>").encode()
+    if kind == "label":
+        return (b"<meta charset=" + draw(st.sampled_from(_LABELS)).encode()
+                + b"><p>+AGEA- \\ud800 caf" + draw(st.binary(max_size=4))
+                + b"\xe9 enough words for a content block.</p>")
+    if kind == "pdf":
+        return (b"%PDF-1.4\n1 0 obj << /Length 20 >> stream\nBT ("
+                + word.encode("latin-1", "replace") + b") Tj ET\nendstream"
+                b" endobj\ntrailer << >>\n%%EOF")
+    if kind == "rss":
+        return ("<?xml version='1.0'?><rss><channel><title>" + word
+                + "</title><item><title>i</title></item></channel></rss>"
+                ).encode()
+    if kind == "atom":
+        return ("<feed xmlns='http://www.w3.org/2005/Atom'><title>" + word
+                + "</title><entry><title>e</title></entry></feed>").encode()
+    if kind == "json_feed":
+        return ("{\"version\": \"https://jsonfeed.org/version/1.1\","
+                " \"title\": \"" + name + "\", \"items\": [{\"id\": \"1\","
+                " \"content_text\": \"" + name + "\"}]}").encode()
+    if kind == "robots":
+        return ("User-agent: *\nDisallow: /" + word + "\n").encode()
+    if kind == "utf16":
+        return b"\xff\xfe" + ("<p>" + word + " utf-16 page</p>").encode(
+            "utf-16-le")
+    return draw(st.binary(max_size=64))
+
+
+_LONE = re.compile("[\ud800-\udfff]")
+
+
+@given(st.lists(_route_input(), min_size=1, max_size=6))
+@settings(max_examples=150, deadline=None)
+def test_batch_kernel_total_over_every_route(docs):
+    """``golden.extract_pdf`` (the body of the Spark stage) gives one row
+    per input for documents of every route, including lone-surrogate
+    JSON escapes and meta charsets that are no page encoding; no string
+    it returns holds a lone surrogate, so the Arrow hand-off takes it."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from exstruct_spark.golden import extract_pdf
+
+    urls = [f"https://total.example/{i}" for i in range(len(docs))]
+    out = extract_pdf(pd.DataFrame({"url": urls, "html": docs}))
+    assert list(out["url"]) == urls
+    for rec in out.to_dict("records"):
+        for value in rec.values():
+            assert not (isinstance(value, str) and _LONE.search(value)), rec
+        json.loads(rec["extraction_json"])
+    pa.Table.from_pandas(out)
+
+
+def test_lone_surrogates_become_replacement_characters(parser):
+    """A lone surrogate from a JSON escape reaches the record as U+FFFD,
+    under both serializers; a clean record is unchanged."""
+    ld = ("<script type='application/ld+json'>{\"@type\": \"Thing\","
+          " \"name\": \"a\\ud800b\"}</script><p>Enough visible words for a"
+          " content block here.</p>").encode()
+    rec = extract_document("u://ld", ld)
+    assert rec["status"] == "ok"
+    assert "a\ufffdb" in rec["extraction_json"]
+    feed = (b'{"version": "https://jsonfeed.org/version/1.1",'
+            b' "title": "t\\ud800", "items": []}')
+    rec = extract_document("u://feed", feed)
+    assert "t\ufffd" in rec["main_text"]
+    assert "t\ufffd" in rec["extraction_json"]
+    clean = extract_document("u://ld", ld.replace(b"\\ud800", b"-"))
+    assert "a-b" in clean["extraction_json"]
+
+
+def test_meta_charsets_that_are_no_page_encoding_take_latin1():
+    """A meta charset naming a Python codec that raises or decodes to
+    lone surrogates is read like an unknown label: latin-1."""
+    for label in _LABELS:
+        raw = (b"<meta charset=" + label.encode()
+               + b"><p>+AGEA- \\ud800 caf\xe9</p>")
+        assert decode_html_bytes(raw) == raw.decode("latin-1"), label
+    assert decode_html_bytes(b"<meta charset=bogus><p>caf\xe9</p>") \
+        == "<meta charset=bogus><p>café</p>"

@@ -573,6 +573,47 @@ def test_apply_cell_edits_end_to_end(spark, tmp_path):
     assert json.loads(got["extraction_json"])["tables"][0]["colors_map"]
 
 
+def test_apply_cell_edits_sees_joined_sheets(spark, tmp_path):
+    """Cell edits address the tables extraction reports under the
+    corpus-joined sheets: a table hidden only by a joined sheet is no
+    artifact and takes no ``table`` index, so ``set_value(table=0)``
+    edits the visible table, not the hidden one."""
+    import json
+
+    from exstruct_spark.engine import ExtractionJob, attach_external_css
+
+    page = "https://p.example/page"
+    rows = [
+        (page, (b"<link rel=stylesheet href='/s.css'><table class=h><tr>"
+                b"<td>x</td></tr></table><table><tr><td>a</td></tr>"
+                b"</table>")),
+        ("https://p.example/s.css", b".h{display:none}"),
+    ]
+    pages = attach_external_css(
+        spark.createDataFrame(rows, "url string, html binary"))
+    job = ExtractionJob(
+        spark,
+        output_dir=str(tmp_path / "out"),
+        lineage_dir=str(tmp_path / "lin"),
+        metrics_dir=str(tmp_path / "met"),
+        n_buckets=2,
+    )
+    job.run(pages)
+
+    def tables() -> list:
+        got = (spark.read.parquet(str(tmp_path / "out"))
+               .where(F.col("url") == page).collect()[0])
+        return [t["rows"] for t in
+                json.loads(got["extraction_json"])["tables"]]
+
+    assert tables() == [[{"r": 1, "c": {"0": "a"}}]]
+    summary = job.apply_cell_edits({page: [
+        {"op": "set_value", "table": 0, "row": 0, "col": 0,
+         "value": "EDITED"}]})
+    assert summary["op_status"][page] == ["applied"]
+    assert tables() == [[{"r": 1, "c": {"0": "EDITED"}}]]
+
+
 def test_image_pairs_stage_end_to_end(spark):
     """LAION-style pair mining through the full engine: documents with
     <img alt>/<figure><figcaption> markup -> extract_stage ->

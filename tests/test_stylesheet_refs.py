@@ -76,6 +76,21 @@ def test_rejected_hrefs_are_skipped(parser):
         assert _agrees("https://b.example/d/p", head + body) == want, head
 
 
+def test_imports_after_a_byte_order_mark():
+    """A sheet that starts with a byte-order mark kept as text (a
+    corpus-joined sheet, or a ``<style>`` block) still lists its
+    top-of-sheet imports, as it does without the mark."""
+    from exstruct_spark.kernels.extract import _style_import_hrefs
+
+    for sheet in ("@import url(a.css);", "@charset 'utf-8'; @import 'a.css';"):
+        assert _style_import_hrefs(sheet) == ["a.css"]
+        assert _style_import_hrefs("\ufeff" + sheet) == ["a.css"]
+    raw = "<style>\ufeff@import url(a.css);</style>".encode() + (
+        b"<p>Enough visible words for a content block here.</p>")
+    assert _agrees("https://b.example/d/p", raw) == [
+        "https://b.example/d/a.css"]
+
+
 _BODY = ("</head><body><p>Enough visible words for a content block "
          "here, and then some more.</p></body></html>")
 
