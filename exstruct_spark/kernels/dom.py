@@ -188,8 +188,9 @@ class Node:
     browser does not render (a ``<template>``/``<noscript>`` subtree, or
     one whose effective attrs are ``is_invisible``).  Both parsers set it
     False; it is the one write after parse, made once per document
-    (``css.mark_unrendered`` and the inert skip of the extraction walk)
-    before any family reads the tree.  The text walks skip a marked
+    (``css.mark_unrendered`` and the inert skip of the rendered walk in
+    ``extract_document`` and the cell edits) before any family reads
+    the tree.  The text walks skip a marked
     child, and every rendered-content family drops marked nodes.
     """
 
