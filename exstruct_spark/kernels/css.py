@@ -73,6 +73,13 @@ from typing import Optional
 
 from exstruct_spark.kernels.dom import Node, is_invisible, mark_subtree
 
+# the attributes through which an element's own markup can hide it
+# (``dom.is_invisible`` reads no other): a node carrying neither can be
+# hidden only by a stylesheet rule.  The rendered walks test
+# ``not HIDING_ATTRS.isdisjoint(attrs)`` to collect the candidates of
+# ``mark_unrendered``.
+HIDING_ATTRS = frozenset(("hidden", "style"))
+
 # caps-not-crashes: bound the work one adversarial page can demand
 MAX_CSS_BYTES = 262_144   # per document, across all <style> blocks
 MAX_RULES = 2_048         # parsed (selector, decls) pairs kept
@@ -913,6 +920,21 @@ def _match_left(chain, combs, i: int, node, cache: dict) -> bool:
     return False
 
 
+def _can_hide(decls: list) -> bool:
+    """Whether a rule can hide the nodes it matches: one of its
+    declarations is ``dom.is_invisible`` on its own.  An element's
+    winning display and visibility each come from one declaration, so a
+    rule without such a declaration (``display:flex``, ``visibility:
+    visible``, borders) never hides.  Only a declaration whose text
+    names display or visibility is tested."""
+    for prop, val, _i in decls:
+        if ((prop in ("display", "visibility") or "display" in val
+                or "visibility" in val)
+                and is_invisible({"style": f"{prop}:{val}"})):
+            return True
+    return False
+
+
 class StyleResolver:
     """Per-document class/tag/id rule table with an attrs-merging view.
 
@@ -962,33 +984,41 @@ class StyleResolver:
         by_id: dict = {}
         by_class: dict = {}
         by_tag: dict = {}
-        # the same keys of the rules that declare display or visibility:
-        # only a node holding one can be hidden by a rule
+        # the keys of the rules that can hide a node: only a node
+        # holding one can be hidden by a rule.  A rule keyed on an
+        # attribute selector needs the attribute; one on ``hidden`` or
+        # ``style`` adds nothing, those nodes are candidates already.
         hide_ids: set = set()
         hide_classes: set = set()
+        hide_names: set = set()
         hide_tags: set = set()
         for order, ((chain, combs, spec), decls) in enumerate(rules):
-            tag, classes, sel_id, _ps, _as = chain[-1]
+            tag, classes, sel_id, _ps, attrsels = chain[-1]
             entry = (spec, order, chain, combs, decls)
-            hides = any(prop in ("display", "visibility")
-                        for prop, _v, _i in decls)
             if sel_id is not None:
                 by_id.setdefault(sel_id, []).append(entry)
-                if hides:
-                    hide_ids.add(sel_id)
             elif classes:
                 by_class.setdefault(classes[0], []).append(entry)
-                if hides:
-                    hide_classes.add(classes[0])
             else:
                 # tag may be None for a pseudo-only rightmost compound
                 # (":first-child", "*:nth-child(odd)") — the None key
                 # is the universal bucket probed for every node
                 by_tag.setdefault(tag, []).append(entry)
-                if hides:
-                    hide_tags.add(tag)
-        self.hide_keys = ((hide_ids, hide_classes, hide_tags)
-                          if hide_ids or hide_classes or hide_tags else None)
+            if not _can_hide(decls):
+                continue
+            if sel_id is not None:
+                hide_ids.add(sel_id)
+            elif classes:
+                hide_classes.add(classes[0])
+            elif attrsels:
+                if attrsels[0][0] not in HIDING_ATTRS:
+                    hide_names.add(attrsels[0][0])
+            else:
+                hide_tags.add(tag)
+        self.hide_keys = (
+            (hide_ids, hide_classes, hide_names, hide_tags)
+            if hide_ids or hide_classes or hide_names or hide_tags
+            else None)
         self._by_id = by_id
         self._by_class = by_class
         self._by_tag = by_tag
@@ -1075,17 +1105,20 @@ _EMPTY_RESOLVER = StyleResolver([])
 
 
 def _may_hide(node: Node, hide_keys) -> bool:
-    """Whether ``node`` can be invisible: its own attrs carry
-    ``hidden`` or ``style``, or it holds a key (id, class, tag, or any
-    node for a universal rule) of a rule that declares display or
-    visibility."""
+    """Whether ``node`` can be invisible: its own attrs carry one of
+    ``HIDING_ATTRS``, or it holds a key (id, class, attribute name, tag,
+    or any node for a universal rule) of a rule that can hide."""
     attrs = node.attrs
-    if "hidden" in attrs or "style" in attrs:
+    if not HIDING_ATTRS.isdisjoint(attrs):
         return True
-    ids, classes, tags = hide_keys
+    ids, classes, names, tags = hide_keys
     if None in tags or node.tag in tags:
         return True
+    if not attrs:
+        return False
     if ids and attrs.get("id") in ids:
+        return True
+    if names and not names.isdisjoint(attrs):
         return True
     cls = attrs.get("class")
     return bool(classes and cls and not classes.isdisjoint(cls.split()))
@@ -1098,10 +1131,11 @@ def mark_unrendered(root: Node, candidates: list, css=None) -> list:
     place the visibility decision is made; every family reads the mark.
 
     ``candidates`` are the document's rendered nodes whose own attrs
-    carry ``hidden`` or ``style``, in document order (the extraction
-    walk collects them).  When ``css`` holds a rule that declares
-    display or visibility, every rendered node holding one of those
-    rules' keys is a candidate too.  A page with neither does no work.
+    carry one of ``HIDING_ATTRS``, in document order (the rendered walks
+    collect them).  When ``css`` holds a rule with a declaration that
+    can hide (``display:none``, ``visibility:hidden``/``collapse``),
+    every rendered node holding one of those rules' keys is a candidate
+    too.  A page with neither does no work.
     Candidates are visited in document order; one inside a subtree
     already marked is skipped.  Returns the roots of the marked
     subtrees, disjoint, in document order."""

@@ -113,8 +113,9 @@ _NO_ATTRS: dict = {}  # shared empty attrs (never mutated)
 
 def _text_content_py(node: "Node") -> str:
     """Whitespace-collapsed text of the subtree, skipping script/style
-    and every ``unrendered`` child subtree (the node itself is read
-    whether or not it is marked).
+    and, when ``node`` is rendered, every ``unrendered`` child subtree:
+    the boundary of a hidden subtree is cut, and a walk started inside
+    one reads all of it.
 
     The specification of the native walk (``htmlscan.c`` ``text``),
     which runs as ``Node.text_content`` whenever the scanner is built;
@@ -135,6 +136,7 @@ def _text_content_py(node: "Node") -> str:
     if len(children) == 1 and type(children[0]) is str:
         return _WS_RE.sub(" ", children[0]).strip()
     parts: list = []
+    cut = not node.unrendered
     # stack holds nodes to enter and sentinel strings to emit
     stack: list = list(reversed(children))
     while stack:
@@ -143,7 +145,7 @@ def _text_content_py(node: "Node") -> str:
             parts.append(item)
             continue
         c = item
-        if c.tag in RAW_TEXT_SKIP or c.unrendered:
+        if c.tag in RAW_TEXT_SKIP or (cut and c.unrendered):
             continue
         is_block = c.tag in BLOCK_ELEMENTS or c.tag == "br"
         if is_block:
@@ -190,8 +192,9 @@ class Node:
     False; it is the one write after parse, made once per document
     (``css.mark_unrendered`` and the inert skip of the rendered walk in
     ``extract_document`` and the cell edits) before any family reads
-    the tree.  The text walks skip a marked
-    child, and every rendered-content family drops marked nodes.
+    the tree.  A text walk started on a rendered node skips a marked
+    child (one started inside a marked subtree reads all of it), and
+    every rendered-content family drops marked nodes.
     """
 
     __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi",
@@ -275,17 +278,18 @@ class Node:
         content there, and a training corpus that collapses them ships
         broken code.  ``<br>`` becomes a newline; script/style skipped;
         CR/LF normalized; outer blank lines trimmed; ``unrendered``
-        children skipped."""
+        children skipped as ``text_content`` skips them."""
         if self.tag in RAW_TEXT_SKIP:
             return ""
         parts: list = []
+        cut = not self.unrendered
         stack: list = list(reversed(self.children))
         while stack:
             item = stack.pop()
             if type(item) is str:
                 parts.append(item)
                 continue
-            if item.tag in RAW_TEXT_SKIP or item.unrendered:
+            if item.tag in RAW_TEXT_SKIP or (cut and item.unrendered):
                 continue
             if item.tag == "br":
                 parts.append("\n")

@@ -93,6 +93,7 @@ from itertools import islice
 
 from exstruct_spark.config import DetectionConfig
 from exstruct_spark.kernels import dom
+from exstruct_spark.kernels.css import HIDING_ATTRS
 from exstruct_spark.kernels.extract import _render_cascade, declared_tables
 from exstruct_spark.kernels.tables import is_table_like
 
@@ -135,7 +136,7 @@ def _parsed_table(html: str, index: int):
                 by_tag[n.tag].append(n)
             elif is_table_like(n):
                 nodes.append(n)
-            if "style" in n.attrs or "hidden" in n.attrs:
+            if not HIDING_ATTRS.isdisjoint(n.attrs):
                 candidates.append(n)
         url, external_css = _PAGE.get()
         css = _render_cascade(root, url, by_tag, candidates, external_css)[2]

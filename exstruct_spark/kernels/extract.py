@@ -32,8 +32,8 @@ from exstruct_spark.kernels.areas import area_views, auto_areas
 from exstruct_spark.kernels.boilerplate import extract_main_text
 from exstruct_spark.kernels.charts import extract_charts
 from exstruct_spark.kernels.css import (
-    _style_text, build_resolver, mark_unrendered, media_applies_on_screen,
-    rules_from_sheets,
+    HIDING_ATTRS, _style_text, build_resolver, mark_unrendered,
+    media_applies_on_screen, rules_from_sheets,
 )
 from exstruct_spark.kernels.dom import (
     RENDER_INERT,
@@ -529,7 +529,7 @@ def _render_cascade(root, url: str, found: dict, candidates: list,
     """``(base, sheets, css, hidden)`` of a parsed page, its hidden
     subtrees marked.  ``found`` maps ``base``, ``link`` and ``style`` to the
     rendered walk's nodes of that tag and ``candidates`` are the nodes
-    whose attrs carry ``hidden`` or ``style`` (``css.mark_unrendered``).
+    whose attrs carry one of ``css.HIDING_ATTRS`` (``css.mark_unrendered``).
     ``base`` is the document base, ``sheets`` the applicable-stylesheet
     list (computed only when corpus-joined sheets ride in or
     ``want_sheets``; the corpus join keyed on the same list) and ``css``
@@ -717,6 +717,7 @@ def extract_document(
             noscripts: list = []
             # nodes whose own attrs may hide them (css.mark_unrendered)
             render_candidates: list = []
+            cannot_hide = HIDING_ATTRS.isdisjoint
             for doc_idx, n in enumerate(root.iter()):
                 if doc_idx < skip_until:
                     continue
@@ -751,7 +752,7 @@ def extract_document(
                         bucket.append(n)
                 attrs = n.attrs
                 if attrs:
-                    if "style" in attrs or "hidden" in attrs:
+                    if not cannot_hide(attrs):
                         render_candidates.append(n)
                     if "itemscope" in attrs:
                         micro_scopes.append(n)

@@ -27,8 +27,9 @@
    makes it Node.text_content, a method descriptor, so a call runs no
    Python frame.  It walks the children lists through the Node slots
    with a heap stack (no recursion, whatever the depth), skips
-   RAW_TEXT_SKIP subtrees and the subtree of every child whose
-   unrendered slot is True (the node it starts from is read), puts a
+   RAW_TEXT_SKIP subtrees and, when the node it starts from is not
+   marked, the subtree of every child whose unrendered slot is True (a
+   walk started inside a marked subtree reads all of it), puts a
    space around each BLOCK_ELEMENTS member and <br>, and collapses
    whitespace as it writes, which is
    _WS_RE.sub(" ", s).strip(): re's \s and str.strip() both test
@@ -787,7 +788,7 @@ subtree_text(PyObject *node)
     Frame small[32], *st = small;
     Py_ssize_t depth = 0, cap = 32;
     PyObject *result = NULL;
-    int cls;
+    int cls, cut;
 
     o.buf = o.small;
     o.kind = PyUnicode_1BYTE_KIND;
@@ -803,6 +804,7 @@ subtree_text(PyObject *node)
         result = PyUnicode_New(0, 0);
         goto done;
     }
+    cut = SLOT(node, off_unrendered) != Py_True;
     if ((st[0].children = children_of(node)) == NULL)
         goto done;
     st[0].next = 0;
@@ -831,7 +833,7 @@ subtree_text(PyObject *node)
                          Py_TYPE(item)->tp_name);
             goto done;
         }
-        if (SLOT(item, off_unrendered) == Py_True)
+        if (cut && SLOT(item, off_unrendered) == Py_True)
             continue;
         Py_INCREF(item);
         cls = text_class(item);
@@ -1143,7 +1145,8 @@ node_text_content(PyObject *self, PyObject *unused)
 static PyMethodDef text_content_def = {
     "text_content", node_text_content, METH_NOARGS,
     "Whitespace-collapsed text of the subtree, skipping script, style, "
-    "template, noscript and unrendered children; block elements and <br> "
+    "template, noscript and, from a rendered node, unrendered children; "
+    "block elements and <br> "
     "separate words.  "
     "Native dom._text_content_py."};
 

@@ -2,11 +2,12 @@
 
 ``css.mark_unrendered`` marks (``Node.unrendered``) every subtree whose
 effective attrs are ``dom.is_invisible``, and the extraction walk marks
-every ``<template>``/``<noscript>`` subtree, once per document; the text
-walks skip a marked child and every rendered-content family drops marked
-nodes.  The oracle of the differential below is the extraction of the
-same markup with the hidden subtrees cut out first.  Everything runs
-under both parsers and both text walks (the ``parser`` fixture).
+every ``<template>``/``<noscript>`` subtree, once per document; a text
+walk started on a rendered node skips a marked child and every
+rendered-content family drops marked nodes.  The oracle of the
+differential below is the extraction of the same markup with the hidden
+subtrees cut out first.  Everything runs under both parsers and both
+text walks (the ``parser`` fixture).
 """
 
 from __future__ import annotations
@@ -125,6 +126,41 @@ def test_a_marked_node_read_by_itself_keeps_its_text(parser):
         "name": "Widget", "ratingValue": "4.5"}
 
 
+def test_a_read_started_inside_a_hidden_subtree_reads_all_of_it(parser):
+    """Only the boundary of a hidden subtree is cut: the families that
+    read markup whatever renders keep the nested text of a hidden
+    microdata scope and of a hidden figure's caption and axis title."""
+    html = (f"<p>{BLOCK}</p><div style=display:none itemscope "
+            "itemtype='https://schema.org/Product'><span itemprop=name>"
+            "Widget <b>Pro</b></span><div itemprop=description><p>a</p>"
+            "<p>b</p></div></div><div hidden><figure><svg><rect x=1 y=1 "
+            "width=5 height=5></rect><text class=y-axis>Sales <tspan>EUR"
+            "</tspan></text></svg><figcaption>Chart <b>two</b></figcaption>"
+            "</figure></div>")
+    _, ex = extraction(html)
+    assert ex["structured_data"][0]["props"] == {
+        "name": "Widget Pro", "description": "a b"}
+    chart = ex["charts"][0]
+    assert (chart["title"], chart["y_axis_title"]) == ("Chart two",
+                                                       "Sales EUR")
+
+
+def test_preformatted_text_inside_a_hidden_subtree_reads_all_of_it(parser):
+    from exstruct_spark.kernels import dom
+    root = dom.parse_html("<div hidden><pre>a <b>b</b>\n  c<i hidden>d</i>"
+                          "</pre></div><pre>e<i hidden>f</i></pre>")
+    try:
+        dom.mark_subtree(root.find_all("div")[0])
+        dom.mark_subtree(root.find_all("i")[1])
+        hidden_pre, shown_pre = root.find_all("pre")
+        assert hidden_pre.preformatted_text() == "a b\n  cd"
+        assert hidden_pre.text_content() == "a b cd"
+        assert shown_pre.preformatted_text() == "e"
+        assert shown_pre.text_content() == "e"
+    finally:
+        dom.release(root)
+
+
 def test_degraded_text_skips_hidden_markup(parser):
     """A page with no content block falls back to the text of its
     markup; the markup of its hidden subtrees is cut out first."""
@@ -162,12 +198,16 @@ def _mark_probe(monkeypatch) -> dict:
 
 
 def test_mark_step_costs_nothing_without_candidates(monkeypatch):
-    """Rules that declare no display or visibility and nodes without
+    """Rules with no declaration that can hide (layout ``display``
+    values, ``visibility:visible``, ``[hidden]{display:none}``, whose
+    nodes are candidates by their own attrs) and nodes without
     ``hidden``/``style``: the mark step resolves no node and marks
-    nothing.  The controls, one rule that declares display and one
-    inline style, make it resolve and mark."""
+    nothing.  The controls, one rule that declares ``display:none`` and
+    one inline style, make it resolve and mark."""
     head = ("<style>.k{background:#eee} td{border:1px solid #000}"
-            "#i{border-top:1px solid}</style>")
+            "#i{border-top:1px solid} .row{display:flex} img{display:block}"
+            " div{display:BLOCK} *{visibility:visible} [hidden]{display:none}"
+            " p[hidden]{display:none!important}</style>")
     body = (f"<div class=k id=i><p>{BLOCK}</p><table><tr><td>a</td>"
             "<td>b</td></tr></table></div>")
     probe = _mark_probe(monkeypatch)
@@ -181,6 +221,18 @@ def test_mark_step_costs_nothing_without_candidates(monkeypatch):
     probe["calls"] = 0
     extract_document("https://r.example/c", (head + inline).encode())
     assert (probe["calls"], probe["marked"]) == (1, 1)
+
+
+def test_a_rule_keyed_on_an_attribute_resolves_only_its_holders(monkeypatch):
+    """A hiding rule keyed on an attribute selector makes only the nodes
+    that carry the attribute candidates."""
+    head = "<style>[data-off]{display:none} .k{display:inline}</style>"
+    body = (f"<div class=k><p>{BLOCK}</p><p data-off=1>SECRET</p>"
+            "<span data-off>SECRET</span></div>")
+    probe = _mark_probe(monkeypatch)
+    rec = extract_document("https://r.example/c", (head + body).encode())
+    assert (probe["calls"], probe["marked"]) == (2, 2)
+    assert "SECRET" not in rec["main_text"]
 
 
 # -- the differential: hidden subtrees read as cut-out markup ----------------

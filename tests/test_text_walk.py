@@ -120,9 +120,9 @@ def test_native_text_matches_python_on_built_trees(native):
 
 
 def test_native_text_skips_marked_children_like_python(native):
-    """A child marked ``unrendered`` is skipped with its subtree by both
-    walks; the node a walk starts from is read whether or not it is
-    marked."""
+    """From a rendered node, both walks skip a child marked
+    ``unrendered`` with its subtree; from a marked node they read every
+    child (a read started inside a hidden subtree reads all of it)."""
     @HYPOTHESIS
     @given(root=BUILT, data=st.data())
     def check(root, data):
@@ -140,6 +140,9 @@ def test_native_text_skips_marked_children_like_python(native):
     assert p.text_content() == dom._text_content_py(p) == "ace"
     assert span.text_content() == dom._text_content_py(span) == "b"
     assert p.preformatted_text() == "ace"
+    dom.mark_subtree(p)
+    assert p.text_content() == dom._text_content_py(p) == "abc d e"
+    assert p.preformatted_text() == "abcde"
 
 
 def test_deep_nesting_walks_without_recursion(native):
