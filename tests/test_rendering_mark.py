@@ -116,21 +116,13 @@ def test_links_map_drops_links_of_a_display_none_menu(parser):
 def test_a_marked_node_read_by_itself_keeps_its_text(parser):
     """A walk started on a marked node reads it: a hidden microdata
     ``itemprop`` value keeps its text, while a hidden child inside a
-    rendered value is skipped."""
+    rendered value is skipped.  Only the boundary of a hidden subtree is
+    cut, so a read started inside one (a hidden microdata scope, a
+    hidden figure's caption and axis title) keeps its nested text."""
     html = ("<div itemscope itemtype='https://schema.org/Product'>"
             "<span itemprop=name>Widget<b hidden>SECRET</b></span>"
             "<span itemprop=ratingValue style=display:none>4.5</span>"
-            f"</div><p>{BLOCK}</p>")
-    _, ex = extraction(html)
-    assert ex["structured_data"][0]["props"] == {
-        "name": "Widget", "ratingValue": "4.5"}
-
-
-def test_a_read_started_inside_a_hidden_subtree_reads_all_of_it(parser):
-    """Only the boundary of a hidden subtree is cut: the families that
-    read markup whatever renders keep the nested text of a hidden
-    microdata scope and of a hidden figure's caption and axis title."""
-    html = (f"<p>{BLOCK}</p><div style=display:none itemscope "
+            f"</div><p>{BLOCK}</p><div style=display:none itemscope "
             "itemtype='https://schema.org/Product'><span itemprop=name>"
             "Widget <b>Pro</b></span><div itemprop=description><p>a</p>"
             "<p>b</p></div></div><div hidden><figure><svg><rect x=1 y=1 "
@@ -138,27 +130,12 @@ def test_a_read_started_inside_a_hidden_subtree_reads_all_of_it(parser):
             "</tspan></text></svg><figcaption>Chart <b>two</b></figcaption>"
             "</figure></div>")
     _, ex = extraction(html)
-    assert ex["structured_data"][0]["props"] == {
-        "name": "Widget Pro", "description": "a b"}
+    assert [d["props"] for d in ex["structured_data"]] == [
+        {"name": "Widget", "ratingValue": "4.5"},
+        {"name": "Widget Pro", "description": "a b"}]
     chart = ex["charts"][0]
     assert (chart["title"], chart["y_axis_title"]) == ("Chart two",
                                                        "Sales EUR")
-
-
-def test_preformatted_text_inside_a_hidden_subtree_reads_all_of_it(parser):
-    from exstruct_spark.kernels import dom
-    root = dom.parse_html("<div hidden><pre>a <b>b</b>\n  c<i hidden>d</i>"
-                          "</pre></div><pre>e<i hidden>f</i></pre>")
-    try:
-        dom.mark_subtree(root.find_all("div")[0])
-        dom.mark_subtree(root.find_all("i")[1])
-        hidden_pre, shown_pre = root.find_all("pre")
-        assert hidden_pre.preformatted_text() == "a b\n  cd"
-        assert hidden_pre.text_content() == "a b cd"
-        assert shown_pre.preformatted_text() == "e"
-        assert shown_pre.text_content() == "e"
-    finally:
-        dom.release(root)
 
 
 def test_degraded_text_skips_hidden_markup(parser):
@@ -202,8 +179,9 @@ def test_mark_step_costs_nothing_without_candidates(monkeypatch):
     values, ``visibility:visible``, ``[hidden]{display:none}``, whose
     nodes are candidates by their own attrs) and nodes without
     ``hidden``/``style``: the mark step resolves no node and marks
-    nothing.  The controls, one rule that declares ``display:none`` and
-    one inline style, make it resolve and mark."""
+    nothing.  The controls, a rule that declares ``display:none``, an
+    inline style and a hiding rule keyed on an attribute, make it
+    resolve and mark (the last, only the node carrying the attribute)."""
     head = ("<style>.k{background:#eee} td{border:1px solid #000}"
             "#i{border-top:1px solid} .row{display:flex} img{display:block}"
             " div{display:BLOCK} *{visibility:visible} [hidden]{display:none}"
@@ -221,18 +199,11 @@ def test_mark_step_costs_nothing_without_candidates(monkeypatch):
     probe["calls"] = 0
     extract_document("https://r.example/c", (head + inline).encode())
     assert (probe["calls"], probe["marked"]) == (1, 1)
-
-
-def test_a_rule_keyed_on_an_attribute_resolves_only_its_holders(monkeypatch):
-    """A hiding rule keyed on an attribute selector makes only the nodes
-    that carry the attribute candidates."""
-    head = "<style>[data-off]{display:none} .k{display:inline}</style>"
-    body = (f"<div class=k><p>{BLOCK}</p><p data-off=1>SECRET</p>"
-            "<span data-off>SECRET</span></div>")
-    probe = _mark_probe(monkeypatch)
-    rec = extract_document("https://r.example/c", (head + body).encode())
-    assert (probe["calls"], probe["marked"]) == (2, 2)
-    assert "SECRET" not in rec["main_text"]
+    keyed = head.replace(".k{background:#eee}", "[data-off]{display:none}")
+    attr = body.replace("<td>b", "<td data-off>b")
+    probe["calls"] = 0
+    extract_document("https://r.example/c", (keyed + attr).encode())
+    assert (probe["calls"], probe["marked"]) == (1, 1)
 
 
 # -- the differential: hidden subtrees read as cut-out markup ----------------
