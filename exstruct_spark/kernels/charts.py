@@ -121,6 +121,14 @@ def _grid_series_ranges(table_art: dict, n_series: int) -> list:
     return out
 
 
+def _length(value) -> float:
+    """An SVG length attribute as a number: its leading number, by the
+    rule ``points`` is read with, or 0 (``"5/"``, an unquoted value that
+    kept its ``/``, is 5; ``"auto"`` is 0)."""
+    m = _NUM_RE.match((value or "").strip())
+    return float(m.group()) if m else 0.0
+
+
 def _chart_type(svg: Node) -> str:
     """Structural chart-type dispatch (reference ooxml_drawing.py:455-482
     tag->label map; Bar vs Column disambiguated by bar orientation like
@@ -129,8 +137,8 @@ def _chart_type(svg: Node) -> str:
         return "Line"
     rects = svg.find_all("rect")
     if rects:
-        widths = [float(r.get("width", 0) or 0) for r in rects]
-        heights = [float(r.get("height", 0) or 0) for r in rects]
+        widths = [_length(r.get("width")) for r in rects]
+        heights = [_length(r.get("height")) for r in rects]
         if widths and sum(heights) >= sum(widths):
             return "Column"
         return "Bar"
@@ -149,20 +157,21 @@ def _series_values(svg: Node) -> list:
             series.append(ys)
     if not series:
         rects = svg.find_all("rect")
-        ys = [float(r.get("height", 0) or 0) for r in rects if r.get("height")]
+        ys = [_length(r.get("height")) for r in rects if r.get("height")]
         if ys:
             series.append(ys)
     return series
 
 
 def extract_charts(
-    figures, tables_by_figure: Optional[dict] = None, scripts=None,
-    figure_scripts: Optional[dict] = None,
+    figures: list, scripts: list, tables_by_figure: Optional[dict] = None,
 ) -> list:
     """<figure> blocks containing an <svg> -> chart records.
 
-    ``figures`` is either a pre-collected list of figure nodes (single-pass
-    discipline) or a root ``Node`` to scan.  ``tables_by_figure`` maps
+    ``figures`` and ``scripts`` are the document's ``<figure>`` and
+    ``<script>`` nodes (the rendered walk's, in document order): a
+    figure's own scripts bind to its companion grid, and the scripts
+    outside every figure are standalone.  ``tables_by_figure`` maps
     id(figure-node) -> the companion <table> ARTIFACT dict, so a chart's
     series bind to real grid ranges (the J7 chart-series->grid join,
     SURVEY.md §2.3): name_range/x_range/y_range are A1 refs into that
@@ -174,17 +183,11 @@ def extract_charts(
     'y-axis' (the web stand-in for Axes(2,1).AxisTitle, reference
     libreoffice_backend.py:549-551).
     """
-    if isinstance(figures, Node):
-        figures = figures.find_all("figure")
     charts: list = []
-    # figure_scripts: precollected id(fig) -> [script nodes] (the caller's
-    # single traversal); fallback walks the subtree here
-    def _fig_scripts(fig):
-        if figure_scripts is not None:
-            return figure_scripts.get(id(fig), [])
-        return fig.find_all("script")
-
+    in_figure: set = set()  # ids of the scripts inside a figure
     for fig in figures:
+        own_scripts = fig.find_all("script")
+        in_figure.update(map(id, own_scripts))
         svg = fig.find_first("svg")
         if svg is None:
             # inline-script chart configs (Chart.js / ECharts) — the real
@@ -193,7 +196,7 @@ def extract_charts(
                 tables_by_figure.get(id(fig)) if tables_by_figure else None
             )
             charts.extend(
-                _records_from_scripts(_fig_scripts(fig), len(charts), table_art)
+                _records_from_scripts(own_scripts, len(charts), table_art)
             )
             continue
         i = len(charts)
@@ -241,10 +244,10 @@ def extract_charts(
         # the scripts parse too (same companion-table binding), they are
         # distinct chart artifacts, not alternatives (review r3 finding)
         charts.extend(
-            _records_from_scripts(_fig_scripts(fig), len(charts), table_art)
+            _records_from_scripts(own_scripts, len(charts), table_art)
         )
     # standalone <script> chart constructors (outside any <figure>):
     # parsed by the same tokenizer, unbound (no companion grid)
-    if scripts:
-        charts.extend(_records_from_scripts(scripts, len(charts), None))
+    charts.extend(_records_from_scripts(
+        [s for s in scripts if id(s) not in in_figure], len(charts), None))
     return charts

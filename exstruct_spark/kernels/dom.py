@@ -190,11 +190,12 @@ class Node:
     browser does not render (a ``<template>``/``<noscript>`` subtree, or
     one whose effective attrs are ``is_invisible``).  Both parsers set it
     False; it is the one write after parse, made once per document
-    (``css.mark_unrendered`` and the inert skip of the rendered walk in
-    ``extract_document`` and the cell edits) before any family reads
-    the tree.  A text walk started on a rendered node skips a marked
-    child (one started inside a marked subtree reads all of it), and
-    every rendered-content family drops marked nodes.
+    (``css.mark_unrendered`` and the inert skip of
+    ``extract.rendered_walk``, the one rendered walk, which extraction,
+    the stylesheet-ref harvest and the cell edits share) before any
+    family reads the tree.  A text walk started on a rendered node
+    skips a marked child (one started inside a marked subtree reads all
+    of it), and every rendered-content family drops marked nodes.
     """
 
     __slots__ = ("tag", "attrs", "children", "doc_nodes", "i0", "i1", "pi",

@@ -93,9 +93,8 @@ from itertools import islice
 
 from exstruct_spark.config import DetectionConfig
 from exstruct_spark.kernels import dom
-from exstruct_spark.kernels.css import HIDING_ATTRS
-from exstruct_spark.kernels.extract import _render_cascade, declared_tables
-from exstruct_spark.kernels.tables import is_table_like
+from exstruct_spark.kernels.extract import (
+    _render_cascade, declared_tables, rendered_walk)
 
 _DETECTION = DetectionConfig()
 
@@ -121,26 +120,11 @@ def _parsed_table(html: str, index: int):
     when the block exits."""
     root = dom.parse_html(html)
     try:
-        by_tag: dict = {"base": [], "link": [], "style": []}
-        nodes: list = []
-        candidates: list = []
-        skip_to = -1
-        for n in root.iter():  # the rendered walk, as extraction's
-            if n.i0 < skip_to:
-                continue
-            if n.tag in dom.RENDER_INERT:
-                dom.mark_subtree(n)
-                skip_to = n.i1
-                continue
-            if n.tag in by_tag:
-                by_tag[n.tag].append(n)
-            elif is_table_like(n):
-                nodes.append(n)
-            if not HIDING_ATTRS.isdisjoint(n.attrs):
-                candidates.append(n)
+        walk = rendered_walk(root)
         url, external_css = _PAGE.get()
-        css = _render_cascade(root, url, by_tag, candidates, external_css)[2]
-        found = declared_tables(nodes, _DETECTION, css=css, anchored=True)
+        css = _render_cascade(root, url, walk, external_css)[2]
+        found = declared_tables(walk.table_like, _DETECTION, css=css,
+                                anchored=True)
         for node, _art, (rows, cells) in islice(found, index, None):
             yield node, rows, cells
             break

@@ -22,10 +22,9 @@ from __future__ import annotations
 import re
 import unicodedata
 from bisect import bisect_left
-from typing import Optional
-from urllib.parse import urljoin
-
-from urllib.parse import urlsplit, urlunsplit
+from operator import attrgetter
+from typing import NamedTuple, Optional
+from urllib.parse import urljoin, urlsplit, urlunsplit
 
 from exstruct_spark.config import ExtractOptions
 from exstruct_spark.kernels.areas import area_views, auto_areas
@@ -208,6 +207,30 @@ def _best_image_src(im, picture_srcsets: Optional[list]) -> str:
     return src
 
 
+def _put_dims(entry: dict, attrs) -> dict:
+    """``entry`` with the declared integer ``width``/``height`` of
+    ``attrs`` added as ``w``/``h``."""
+    for attr, key in (("width", "w"), ("height", "h")):
+        v = (attrs.get(attr) or "").strip()
+        if v.isdigit():
+            entry[key] = int(v)
+    return entry
+
+
+def _image_entry(im, src: str, caption: Optional[str] = None,
+                 noscript: bool = False) -> dict:
+    """One ``images`` entry for ``<img>`` ``im`` with best URL ``src``:
+    the ``<noscript>`` flag, alt text, the figure caption and the
+    declared dimensions, each only when present."""
+    entry: dict = {"src": src, "noscript": True} if noscript else {"src": src}
+    alt = (im.attrs.get("alt") or "").strip()
+    if alt:
+        entry["alt"] = alt
+    if caption:
+        entry["caption"] = caption
+    return _put_dims(entry, im.attrs)
+
+
 MAX_EMBEDS = 64        # embedded-media pointers kept per document
 
 
@@ -346,6 +369,28 @@ def _join(base: str, href: str) -> Optional[str]:
         return None
 
 
+def _sheet_hrefs(link_nodes: list, style_nodes):
+    """Unresolved stylesheet hrefs in ``_stylesheet_refs`` order: each
+    applicable ``<link rel=stylesheet>``'s, then the top-of-sheet
+    ``@import`` targets of each on-screen ``<style>`` block."""
+    for ln in link_nodes:
+        attrs = ln.attrs
+        rel_tokens = (attrs.get("rel") or "").strip().lower().split()
+        # rel="alternate stylesheet" is a user-selectable theme —
+        # browsers do NOT apply it by default; a disabled link is inert
+        # the same way.  A non-screen sheet (media="print", …) never
+        # styles the rendered page; media="not print" DOES (r7 review fix)
+        if ("stylesheet" in rel_tokens and "alternate" not in rel_tokens
+                and "disabled" not in attrs
+                and media_applies_on_screen(attrs.get("media"))):
+            href = (attrs.get("href") or "").strip()
+            if href:
+                yield href
+    for sn in style_nodes:
+        if media_applies_on_screen(sn.attrs.get("media")):
+            yield from _style_import_hrefs(_style_text(sn))
+
+
 def _stylesheet_refs(link_nodes: list, base_url: str,
                      style_nodes: list = ()) -> list:
     """Resolved external-stylesheet URLs in document order — the
@@ -358,39 +403,13 @@ def _stylesheet_refs(link_nodes: list, base_url: str,
     (caps-not-crashes); an href ``urljoin`` rejects is skipped."""
     out: list = []
     seen: set = set()
-    for ln in link_nodes:
-        attrs = ln.attrs
-        rel = (attrs.get("rel") or "").strip().lower()
-        rel_tokens = rel.split()
-        if "stylesheet" in rel_tokens:
-            # rel="alternate stylesheet" is a user-selectable theme —
-            # browsers do NOT apply it by default; a disabled link is
-            # inert the same way
-            if "alternate" in rel_tokens or "disabled" in attrs:
-                continue
-            # a non-screen sheet (media="print", …) never styles the
-            # rendered page; media="not print" DOES (r7 review fix)
-            if not media_applies_on_screen(attrs.get("media")):
-                continue
-            href = (attrs.get("href") or "").strip()
-            if not href:
-                continue
-            resolved = _join(base_url, href)
-            if resolved is not None and resolved not in seen:
-                seen.add(resolved)
-                out.append(resolved)
-                if len(out) >= _MAX_STYLESHEET_REFS:
-                    return out
-    for sn in style_nodes:
-        if not media_applies_on_screen(sn.attrs.get("media")):
-            continue
-        for href in _style_import_hrefs(_style_text(sn)):
-            resolved = _join(base_url, href)
-            if resolved is not None and resolved not in seen:
-                seen.add(resolved)
-                out.append(resolved)
-                if len(out) >= _MAX_STYLESHEET_REFS:
-                    return out
+    for href in _sheet_hrefs(link_nodes, style_nodes):
+        resolved = _join(base_url, href)
+        if resolved is not None and resolved not in seen:
+            seen.add(resolved)
+            out.append(resolved)
+            if len(out) >= _MAX_STYLESHEET_REFS:
+                break
     return out
 
 
@@ -444,7 +463,9 @@ def _links_map(anchors: list, base_url: str = "", absolutize: bool = False,
         href = a.get("href")
         if href and not a.unrendered:
             if absolutize and base_url:
-                href = urljoin(base_url, href)
+                # an href urljoin rejects (a malformed IPv6 host) stays
+                # verbatim, as normalize_url passes it through
+                href = _join(base_url, href) or href
             if normalize:
                 href = normalize_url(href)
             positions.setdefault(href, []).append(idx)
@@ -485,28 +506,145 @@ def _document_base(url: str, base_nodes: list) -> str:
     return url
 
 
+class RenderedWalk(NamedTuple):
+    """What ``rendered_walk`` collects from one document, each list in
+    document order."""
+    groups: dict             # tag -> nodes (shared buckets: see the walk)
+    table_like: list         # ``is_table_like`` nodes: <table> and ARIA
+    render_candidates: list  # nodes whose attrs carry a ``HIDING_ATTRS``
+    noscripts: list          # <noscript> elements (marked, not walked)
+    micro_scopes: list       # ``itemscope`` nodes
+    rdfa_scopes: list        # ``typeof`` nodes
+    class_positions: dict    # class name -> node indexes
+    containers: list         # <div>/<section> nodes of the first <body>
+
+
+_BUCKET_TAGS = ("body", "title", "table", "figure", "svg", "a", "script",
+                "img", "style", "picture", "base", "meta", "link", "time")
+_I0 = attrgetter("i0")
+
+
+def rendered_walk(root) -> RenderedWalk:
+    """ONE traversal of a parsed document collects every artifact
+    family in document order (the memoized-single-parse discipline,
+    SURVEY.md §4 R5).  ``<template>``/``<noscript>`` subtrees are inert
+    in a browser: each is marked ``unrendered`` and skipped, so its
+    markup feeds no collector.  The one rendered walk of
+    ``extract_document``, ``stylesheet_refs`` and the cell edit ops
+    (kernels/edits.py)."""
+    groups: dict = {t: [] for t in _BUCKET_TAGS}
+    # embedded-media pointers share ONE bucket so document order across
+    # kinds is preserved.  AMP components carry the SAME attribute
+    # surface as their HTML twins (src/srcset/poster/width/height), so
+    # they ride the same buckets — an AMP page's images/videos would
+    # otherwise be invisible to the families
+    groups["iframe"] = groups["video"] = groups["audio"] = \
+        groups["embed"] = groups["object"] = \
+        groups["amp-video"] = groups["amp-audio"] = \
+        groups["amp-iframe"] = groups["amp-youtube"] = []
+    groups["amp-img"] = groups["img"]
+    # ul/ol/dl (and section/article) share buckets so document order
+    # across kinds is preserved (outer-before-inner claiming; dl joins
+    # the lists family as dt->dd trees)
+    groups["ul"] = groups["ol"] = groups["dl"] = []
+    section_bucket = groups["section"] = groups["article"] = []
+    # grid detection's containers: every <div> and <section>
+    containers = groups["div"] = []
+    class_positions: dict = {}
+    micro_scopes: list = []
+    rdfa_scopes: list = []
+    # document-order table-LIKE elements: <table> plus ARIA
+    # role="table"/"grid" declarations (the G7 declared-table twin —
+    # extract_table dispatches on the node)
+    table_like: list = []
+    noscripts: list = []
+    # nodes whose own attrs may hide them (css.mark_unrendered)
+    render_candidates: list = []
+    get_bucket = groups.get
+    # An integer skip guard over the C-fast indexed iteration
+    # (root.iter() is the prebuilt doc list; a generator resume per node
+    # costs ~10% corpus throughput — measured in the round-7 soak A/B).
+    # r8: the inert-tag test rides the SAME dict get as bucket dispatch
+    # (a sentinel value in ``groups``) and the per-tag special cases
+    # dispatch on bucket IDENTITY — no per-node tuple membership or
+    # string compares on the hot walk.
+    inert = object()
+    groups.update(dict.fromkeys(RENDER_INERT, inert))
+    a_bucket = groups["a"]
+    table_bucket = groups["table"]
+    skip_until = -1
+    cannot_hide = HIDING_ATTRS.isdisjoint
+    for doc_idx, n in enumerate(root.iter()):
+        if doc_idx < skip_until:
+            continue
+        bucket = get_bucket(n.tag)
+        if bucket is not None:
+            if bucket is inert:
+                if n.i1 > doc_idx:
+                    # <noscript> is the standard lazy-load FALLBACK
+                    # carrier: real pages ship `<img data-src=...>
+                    # <noscript><img src=real></noscript>`, so the
+                    # images family reads its <img> nodes (the one
+                    # exception to the rendering mark)
+                    if n.tag == "noscript":
+                        noscripts.append(n)
+                    mark_subtree(n)
+                    skip_until = n.i1
+                    continue
+            elif bucket is a_bucket:
+                # anchors keep their document-order index: it is the
+                # position key of the links_map inverted index (A2)
+                bucket.append((doc_idx, n))
+            elif bucket is table_bucket:
+                bucket.append(n)
+                if is_table_like(n):
+                    table_like.append(n)
+            elif bucket is section_bucket:
+                bucket.append(n)
+                if n.tag == "section":  # <article> shares the bucket
+                    containers.append(n)
+            else:
+                bucket.append(n)
+        attrs = n.attrs
+        if attrs:
+            if not cannot_hide(attrs):
+                render_candidates.append(n)
+            if "itemscope" in attrs:
+                micro_scopes.append(n)
+            if "typeof" in attrs:
+                rdfa_scopes.append(n)
+            # the ARIA form (a <table> was judged above)
+            if ("role" in attrs and bucket is not table_bucket
+                    and is_table_like(n)):
+                table_like.append(n)
+            cls = attrs.get("class")
+            if cls:
+                for name in cls.split():
+                    # class -> positions (A1 colors_map shape: value ->
+                    # coordinate list, reference core/cells.py:277-310)
+                    class_positions.setdefault(name, []).append(doc_idx)
+    body = groups["body"][0] if groups["body"] else root
+    return RenderedWalk(
+        groups, table_like, render_candidates, noscripts, micro_scopes,
+        rdfa_scopes, class_positions,
+        containers[bisect_left(containers, body.i0, key=_I0):
+                   bisect_left(containers, body.i1, key=_I0)])
+
+
 def stylesheet_refs(url: str, raw: Optional[bytes]) -> list:
     """The page's applicable external-stylesheet URLs, exactly the
     ``stylesheets`` field ``extract_document`` gives the same bytes:
     the same decode and route (PDF, feed, robots.txt and empty
     documents have none), the same parse, the rendered walk's
-    ``<base>``/``<link>``/``<style>`` nodes (``template``/``noscript``
-    subtrees are inert) and ``_stylesheet_refs``.  This is the key list
-    of the external-CSS corpus join (engine.harvest_stylesheet_refs)."""
+    ``<base>``/``<link>``/``<style>`` nodes and ``_stylesheet_refs``.
+    This is the key list of the external-CSS corpus join
+    (engine.harvest_stylesheet_refs)."""
     kind, html = _route(raw or b"")
     if kind != "html":
         return []
     root = parse_html(html)
     try:
-        found: dict = {"base": [], "link": [], "style": []}
-        skip_until = -1
-        for doc_idx, n in enumerate(root.iter()):
-            if doc_idx < skip_until:
-                continue
-            if n.tag in RENDER_INERT:
-                skip_until = n.i1
-            elif n.tag in found:
-                found[n.tag].append(n)
+        found = rendered_walk(root).groups
         return _stylesheet_refs(found["link"],
                                 _document_base(url, found["base"]),
                                 found["style"])
@@ -524,12 +662,10 @@ def _spans_between(html: str, nodes: list):
     yield html[pos:]
 
 
-def _render_cascade(root, url: str, found: dict, candidates: list,
+def _render_cascade(root, url: str, walk: RenderedWalk,
                     external_css=None, want_sheets: bool = False) -> tuple:
     """``(base, sheets, css, hidden)`` of a parsed page, its hidden
-    subtrees marked.  ``found`` maps ``base``, ``link`` and ``style`` to the
-    rendered walk's nodes of that tag and ``candidates`` are the nodes
-    whose attrs carry one of ``css.HIDING_ATTRS`` (``css.mark_unrendered``).
+    subtrees marked; ``walk`` is the page's ``rendered_walk``.
     ``base`` is the document base, ``sheets`` the applicable-stylesheet
     list (computed only when corpus-joined sheets ride in or
     ``want_sheets``; the corpus join keyed on the same list) and ``css``
@@ -537,6 +673,7 @@ def _render_cascade(root, url: str, found: dict, candidates: list,
     joined sheets cascading below them, or None without rules;
     ``hidden`` lists the roots of the marked subtrees.  The one cascade
     of ``extract_document`` and the cell edit ops (kernels/edits.py)."""
+    found = walk.groups
     base = _document_base(url, found["base"])
     # length test, not truthiness: Arrow hands list columns to the
     # kernel as numpy arrays, whose bool() is ambiguous
@@ -552,7 +689,8 @@ def _render_cascade(root, url: str, found: dict, candidates: list,
         # return — pass None so the per-cell/per-block call sites take
         # their attrs fast path outright (r8)
         css = None
-    return base, sheets, css, mark_unrendered(root, candidates, css)
+    return base, sheets, css, mark_unrendered(root, walk.render_candidates,
+                                              css)
 
 
 _LONE_SURROGATE_RE = re.compile("[\ud800-\udfff]")
@@ -667,111 +805,8 @@ def extract_document(
     else:
         try:
             root = parse_html(html)
-            # ONE traversal collects every artifact family in document
-            # order (the memoized-single-parse discipline, SURVEY.md §4 R5)
-            groups: dict = {
-                t: []
-                for t in ("body", "title", "table", "figure", "svg", "a",
-                          "script", "img", "style", "picture", "base",
-                          "meta", "link", "time")
-            }
-            # embedded-media pointers share ONE bucket so document order
-            # across kinds is preserved (same discipline as ul/ol).
-            # AMP components carry the SAME attribute surface as their
-            # HTML twins (src/srcset/poster/width/height), so they ride
-            # the same buckets — an AMP page's images/videos would
-            # otherwise be invisible to the families
-            groups["iframe"] = groups["video"] = groups["audio"] = \
-                groups["embed"] = groups["object"] = \
-                groups["amp-video"] = groups["amp-audio"] = \
-                groups["amp-iframe"] = groups["amp-youtube"] = []
-            groups["amp-img"] = groups["img"]
-            # ul/ol/dl (and section/article) share buckets so document
-            # order across kinds is preserved (outer-before-inner
-            # claiming; dl joins the lists family as dt->dd trees)
-            groups["ul"] = groups["ol"] = groups["dl"] = []
-            groups["section"] = groups["article"] = []
-            class_positions: dict = {}
-            micro_scopes: list = []
-            rdfa_scopes: list = []
-            # document-order table-LIKE elements: <table> plus ARIA
-            # role="table"/"grid" declarations (the G7 declared-table
-            # twin — extract_table dispatches on the node)
-            table_like: list = []
-            get_bucket = groups.get
-            # rendered walk: <template>/<noscript> subtrees are inert
-            # in a browser, so their markup never feeds the collectors
-            # and every node of them is marked ``unrendered``.
-            # Implemented as an integer skip guard over the C-fast
-            # indexed iteration (root.iter() is the prebuilt doc list;
-            # a generator resume per node costs ~10% corpus throughput
-            # — measured in the round-7 soak A/B).  r8: the inert-tag
-            # test rides the SAME dict get as bucket dispatch (a
-            # sentinel value in ``groups``) and the per-tag special
-            # cases dispatch on bucket IDENTITY — no per-node tuple
-            # membership or string compares on the hot walk.
-            inert = groups["template"] = groups["noscript"] = object()
-            a_bucket = groups["a"]
-            table_bucket = groups["table"]
-            skip_until = -1
-            noscripts: list = []
-            # nodes whose own attrs may hide them (css.mark_unrendered)
-            render_candidates: list = []
-            cannot_hide = HIDING_ATTRS.isdisjoint
-            for doc_idx, n in enumerate(root.iter()):
-                if doc_idx < skip_until:
-                    continue
-                bucket = get_bucket(n.tag)
-                if bucket is not None:
-                    if bucket is inert:
-                        if n.i1 > doc_idx:
-                            # <noscript> is inert in a rendered browser,
-                            # but it is the standard lazy-load FALLBACK
-                            # carrier: real pages ship `<img data-src=...>
-                            # <noscript><img src=real></noscript>` so
-                            # no-JS readers (and crawlers) still see the
-                            # image.  Its <img> nodes are harvested for
-                            # the images family only (the one exception
-                            # to the rendering mark) — the subtree stays
-                            # out of every other collector.
-                            if n.tag == "noscript" and opts.include_images:
-                                noscripts.append(n)
-                            mark_subtree(n)
-                            skip_until = n.i1
-                            continue
-                    elif bucket is a_bucket:
-                        # anchors keep their document-order index: it is
-                        # the position key of the links_map inverted
-                        # index (A2)
-                        bucket.append((doc_idx, n))
-                    elif bucket is table_bucket:
-                        bucket.append(n)
-                        if is_table_like(n):
-                            table_like.append(n)
-                    else:
-                        bucket.append(n)
-                attrs = n.attrs
-                if attrs:
-                    if not cannot_hide(attrs):
-                        render_candidates.append(n)
-                    if "itemscope" in attrs:
-                        micro_scopes.append(n)
-                    if "typeof" in attrs:
-                        rdfa_scopes.append(n)
-                    # the ARIA form (a <table> was judged above)
-                    if ("role" in attrs and bucket is not table_bucket
-                            and is_table_like(n)):
-                        table_like.append(n)
-                    cls = attrs.get("class")
-                    if cls:
-                        for name in cls.split():
-                            # class -> positions (A1 colors_map shape:
-                            # value -> coordinate list, reference
-                            # core/cells.py:277-310)
-                            class_positions.setdefault(name, []).append(
-                                doc_idx
-                            )
-            body = groups["body"][0] if groups["body"] else root
+            walk = rendered_walk(root)
+            groups = walk.groups
 
             # class-rule resolution (kernels/css.py): same-document
             # <style> blocks feed the border/color kernels — the web
@@ -782,8 +817,7 @@ def extract_document(
             # The stylesheet list is computed only when something
             # consumes it (joined sheets, structured-metadata output).
             effective_base, sheets, css, hidden = _render_cascade(
-                root, url, groups, render_candidates, external_css,
-                opts.include_structured)
+                root, url, walk, external_css, opts.include_structured)
 
             title = (
                 groups["title"][0].text_content() if groups["title"] else ""
@@ -810,7 +844,7 @@ def extract_document(
                     for t in fig.find_all("table"):
                         fig_of_table[id(t)] = id(fig)
                 for t_node, art, _ in declared_tables(
-                        table_like, opts.detection, opts.alpha_keys, css):
+                        walk.table_like, opts.detection, opts.alpha_keys, css):
                     truncated = truncated or bool(art.get("truncated"))
                     if id(t_node) in fig_of_table:
                         # the whole artifact: charts bind series ranges to
@@ -820,7 +854,7 @@ def extract_document(
                     table_ids.append(art["id"])
                     tables.append(art)
                 for g in detect_grid_candidates(
-                    body, opts.detection, opts.alpha_keys, css
+                    walk.containers, opts.detection, opts.alpha_keys, css
                 ):
                     g["id"] = len(tables)
                     tables.append(g)
@@ -890,29 +924,14 @@ def extract_document(
                 n_shapes, n_arrows = len(shapes_all), len(arrows_all)
 
             if opts.include_charts:
-                # ONE subtree walk per figure collects its scripts; the
-                # same map serves both the figure path (companion-grid
-                # binding) and the standalone split
-                fig_scripts = {
-                    id(fig): fig.find_all("script")
-                    for fig in groups["figure"]
-                }
-                in_figure = {
-                    id(s) for ss in fig_scripts.values() for s in ss
-                }
-                standalone_scripts = [
-                    s for s in groups["script"] if id(s) not in in_figure
-                ]
                 charts = extract_charts(
-                    groups["figure"], figure_table_ids, standalone_scripts,
-                    figure_scripts=fig_scripts,
-                )
+                    groups["figure"], groups["script"], figure_table_ids)
                 if charts:
                     extraction["charts"] = charts
                 n_charts = len(charts)
 
             if opts.include_lists:
-                lists = extract_nested_lists(body, lists=groups["ul"])
+                lists = extract_nested_lists(groups["ul"])
                 if lists:
                     extraction["lists"] = lists
                 n_lists = len(lists)
@@ -926,7 +945,7 @@ def extract_document(
                     extraction["links_map"] = links
                 n_links = len(links)
 
-            if opts.include_images and (groups["img"] or noscripts):
+            if opts.include_images and (groups["img"] or walk.noscripts):
                 # image-text pair harvesting (the LAION-style multimodal
                 # curation input): every <img src> in document order with
                 # its alt text, the enclosing <figure>'s figcaption (the
@@ -963,45 +982,26 @@ def extract_document(
                     if im.unrendered:
                         continue
                     src = _best_image_src(im, picture_srcsets.get(id(im)))
-                    if not src:
-                        continue
-                    entry: dict = {"src": src}
-                    alt = (im.attrs.get("alt") or "").strip()
-                    if alt:
-                        entry["alt"] = alt
-                    cap_text = fig_caption.get(id(im))
-                    if cap_text:
-                        entry["caption"] = cap_text
-                    for attr, key in (("width", "w"), ("height", "h")):
-                        v = (im.attrs.get(attr) or "").strip()
-                        if v.isdigit():
-                            entry[key] = int(v)
-                    images.append(entry)
+                    if src:
+                        images.append(_image_entry(
+                            im, src, fig_caption.get(id(im))))
                 # noscript fallback images join AFTER the rendered ones,
                 # deduped by src: when the lazy <img data-src> already
                 # yielded the URL the noscript twin is a duplicate; when
                 # the rendered img was placeholder-only (JS-config lazy
                 # loading) the noscript copy is the ONLY carrier.  A
                 # <noscript> inside a hidden subtree carries nothing.
-                noscript_imgs = [im for ns in noscripts
+                noscript_imgs = [im for ns in walk.noscripts
                                  if not ns.parent.unrendered
                                  for im in ns.find_all("img")]
                 if noscript_imgs:
                     seen_srcs = {e["src"] for e in images}
                     for im in noscript_imgs:
                         src = _best_image_src(im, None)
-                        if not src or src in seen_srcs:
-                            continue
-                        seen_srcs.add(src)
-                        entry = {"src": src, "noscript": True}
-                        alt = (im.attrs.get("alt") or "").strip()
-                        if alt:
-                            entry["alt"] = alt
-                        for attr, key in (("width", "w"), ("height", "h")):
-                            v = (im.attrs.get(attr) or "").strip()
-                            if v.isdigit():
-                                entry[key] = int(v)
-                        images.append(entry)
+                        if src and src not in seen_srcs:
+                            seen_srcs.add(src)
+                            images.append(_image_entry(im, src,
+                                                       noscript=True))
                 if images:
                     extraction["images"] = images
 
@@ -1072,11 +1072,7 @@ def extract_document(
                             tracks.append(trec)
                         if tracks:
                             entry["tracks"] = tracks
-                    for attr, key in (("width", "w"), ("height", "h")):
-                        v = (attrs.get(attr) or "").strip()
-                        if v.isdigit():
-                            entry[key] = int(v)
-                    embeds.append(entry)
+                    embeds.append(_put_dims(entry, attrs))
                 if embeds:
                     extraction["embeds"] = embeds
 
@@ -1089,8 +1085,8 @@ def extract_document(
                 # each family carries its OWN entity cap — a JSON-LD
                 # bomb must not evict the page's microdata records
                 entities = from_ldjson_scripts(groups["script"])
-                entities.extend(from_microdata(root, micro_scopes))
-                entities.extend(from_rdfa(root, rdfa_scopes))
+                entities.extend(from_microdata(walk.micro_scopes))
+                entities.extend(from_rdfa(walk.rdfa_scopes))
                 if entities:
                     extraction["structured_data"] = entities
                 page_meta = from_meta_tags(groups["meta"], groups["link"],
@@ -1118,8 +1114,8 @@ def extract_document(
                 if sections:
                     extraction["sections"] = sections
 
-            if opts.include_class_map and class_positions:
-                extraction["class_map"] = class_positions
+            if opts.include_class_map and walk.class_positions:
+                extraction["class_map"] = walk.class_positions
         except Exception as exc:  # fallback-not-fail (pipeline.py:1097)
             status = "fallback"
             fallback_reason = f"{type(exc).__name__}"

@@ -317,8 +317,11 @@ def _list_item_tree(li: Node, depth: int, max_depth: int) -> dict:
     return node
 
 
-def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
+def extract_nested_lists(lists: list, max_depth: int = 12) -> list:
     """Deep <ul>/<ol> nesting -> SmartArt-like recursive node trees.
+    ``lists`` are the document's ``<ul>``/``<ol>``/``<dl>`` nodes in
+    document order (the rendered walk's shared bucket); an outer list
+    claims its subtree, so an inner one is read only through it.
 
     Parity: _build_smartart_tree level-stack algorithm (reference
     core/shapes.py:268-291) — HTML nesting already encodes the levels, so
@@ -340,17 +343,15 @@ def extract_nested_lists(root: Node, max_depth: int = 12, lists=None) -> list:
         return best
 
     trees: list = []
-    claimed: set = set()
-    if lists is None:
-        lists = root.find_all("ul", "ol")
+    # a claimed list's subtree is its [i0, i1) slice, skipped whole
+    claimed_to = -1
     def norm(s: str) -> str:
         return re.sub(r"\s+", " ", s).strip()
 
     for lst in lists:
-        if id(lst) in claimed or lst.unrendered:
+        if lst.i0 < claimed_to or lst.unrendered:
             continue
-        for inner in lst.iter():
-            claimed.add(id(inner))
+        claimed_to = lst.i1
         if lst.tag == "dl":
             items = []
             cur = None

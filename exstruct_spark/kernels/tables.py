@@ -693,9 +693,13 @@ def _border_candidates(
 
 
 def detect_grid_candidates(
-    root: Node, cfg: DetectionConfig, alpha_keys: bool = False, css=None,
+    containers: list, cfg: DetectionConfig, alpha_keys: bool = False,
+    css=None,
 ) -> list:
-    """Heuristic detection of div-grid layouts, two signals per container:
+    """Heuristic detection of div-grid layouts over ``containers`` (the
+    ``<div>``/``<section>`` nodes of the document body in document
+    order, as ``extract.rendered_walk`` collects them), two signals per
+    container:
 
     1. STRUCTURAL (child uniformity) — the borderless-layout path;
     2. BORDER MAPS (CSS ``style`` borders / ``border`` attributes,
@@ -710,25 +714,23 @@ def detect_grid_candidates(
     (border-signal candidates additionally carry ``"signal": "border"``).
     """
     out: list = []
-    claimed: set = set()
-    for node in root.iter():
-        # an unrendered container (hidden, or template/noscript
-        # content) is no visual grid, and neither is anything inside it
-        if (node.tag not in ("div", "section") or node.unrendered
-                or id(node) in claimed):
+    # a claimed container's subtree is its [i0, i1) slice, skipped whole
+    claimed_to = -1
+    for node in containers:
+        # an unrendered container is no visual grid, and neither is
+        # anything inside it (the mark covers the subtree)
+        if node.i0 < claimed_to or node.unrendered:
             continue
         if is_table_like(node):
             # ARIA-declared tables belong to the DECLARED path
             # (extract_table via _aria_rows) — detection must not
             # re-claim their subtree as a heuristic grid
-            for inner in node.iter():
-                claimed.add(id(inner))
+            claimed_to = node.i1
             continue
         found = _structural_candidates(node, cfg, alpha_keys, len(out))
         if not found:
             found = _border_candidates(node, cfg, alpha_keys, len(out), css)
         if found:
             out.extend(found)
-            for inner in node.iter():
-                claimed.add(id(inner))
+            claimed_to = node.i1
     return out

@@ -21,7 +21,13 @@ from exstruct_spark.kernels.shapes import angle_to_compass, extract_nested_lists
 from exstruct_spark.kernels.tables import detect_grid_candidates, extract_table
 from exstruct_spark.kernels.charts import extract_charts
 from exstruct_spark.kernels.boilerplate import extract_main_text
-from exstruct_spark.kernels.extract import extract_document
+from exstruct_spark.kernels.extract import extract_document, rendered_walk
+
+
+def _walk(html: str):
+    """The rendered walk of ``html``: the node lists extraction hands
+    each family."""
+    return rendered_walk(parse_html(html))
 
 
 # --- coercion (parity: reference cells.py:1946-1969 behaviour;
@@ -181,7 +187,7 @@ def test_detect_grid_candidates():
         )
         + "</div>"
     )
-    got = detect_grid_candidates(parse_html(html), CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 1
     assert got[0]["kind"] == "grid"
     assert len(got[0]["rows"]) == 3
@@ -215,10 +221,9 @@ def test_svg_shapes_and_arrows():
 
 
 def test_nested_lists_tree():
-    root = parse_html(
+    trees = extract_nested_lists(_walk(
         "<ul><li>root<ul><li>child1</li><li>child2<ul><li>leaf</li></ul></li></ul></li></ul>"
-    )
-    trees = extract_nested_lists(root)
+    ).groups["ul"])
     assert trees == [
         {
             "text": "root",
@@ -231,7 +236,8 @@ def test_nested_lists_tree():
 
 
 def test_flat_list_not_a_tree():
-    assert extract_nested_lists(parse_html("<ul><li>a</li><li>b</li></ul>")) == []
+    assert extract_nested_lists(
+        _walk("<ul><li>a</li><li>b</li></ul>").groups["ul"]) == []
 
 
 def test_definition_list_tree():
@@ -243,17 +249,17 @@ def test_definition_list_tree():
 
     from exstruct_spark.golden import ExtractOptions, extract_document
 
-    root = parse_html(
+    walk = _walk(
         "<dl><dt>CPU</dt><dd>8-core</dd><dd>3.2 GHz</dd>"
         "<div><dt>RAM</dt><dd>32 GB</dd></div></dl>")
-    assert extract_nested_lists(root, lists=root.find_all("dl")) == [
+    assert extract_nested_lists(walk.groups["dl"]) == [
         {"text": "CPU", "nodes": [{"text": "8-core"},
                                   {"text": "3.2 GHz"}]},
         {"text": "RAM", "nodes": [{"text": "32 GB"}]},
     ]
     # terms without definitions carry no structure
-    bare = parse_html("<dl><dt>a</dt><dt>b</dt></dl>")
-    assert extract_nested_lists(bare, lists=bare.find_all("dl")) == []
+    bare = _walk("<dl><dt>a</dt><dt>b</dt></dl>")
+    assert extract_nested_lists(bare.groups["dl"]) == []
 
     html = ("<body><dl><dt>K</dt><dd>V</dd></dl>"
             "<p>Content paragraph long enough for density gates.</p>"
@@ -265,17 +271,37 @@ def test_definition_list_tree():
 
 # --- charts
 def test_chart_extraction():
-    root = parse_html(
+    walk = _walk(
         "<figure><svg><polyline points='0,10 10,50 20,30'/></svg>"
         "<figcaption>Sales</figcaption></figure>"
     )
-    charts = extract_charts(root)
+    charts = extract_charts(walk.groups["figure"], walk.groups["script"])
     assert len(charts) == 1
     c = charts[0]
     assert c["chart_type"] == "Line"
     assert c["title"] == "Sales"
     assert c["y_axis_range"] == [10.0, 50.0]
     assert c["series"][0]["n_points"] == 3
+
+
+def test_chart_rect_lengths_read_their_leading_number():
+    """A bar's ``width``/``height`` is read like ``points``: its leading
+    number, or 0.  An unquoted ``height=5/`` keeps its ``/`` (``"5/"``)
+    and a length may carry a unit; neither turns the page into a
+    fallback record that loses its tables."""
+    html = ("<figure><svg><rect x=1 y=1 width=5 height=5/>"
+            "<rect width='4px' height='8px'/><rect width=auto height=x>"
+            "</rect></svg></figure>"
+            "<table><tr><th>k</th><th>v</th></tr><tr><td>a</td><td>1</td>"
+            "</tr></table>").encode()
+    rec = extract_document("https://c.example/bars", html)
+    assert rec["status"] == "ok"
+    x = json.loads(rec["extraction_json"])
+    assert len(x["tables"]) == 1
+    chart, = x["charts"]
+    assert chart["chart_type"] == "Column"
+    assert chart["y_axis_range"] == [0.0, 8.0]
+    assert chart["series"][0]["n_points"] == 3
 
 
 # --- boilerplate
@@ -679,6 +705,23 @@ def test_table_caption_name_and_absolutize_links():
     assert "https://h.example/rel/path" in x2["links_map"]
 
 
+def test_absolutize_links_keeps_an_href_urljoin_rejects():
+    """Under ``absolutize_links`` an href ``urljoin`` rejects (a
+    malformed IPv6 host) stays verbatim, as ``normalize_url`` passes a
+    malformed netloc through; the page keeps its tables and other
+    links."""
+    html = (b"<table><tr><th>k</th><th>v</th></tr><tr><td>a</td><td>1</td>"
+            b"</tr></table><p><a href='http://[x/'>bad</a> "
+            b"<a href='/ok'>ok</a></p>")
+    for opts in (ExtractOptions(absolutize_links=True),
+                 ExtractOptions(absolutize_links=True, normalize_links=True)):
+        rec = extract_document("https://h.example/dir/page", html, opts)
+        assert rec["status"] == "ok"
+        x = json.loads(rec["extraction_json"])
+        assert len(x["tables"]) == 1
+        assert list(x["links_map"]) == ["http://[x/", "https://h.example/ok"]
+
+
 # --- round 2: raw-text close-tag case-insensitivity (ADVICE r1)
 def test_uppercase_script_close_tag():
     html = "<html><body><SCRIPT>var x = 1;</SCRIPT><p>Real content survives here.</p></body></html>"
@@ -893,7 +936,7 @@ def test_detect_grid_tolerates_ragged_rows():
         "<div><div>b</div><div>3</div><div>4</div></div>"
         "</div>"
     )
-    got = detect_grid_candidates(parse_html(html), CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 1
     assert got[0]["kind"] == "grid"
     assert len(got[0]["rows"]) == 3
@@ -914,7 +957,7 @@ def test_detect_grid_shrinks_sparse_borders():
         )
         + "</div>"
     )
-    got = detect_grid_candidates(parse_html(html), CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 1
     # the sparse first row (1/6 filled) is trimmed -> range starts at row 2
     assert got[0]["range"] == "A2:F4"
@@ -1086,7 +1129,7 @@ def test_grid_gates_use_post_shrink_spans():
         )
         + "</div>"
     )
-    got = detect_grid_candidates(parse_html(html), CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 1
     m = got[0]["_metrics"]
     assert m["density"] == 1.0  # 12 cells / (3x4) effective area
@@ -1121,7 +1164,7 @@ def test_grid_detector_splits_disconnected_blocks():
         )
     empty_band = "<div><div></div><div></div><div></div></div>" * 2
     html = "<div class='grid'>" + block(3, "a") + empty_band + block(3, "b") + "</div>"
-    got = detect_grid_candidates(parse_html(html), CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 2
     assert got[0]["range"] == "A1:C3"
     assert got[1]["range"] == "A6:C8"
@@ -1400,9 +1443,8 @@ def test_border_signal_detects_nonuniform_div_grid():
         f"<div><div {cell}>gamma</div></div>"  # ragged width: 1
         "</div>"
     )
-    root = parse_html(html)
     # structural gate alone rejects: widths 3,5,3,1 -> near-modal 2/4
-    got = detect_grid_candidates(root, CFG)
+    got = detect_grid_candidates(_walk(html).containers, CFG)
     assert len(got) == 1
     g = got[0]
     assert g["kind"] == "grid" and g["signal"] == "border"
@@ -1429,9 +1471,9 @@ def test_border_signal_row_level_and_attr_borders():
         )
         return f"<div>{body}</div>"
 
-    got = detect_grid_candidates(parse_html(make(True)), CFG)
+    got = detect_grid_candidates(_walk(make(True)).containers, CFG)
     assert len(got) == 1 and got[0]["signal"] == "border"
-    assert detect_grid_candidates(parse_html(make(False)), CFG) == []
+    assert detect_grid_candidates(_walk(make(False)).containers, CFG) == []
 
 
 def test_header_aggregates_first_two_rows():
@@ -1979,7 +2021,8 @@ def test_aria_declared_table_extraction():
 
     # the declared path OWNS the subtree: heuristic detection must not
     # re-claim it as a div grid
-    assert detect_grid_candidates(root, opts.detection) == []
+    assert detect_grid_candidates(rendered_walk(root).containers,
+                                  opts.detection) == []
 
 
 def test_native_table_with_redundant_aria_role():
@@ -4438,13 +4481,13 @@ def test_structured_data_harvesting():
 
     # untyped-with-typeof-"" degenerate: stable record, never a crash
     from exstruct_spark.kernels.structured import from_rdfa
-    deg = from_rdfa(parse_html("<div typeof=''><span property='a'>x"
-                               "</span></div>"))
+    deg = from_rdfa(_walk("<div typeof=''><span property='a'>x"
+                          "</span></div>").rdfa_scopes)
     assert deg == [{"source": "rdfa", "type": "Item",
                     "props": {"a": "x"}}]
     # entity cap holds for the rdfa family too
-    bomb = parse_html("<div>" + "<i typeof='T'></i>" * 200 + "</div>")
-    assert len(from_rdfa(bomb)) == MAX_ENTITIES
+    bomb = _walk("<div>" + "<i typeof='T'></i>" * 200 + "</div>")
+    assert len(from_rdfa(bomb.rdfa_scopes)) == MAX_ENTITIES
 
     # light mode excludes; entity cap binds
     rec2 = extract_document("http://t/sd", html,
@@ -4458,7 +4501,8 @@ def test_structured_data_harvesting():
         == MAX_ENTITIES
     deep = "<div itemscope>" + "<div>" * 3000 + "<span itemprop='name'>n" \
         "</span>" + "</div>" * 3000 + "</div>"
-    assert from_microdata(parse_html(deep))[0]["props"] == {"name": "n"}
+    assert from_microdata(_walk(deep).micro_scopes)[0]["props"] == {
+        "name": "n"}
     # a 3000-deep JSON block skips (RecursionError tier), it must not
     # sink the script list's other blocks
     deep_json = "[" * 3000 + "]" * 3000
@@ -4480,22 +4524,22 @@ def test_structured_data_harvesting():
     ej = extract_document("http://t/n", nan_html)["extraction_json"]
     json.loads(ej)
     assert "NaN" not in ej and "Infinity" not in ej
-    r = from_microdata(parse_html(
-        '<div itemscope><span itemprop="name">x</span></div>'))
+    r = from_microdata(_walk(
+        '<div itemscope><span itemprop="name">x</span></div>').micro_scopes)
     assert r[0]["type"] == "Item"
     r = from_ldjson_scripts(parse_html(
         '<script type="application/ld+json">{"@type":"Article",'
         '"author":[{"@type":"Person","name":"A"}]}</script>'
     ).find_all("script"))
     assert r[0]["props"]["author"] == "A"
-    r = from_microdata(parse_html(
+    r = from_microdata(_walk(
         '<div itemscope itemtype="https://schema.org/Product">'
         '<div itemprop="offers" itemscope '
         'itemtype="https://schema.org/Offer">'
         '<div itemprop="seller" itemscope '
         'itemtype="https://schema.org/Organization">'
         '<span itemprop="name">Acme</span></div>'
-        '<span itemprop="name">Deal</span></div></div>'))
+        '<span itemprop="name">Deal</span></div></div>').micro_scopes)
     assert {e["type"]: e for e in r}["Product"]["props"]["offers"] == "Deal"
     bomb_html = ('<html><head><script type="application/ld+json">['
                  + ",".join('{"@type":"Thing","name":"x"}'
@@ -4507,12 +4551,13 @@ def test_structured_data_harvesting():
     sd_b = json.loads(extract_document("http://t/b", bomb_html)
                       ["extraction_json"])["structured_data"]
     assert any(e.get("source") == "microdata" for e in sd_b)
-    r = from_microdata(parse_html(
+    r = from_microdata(_walk(
         '<div itemscope><a itemprop="url" href="/w" content="blob">m'
-        '</a></div>'))
+        '</a></div>').micro_scopes)
     assert r[0]["props"]["url"] == "/w"
-    r = from_microdata(parse_html(
-        '<div itemscope><span itemprop="name headline">W</span></div>'))
+    r = from_microdata(_walk(
+        '<div itemscope><span itemprop="name headline">W</span></div>'
+    ).micro_scopes)
     assert r[0]["props"] == {"name": "W", "headline": "W"}
 
     # archetype end-to-end
@@ -5043,7 +5088,13 @@ def test_plotly_archetype_end_to_end():
     """The plotly_chart rich archetype flows through the full engine:
     the trace-array dialect yields a chart whose series bind to the
     companion table."""
-    from exstruct_spark.kernels.extract import extract_document
+    from exstruct_spark.kernels.extract import extract_document, rendered_walk
+
+
+def _walk(html: str):
+    """The rendered walk of ``html``: the node lists extraction hands
+    each family."""
+    return rendered_walk(parse_html(html))
     from exstruct_spark.pages import RICH_ARCHETYPES, build_rich_page
 
     i = RICH_ARCHETYPES.index("plotly_chart")

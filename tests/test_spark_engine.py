@@ -1100,6 +1100,25 @@ def test_utf16_bom_page_link_joins(spark):
     assert colors == {"00FF00": [[1, 0], [1, 1]]}
 
 
+def test_lone_surrogate_page_through_extract_stage(spark):
+    """A page whose ld+json holds a lone surrogate escape (``\\ud800``,
+    no UTF-8 form) goes through the Arrow hand-off of ``extract_stage``
+    as an ok record carrying U+FFFD, byte-identical to in-process
+    ``extract_document``."""
+    from exstruct_spark.kernels.extract import extract_document
+
+    url = "https://s.example/ld"
+    page = ("<script type='application/ld+json'>{\"@type\": \"Thing\","
+            " \"name\": \"a\\ud800b\"}</script><p>Enough visible words"
+            " for a content block here.</p>").encode()
+    pages = spark.createDataFrame([(url, page)], "url string, html binary")
+    got = extract_stage(pages).select(*GOLDEN_COLUMNS).collect()[0].asDict()
+    want = extract_document(url, page)
+    assert got["status"] == "ok"
+    assert "a\ufffdb" in got["extraction_json"]
+    assert got == {k: want[k] for k in GOLDEN_COLUMNS}
+
+
 def test_local_workers_carry_no_jar_importers(spark):
     """Under ``spark_daemon`` a worker's ``importlib.invalidate_caches()``
     (run per task) has no jar central directory to re-read."""
