@@ -5088,13 +5088,7 @@ def test_plotly_archetype_end_to_end():
     """The plotly_chart rich archetype flows through the full engine:
     the trace-array dialect yields a chart whose series bind to the
     companion table."""
-    from exstruct_spark.kernels.extract import extract_document, rendered_walk
-
-
-def _walk(html: str):
-    """The rendered walk of ``html``: the node lists extraction hands
-    each family."""
-    return rendered_walk(parse_html(html))
+    from exstruct_spark.kernels.extract import extract_document
     from exstruct_spark.pages import RICH_ARCHETYPES, build_rich_page
 
     i = RICH_ARCHETYPES.index("plotly_chart")
