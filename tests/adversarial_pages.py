@@ -295,6 +295,14 @@ _TEXT_CASES = [
     ("serializer_values", _SERIALIZER_VALUES),
     ("hidden_descendants", _HIDDEN_DESCENDANTS),
     ("unrendered_content_root", _UNRENDERED_CONTENT_ROOT),
+    ("figure_template_script",
+     "<figure><template><script>new Chart(ctx, {type:'bar', data:{labels:"
+     "['a'], datasets:[{label:'inert', data:[1]}]}});</script></template>"
+     "</figure><p>A figure whose only chart script is inert.</p>"),
+    ("hidden_svg_chart",
+     "<div style='display:none'><figure><svg><polyline "
+     "points='0,0 10,10 20,5'></polyline></svg><figcaption>Hidden sales"
+     "</figcaption></figure></div><p>The chart above is never drawn.</p>"),
 ]
 
 ADVERSARIAL = [(name, text.encode("utf-8")) for name, text in _TEXT_CASES]
