@@ -1,5 +1,5 @@
-"""Build and load the native HTML scanner, text walk and canonical JSON
-encoder (``htmlscan.c``).
+"""Build and load the native HTML scanner, text walk, declared-table
+grid and canonical JSON encoder (``htmlscan.c``).
 
 The extension is compiled on first import with the interpreter's own C
 compiler settings (``sysconfig``: ``CC``, the include directory and the
@@ -16,9 +16,11 @@ When no compiler is available or the build fails, ``load()`` returns
 ``None`` and logs one WARNING on stderr with the reason;
 ``dom.parse_html`` then runs the pure-Python parser, which builds the
 same trees, ``Node.text_content`` the Python text walk, which returns
-the same strings, and ``serialize.canonical_json`` its Python
-specification, which writes the same text.  ``load()`` builds and loads
-once per process; every caller gets the same module.
+the same strings, ``tables.extract_table`` the Python grid expansion
+(``tables._grid_py``), which places the same cells, and
+``serialize.canonical_json`` its Python specification, which writes the
+same text.  ``load()`` builds and loads once per process; every caller
+gets the same module.
 
 Prebuild for executor images (run as the user the workers run as)::
 
@@ -111,6 +113,6 @@ def load():
         return module
     except Exception as exc:  # any failure means the Python bodies
         log.warning("native HTML parser unavailable, using the Python "
-                    "parser and serializer (identical output): %s: %s",
-                    type(exc).__name__, exc)
+                    "parser, text walk, table grid and serializer "
+                    "(identical output): %s: %s", type(exc).__name__, exc)
         return None

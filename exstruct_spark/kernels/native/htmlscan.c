@@ -1,5 +1,6 @@
 /* Native tag scan, tree build and subtree text for
-   exstruct_spark.kernels.dom, and the canonical JSON encoder for
+   exstruct_spark.kernels.dom, the declared-table grid for
+   exstruct_spark.kernels.tables, and the canonical JSON encoder for
    exstruct_spark.kernels.serialize.
 
    parse() is a port of dom._parse_html_fast, which stays the
@@ -34,6 +35,16 @@
    whitespace as it writes, which is
    _WS_RE.sub(" ", s).strip(): re's \s and str.strip() both test
    Py_UNICODE_ISSPACE.
+
+   grid() expands one declared table, a <table> or the rows of an ARIA
+   container, into its cells and writes its sparse rows in one loop, a
+   port of tables._grid_py (_expand_grid, then _sparse_rows), its
+   specification, tested against it differentially.  It reads cell text
+   through text() and calls back into Python only for a resolver's
+   effective attrs, for the visibility and paint helpers on a non-empty
+   attrs dict and for coerce_scalar on numeric-leading text that is not
+   short ASCII; grid_init() hands those helpers over.  It returns None
+   for caps outside its range, and the specification then runs.
 
    canonical_json() strips empty values and writes compact JSON in one
    walk, a port of serialize._canonical_json_py (strip_empty, then
@@ -1260,6 +1271,969 @@ htmlscan_init(PyObject *self, PyObject *args)
     Py_RETURN_NONE;
 }
 
+/* ---- declared-table grid: tables._grid_py -----------------------------
+
+   grid() does the work of tables._expand_grid followed by
+   tables._sparse_rows in one loop: the <table> row and cell enumeration
+   (_table_rows, _table_cells, _int_attr) or the row list _aria_rows
+   built, the hidden/collapsed/blank row and rowgroup rules, paint
+   order, occupancy and spans, the max_rows/max_cols caps, the empty-run
+   and span-credit rule, links, the optional anchors, and the sparse
+   rows, written row by row as the cells are placed (placement is
+   row-major, so no sort or regroup).  Cell text is the native text
+   walk.  Python runs only for css.effective_attrs (when a resolver is
+   given), for is_hidden, visibility_of and cell_background on a
+   non-empty attrs dict, and for coerce_scalar on numeric-leading text
+   that is not short ASCII.
+
+   Occupancy is one number per column: the last row a span covers
+   there.  The specification's set of covered (row, column) pairs is
+   only ever probed at the row being placed, in increasing column order
+   past every anchor already placed in that row, and every span it holds
+   starts at or above that row, so "(r, c) is covered" is exactly
+   "some span over column c reaches row r".
+
+   Spans are saturated at SPAN_MAX: every use of a span is capped by
+   max_rows or max_cols, which grid() requires to be below it (it
+   returns None, and the specification runs, for other caps). */
+
+#define SPAN_MAX ((Py_ssize_t)1 << 40)
+#define KEY_CACHE 256
+
+static PyObject *g_is_hidden, *g_visibility_of, *g_cell_background,
+    *g_coerce_scalar;
+static PyObject *key_cache[2][KEY_CACHE];  /* str(c), column letters */
+static PyObject *s_r, *s_c, *s_links, *s_href, *s_rowspan, *s_colspan,
+    *s_space, *s_max_rows, *s_max_cols, *s_max_empty_run,
+    *s_effective_attrs;
+
+static inline int
+tag_is(PyObject *tag, const char *s, Py_ssize_t n)
+{
+    return tag != NULL && PyUnicode_Check(tag)
+        && PyUnicode_GET_LENGTH(tag) == n
+        && PyUnicode_KIND(tag) == PyUnicode_1BYTE_KIND
+        && memcmp(PyUnicode_DATA(tag), s, (size_t)n) == 0;
+}
+
+#define TAG_IS(node, lit) tag_is(SLOT(node, off_tag), lit, sizeof(lit) - 1)
+
+static int
+slot_ssize(PyObject *node, Py_ssize_t off, Py_ssize_t *out)
+{
+    PyObject *v = SLOT(node, off);
+    if (v == NULL || !PyLong_Check(v)) {
+        PyErr_SetString(PyExc_TypeError, "Node index slots must be ints");
+        return -1;
+    }
+    *out = PyLong_AsSsize_t(v);
+    return *out == -1 && PyErr_Occurred() ? -1 : 0;
+}
+
+/* a Python int span, at least 1 as _int_attr returns it, saturated */
+static int
+span_of(PyObject *v, Py_ssize_t *out)
+{
+    int overflow;
+    long long x = PyLong_AsLongLongAndOverflow(v, &overflow);
+    if (x == -1 && PyErr_Occurred())
+        return -1;
+    *out = overflow > 0 ? SPAN_MAX : overflow < 0 || x < 1 ? 1
+        : x > SPAN_MAX ? SPAN_MAX : (Py_ssize_t)x;
+    return 0;
+}
+
+/* tables._int_attr(node, name): int(str(v).strip()) when that is >= 1,
+   else 1, saturated */
+static int
+int_attr(PyObject *node, PyObject *name, Py_ssize_t *out)
+{
+    PyObject *attrs = SLOT(node, off_attrs), *v, *s, *t, *num;
+    Py_ssize_t a, b, k;
+    int kind;
+    const void *d;
+    *out = 1;
+    if (attrs == NULL || !PyDict_Check(attrs)) {
+        PyErr_SetString(PyExc_TypeError, "Node.attrs must be a dict");
+        return -1;
+    }
+    v = PyDict_GetItemWithError(attrs, name);
+    if (v == NULL)
+        return PyErr_Occurred() ? -1 : 0;
+    if (v == Py_None)
+        return 0;
+    if ((s = PyObject_Str(v)) == NULL)
+        return -1;
+    kind = PyUnicode_KIND(s);
+    d = PyUnicode_DATA(s);
+    a = 0;
+    b = PyUnicode_GET_LENGTH(s);
+    while (a < b && Py_UNICODE_ISSPACE(PyUnicode_READ(kind, d, a)))
+        a++;
+    while (b > a && Py_UNICODE_ISSPACE(PyUnicode_READ(kind, d, b - 1)))
+        b--;
+    if (b > a && b - a <= 12) {  /* plain ASCII digits: no int() */
+        Py_ssize_t x = 0;
+        for (k = a; k < b; k++) {
+            Py_UCS4 c = PyUnicode_READ(kind, d, k);
+            if (c < '0' || c > '9')
+                break;
+            x = 10 * x + (c - '0');
+        }
+        if (k == b) {
+            Py_DECREF(s);
+            *out = x < 1 ? 1 : x > SPAN_MAX ? SPAN_MAX : x;
+            return 0;
+        }
+    }
+    t = PyUnicode_Substring(s, a, b);
+    Py_DECREF(s);
+    if (t == NULL)
+        return -1;
+    num = PyLong_FromUnicodeObject(t, 10);
+    Py_DECREF(t);
+    if (num == NULL) {
+        if (!PyErr_ExceptionMatches(PyExc_ValueError))
+            return -1;
+        PyErr_Clear();
+        return 0;
+    }
+    k = span_of(num, out);
+    Py_DECREF(num);
+    return k;
+}
+
+static inline int
+is_digit(char c)
+{
+    return c >= '0' && c <= '9';
+}
+
+/* which of coerce.py's _INT_RE (1) and _FLOAT_RE (2) the ASCII s[0:n]
+   matches, 0 for neither; buf gets s without its commas, NUL-ended,
+   and *digits the count of integer-part digits */
+static int
+ascii_number(const char *s, Py_ssize_t n, char *buf, Py_ssize_t *digits)
+{
+    Py_ssize_t i = 0, k, m = 0, f;
+    int grouped = 0;
+    if (i < n && (s[i] == '+' || s[i] == '-'))
+        buf[m++] = s[i++];
+    for (k = i; k < n && is_digit(s[k]); k++)
+        buf[m++] = s[k];
+    if (k < n && s[k] == ',') {
+        /* \d{1,3}(?:,\d{3})+ */
+        if (k - i < 1 || k - i > 3)
+            return 0;
+        while (k < n && s[k] == ',') {
+            if (k + 3 >= n || !is_digit(s[k + 1]) || !is_digit(s[k + 2])
+                    || !is_digit(s[k + 3]))
+                return 0;
+            buf[m++] = s[k + 1];
+            buf[m++] = s[k + 2];
+            buf[m++] = s[k + 3];
+            k += 4;
+        }
+        grouped = 1;
+    }
+    *digits = m - (i > 0);
+    if (k == n) {
+        buf[m] = '\0';
+        return grouped || k > i ? 1 : 0;
+    }
+    if (s[k] != '.')
+        return 0;
+    buf[m++] = '.';
+    for (f = ++k; k < n && is_digit(s[k]); k++)
+        buf[m++] = s[k];
+    if (k == f || k != n)
+        return 0;
+    buf[m] = '\0';
+    return 2;
+}
+
+/* coerce_scalar(text) for a non-empty stripped text; new reference */
+static PyObject *
+coerce_text(PyObject *text)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(text), digits;
+    Py_UCS4 c0 = PyUnicode_READ_CHAR(text, 0);
+    char buf[64];
+    int form;
+    if (!(c0 == '+' || c0 == '-' || c0 == '.' || (c0 >= '0' && c0 <= '9'))) {
+        Py_INCREF(text);
+        return text;
+    }
+    if (!PyUnicode_IS_ASCII(text) || n >= (Py_ssize_t)sizeof(buf))
+        return PyObject_CallOneArg(g_coerce_scalar, text);
+    form = ascii_number((const char *)PyUnicode_DATA(text), n, buf,
+                        &digits);
+    if (form == 1) {
+        if (digits <= 18)
+            return PyLong_FromLongLong(strtoll(buf, NULL, 10));
+        return PyLong_FromString(buf, NULL, 10);
+    }
+    else if (form == 2) {
+        double x = PyOS_string_to_double(buf, NULL, NULL);
+        if (x == -1.0 && PyErr_Occurred())
+            return NULL;
+        return PyFloat_FromDouble(x);
+    }
+    Py_INCREF(text);
+    return text;
+}
+
+/* the sparse-row key of column c: str(c), or its letters; new ref */
+static PyObject *
+col_key(Py_ssize_t c, int alpha)
+{
+    PyObject *key;
+    char buf[24];
+    if (c < KEY_CACHE && (key = key_cache[alpha][c]) != NULL) {
+        Py_INCREF(key);
+        return key;
+    }
+    if (alpha) {
+        char tmp[24];
+        Py_ssize_t n = c + 1, len = 0, k;
+        while (n > 0) {
+            tmp[len++] = (char)('A' + (n - 1) % 26);
+            n = (n - 1) / 26;
+        }
+        for (k = 0; k < len; k++)
+            buf[k] = tmp[len - 1 - k];
+        key = PyUnicode_FromStringAndSize(buf, len);
+    }
+    else
+        key = PyUnicode_FromFormat("%zd", c);
+    if (key != NULL && c < KEY_CACHE) {
+        Py_INCREF(key);
+        key_cache[alpha][c] = key;
+    }
+    return key;
+}
+
+/* first node of node's subtree tagged "a" that is not unrendered, or
+   NULL (borrowed; no error) */
+static int
+first_rendered_a(PyObject *node, PyObject **out)
+{
+    PyObject *nodes = SLOT(node, off_doc_nodes);
+    Py_ssize_t i0, i1, i;
+    *out = NULL;
+    if (nodes == NULL || !PyList_Check(nodes)) {
+        PyErr_SetString(PyExc_TypeError, "Node.doc_nodes must be a list");
+        return -1;
+    }
+    if (slot_ssize(node, off_i0, &i0) < 0 || slot_ssize(node, off_i1, &i1) < 0)
+        return -1;
+    if (i1 > PyList_GET_SIZE(nodes))
+        i1 = PyList_GET_SIZE(nodes);
+    for (i = i0 < 0 ? 0 : i0; i < i1; i++) {
+        PyObject *n = PyList_GET_ITEM(nodes, i);
+        if (PyObject_TypeCheck(n, node_type) && TAG_IS(n, "a")
+                && SLOT(n, off_unrendered) != Py_True) {
+            *out = n;
+            return 0;
+        }
+    }
+    return 0;
+}
+
+typedef struct {
+    PyObject *eff;           /* css.effective_attrs, or NULL: own attrs */
+    PyObject *col_bg;        /* list */
+    Py_ssize_t max_rows, max_cols, max_empty_run;
+    int alpha;
+    PyObject *a_rows, *a_cells;  /* the anchors, or NULL */
+    PyObject *cells, *merged, *links, *th, *colors, *rows;
+    int truncated;
+    Py_ssize_t n_cols;
+    Py_ssize_t *occ, occ_len;    /* occ[c]: last row a span covers */
+} Grid;
+
+/* the node's effective attrs; new reference */
+static PyObject *
+eff_attrs(Grid *g, PyObject *node)
+{
+    PyObject *a;
+    if (g->eff != NULL)
+        return PyObject_CallOneArg(g->eff, node);
+    if ((a = SLOT(node, off_attrs)) == NULL) {
+        PyErr_SetString(PyExc_AttributeError, "attrs");
+        return NULL;
+    }
+    Py_INCREF(a);
+    return a;
+}
+
+static inline int
+truth(PyObject *a)
+{
+    return PyDict_CheckExact(a) ? PyDict_GET_SIZE(a) > 0 : PyObject_IsTrue(a);
+}
+
+/* fn(attrs) is truthy: 1, 0, or -1 */
+static int
+call_truth(PyObject *fn, PyObject *attrs)
+{
+    PyObject *r = PyObject_CallOneArg(fn, attrs);
+    int t;
+    if (r == NULL)
+        return -1;
+    t = PyObject_IsTrue(r);
+    Py_DECREF(r);
+    return t;
+}
+
+enum { VIS_SHOWN, VIS_HIDDEN, VIS_COLLAPSE };
+
+/* visibility_of(attrs) as VIS_*, or -1 */
+static int
+visibility(PyObject *attrs)
+{
+    PyObject *r = PyObject_CallOneArg(g_visibility_of, attrs);
+    int v = VIS_SHOWN;
+    if (r == NULL)
+        return -1;
+    if (PyUnicode_Check(r)) {
+        if (PyUnicode_CompareWithASCIIString(r, "hidden") == 0)
+            v = VIS_HIDDEN;
+        else if (PyUnicode_CompareWithASCIIString(r, "collapse") == 0)
+            v = VIS_COLLAPSE;
+    }
+    Py_DECREF(r);
+    return v;
+}
+
+/* *out: cell_background(attrs) when it is truthy, else NULL */
+static int
+background(PyObject *attrs, PyObject **out)
+{
+    PyObject *r = PyObject_CallOneArg(g_cell_background, attrs);
+    int t;
+    *out = NULL;
+    if (r == NULL)
+        return -1;
+    if ((t = PyObject_IsTrue(r)) <= 0) {
+        Py_DECREF(r);
+        return t;
+    }
+    *out = r;
+    return 0;
+}
+
+/* where a row's cells come from: a <tr>'s children, or an ARIA row's
+   iterator of (cell, rowspan, colspan, is_header) */
+typedef struct {
+    PyObject *children, *iter;
+    Py_ssize_t k;
+} Cells;
+
+/* the next cell: 1 with *cell a new reference, 0 at the end, -1 */
+static int
+next_cell(Cells *cs, PyObject **cell, Py_ssize_t *rowspan,
+          Py_ssize_t *colspan, int *header)
+{
+    if (cs->iter != NULL) {
+        PyObject *item = PyIter_Next(cs->iter);
+        if (item == NULL)
+            return PyErr_Occurred() ? -1 : 0;
+        if (!PyTuple_Check(item) || PyTuple_GET_SIZE(item) != 4) {
+            Py_DECREF(item);
+            PyErr_SetString(PyExc_TypeError, "an ARIA cell must be a "
+                            "(cell, rowspan, colspan, is_header) tuple");
+            return -1;
+        }
+        if (span_of(PyTuple_GET_ITEM(item, 1), rowspan) < 0
+                || span_of(PyTuple_GET_ITEM(item, 2), colspan) < 0
+                || (*header = PyObject_IsTrue(PyTuple_GET_ITEM(item, 3))) < 0) {
+            Py_DECREF(item);
+            return -1;
+        }
+        *cell = PyTuple_GET_ITEM(item, 0);
+        if (!PyObject_TypeCheck(*cell, node_type)) {
+            Py_DECREF(item);
+            PyErr_SetString(PyExc_TypeError, "an ARIA cell must be a Node");
+            return -1;
+        }
+        Py_INCREF(*cell);
+        Py_DECREF(item);
+        return 1;
+    }
+    while (cs->k < PyList_GET_SIZE(cs->children)) {
+        PyObject *n = PyList_GET_ITEM(cs->children, cs->k);
+        cs->k++;
+        if (!PyObject_TypeCheck(n, node_type))
+            continue;
+        *header = TAG_IS(n, "th");
+        if (!*header && !TAG_IS(n, "td"))
+            continue;
+        if (int_attr(n, s_rowspan, rowspan) < 0
+                || int_attr(n, s_colspan, colspan) < 0)
+            return -1;
+        Py_INCREF(n);
+        *cell = n;
+        return 1;
+    }
+    return 0;
+}
+
+static int
+occ_reach(Grid *g, Py_ssize_t c1, Py_ssize_t c2, Py_ssize_t r2)
+{
+    Py_ssize_t c;
+    if (c2 >= g->occ_len) {
+        Py_ssize_t len = g->occ_len ? g->occ_len : 16;
+        Py_ssize_t *p;
+        while (len <= c2)
+            len *= 2;
+        if ((p = PyMem_Realloc(g->occ, (size_t)len * sizeof(*p))) == NULL) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        for (c = g->occ_len; c < len; c++)
+            p[c] = -1;
+        g->occ = p;
+        g->occ_len = len;
+    }
+    for (c = c1; c <= c2; c++)
+        if (g->occ[c] < r2)
+            g->occ[c] = r2;
+    return 0;
+}
+
+/* set d[key] = v for a new reference v, which it releases */
+static int
+set_new(PyObject *d, PyObject *key, PyObject *v)
+{
+    int rc;
+    if (v == NULL)
+        return -1;
+    rc = PyDict_SetItem(d, key, v);
+    Py_DECREF(v);
+    return rc;
+}
+
+/* place grid row r: its cells (cs), its effective attrs, whether it is
+   blank (visibility:hidden, itself or its rowgroup) and its paint row_bg
+   (NULL: none).  *content: whether the row counts against the empty
+   run; *span_floor: the deepest row an active span still credits */
+static int
+place_row(Grid *g, Cells *cs, Py_ssize_t r, int row_blank, PyObject *row_bg,
+          int *content, Py_ssize_t *span_floor)
+{
+    PyObject *r_obj = PyLong_FromSsize_t(r), *cmap = NULL, *rlinks = NULL;
+    PyObject *cell = NULL, *attrs = NULL, *pos = NULL, *text = NULL;
+    PyObject *value = NULL, *c_obj = NULL, *key = NULL, *color = NULL;
+    Py_ssize_t c = 0, rowspan, colspan, n_bg = PyList_GET_SIZE(g->col_bg);
+    int rc = -1, got, header;
+    if (r_obj == NULL)
+        return -1;
+    while ((got = next_cell(cs, &cell, &rowspan, &colspan, &header)) > 0) {
+        int shown, blank, vis;
+        if ((attrs = eff_attrs(g, cell)) == NULL || (shown = truth(attrs)) < 0)
+            goto done;
+        if (shown) {
+            int hidden = call_truth(g_is_hidden, attrs);
+            if (hidden < 0)
+                goto done;
+            if (hidden) {  /* display:none: later cells shift left */
+                Py_CLEAR(attrs);
+                Py_CLEAR(cell);
+                continue;
+            }
+        }
+        blank = row_blank;
+        if (!blank && shown) {
+            if ((vis = visibility(attrs)) < 0)
+                goto done;
+            blank = vis != VIS_SHOWN;
+        }
+        while (c < g->occ_len && g->occ[c] >= r)
+            c++;
+        if (c >= g->max_cols) {
+            g->truncated = 1;
+            break;
+        }
+        if ((c_obj = PyLong_FromSsize_t(c)) == NULL
+                || (pos = PyTuple_Pack(2, r_obj, c_obj)) == NULL)
+            goto done;
+        if (!blank) {
+            if ((text = subtree_text(cell)) == NULL)
+                goto done;
+            if (PyUnicode_GET_LENGTH(text) > 0) {
+                if ((value = coerce_text(text)) == NULL
+                        || PyDict_SetItem(g->cells, pos, value) < 0)
+                    goto done;
+                if (cmap == NULL && (cmap = PyDict_New()) == NULL)
+                    goto done;
+                if ((key = col_key(c, g->alpha)) == NULL
+                        || PyDict_SetItem(cmap, key, value) < 0)
+                    goto done;
+                *content = 1;
+            }
+        }
+        if (header && PySet_Add(g->th, pos) < 0)
+            goto done;
+        if (!blank && (shown || row_bg != NULL || n_bg > 0)) {
+            if (shown && background(attrs, &color) < 0)
+                goto done;
+            if (color == NULL && row_bg != NULL) {
+                Py_INCREF(row_bg);
+                color = row_bg;
+            }
+            if (color == NULL && c < n_bg) {
+                PyObject *col = PyList_GET_ITEM(g->col_bg, c);
+                int t = PyObject_IsTrue(col);
+                if (t < 0)
+                    goto done;
+                if (t) {
+                    Py_INCREF(col);
+                    color = col;
+                }
+            }
+            if (color != NULL) {
+                if (PyDict_SetItem(g->colors, pos, color) < 0)
+                    goto done;
+                *content = 1;
+            }
+        }
+        if (!blank) {
+            PyObject *a, *href;
+            int t;
+            if (first_rendered_a(cell, &a) < 0)
+                goto done;
+            if (a != NULL) {
+                PyObject *a_attrs = SLOT(a, off_attrs);
+                if (a_attrs == NULL || !PyDict_Check(a_attrs)) {
+                    PyErr_SetString(PyExc_TypeError,
+                                    "Node.attrs must be a dict");
+                    goto done;
+                }
+                href = PyDict_GetItemWithError(a_attrs, s_href);
+                if (href == NULL && PyErr_Occurred())
+                    goto done;
+                if (href != NULL) {
+                    if ((t = PyObject_IsTrue(href)) < 0)
+                        goto done;
+                    if (t) {
+                        if (PyDict_SetItem(g->links, pos, href) < 0)
+                            goto done;
+                        if (key == NULL
+                                && (key = col_key(c, g->alpha)) == NULL)
+                            goto done;
+                        if (rlinks == NULL
+                                && (rlinks = PyDict_New()) == NULL)
+                            goto done;
+                        if (PyDict_SetItem(rlinks, key, href) < 0)
+                            goto done;
+                        *content = 1;
+                    }
+                }
+            }
+        }
+        if (rowspan > 1 || colspan > 1) {
+            Py_ssize_t r2 = r + rowspan - 1, c2 = c + colspan - 1, reach;
+            PyObject *item;
+            int appended;
+            if (r2 > g->max_rows - 1)
+                r2 = g->max_rows - 1;
+            if (c2 > g->max_cols - 1)
+                c2 = g->max_cols - 1;
+            /* the rows a span credits to the empty-run counter are
+               capped at 4x its budget */
+            reach = r + 4 * g->max_empty_run;
+            reach = r2 < reach ? r2 : reach;
+            if (reach > *span_floor)
+                *span_floor = reach;
+            item = Py_BuildValue("[nnnnO]", r + 1, c, r2 + 1, c2,
+                                 value != NULL ? value : s_space);
+            if (item == NULL)
+                goto done;
+            appended = PyList_Append(g->merged, item);
+            Py_DECREF(item);
+            if (appended < 0 || occ_reach(g, c, c2, r2) < 0)
+                goto done;
+        }
+        if (g->a_cells != NULL && !blank) {
+            Py_ssize_t ar = g->max_rows - r, ac = g->max_cols - c;
+            if (set_new(g->a_cells, pos, Py_BuildValue(
+                    "(Onn)", cell, rowspan < ar ? rowspan : ar,
+                    colspan < ac ? colspan : ac)) < 0)
+                goto done;
+        }
+        if (c + colspan > g->n_cols)
+            g->n_cols = c + colspan;
+        c += colspan;
+        Py_CLEAR(cell);
+        Py_CLEAR(attrs);
+        Py_CLEAR(c_obj);
+        Py_CLEAR(pos);
+        Py_CLEAR(text);
+        Py_CLEAR(value);
+        Py_CLEAR(key);
+        Py_CLEAR(color);
+    }
+    if (got < 0)
+        goto done;
+    if (cmap != NULL) {
+        PyObject *row = PyDict_New();
+        if (row == NULL)
+            goto done;
+        if (set_new(row, s_r, PyLong_FromSsize_t(r + 1)) < 0
+                || PyDict_SetItem(row, s_c, cmap) < 0
+                || (rlinks != NULL && PyDict_SetItem(row, s_links,
+                                                     rlinks) < 0)
+                || PyList_Append(g->rows, row) < 0) {
+            Py_DECREF(row);
+            goto done;
+        }
+        Py_DECREF(row);
+    }
+    rc = 0;
+done:
+    Py_XDECREF(cell);
+    Py_XDECREF(attrs);
+    Py_XDECREF(c_obj);
+    Py_XDECREF(pos);
+    Py_XDECREF(text);
+    Py_XDECREF(value);
+    Py_XDECREF(key);
+    Py_XDECREF(color);
+    Py_XDECREF(cmap);
+    Py_XDECREF(rlinks);
+    Py_DECREF(r_obj);
+    return rc;
+}
+
+/* a rowgroup's state, kept for the run of rows it holds */
+typedef struct {
+    PyObject *node;  /* identity only */
+    int removed, blank;
+    PyObject *bg;    /* its paint, or NULL */
+} Group;
+
+static int
+group_state(Grid *g, PyObject *node, Group *st)
+{
+    PyObject *attrs;
+    int shown, vis = VIS_SHOWN, hidden = 0;
+    if (st->node == node)
+        return 0;
+    Py_CLEAR(st->bg);
+    st->node = NULL;
+    if ((attrs = eff_attrs(g, node)) == NULL)
+        return -1;
+    if ((shown = truth(attrs)) < 0
+            || (shown && ((hidden = call_truth(g_is_hidden, attrs)) < 0
+                          || (vis = visibility(attrs)) < 0
+                          || background(attrs, &st->bg) < 0))) {
+        Py_DECREF(attrs);
+        return -1;
+    }
+    Py_DECREF(attrs);
+    st->removed = hidden || vis == VIS_COLLAPSE;
+    st->blank = vis == VIS_HIDDEN;
+    st->node = node;
+    return 0;
+}
+
+static int
+cap_of(PyObject *cfg, PyObject *name, Py_ssize_t *out)
+{
+    PyObject *v = PyObject_GetAttr(cfg, name);
+    int overflow = 0, is_int;
+    long long x = -1;
+    if (v == NULL)
+        return -1;
+    if ((is_int = PyLong_Check(v)))
+        x = PyLong_AsLongLongAndOverflow(v, &overflow);
+    Py_DECREF(v);
+    if (x == -1 && PyErr_Occurred())
+        return -1;
+    *out = (Py_ssize_t)x;
+    return is_int && !overflow && x >= 0 && x < SPAN_MAX;
+}
+
+static void
+grid_clear(Grid *g)
+{
+    Py_CLEAR(g->eff);
+    Py_CLEAR(g->col_bg);
+    Py_CLEAR(g->a_rows);
+    Py_CLEAR(g->a_cells);
+    Py_CLEAR(g->cells);
+    Py_CLEAR(g->merged);
+    Py_CLEAR(g->links);
+    Py_CLEAR(g->th);
+    Py_CLEAR(g->colors);
+    Py_CLEAR(g->rows);
+    PyMem_Free(g->occ);
+    g->occ = NULL;
+}
+
+/* grid(table, rows, col_bg, cfg, css, alpha_keys, anchors): the tuple
+   tables._grid_py returns, or None where the specification must run */
+static PyObject *
+htmlscan_grid(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
+{
+    PyObject *table, *rows, *cfg, *css, *anchors, *nodes = NULL;
+    PyObject *held = NULL, *result = NULL;
+    Grid g;
+    Group grp = {NULL, 0, 0, NULL};
+    Py_ssize_t i = 0, end = 0, skip_to = -1, kept = 0, empty_run = 0;
+    Py_ssize_t span_floor = -1, ok;
+    int stop = 0;
+
+    if (check_ready() < 0)
+        return NULL;
+    if (g_coerce_scalar == NULL) {
+        PyErr_SetString(PyExc_RuntimeError,
+                        "_htmlscan.grid_init() not called");
+        return NULL;
+    }
+    if (nargs != 7) {
+        PyErr_SetString(PyExc_TypeError, "grid(table, rows, col_bg, cfg, "
+                        "css, alpha_keys, anchors)");
+        return NULL;
+    }
+    table = args[0];
+    rows = args[1];
+    cfg = args[3];
+    css = args[4];
+    anchors = args[6];
+    memset(&g, 0, sizeof(g));
+    if (!PyObject_TypeCheck(table, node_type)
+            || (rows != Py_None && !PyList_Check(rows))
+            || !PyList_Check(args[2])) {
+        PyErr_SetString(PyExc_TypeError, "grid() needs a Node, None or a "
+                        "list of rows, and a list of column paint");
+        return NULL;
+    }
+    Py_INCREF(args[2]);
+    g.col_bg = args[2];
+    if ((ok = cap_of(cfg, s_max_rows, &g.max_rows)) <= 0
+            || (ok = cap_of(cfg, s_max_cols, &g.max_cols)) <= 0
+            || (ok = cap_of(cfg, s_max_empty_run, &g.max_empty_run)) <= 0) {
+        grid_clear(&g);
+        if (ok < 0)
+            return NULL;
+        Py_RETURN_NONE;
+    }
+    if ((ok = PyObject_IsTrue(css)) < 0
+            || (ok && (g.eff = PyObject_GetAttr(css, s_effective_attrs))
+                == NULL)
+            || (g.alpha = PyObject_IsTrue(args[5])) < 0)
+        goto fail;
+    if (anchors != Py_None) {
+        if (!PyTuple_Check(anchors) || PyTuple_GET_SIZE(anchors) != 2
+                || !PyList_Check(PyTuple_GET_ITEM(anchors, 0))
+                || !PyDict_Check(PyTuple_GET_ITEM(anchors, 1))) {
+            PyErr_SetString(PyExc_TypeError,
+                            "anchors must be a (list, dict) tuple");
+            goto fail;
+        }
+        g.a_rows = PyTuple_GET_ITEM(anchors, 0);
+        g.a_cells = PyTuple_GET_ITEM(anchors, 1);
+        Py_INCREF(g.a_rows);
+        Py_INCREF(g.a_cells);
+    }
+    if ((g.cells = PyDict_New()) == NULL || (g.merged = PyList_New(0)) == NULL
+            || (g.links = PyDict_New()) == NULL
+            || (g.th = PySet_New(NULL)) == NULL
+            || (g.colors = PyDict_New()) == NULL
+            || (g.rows = PyList_New(0)) == NULL)
+        goto fail;
+    if (rows == Py_None) {
+        nodes = SLOT(table, off_doc_nodes);
+        if (nodes == NULL || !PyList_Check(nodes)) {
+            PyErr_SetString(PyExc_TypeError, "Node.doc_nodes must be a list");
+            goto fail;
+        }
+        if (slot_ssize(table, off_i0, &i) < 0
+                || slot_ssize(table, off_i1, &end) < 0)
+            goto fail;
+        i++;  /* the table's own rows start below it */
+        held = nodes;
+    }
+    else
+        held = rows;
+    Py_INCREF(held);
+
+    while (!stop) {
+        PyObject *row = NULL, *group = NULL, *r_attrs = NULL;
+        PyObject *row_bg = NULL;
+        Cells cs = {NULL, NULL, 0};
+        int hidden = 0, vis = VIS_SHOWN, shown, content = 0, blank;
+        if (nodes != NULL) {  /* _table_rows */
+            Py_ssize_t lim = PyList_GET_SIZE(nodes);
+            for (; i < end && i < lim; i++) {
+                PyObject *n = PyList_GET_ITEM(nodes, i);
+                if (i < skip_to || !PyObject_TypeCheck(n, node_type))
+                    continue;
+                if (TAG_IS(n, "tr")) {
+                    PyObject *pi = SLOT(n, off_pi), *parent;
+                    Py_ssize_t p;
+                    row = n;
+                    i++;
+                    if (pi == NULL || !PyLong_Check(pi)) {
+                        PyErr_SetString(PyExc_TypeError,
+                                        "a <tr> must have a parent");
+                        goto fail;
+                    }
+                    p = PyLong_AsSsize_t(pi);
+                    if (p < 0 || p >= lim) {
+                        if (!PyErr_Occurred())
+                            PyErr_SetString(PyExc_IndexError,
+                                            "Node.pi out of range");
+                        goto fail;
+                    }
+                    parent = PyList_GET_ITEM(nodes, p);
+                    if (!PyObject_TypeCheck(parent, node_type)) {
+                        PyErr_SetString(PyExc_TypeError,
+                                        "doc_nodes must hold Nodes");
+                        goto fail;
+                    }
+                    if (TAG_IS(parent, "thead") || TAG_IS(parent, "tbody")
+                            || TAG_IS(parent, "tfoot"))
+                        group = parent;
+                    break;
+                }
+                if (TAG_IS(n, "table") || TAG_IS(n, "template")
+                        || TAG_IS(n, "noscript")) {
+                    if (slot_ssize(n, off_i1, &skip_to) < 0)
+                        goto fail;
+                }
+            }
+            if (row == NULL)
+                break;
+            if ((cs.children = children_of(row)) == NULL)
+                goto fail;
+        }
+        else {  /* the (row, group, cells) list of _aria_rows */
+            PyObject *item;
+            if (i >= PyList_GET_SIZE(rows))
+                break;
+            item = PyList_GET_ITEM(rows, i);
+            i++;
+            if (!PyTuple_Check(item) || PyTuple_GET_SIZE(item) != 3) {
+                PyErr_SetString(PyExc_TypeError, "an ARIA row must be a "
+                                "(row, group, cells) tuple");
+                goto fail;
+            }
+            row = PyTuple_GET_ITEM(item, 0);
+            group = PyTuple_GET_ITEM(item, 1);
+            if (group == Py_None)
+                group = NULL;
+            if (!PyObject_TypeCheck(row, node_type) || (group != NULL
+                    && !PyObject_TypeCheck(group, node_type))) {
+                PyErr_SetString(PyExc_TypeError,
+                                "an ARIA row and its group must be Nodes");
+                goto fail;
+            }
+            if ((cs.iter = PyObject_GetIter(PyTuple_GET_ITEM(item, 2)))
+                    == NULL)
+                goto fail;
+        }
+        Py_INCREF(row);
+        Py_XINCREF(group);
+        /* a hidden or collapsed row or rowgroup is removed: later rows
+           shift up; a visibility:hidden one keeps its slot, blank */
+        if (group != NULL) {
+            if (group_state(&g, group, &grp) < 0)
+                goto row_fail;
+            if (grp.removed)
+                goto row_next;
+        }
+        if ((r_attrs = eff_attrs(&g, row)) == NULL
+                || (shown = truth(r_attrs)) < 0)
+            goto row_fail;
+        if (shown && ((hidden = call_truth(g_is_hidden, r_attrs)) < 0
+                      || (vis = visibility(r_attrs)) < 0))
+            goto row_fail;
+        if (hidden || vis == VIS_COLLAPSE)
+            goto row_next;
+        if (kept == g.max_rows) {  /* one kept row past the cap */
+            g.truncated = 1;
+            stop = 1;
+            goto row_next;
+        }
+        if (g.a_rows != NULL && PyList_Append(g.a_rows, row) < 0)
+            goto row_fail;
+        /* paint order cell > row > rowgroup > column */
+        blank = (group != NULL && grp.blank) || vis == VIS_HIDDEN;
+        if (!blank) {
+            if (shown && background(r_attrs, &row_bg) < 0)
+                goto row_fail;
+            if (row_bg == NULL && group != NULL && grp.bg != NULL) {
+                Py_INCREF(grp.bg);
+                row_bg = grp.bg;
+            }
+        }
+        if (place_row(&g, &cs, kept, blank, row_bg, &content,
+                      &span_floor) < 0)
+            goto row_fail;
+        empty_run = content || kept <= span_floor ? 0 : empty_run + 1;
+        kept++;
+        if (empty_run >= g.max_empty_run) {
+            g.truncated = 1;
+            stop = 1;
+        }
+    row_next:
+        Py_XDECREF(cs.children);
+        Py_XDECREF(cs.iter);
+        Py_XDECREF(row_bg);
+        Py_XDECREF(r_attrs);
+        Py_XDECREF(group);
+        Py_DECREF(row);
+        continue;
+    row_fail:
+        Py_XDECREF(cs.children);
+        Py_XDECREF(cs.iter);
+        Py_XDECREF(row_bg);
+        Py_XDECREF(r_attrs);
+        Py_XDECREF(group);
+        Py_XDECREF(row);
+        goto fail;
+    }
+    result = Py_BuildValue(
+        "(OOOOOnnOO)", g.cells, g.merged, g.links, g.th, g.colors, kept,
+        g.n_cols < g.max_cols ? g.n_cols : g.max_cols,
+        g.truncated ? Py_True : Py_False, g.rows);
+fail:
+    Py_XDECREF(held);
+    Py_XDECREF(grp.bg);
+    grid_clear(&g);
+    return result;
+}
+
+static PyObject *
+htmlscan_grid_init(PyObject *self, PyObject *args)
+{
+    PyObject *ih, *vo, *cb, *cs;
+    static const struct { PyObject **dst; const char *s; } names[] = {
+        {&s_r, "r"}, {&s_c, "c"}, {&s_links, "links"}, {&s_href, "href"},
+        {&s_rowspan, "rowspan"}, {&s_colspan, "colspan"}, {&s_space, " "},
+        {&s_max_rows, "max_rows"}, {&s_max_cols, "max_cols"},
+        {&s_max_empty_run, "max_empty_run"},
+        {&s_effective_attrs, "effective_attrs"},
+    };
+    size_t k;
+    if (!PyArg_ParseTuple(args, "OOOO:grid_init", &ih, &vo, &cb, &cs))
+        return NULL;
+    for (k = 0; k < sizeof(names) / sizeof(names[0]); k++)
+        if (*names[k].dst == NULL
+                && (*names[k].dst = PyUnicode_InternFromString(names[k].s))
+                == NULL)
+            return NULL;
+    set_ref(&g_is_hidden, ih);
+    set_ref(&g_visibility_of, vo);
+    set_ref(&g_cell_background, cb);
+    set_ref(&g_coerce_scalar, cs);
+    Py_RETURN_NONE;
+}
+
 static PyMethodDef htmlscan_methods[] = {
     {"init", htmlscan_init, METH_VARARGS,
      "init(Node, no_attrs, attr_cache, parse_attrs, tag_info_cache, "
@@ -1271,6 +2245,13 @@ static PyMethodDef htmlscan_methods[] = {
      "dom._parse_html_fast builds."},
     {"text", htmlscan_text, METH_O,
      "text(node) -> str: the string dom._text_content_py(node) returns."},
+    {"grid_init", htmlscan_grid_init, METH_VARARGS,
+     "grid_init(is_hidden, visibility_of, cell_background, coerce_scalar): "
+     "hand over the helpers grid() calls back."},
+    {"grid", (PyCFunction)(void (*)(void))htmlscan_grid, METH_FASTCALL,
+     "grid(table, rows, col_bg, cfg, css, alpha_keys, anchors) -> the "
+     "tuple tables._grid_py returns, or None when cfg's caps are ones it "
+     "leaves to it."},
     {"canonical_json", htmlscan_canonical_json, METH_O,
      "canonical_json(value) -> str: serialize._canonical_json_py(value), "
      "or None when value holds a type, a float or a depth the native "
@@ -1281,7 +2262,8 @@ static PyMethodDef htmlscan_methods[] = {
 static struct PyModuleDef htmlscan_module = {
     PyModuleDef_HEAD_INIT, "_htmlscan",
     "Native tag scan, tree build and subtree text for "
-    "exstruct_spark.kernels.dom; canonical JSON for "
+    "exstruct_spark.kernels.dom; the declared-table grid for "
+    "exstruct_spark.kernels.tables; canonical JSON for "
     "exstruct_spark.kernels.serialize.", -1,
     htmlscan_methods,
 };

@@ -19,7 +19,10 @@ Parity map (behaviour, not code — SURVEY.md §2):
   * declared grids in both forms — <table> (``_table_rows``) and ARIA
     ``role="table"``/``grid`` (``_aria_rows``) — expand through ONE
     occupancy grid (``_expand_grid``), so hiding, paint, spans and caps
-    read the same in either form ~ ListObjects (com_backend.py G7)
+    read the same in either form ~ ListObjects (com_backend.py G7).
+    ``_grid_py`` (``_expand_grid``, then ``_sparse_rows``) is the
+    specification of ``htmlscan.c``'s ``grid``, which ``extract_table``
+    runs whenever the native module is built
   * scan caps with logged truncation ~ TableScanLimits (core/cells.py:118-165)
   * <a href> in cells -> per-row ``links`` map ~ extract_sheet_cells_with_links
                                   (core/cells.py:722-760)
@@ -36,6 +39,7 @@ from exstruct_spark.kernels.a1 import col_index_to_alpha, make_range
 from exstruct_spark.kernels.clusters import merge_rectangles, nonempty_clusters
 from exstruct_spark.kernels.coerce import coerce_scalar
 from exstruct_spark.kernels.colors import cell_background
+from exstruct_spark.kernels import native
 from exstruct_spark.kernels.dom import (
     RENDER_INERT, Node, is_hidden, visibility_of)
 
@@ -348,6 +352,30 @@ def _sparse_rows(cells: dict, links: dict, alpha_keys: bool = False) -> list:
     return rows
 
 
+def _grid_py(table: Node, rows, col_bg: list, cfg: DetectionConfig,
+             css=None, alpha_keys: bool = False, anchors=None) -> tuple:
+    """The specification of the native ``grid`` (``htmlscan.c``): the
+    ``_expand_grid`` tuple of a declared table with its sparse rows
+    appended.  ``rows`` is ``_aria_rows``'s list for an ARIA container,
+    or None for a ``<table>``, whose own rows ``_table_rows`` reads."""
+    if rows is None:
+        rows = _table_rows(table)
+    grid = _expand_grid(rows, col_bg, table.find_first("a") is not None,
+                        cfg, css, anchors)
+    return grid + (_sparse_rows(grid[0], grid[2], alpha_keys),)
+
+
+# the native grid, when htmlscan.c is built: the same tuple as
+# ``_grid_py``, or None for caps it leaves to the specification
+_native = native.load()
+if _native is not None:
+    _native.grid_init(is_hidden, visibility_of, cell_background,
+                      coerce_scalar)
+    _grid = _native.grid
+else:
+    _grid = None
+
+
 def _header_like(cells: dict, header_cells: set, n_cols: int) -> bool:
     """First-TWO-rows header heuristic (A5).
 
@@ -424,12 +452,13 @@ def extract_table(
         rows, col_bg = _aria_rows(table, css), []
     else:
         # <colgroup>/<col> paint is the lowest layer a cell inherits
-        rows, col_bg = _table_rows(table), _col_paint(table, cfg, css)
+        rows, col_bg = None, _col_paint(table, cfg, css)
+    grid = _grid and _grid(table, rows, col_bg, cfg, css, alpha_keys,
+                           anchors)
     (
         cells, merged_items, links, th_cells, colors,
-        n_rows, n_cols, truncated,
-    ) = _expand_grid(rows, col_bg, table.find_first("a") is not None,
-                     cfg, css, anchors)
+        n_rows, n_cols, truncated, sparse_rows,
+    ) = grid or _grid_py(table, rows, col_bg, cfg, css, alpha_keys, anchors)
     if not cells:
         return None
     # the direct <th> signal counts only when row 0 consists ENTIRELY of
@@ -478,7 +507,7 @@ def extract_table(
         "name": name,
         "range": rng,
         "score": round(score, 4),
-        "rows": _sparse_rows(cells, links, alpha_keys),
+        "rows": sparse_rows,
     }
     if merged_items:
         out["merged_cells"] = {

@@ -4,7 +4,7 @@ reference's dominant test pattern (SURVEY.md §5: pure-kernel unit tests)."""
 import json
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from exstruct_spark.config import DetectionConfig, ExtractOptions
@@ -2385,13 +2385,14 @@ _grid_groups = st.lists(st.tuples(
              min_size=1, max_size=4)), min_size=1, max_size=3)
 
 
-@given(_grid_groups)
-@settings(max_examples=300, deadline=None)
-def test_table_and_aria_grids_agree(groups):
+@given(groups=_grid_groups)
+@settings(max_examples=300, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_table_and_aria_grids_agree(parser, groups):
     """Differential: any generated grid extracts the same as ``<table>``
     markup and as ARIA markup — cells, merges, links, colors, header
     set, range and ``truncated`` — under small caps so truncation and
-    the empty-run rule fire too."""
+    the empty-run rule fire too; under both builds."""
     from exstruct_spark.kernels import tables
     from exstruct_spark.kernels.css import build_resolver
 
