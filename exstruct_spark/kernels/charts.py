@@ -18,6 +18,8 @@ Parity map (behaviour, not code):
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
+from operator import attrgetter
 from typing import Optional
 
 from exstruct_spark.kernels.a1 import col_index_to_alpha, make_range, parse_range_zero_based
@@ -163,15 +165,21 @@ def _series_values(svg: Node) -> list:
     return series
 
 
+_I0 = attrgetter("i0")
+
+
 def extract_charts(
     figures: list, scripts: list, tables_by_figure: Optional[dict] = None,
 ) -> list:
     """<figure> blocks containing an <svg> -> chart records.
 
     ``figures`` and ``scripts`` are the document's ``<figure>`` and
-    ``<script>`` nodes (the rendered walk's, in document order): a
-    figure's own scripts bind to its companion grid, and the scripts
-    outside every figure are standalone.  ``tables_by_figure`` maps
+    ``<script>`` nodes (the rendered walk's, in document order, so a
+    ``<template>``/``<noscript>`` script is in neither): a figure's own
+    scripts, the run of ``scripts`` inside its ``[i0, i1)`` slice, bind
+    to its companion grid, and the scripts outside every figure are
+    standalone.  A figure's inline SVG is a chart only when it renders:
+    a figure whose ``<svg>`` is ``unrendered`` reads its scripts alone.  ``tables_by_figure`` maps
     id(figure-node) -> the companion <table> ARTIFACT dict, so a chart's
     series bind to real grid ranges (the J7 chart-series->grid join,
     SURVEY.md §2.3): name_range/x_range/y_range are A1 refs into that
@@ -184,11 +192,15 @@ def extract_charts(
     libreoffice_backend.py:549-551).
     """
     charts: list = []
-    in_figure: set = set()  # ids of the scripts inside a figure
+    standalone: list = []
+    placed = 0  # scripts[:placed] are a figure's or standalone already
     for fig in figures:
-        own_scripts = fig.find_all("script")
-        in_figure.update(map(id, own_scripts))
-        svg = fig.find_first("svg")
+        lo = bisect_left(scripts, fig.i0, key=_I0)
+        hi = bisect_left(scripts, fig.i1, key=_I0)
+        own_scripts = scripts[lo:hi]
+        standalone.extend(scripts[placed:lo])
+        placed = max(placed, hi)  # a nested figure's run is inside
+        svg = fig.first_rendered("svg")
         if svg is None:
             # inline-script chart configs (Chart.js / ECharts) — the real
             # tokenizer path, with companion-grid binding like SVG charts
@@ -248,6 +260,6 @@ def extract_charts(
         )
     # standalone <script> chart constructors (outside any <figure>):
     # parsed by the same tokenizer, unbound (no companion grid)
-    charts.extend(_records_from_scripts(
-        [s for s in scripts if id(s) not in in_figure], len(charts), None))
+    standalone.extend(scripts[placed:])
+    charts.extend(_records_from_scripts(standalone, len(charts), None))
     return charts

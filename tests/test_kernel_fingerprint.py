@@ -68,9 +68,9 @@ BLESSED = {
     'adversarial:duplicate_attrs': '3956e3da8fd8f5fdc31566ac0a371e862826fc49c84743626656d2707dbfb083',
     'adversarial:empty': 'c77a45f4fadf47f1b8083b09c5c4cd4660cbae404c30971d1d0c29191e849152',
     'adversarial:entities': '338f59206561a29775401636d671fd843af46c12a839cf1df37fa0e09cc8590a',
-    'adversarial:figure_template_script': 'd554a5c97eb65aa19d24beae18157c5482c8e79ec300d87f7f76c92911b74ba5',
+    'adversarial:figure_template_script': '85cf779fa0e0ec3f22108b57dd8fe620461ffc3fa21e03a7f4005ff6e8072cc0',
     'adversarial:hidden_descendants': '62e84af36066465687c80b3f30ad45c9da1df7be0be2cf88b44d8cc8c956ae6e',
-    'adversarial:hidden_svg_chart': 'fae61ec3d4d8f98919cff204071a14018bb9feaf0cda697f165fd30d15e2c0c2',
+    'adversarial:hidden_svg_chart': '8abf27973f4406e6c03f711addd5b096076392f72300cb2ee07142f4abde0e63',
     'adversarial:huge_attribute': '2231fc0ead614f8ce3b55bfbc3ac08cb3ba103703ac5c3b9b716683ac2ba574e',
     'adversarial:non_utf8_garbage': '48a51fdda940aa25f03b7ffacbc42dd7d6ffead40299fb234ad9736f4e4a2771',
     'adversarial:non_utf8_latin1': 'd83368469601ae2407716ab81aedc989aed16eb497148cd6963d727b43426ea2',

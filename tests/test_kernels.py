@@ -5085,6 +5085,34 @@ def test_chartconfig_plotly_dialect():
     assert charts[2]["labels"] == ["r1", "r2"]
 
 
+def test_inert_figure_scripts_and_hidden_svg_charts_give_no_chart():
+    """A figure's scripts are the rendered walk's: one inside a
+    ``<template>`` is no chart, as it is outside a figure.  An inline
+    SVG chart that does not render is no chart either, while the
+    figure's scripts still bind to its companion grid."""
+    inert = ("<figure><template><script>new Chart(ctx, {type:'bar', data:"
+             "{labels:['a'], datasets:[{label:'inert', data:[1]}]}});"
+             "</script></template></figure><p>Words of body text.</p>")
+    hidden = ("<div style='display:none'><figure><svg><polyline "
+              "points='0,0 10,10 20,5'></polyline></svg><figcaption>"
+              "Hidden sales</figcaption></figure></div><p>Body text.</p>")
+    for html in (inert, hidden):
+        rec = extract_document("https://x/f", html.encode())
+        assert "charts" not in json.loads(rec["extraction_json"])
+        assert rec["n_charts"] == 0
+    bound = ("<figure><svg style='display:none'><polyline points='0,0 10,"
+             "10'></polyline></svg><script>new Chart(ctx, {type:'bar', "
+             "data:{labels:['a','b'], datasets:[{label:'north', data:"
+             "[1,2]}]}});</script><table><tr><th>k</th><th>north</th></tr>"
+             "<tr><td>a</td><td>1</td></tr><tr><td>b</td><td>2</td></tr>"
+             "</table></figure><p>Words of body text.</p>")
+    rec = extract_document("https://x/b", bound.encode())
+    (chart,) = json.loads(rec["extraction_json"])["charts"]
+    assert chart["config_source"] == "script"
+    assert chart["data_table_id"] == 0
+    assert chart["series"][0]["y_range"] == "B2:B3"
+
+
 def test_plotly_archetype_end_to_end():
     """The plotly_chart rich archetype flows through the full engine:
     the trace-array dialect yields a chart whose series bind to the
