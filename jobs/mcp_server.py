@@ -129,6 +129,13 @@ TOOLS = [
             "properties": {
                 "html": {"type": "string"},
                 "ops": {"type": "array", "items": {"type": "object"}},
+                "url": {"type": "string"},
+                "external_css": {
+                    "type": "array", "items": {"type": "string"},
+                    "description": "The stylesheet texts extract_html "
+                                   "was given: the ops address the "
+                                   "tables extraction reports under the "
+                                   "same cascade."},
             },
             "required": ["html", "ops"],
         },
@@ -273,22 +280,28 @@ def _record_reply(rec: dict, **head) -> str:
             f'"truncated": {json.dumps(bool(rec["truncated"]))}}}')
 
 
+def _external_css(args: dict):
+    """A call's ``external_css``: None or an array of stylesheet texts;
+    any other value is refused (an in-band tool error)."""
+    ext = args.get("external_css")
+    if ext is not None and not (
+            isinstance(ext, list)
+            and all(isinstance(t, str) for t in ext)):
+        raise ValueError("external_css must be an array of strings")
+    return ext
+
+
 def _call_extract_html(args: dict) -> str:
     from exstruct_spark.config import ExtractOptions
     from exstruct_spark.golden import extract_document
 
     opts = (ExtractOptions.from_mode(args["mode"])
             if args.get("mode") else ExtractOptions())
-    ext = args.get("external_css")
-    if ext is not None and not (
-            isinstance(ext, list)
-            and all(isinstance(t, str) for t in ext)):
-        raise ValueError("external_css must be an array of strings")
     rec = extract_document(
         args.get("url") or "mcp://document",
         (args.get("html") or "").encode("utf-8"),
         opts,
-        external_css=ext,
+        external_css=_external_css(args),
     )
     return _record_reply(rec)
 
@@ -421,7 +434,9 @@ def _call_edit_document(args: dict) -> dict:
     from exstruct_spark.kernels.edits import apply_ops
 
     html, statuses = apply_ops(args.get("html") or "",
-                               args.get("ops") or [])
+                               args.get("ops") or [],
+                               args.get("url") or "mcp://document",
+                               _external_css(args))
     return {
         "html": html,
         "op_status": statuses,

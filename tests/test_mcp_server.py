@@ -409,6 +409,39 @@ def test_mcp_edit_document_roundtrip():
     assert rows[2]["c"] == {"0": "c", "1": 3}
 
 
+def test_mcp_edit_document_sees_the_extraction_cascade():
+    """edit_document takes extract_html's ``url`` and ``external_css``:
+    with a joined sheet that hides table 0, ``table=0`` edits the table
+    extract_html numbers 0, and a non-array sheet list is refused."""
+    html = ("<table class='gone'><tr><td>hidden</td></tr></table>"
+            "<table><tr><td>a</td><td>1</td></tr></table>")
+    sheets = [".gone { display: none }"]
+    ops = [{"op": "set_value", "table": 0, "row": 0, "col": 1,
+            "value": "EDITED"}]
+    out = _rpc_session([
+        {"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+         "params": {"name": "extract_html",
+                    "arguments": {"url": "mcp://x", "html": html,
+                                  "external_css": sheets}}},
+        {"jsonrpc": "2.0", "id": 2, "method": "tools/call",
+         "params": {"name": "edit_document",
+                    "arguments": {"url": "mcp://x", "html": html,
+                                  "ops": ops, "external_css": sheets}}},
+        {"jsonrpc": "2.0", "id": 3, "method": "tools/call",
+         "params": {"name": "edit_document",
+                    "arguments": {"html": html, "ops": ops,
+                                  "external_css": "not-a-list"}}},
+    ])
+    tables = json.loads(
+        out[0]["result"]["content"][0]["text"])["extraction"]["tables"]
+    assert [t["rows"][0]["c"]["0"] for t in tables] == ["a"]
+    res = json.loads(out[1]["result"]["content"][0]["text"])
+    assert res["op_status"] == ["applied"]
+    assert "<td>EDITED</td>" in res["html"]
+    assert "<td>hidden</td>" in res["html"]
+    assert out[2]["result"]["isError"] is True
+
+
 def _load_server():
     """``jobs/mcp_server.py`` as a module, to call ``handle`` in-process."""
     import importlib.util
