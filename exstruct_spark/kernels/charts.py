@@ -179,13 +179,14 @@ def extract_charts(
     scripts, the run of ``scripts`` inside its ``[i0, i1)`` slice, bind
     to its companion grid, and the scripts outside every figure are
     standalone.  A figure's inline SVG is a chart only when it renders:
-    a figure whose ``<svg>`` is ``unrendered`` reads its scripts alone.  ``tables_by_figure`` maps
-    id(figure-node) -> the companion <table> ARTIFACT dict, so a chart's
-    series bind to real grid ranges (the J7 chart-series->grid join,
-    SURVEY.md §2.3): name_range/x_range/y_range are A1 refs into that
-    table's rows, like the reference's SERIES-formula parse
-    (core/charts.py:201-214).  A figure without a companion table keeps a
-    synthetic y_range over the series' own vector.
+    a figure whose ``<svg>`` is ``unrendered`` reads its scripts alone.
+    ``tables_by_figure`` maps id(figure-node) -> the companion <table>
+    ARTIFACT dict, so a chart's series bind to real grid ranges (the J7
+    chart-series->grid join, SURVEY.md §2.3): name_range/x_range/y_range
+    are A1 refs into that table's rows, like the reference's
+    SERIES-formula parse (core/charts.py:201-214).  A figure without a
+    companion table keeps a synthetic y_range over the series' own
+    vector.
 
     ``y_axis_title`` comes from an svg <text> whose class mentions
     'y-axis' (the web stand-in for Axes(2,1).AxisTitle, reference

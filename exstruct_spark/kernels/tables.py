@@ -35,11 +35,11 @@ from operator import attrgetter
 from typing import Optional
 
 from exstruct_spark.config import DetectionConfig
+from exstruct_spark.kernels import native
 from exstruct_spark.kernels.a1 import col_index_to_alpha, make_range
 from exstruct_spark.kernels.clusters import merge_rectangles, nonempty_clusters
 from exstruct_spark.kernels.coerce import coerce_scalar
 from exstruct_spark.kernels.colors import cell_background
-from exstruct_spark.kernels import native
 from exstruct_spark.kernels.dom import (
     RENDER_INERT, Node, is_hidden, visibility_of)
 

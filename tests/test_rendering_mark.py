@@ -118,7 +118,8 @@ def test_a_marked_node_read_by_itself_keeps_its_text(parser):
     ``itemprop`` value keeps its text, while a hidden child inside a
     rendered value is skipped.  Only the boundary of a hidden subtree is
     cut, so a read started inside one (a hidden microdata scope, a
-    hidden figure's caption and axis title) keeps its nested text."""
+    hidden figure's caption and axis title) keeps its nested text.  A
+    hidden figure's inline SVG is no chart."""
     html = ("<div itemscope itemtype='https://schema.org/Product'>"
             "<span itemprop=name>Widget<b hidden>SECRET</b></span>"
             "<span itemprop=ratingValue style=display:none>4.5</span>"
@@ -133,9 +134,14 @@ def test_a_marked_node_read_by_itself_keeps_its_text(parser):
     assert [d["props"] for d in ex["structured_data"]] == [
         {"name": "Widget", "ratingValue": "4.5"},
         {"name": "Widget Pro", "description": "a b"}]
-    chart = ex["charts"][0]
-    assert (chart["title"], chart["y_axis_title"]) == ("Chart two",
-                                                       "Sales EUR")
+    assert "charts" not in ex
+    root = extract.parse_html(html)
+    walk = extract.rendered_walk(root)
+    extract._render_cascade(root, "https://r.example/p", walk)
+    caption, axis = root.find_first("figcaption"), root.find_first("text")
+    assert caption.unrendered and axis.unrendered
+    assert (caption.text_content(), axis.text_content()) == ("Chart two",
+                                                             "Sales EUR")
 
 
 def test_degraded_text_skips_hidden_markup(parser):
