@@ -20,6 +20,12 @@ hands over to ``pyspark.daemon.manager()`` it
     importing this package has already created importers for them.
 Workers forked from the daemon inherit the trimmed path.
 
+A reused worker runs a full ``gc.collect()`` after every task
+(``pyspark/daemon.py``, PySpark 4.1).  That collection is cheap only
+because ``engine.extract_batches`` freezes the worker's import heap
+before its first batch.  The GC policy lives there, not here, so
+cluster workers under PySpark's own daemon get it too.
+
 Cluster caveat: a daemon module must be importable on the executor
 before ``--py-files`` are added to the path, so clusters keep PySpark's
 default daemon unless this package is installed on the executors.

@@ -336,6 +336,34 @@ def test_extracted_tree_is_freed_without_the_cyclic_gc(parser, doc,
     assert garbage == 0
 
 
+@pytest.mark.parametrize("frame", ["every_input", "large_pages"])
+def test_extracted_batch_leaves_no_cyclic_garbage(parser, frame):
+    """The batch kernel the engine runs with the cyclic GC paused,
+    ``golden.extract_pdf``, leaves nothing for a collection to free.
+    The frame is built first, with the GC on: building a pandas frame
+    makes cycles of its own."""
+    import pandas as pd
+
+    from exstruct_spark.golden import extract_pdf
+    from perfbench.inputs import large_pages
+
+    if frame == "every_input":
+        docs = _every_input()
+    else:
+        docs = [(p["url"], p["html"]) for p in large_pages(1, 40)]
+    pdf = pd.DataFrame({"url": [u for u, _ in docs],
+                        "html": [raw for _, raw in docs]})
+    gc.collect()
+    gc.disable()
+    try:
+        out = extract_pdf(pdf)
+        garbage = gc.collect()
+    finally:
+        gc.enable()
+    assert len(out) == len(docs)
+    assert garbage == 0
+
+
 def test_released_tree_keeps_its_children():
     root = dom.parse_html("<div><p>a</p><p>b</p></div>")
     p = root.find_first("p")
