@@ -493,6 +493,19 @@ _IMPORTANT_RE = re.compile(r"!\s*important\s*$", re.IGNORECASE)
 
 
 def _parse_decls(body: str) -> list:
+    """``_split_decls``, skipping the split for a block that names no
+    kept property.  The test lowers the whole block the way
+    ``_split_decls`` lowers each name, so a name that lowers into a kept
+    one (``bacKground`` with the Kelvin sign, U+212A) still passes it."""
+    lowered = body.lower()
+    # every name _KEPT_PROP_RE keeps starts with one of these four
+    if not ("border" in lowered or "background" in lowered
+            or "display" in lowered or "visibility" in lowered):
+        return []
+    return _split_decls(body)
+
+
+def _split_decls(body: str) -> list:
     """Declaration block body -> ordered [(prop, value, important)] of
     kept props.  ``important`` feeds real priority arithmetic in
     ``effective_attrs``: an important declaration beats every normal

@@ -157,6 +157,66 @@ def test_css_structured_selector_fuzz(rules_src):
         assert st_val is None or isinstance(st_val, str)
 
 
+_DECL_NAME = st.sampled_from([
+    "border", "border-left-style", "border-top-width", "background",
+    "background-color", "display", "visibility", "color", "margin",
+    "font-size", "border-radius", "background-image", "backdrop-filter",
+    "outline", "z-index", "Display-none",
+])
+_DECL_VALUE = st.sampled_from([
+    "red", "none", "1px solid #000", "hidden", "", " ", "url(a;b)",
+    "#FFF !important", "0 ! IMPORTANT", "block/* c */",
+])
+
+
+@st.composite
+def _decl_name(draw):
+    """A property name with each letter in either case, and now and
+    then the Kelvin sign (U+212A, which lowers to ``k``) for ``k``."""
+    return "".join(
+        "K" if ch == "k" and draw(st.booleans())
+        else ch.upper() if draw(st.booleans()) else ch
+        for ch in draw(_DECL_NAME))
+
+
+_DECL = st.builds(
+    lambda name, value, comment: f"{name}:{comment}{value}",
+    _decl_name(), _DECL_VALUE,
+    st.sampled_from(["", " ", "/* display: none */", "/*x*/ "]))
+_RULE = st.builds(
+    lambda sel, decls: f"{sel} {{ {';'.join(decls)} }}",
+    st.sampled_from(["td", ".a", "#x", "p, li.b", "div > em"]),
+    st.lists(_DECL, max_size=4))
+_SHEET_PART = st.one_of(
+    _RULE,
+    st.builds(lambda at, rules: f"{at} {{ {' '.join(rules)} }}",
+              st.sampled_from(["@media screen", "@MEDIA print",
+                               "@supports (display: grid)",
+                               "@media (min-width: 1px)", "@font-face"]),
+              st.lists(_RULE, max_size=3)),
+    st.sampled_from(["/* .a { display: none } */", "@import 'x.css';"]),
+)
+
+
+@given(st.lists(_SHEET_PART, max_size=6))
+@settings(max_examples=300, deadline=None)
+def test_css_declaration_prefilter_keeps_every_rule(parts):
+    """``_parse_decls`` skips a block that names no kept property;
+    ``parse_css_rules`` gives the same rules as when every block is
+    split (``_split_decls``)."""
+    from exstruct_spark.kernels import css
+
+    sheet = "\n".join(parts)
+    filtered = css.parse_css_rules(sheet)
+    prefilter = css._parse_decls
+    css._parse_decls = css._split_decls
+    try:
+        unfiltered = css.parse_css_rules(sheet)
+    finally:
+        css._parse_decls = prefilter
+    assert filtered == unfiltered
+
+
 @given(st.text(max_size=40))
 @settings(max_examples=300, deadline=None)
 def test_parse_css_length_total(s):
