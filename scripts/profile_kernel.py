@@ -65,8 +65,7 @@ def run(docs: list) -> int:
 def batch_frames(docs: list, size: int) -> list:
     import pandas as pd
 
-    return [pd.DataFrame({"url": [d["url"] for d in docs[i:i + size]],
-                          "html": [d["html"] for d in docs[i:i + size]]})
+    return [pd.DataFrame(docs[i:i + size], columns=["url", "html"])
             for i in range(0, len(docs), size)]
 
 
@@ -94,8 +93,7 @@ def run_batches(frames: list, policy: bool) -> None:
 
     for pdf in frames:
         if policy:
-            for _ in extract_batches(iter([pdf])):
-                pass
+            list(extract_batches(iter([pdf])))
         else:
             extract_pdf(pdf)
         gc.collect()
@@ -122,7 +120,7 @@ def batch_mode(docs: list, args) -> None:
     n = len(docs)
     per_gen = " ".join(
         f"gen{g}={spent[g][1] * 1e3 / n:.3f}ms/doc({spent[g][0]})"
-        for g in sorted(spent))
+        for g in spent)
     gc_ms = sum(s for _, s in spent.values()) * 1e3 / n
     print(f"corpus={args.corpus} docs={n} batch={args.batch} "
           f"gc_policy={'on' if policy else 'off'} "
