@@ -38,6 +38,7 @@ import gc
 import time
 import uuid
 from contextlib import contextmanager
+from functools import partial
 from typing import Iterator, Optional, Tuple
 from urllib.parse import urljoin
 
@@ -351,12 +352,10 @@ def extract_stage(
         for f in df.select(*passthrough).schema.fields
     ) if passthrough else ""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return extract_batches(batches, opts, passthrough)
-
     extra_in = ("external_css",) if "external_css" in df.columns else ()
     return df.select("url", "html", *extra_in, *passthrough).mapInPandas(
-        run, schema=EXTRACT_WITH_PARTITION_DDL + pass_ddl
+        partial(extract_batches, opts=opts, passthrough=passthrough),
+        schema=EXTRACT_WITH_PARTITION_DDL + pass_ddl,
     )
 
 

@@ -18,9 +18,9 @@ function, ``engine.extract_batches``, over N-doc pandas frames, with a
 full ``gc.collect()`` after each batch as PySpark's daemon runs after
 each task.  The first batch is the warm-up; then the best of 3 passes
 prints ms/doc and the cyclic collector's ms/doc per generation (timed
-through ``gc.callbacks``).  ``--without-gc-policy`` calls
-``golden.extract_pdf`` itself per batch instead, with no heap freeze and
-no pause: the before side of an A/B.  Guide §1: measure first, isolate
+through ``gc.callbacks``).  ``--without-gc-policy`` runs the same batch
+function with its heap freeze and its pause stubbed out: the before side
+of an A/B.  Guide §1: measure first, isolate
 the computation.
 """
 from __future__ import annotations
@@ -87,30 +87,40 @@ def gc_clock() -> dict:
     return totals
 
 
-def run_batches(frames: list, policy: bool) -> None:
+def run_batches(frames: list) -> None:
     from exstruct_spark.engine import extract_batches
-    from exstruct_spark.golden import extract_pdf
 
     for pdf in frames:
-        if policy:
-            list(extract_batches(iter([pdf])))
-        else:
-            extract_pdf(pdf)
+        list(extract_batches(iter([pdf])))
         gc.collect()
+
+
+def drop_gc_policy() -> None:
+    """Stub out ``extract_batches``' heap freeze and per-batch pause, so
+    the batch body, lineage columns included, runs with the collector
+    as PySpark leaves it."""
+    from contextlib import nullcontext
+
+    from exstruct_spark import engine
+
+    engine.freeze_worker_heap = lambda: None
+    engine.gc_paused = nullcontext
 
 
 def batch_mode(docs: list, args) -> None:
     frames = batch_frames(docs, args.batch)
     policy = not args.without_gc_policy
+    if not policy:
+        drop_gc_policy()
     # warm-up on the first batch; with the policy this call freezes the
     # heap before its batch, as a worker's first task does
-    run_batches(frames[:1], policy)
+    run_batches(frames[:1])
     totals = gc_clock()
     best = None
     for _ in range(3):
         before = {g: list(row) for g, row in totals.items()}
         t0 = time.perf_counter()
-        run_batches(frames, policy)
+        run_batches(frames)
         dt = time.perf_counter() - t0
         spent = {g: (totals[g][0] - before[g][0], totals[g][1] - before[g][1])
                  for g in totals}
@@ -140,8 +150,8 @@ def main(argv=None) -> None:
     ap.add_argument("--batch", type=int, default=None, metavar="N",
                     help="time the engine's batch function on N-doc frames")
     ap.add_argument("--without-gc-policy", action="store_true",
-                    help="with --batch: golden.extract_pdf per batch, "
-                         "no heap freeze and no pause")
+                    help="with --batch: the same batch function with no "
+                         "heap freeze and no pause")
     args = ap.parse_args(argv)
     n = args.n_docs
     docs = corpus(n, args.corpus, args.seed)
